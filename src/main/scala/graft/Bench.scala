@@ -61,6 +61,36 @@ object Bench {
     loadStart > 1.5 ||
       (wallInflation.exists(_ > 1.5) && !cpuInflation.exists(_ > 1.25))
 
+  /** Keys whose one-time artifact build runs as untimed warm-up: every
+    * selected key that declares a `stage`, plus `stream_*` for the
+    * engine-wide streaming warm-up. Recorded in the JSON so a cross-round
+    * diff can tell an accounting change (key newly staged) from a real
+    * speedup; pure so BenchGateSpec can pin the list. */
+  private[graft] def stagedKeys(selected: Map[String, QueryDef]): Seq[String] =
+    (selected.collect { case (k, d) if d.stage.isDefined => k } ++
+      Option.when(selected.keys.exists(_.startsWith("stream_")))("stream_*"))
+      .toSeq.sorted
+
+  /** The COMPACT contract line, printed LAST: a stdout reader that keeps a
+    * 2,000-char tail cannot parse the full line (~40 KB with work{}) or
+    * even its per-key seconds alone (~6.7 KB) — BENCH r17-r21 all read
+    * parsed=null. So this line carries only the total, per-family
+    * subtotals (family = key prefix before the first `_`), the errored
+    * names (at most 20; `n_errors` counts all), the staged count and the
+    * run context. Errored keys are out of the total and the subtotals.
+    * The full line and the repo files keep every per-key number. */
+  private[graft] def compactLine(total: Double, results: Seq[(String, Double)],
+      errors: Seq[String], nStaged: Int, loadStart: Double, loadEnd: Double,
+      sfDir: String, cpus: String): String = {
+    def r3(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    val families = results.filterNot(r => errors.contains(r._1))
+      .groupMapReduce(_._1.takeWhile(_ != '_'))(_._2)(_ + _)
+      .toSeq.sorted.map { case (f, v) => s""""$f":${r3(v)}""" }
+      .mkString("{", ",", "}")
+    val errJson = errors.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","families":$families,"n_keys":${results.size},"n_errors":${errors.size},"errors":$errJson,"n_staged":$nStaged,"load_start":$loadStart,"load_end":$loadEnd,"sf":"$sfDir","cpus":$cpus}"""
+  }
+
   /** 1-minute load average from /proc/loadavg, or -1 when unreadable.
     * Recorded at bench start and end so round-over-round comparisons can
     * cite host contention as a measured fact instead of a narrative
@@ -87,13 +117,9 @@ object Bench {
     // local-iteration filter: comma-separated key prefixes; absent → all keys
     // (the driver never sets it, so the driver contract is unchanged)
     val keyFilter = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
+    val selected = SparkEntry.defs.filter { case (name, _) =>
       keyFilter.forall(_.exists(name.startsWith)) }
-    // keys whose one-time artifact build was moved into untimed warm-up —
-    // recorded in the JSON so a cross-round diff can tell an accounting
-    // change (key newly staged) from a real speedup without reading
-    // BASELINE.md prose
-    val staged = scala.collection.mutable.ArrayBuffer.empty[String]
+    val staged = stagedKeys(selected)
     // warm-up outside the timed loop: JIT + codegen + parquet footers, so the
     // first timed key doesn't absorb session start (~5s skew otherwise).
     // Also initialize JVM-wide write machinery that otherwise lands on
@@ -118,118 +144,9 @@ object Bench {
       spark.sql("DROP TABLE graft_warm.t")
       spark.sql("DROP DATABASE graft_warm CASCADE")
       spark.read.parquet(s"$warm/p").count()
-      // stage the DPP layout here so join_dpp times the pruned join, not
-      // the one-time partitioned re-write of the fact table
-      if (selected.contains("join_dpp")) {
-        operators.Joins.stageDpp(spark, sfDir); staged += "join_dpp"
-      }
-      // same accounting rule for the rollup: the one-time physical build is
-      // a staging cost (in production, a standing materialization), so the
-      // timed key demonstrates what the rewrite rule is FOR — a 6-row
-      // rollup scan answering a base-table aggregate
-      if (selected.keys.exists(_.startsWith("rollup_rewrite"))) {
-        operators.Rollups.ensureRollup(spark, sfDir)
-        staged ++= selected.keys.filter(_.startsWith("rollup_rewrite"))
-      }
-      // same rule for the MTMV lifecycle: the partitioned base build + two
-      // refresh cycles are the standing-infrastructure cost (in production
-      // the scheduler owns them), so the timed key shows MV serving
-      if (selected.contains("mv_partition_refresh")) {
-        operators.MaterializedViews.ensure(spark, sfDir)
-        staged += "mv_partition_refresh"
-      }
-      // same rule for the embedded-Derby staging: the one-time external-DB
-      // load is a fixture, so scan_jdbc times the partitioned JDBC read
-      if (selected.contains("scan_jdbc")) {
-        operators.FileScans.ensureJdbc(spark, sfDir); staged += "scan_jdbc"
-      }
-      // same rule for the bucketed-table layout: a one-time storage cost
-      // (driver r8: ~1 s of join_bucketed's 2.2 s was this write), so the
-      // timed key shows the steady-state zero-exchange bucketed SMJ
-      if (selected.contains("join_bucketed") ||
-          selected.contains("join_bucket_shuffle")) {
-        operators.Joins.stageBuckets(spark, sfDir)
-        staged ++= selected.keys
-          .filter(k => k == "join_bucketed" || k == "join_bucket_shuffle")
-      }
-      // same rule for the langid language profile: a standing artifact in
-      // production (5 rows, rebuilt only when the corpus changes), so the
-      // timed key shows the map-only scoring pass, not the corpus-wide
-      // profile shuffle (driver r8: profile rebuild made llm_langid the
-      // slowest key in the tree at 8.15 s)
-      if (selected.contains("llm_langid")) {
-        operators.LlmText.langProfile(spark, sfDir); staged += "llm_langid"
-      }
-      // same rule for the term-frequency table the lexical scorers share:
-      // a standing corpus artifact (rebuilt only when the corpus changes),
-      // so llm_tfidf/llm_bm25 time the scoring pass, not the corpus explode
-      locally {
-        val termStatsKeys =
-          Set("llm_tfidf", "llm_bm25", "llm_unigram_logprob")
-        if (selected.keys.exists(termStatsKeys)) {
-          operators.LlmText.termStats(spark, sfDir)
-          staged ++= selected.keys.filter(termStatsKeys)
-        }
-      }
-      // same rule for the winnowing fingerprint table (llm_winnow*)
-      locally {
-        val winnowKeys = Set("llm_winnow", "llm_winnow_pairs")
-        if (selected.keys.exists(winnowKeys)) {
-          operators.LlmText.winnowFps(spark, sfDir)
-          staged ++= selected.keys.filter(winnowKeys)
-        }
-      }
-      // same rule for the trained BPE tokenizer model (r20): a standing
-      // vocabulary-sized artifact rebuilt only when the corpus changes.
-      // Staged for the CONSUMER keys only (encode/fertility serve the
-      // artifact); llm_bpe_train is deliberately NOT staged — the training
-      // loop IS that key's demonstrated operator, and its QueryDef calls
-      // the uncached bpeTrainRun so the timed run always pays the build
-      // (ADVICE r20: staging the trainer hollowed the key out).
-      locally {
-        val bpeKeys = Set("llm_bpe_encode", "llm_bpe_fertility")
-        if (selected.keys.exists(bpeKeys)) {
-          operators.LlmText.bpeLearned(spark, sfDir)
-          staged ++= selected.keys.filter(bpeKeys)
-        }
-      }
-      // same rule for the bigram LM score table (r20): per its own doc,
-      // "at 100 TB the LM score table persists with the corpus and every
-      // filter stage reads it" — the checkpointed artifact both consumers
-      // share was built inside llm_bigram_logprob's timing
-      locally {
-        val lmKeys = Set("llm_bigram_logprob", "llm_perplexity_bucket")
-        if (selected.keys.exists(lmKeys)) {
-          operators.LlmText.bigramDocScore(spark, sfDir)
-          staged ++= selected.keys.filter(lmKeys)
-        }
-      }
-      // same rule for the ANN ingest-time artifacts (r20): PQ codes and
-      // coarse-cell rankings are computed once when vectors land and
-      // persisted (the keys' own 100 TB story); the builds were landing on
-      // the alphabetically-first consumer of each cache
-      locally {
-        val annKeys = Set("llm_knn_pq", "llm_knn_ivf", "llm_knn_ivfpq",
-          "llm_knn_ivf_trained")
-        if (selected.keys.exists(annKeys)) {
-          operators.LlmSimilarity.stageAnnArtifacts(spark, sfDir)
-          staged ++= selected.keys.filter(annKeys)
-        }
-      }
-      // same rule for the DDL statement lifecycles: the CREATE/INSERT/
-      // ALTER script is a one-time ingest fixture cached per (key, dir)
-      // (in production these loads happened long before the query), so
-      // the timed key shows the merge-on-read / MV-served SELECT — one
-      // warm build() per key runs the staging and a warm pass of the
-      // final statement
-      locally {
-        val ddlKeys = selected.keys.filter(k => k.startsWith("sql_ddl") ||
-          k == "sql_tvf_file" || k == "sql_routine_load").toSeq.sorted
-        if (ddlKeys.nonEmpty) {
-          ddlKeys.foreach(k => SparkEntry.defs(k).build(spark, sfDir).count())
-          staged ++= ddlKeys
-        }
-      }
+      // each key's one-time artifact build (QueryDef.stage), in key order
+      selected.toSeq.sortBy(_._1).foreach { case (_, d) =>
+        d.stage.foreach(_(spark, sfDir)) }
       // streaming-engine warm-up: the first streaming query in a JVM pays
       // one-time micro-batch/state-store init (~2.5 s measured at sf0.1 —
       // the r6→r7 stream_session 2.0→5.4 s "regression" was exactly this
@@ -237,7 +154,6 @@ object Bench {
       // stateful stream at the same capped state parallelism the stream_*
       // keys use absorbs it here instead.
       if (selected.keys.exists(_.startsWith("stream_"))) {
-        staged += "stream_*" // engine-wide micro-batch/state-store init
         val sdir = TempDirs.create("graft_streamwarm")
         spark.range(4L).selectExpr("id", "timestamp_micros(id * 1000000) ts")
           .write.mode("overwrite").parquet(s"$sdir/in")
@@ -278,12 +194,12 @@ object Bench {
     // queries{} keeps its flat name->sec shape — the driver parses it.
     val work = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val cpuSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val results = ordered.map { case (name, fn) =>
+    val results = ordered.map { case (name, d) =>
       listener.drain() // don't let the previous key's stragglers leak in
       val (r0, w0, s0, c0) = listener.snapshot()
       val t0 = System.nanoTime()
       var rows = -1L
-      try { rows = fn(spark, sfDir).count() }
+      try { rows = d.build(spark, sfDir).count() }
       catch { case e: Throwable =>
         errors += name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -302,8 +218,7 @@ object Bench {
     val workJson = work.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val stagedJson = staged.sorted.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
+    val stagedJson = staged.map("\"" + _ + "\"").mkString("[", ",", "]")
     // errored keys are listed in errors[] and excluded from the headline
     // total so a key that throws partway through can't distort
     // round-over-round comparisons (their elapsed is still in queries{})
@@ -437,19 +352,8 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] round-stamped record write failed: $e") }
     println(json)
-    // COMPACT contract line, printed LAST: the full line above (~40 KB
-    // with work{}) exceeds the driver's stdout tail window — BENCH
-    // r17-r20 all read parsed=null and PERF went blind (r20 verdict #1).
-    // Same shape minus work{}, per-key seconds rounded to 3 dp, so the
-    // driver's tail scan finds a parseable line. The full line and the
-    // repo files keep the unrounded values and the work{} bytes.
-    val qsCompact = results.map { case (k, v) =>
-      "\"" + k + "\":" + BigDecimal(v).setScale(3,
-        BigDecimal.RoundingMode.HALF_UP).toString
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${
-      BigDecimal(total).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    },"unit":"sec","queries":$qsCompact,"errors":$errJson,"staged":$stagedJson,"load_start":$loadStart,"load_end":$loadEnd,"sf":"$sfDir","cpus":$cpus}""")
+    println(compactLine(total, results, errors.toSeq, staged.size,
+      loadStart, loadEnd, sfDir, cpus))
     spark.stop()
   }
 }

@@ -1,10 +1,10 @@
 package graft
 
 /** Shared mtime-based freshness primitive for every rule that serves a
-  * precomputed artifact (RollupRewrite, ResultCache, the jaccard pair
-  * cache). One definition of "source unchanged" so the rules cannot drift:
-  * the max lastModified over the directory AND its immediate children, so
-  * an append landing inside a one-level partition layout (dir/p=A/part-...)
+  * precomputed artifact (RollupRewrite, ResultCache, Artifacts). One
+  * definition of "source unchanged" so the rules cannot drift: the max
+  * lastModified over the directory AND its immediate children, so an
+  * append landing inside a one-level partition layout (dir/p=A/part-...)
   * invalidates even though the root dir's own mtime is untouched. In Doris
   * all three guards are transactional table versions; dir mtimes are the
   * offline-harness stand-in.

@@ -39,5 +39,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    defs.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
+    defs.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }
 }

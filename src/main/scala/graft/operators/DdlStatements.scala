@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.sql.DorisDdl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -26,28 +26,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DdlStatements {
 
-  /** Lifecycles are staged once per sf dir (same caching discipline as
-    * every ingest key: bench re-runs must not re-pay the loads); the final
-    * SELECT re-runs per call against the registered views. The cache maps
-    * (key, dir) → the DorisDdl catalog holding the loaded tables, guarded
-    * by the owning session like the other standing artifacts. */
-  private final case class Staged(ddl: DorisDdl, session: SparkSession)
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Staged]()
-
+  /** Lifecycles are staged once per (key, sf dir) (same caching discipline
+    * as every ingest key: bench re-runs must not re-pay the loads); the
+    * final SELECT re-runs per call against the registered views. The
+    * artifact is the DorisDdl catalog holding the loaded tables. */
   private def lifecycle(key: String, s: SparkSession, dir: String)(
-      statements: => Seq[String]): DorisDdl = {
-    val e = staged.get((key, dir))
-    if (e != null && (e.session eq s)) e.ddl
-    else {
+      statements: => Seq[String]): DorisDdl =
+    Artifacts.memo("ddlLifecycle", (key, dir), s) {
       val ddl = new DorisDdl(s)
       statements.foreach(ddl.execute)
-      staged.put((key, dir), Staged(ddl, s))
       ddl
     }
-  }
 
-  def queries: Map[String, QueryDef] = Map(
+  /** Every lifecycle key stages its statement script as untimed bench
+    * warm-up: in production these loads happened long before the query,
+    * so the timed key shows the merge-on-read / MV-served SELECT. One warm
+    * build() runs the staging and a warm pass of the final statement. */
+  def queries: Map[String, QueryDef] =
+    lifecycles.map { case (k, q) => k -> q.staged(q.build(_, _).count()) } +
+      ("sql_hint_join" -> hintJoin)
+
+  private def lifecycles: Map[String, QueryDef] = Map(
     // UNIQUE KEY lifecycle: create → baseline load → upsert load → DELETE
     // (a versioned predicate, not a filter) → post-delete reload that must
     // SURVIVE the delete → merge-on-read select. Exercises: CREATE TABLE
@@ -1426,10 +1425,7 @@ object DdlStatements {
     "sql_ddl_grant" -> QueryDef(
       (s, dir) => {
         Tables.orders(s, dir).createOrReplaceTempView("orders")
-        val key = ("sql_ddl_grant", dir)
-        val e = staged.get(key)
-        val ddl = if (e != null && (e.session eq s)) e.ddl
-        else {
+        val ddl = Artifacts.memo("ddlLifecycle", ("sql_ddl_grant", dir), s) {
           val d = new DorisDdl(s)
           Seq(
             """CREATE TABLE ord_g (
@@ -1458,7 +1454,6 @@ object DdlStatements {
           d.execute("CREATE ROLE 'reader'")
           d.execute("GRANT SELECT_PRIV ON top_g TO ROLE 'reader'")
           d.execute("CREATE USER 'viewer' DEFAULT ROLE 'reader'")
-          staged.put(key, Staged(d, s))
           d
         }
         import s.implicits._
@@ -1814,31 +1809,31 @@ object DdlStatements {
         |  UNION ALL
         |  SELECT 'zz_selective' AS src, count(*) AS n
         |  FROM documents WHERE text LIKE '%zqxv8kq%'
-        |) ORDER BY src""".stripMargin),
-
-    // Doris join hints: `JOIN [broadcast] t` translates to Spark's
-    // BROADCAST(t) relation hint (DdlSpec asserts it flips the physical
-    // build side; [shuffle] → SHUFFLE_HASH), and the LEADING join-order
-    // hint strips with a log — hints steer the PLAN, never results, so
-    // the oracle replays the plain join.
-    "sql_hint_join" -> QueryDef(
-      (s, dir) => {
-        Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-        Tables.part(s, dir).createOrReplaceTempView("part")
-        graft.sql.DorisSqlDialect.sql(s,
-          """SELECT /*+ LEADING(p, l) */ p.p_brand AS brand,
-            |  CAST(sum(CAST(l.l_quantity * 10 AS BIGINT)) AS BIGINT) AS qty10
-            |FROM lineitem l JOIN [broadcast] part p
-            |  ON l.l_partkey = p.p_partkey
-            |WHERE p.p_size <= 10
-            |GROUP BY p.p_brand ORDER BY brand""".stripMargin)
-      },
-      """SELECT p.p_brand AS brand,
-        |  CAST(sum(CAST(l.l_quantity * 10 AS BIGINT)) AS BIGINT) AS qty10
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE p.p_size <= 10
-        |GROUP BY p.p_brand ORDER BY brand""".stripMargin)
+        |) ORDER BY src""".stripMargin)
   )
+
+  // Doris join hints: `JOIN [broadcast] t` translates to Spark's
+  // BROADCAST(t) relation hint (DdlSpec asserts it flips the physical
+  // build side; [shuffle] → SHUFFLE_HASH), and the LEADING join-order
+  // hint strips with a log — hints steer the PLAN, never results, so
+  // the oracle replays the plain join.
+  private def hintJoin: QueryDef = QueryDef(
+    (s, dir) => {
+      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
+      Tables.part(s, dir).createOrReplaceTempView("part")
+      graft.sql.DorisSqlDialect.sql(s,
+        """SELECT /*+ LEADING(p, l) */ p.p_brand AS brand,
+          |  CAST(sum(CAST(l.l_quantity * 10 AS BIGINT)) AS BIGINT) AS qty10
+          |FROM lineitem l JOIN [broadcast] part p
+          |  ON l.l_partkey = p.p_partkey
+          |WHERE p.p_size <= 10
+          |GROUP BY p.p_brand ORDER BY brand""".stripMargin)
+    },
+    """SELECT p.p_brand AS brand,
+      |  CAST(sum(CAST(l.l_quantity * 10 AS BIGINT)) AS BIGINT) AS qty10
+      |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+      |WHERE p.p_size <= 10
+      |GROUP BY p.p_brand ORDER BY brand""".stripMargin)
 
   /** The shared evolved-table staging used by `sql_ddl_schema_evolve` and
     * `sql_ddl_show_partitions` (one catalog, two reads of it). */

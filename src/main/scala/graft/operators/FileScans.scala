@@ -140,7 +140,9 @@ object FileScans {
       },
       """SELECT n_nationkey, n_name, n_regionkey
         |FROM nation WHERE n_regionkey < 3
-        |ORDER BY n_nationkey""".stripMargin),
+        |ORDER BY n_nationkey""".stripMargin)
+      // the external-DB load is a fixture: the timed key is the JDBC read
+      .staged(ensureJdbc),
 
     // Typed Dataset path: case-class Encoder + typed filter/groupByKey — the
     // Dataset[T] API surface (SURVEY §1.2) over the same engine.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.text.TextOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -145,22 +145,10 @@ object LlmDedup {
     * per (dir, threshold) — in production it's a persisted table feeding
     * both jobs; recomputing the shingle join per consumer is the
     * anti-pattern. The result is tiny (O(near-dup pairs)), so the
-    * checkpoint is a few KB. Guarded by the same source-mtime freshness
-    * contract the rollup and result-cache rules use: a rewritten documents
-    * table recomputes instead of serving the stale checkpoint. */
-  private case class PairsEntry(mtime: Long, pairs: DataFrame)
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double, Int), PairsEntry]()
-
+    * checkpoint is a few KB. */
   private[graft] def jaccardPairsAuto(
-      s: SparkSession, dir: String, t: Double, w: Int = 3): DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = pairsCache.get((dir, t, w))
-    // session guard (same as LlmText.profileCache): the checkpointed pairs
-    // are bound to the creating session — recompute if the session changed
-    if (e != null && e.mtime == srcMtime && (e.pairs.sparkSession eq s))
-      e.pairs
-    else {
+      s: SparkSession, dir: String, t: Double, w: Int = 3): DataFrame =
+    Artifacts.memo("jaccardPairsAuto", (dir, t, w), s, docsSrc(dir)) {
       import s.implicits._
       // tokenize ONCE: the checkpointed shingle table feeds both the density
       // statistic and the chosen join, so the chooser costs one cheap
@@ -176,43 +164,31 @@ object LlmDedup {
       val docs = shingleDocs(s, dir, w).localCheckpoint(true)
       val avgDf = docs.groupBy($"s").agg(count(lit(1)).as("df"))
         .agg(avg($"df")).as[Double].head()
-      val pairs = (if (avgDf <= 4.0) prefixFrom(s, docs, t)
+      (if (avgDf <= 4.0) prefixFrom(s, docs, t)
         else oneShotFrom(s, docs, t)).localCheckpoint(true)
-      pairsCache.put((dir, t, w), PairsEntry(srcMtime, pairs))
-      pairs
     }
-  }
 
-  /** Checkpointed span-digest tables for llm_dedup_substring(_clip),
-    * cached under the same mtime + owning-session freshness contract as
-    * the pair table above (ADVICE r20: the eager localCheckpoint(true)
+  private def docsSrc(dir: String): String = s"$dir/documents.parquet"
+
+  /** Checkpointed span-digest tables for llm_dedup_substring(_clip), served
+    * as standing artifacts (ADVICE r20: the eager localCheckpoint(true)
     * inside every QueryDef build re-materialized executor-memory blocks
     * on each invocation in a long-lived session with nothing to free
-    * them; the cache serves the standing table instead). Two variants —
-    * the detection key needs the per-doc distinct span SET, the clip key
-    * needs POSITIONAL (i0, h) rows — so each caches separately. */
-  private case class SpanEntry(mtime: Long, df: DataFrame)
-  private val spanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), SpanEntry]()
-
+    * them). Two variants — the detection key needs the per-doc distinct
+    * span SET, the clip key needs POSITIONAL (i0, h) rows — so each caches
+    * separately. */
   private def spanTable(
-      s: SparkSession, dir: String, w: Int, positional: Boolean): DataFrame = {
-    import s.implicits._
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = spanCache.get((dir, positional))
-    if (e != null && e.mtime == srcMtime && (e.df.sparkSession eq s)) e.df
-    else {
-      val df = (if (positional)
+      s: SparkSession, dir: String, w: Int, positional: Boolean): DataFrame =
+    Artifacts.memo("spanTable", (dir, w, positional), s, docsSrc(dir)) {
+      import s.implicits._
+      (if (positional)
         Tables.documents(s, dir).select($"doc_id",
           posexplode(TextOps.spanHashesUdf(w)($"text")).as(Seq("i0", "h")))
       else
         Tables.documents(s, dir).select($"doc_id",
           explode(TextOps.spanHashSetUdf(w)($"text")).as("h")))
         .localCheckpoint(true)
-      spanCache.put((dir, positional), SpanEntry(srcMtime, df))
-      df
     }
-  }
 
   /** MinHash-LSH candidate pairs: 16 seeded-xxhash64 mins per doc banded
     * 4×4 (per-row, no shuffle); the self-join on (band, key) collides only
@@ -297,26 +273,16 @@ object LlmDedup {
           .as(Seq("band", "key")))
   }
 
-  /** The banded-signature table as a CHECKPOINTED standing artifact
-    * (mtime + owning-session freshness, the pairsCache contract): at
+  /** The banded-signature table as a CHECKPOINTED standing artifact: at
     * 100 TB the band index is the persisted table every MinHash pipeline
     * keeps; here it is materialized once (O(docs×4) rows of three longs)
     * inside the first timed consumer and served to the rest
     * (llm_dedup_minhash's candidates, stream_dedup_index's batch
     * reference). r21, guide §2.4. */
-  private case class BandsEntry(mtime: Long, df: DataFrame)
-  private val bandsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, BandsEntry]()
-  private[graft] def bandSigsCached(s: SparkSession, dir: String): DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = bandsCache.get(dir)
-    if (e != null && e.mtime == srcMtime && (e.df.sparkSession eq s)) e.df
-    else {
-      val df = bandSigs(s, dir).localCheckpoint(true)
-      bandsCache.put(dir, BandsEntry(srcMtime, df))
-      df
+  private[graft] def bandSigsCached(s: SparkSession, dir: String): DataFrame =
+    Artifacts.memo("bandSigsCached", dir, s, docsSrc(dir)) {
+      bandSigs(s, dir).localCheckpoint(true)
     }
-  }
 
   /** Incremental MinHash candidates: the delta batch (doc_id % 10 == 0)
     * against the standing corpus' PERSISTED band-bucket index plus itself —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.text.TextOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -69,50 +69,32 @@ object LlmSimilarity {
       codes: org.apache.spark.sql.DataFrame,
       lut: org.apache.spark.sql.DataFrame, qnorm: org.apache.spark.sql.DataFrame)
 
-  // Standing-artifact caches (the llm_winnow/jaccard discipline): PQ codes
-  // and the coarse-cell assignment are INGEST-TIME artifacts at 100 TB —
+  // Standing artifacts (the llm_winnow/jaccard discipline): PQ codes and
+  // the coarse-cell assignment are INGEST-TIME artifacts at 100 TB —
   // computed once when vectors land, persisted alongside them — so within a
   // session the keys that consume them (llm_knn_pq / llm_knn_ivf /
   // llm_knn_ivfpq) share one localCheckpointed build per sf dir instead of
-  // re-deriving it. Guarded by the shared mtime freshness primitive: a
-  // changed embeddings table invalidates the entry.
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, PqParts)]()
-  private val cellCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.DataFrame)]()
+  // re-deriving it.
+  private def embSrc(dir: String): String = s"$dir/embeddings.parquet"
 
-  private def embMTime(dir: String): Long =
-    graft.Freshness.mtime(s"$dir/embeddings.parquet")
-
-  private def pqParts(s: SparkSession, dir: String): PqParts = {
-    val mt = embMTime(dir)
-    pqCache.compute(dir, (_, prev) =>
-      // the session guard is the langProfile rule: a checkpointed DF is
-      // bound to the session that built it
-      if (prev != null && prev._1 == mt && (prev._2.sub.sparkSession eq s)) prev
-      else (mt, buildPqParts(s, dir)))._2
-  }
+  private def pqParts(s: SparkSession, dir: String): PqParts =
+    Artifacts.memo("pqParts", dir, s, embSrc(dir))(buildPqParts(s, dir))
 
   /** Per-vector coarse-cell ranking shared by llm_knn_ivf and llm_knn_ivfpq:
     * (vec_id, embedding, cell, sim, rn) — rn=1 is the storage cell, rn<=n
     * the probe set. localCheckpoint also breaks the self-join attribute
     * dedup trap documented at llm_knn_ivf. */
-  private def cellRanked(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val mt = embMTime(dir)
-    cellCache.compute(dir, (_, prev) =>
-      if (prev != null && prev._1 == mt && (prev._2.sparkSession eq s)) prev
-      else {
-        val cents = broadcast(centroids(s, dir).withColumnRenamed("label", "cell"))
-        val ranked = Tables.embeddings(s, dir).crossJoin(cents)
-          .select($"vec_id", $"embedding", $"cell",
-            round(TextOps.cosine($"embedding", $"centroid"), 6).as("sim"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"vec_id").orderBy($"sim".desc, $"cell".asc)))
-          .localCheckpoint(true)
-        (mt, ranked)
-      })._2
-  }
+  private def cellRanked(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("cellRanked", dir, s, embSrc(dir)) {
+      import s.implicits._
+      val cents = broadcast(centroids(s, dir).withColumnRenamed("label", "cell"))
+      Tables.embeddings(s, dir).crossJoin(cents)
+        .select($"vec_id", $"embedding", $"cell",
+          round(TextOps.cosine($"embedding", $"centroid"), 6).as("sim"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy($"vec_id").orderBy($"sim".desc, $"cell".asc)))
+        .localCheckpoint(true)
+    }
 
   /** TRAINED-centroid coarse cells for llm_knn_ivf_trained: production IVF
     * trains its cells with k-means over the corpus rather than deriving
@@ -122,56 +104,47 @@ object LlmSimilarity {
     * 6-dp rounding discipline on both d² and the means, so every argmin and
     * the whole downstream probe/top-k replays exactly in DuckDB SQL).
     * Returns (vec_id, e, cid, d2, rn): rn=1 = storage cell, rn<=n = probe
-    * order by distance. Cached per dir like cellRanked. */
-  private val trainedCellCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.DataFrame)]()
-
-  private def trainedCellRanked(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val mt = embMTime(dir)
-    trainedCellCache.compute(dir, (_, prev) =>
-      if (prev != null && prev._1 == mt && (prev._2.sparkSession eq s)) prev
-      else {
-        val k = 4
-        def d2r(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-          round(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, x) => acc + x), 6)
-        val vecs = Tables.embeddings(s, dir)
-          .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
-          .localCheckpoint(true)
-        // seed from the first k vectors by id (the llm_kmeans discipline)
-        var cents = vecs.orderBy($"vec_id").limit(k)
-          .select((row_number().over(Window.orderBy($"vec_id")) - 1)
-            .cast("int").as("cid"), $"e".as("c"))
-        for (_ <- 1 to 2) {
-          val assigned = vecs.crossJoin(broadcast(cents))
-            .withColumn("d2", d2r($"e", $"c"))
-            .withColumn("rn", row_number().over(
-              Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cid".asc)))
-            .filter($"rn" === 1).select($"vec_id", $"e", $"cid")
-          cents = assigned
-            .select($"cid", posexplode($"e").as(Seq("pos", "v")))
-            .groupBy($"cid", $"pos").agg(round(avg($"v"), 6).as("m"))
-            .groupBy($"cid")
-            .agg(transform(array_sort(collect_list(struct($"pos", $"m"))),
-              x => x.getField("m")).as("c"))
-        }
-        val ranked = vecs.crossJoin(broadcast(cents))
+    * order by distance. */
+  private def trainedCellRanked(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("trainedCellRanked", dir, s, embSrc(dir)) {
+      import s.implicits._
+      val k = 4
+      def d2r(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+        round(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, x) => acc + x), 6)
+      val vecs = Tables.embeddings(s, dir)
+        .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
+        .localCheckpoint(true)
+      // seed from the first k vectors by id (the llm_kmeans discipline)
+      var cents = vecs.orderBy($"vec_id").limit(k)
+        .select((row_number().over(Window.orderBy($"vec_id")) - 1)
+          .cast("int").as("cid"), $"e".as("c"))
+      for (_ <- 1 to 2) {
+        val assigned = vecs.crossJoin(broadcast(cents))
           .withColumn("d2", d2r($"e", $"c"))
           .withColumn("rn", row_number().over(
             Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cid".asc)))
-          .select($"vec_id", $"e", $"cid", $"d2", $"rn")
-          .localCheckpoint(true)
-        (mt, ranked)
-      })._2
-  }
+          .filter($"rn" === 1).select($"vec_id", $"e", $"cid")
+        cents = assigned
+          .select($"cid", posexplode($"e").as(Seq("pos", "v")))
+          .groupBy($"cid", $"pos").agg(round(avg($"v"), 6).as("m"))
+          .groupBy($"cid")
+          .agg(transform(array_sort(collect_list(struct($"pos", $"m"))),
+            x => x.getField("m")).as("c"))
+      }
+      vecs.crossJoin(broadcast(cents))
+        .withColumn("d2", d2r($"e", $"c"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy($"vec_id").orderBy($"d2".asc, $"cid".asc)))
+        .select($"vec_id", $"e", $"cid", $"d2", $"rn")
+        .localCheckpoint(true)
+    }
 
-  /** Bench warm-up staging entry: force-build the ANN ingest-time standing
-    * artifacts (PQ codebook/codes, label-centroid cell ranking, trained
-    * cell ranking) so the llm_knn_* keys time SERVING, not the one-time
-    * ingest build — the same staged-artifact rule termStats/langProfile/
-    * winnowFps already follow (r20; recorded in the bench JSON's staged[]).
-    * Cold paths (Verify, a fresh session) still build from parquet. */
+  /** The `stage` of the llm_knn_* keys: force-build the ANN ingest-time
+    * standing artifacts (PQ codebook/codes, label-centroid cell ranking,
+    * trained cell ranking) so the keys time SERVING, not the one-time
+    * ingest build. Cold paths (Verify, a fresh session) still build from
+    * parquet. */
   private[graft] def stageAnnArtifacts(s: SparkSession, dir: String): Unit = {
     graft.functions.CosineSim.register(s) // cellRanked scores via cosine_sim
     pqParts(s, dir)
@@ -569,7 +542,8 @@ object LlmSimilarity {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rank
         |  FROM pairs)
         |SELECT qid, rank, nid, round(cos, 4) AS cos4
-        |FROM rankedp WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
+        |FROM rankedp WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)
+      .staged(stageAnnArtifacts),
 
     // TRAINED-centroid IVF kNN: same probe/serve pipeline as llm_knn_ivf
     // but the cells come from k-means TRAINING over the corpus (two
@@ -639,7 +613,8 @@ object LlmSimilarity {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rank
         |  FROM pairs)
         |SELECT qid, rank, nid, round(cos, 4) AS cos4
-        |FROM rp WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
+        |FROM rp WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)
+      .staged(stageAnnArtifacts),
 
     // PRODUCT-QUANTIZATION kNN (IVF-PQ's storage half — Jégou et al. 2011,
     // "Product Quantization for Nearest Neighbor Search"): each vector is
@@ -731,7 +706,8 @@ object LlmSimilarity {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rank
         |  FROM exact)
         |SELECT qid, rank, nid, round(cos, 4) AS cos4
-        |FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
+        |FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)
+      .staged(stageAnnArtifacts),
 
     // IVF-PQ — the two halves composed (Jégou et al. 2011 §V: coarse
     // quantizer prunes WHICH vectors are scored, product codes decide HOW
@@ -841,7 +817,8 @@ object LlmSimilarity {
         |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid ASC) AS rank
         |  FROM exact)
         |SELECT qid, rank, nid, round(cos, 4) AS cos4
-        |FROM rankedp WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
+        |FROM rankedp WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)
+      .staged(stageAnnArtifacts),
 
     // K-MEANS over embeddings (Lloyd's algorithm) — the clustering pass a
     // curation pipeline runs to diversify/balance training data (and the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.text.TextOps
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,60 +21,39 @@ object LlmText {
 
   private val stopwords = Seq("a", "the")
 
+  /** The source every corpus artifact below is stamped against. */
+  private def docsSrc(dir: String): String = s"$dir/documents.parquet"
+
   /** Language profile (top-20 tokens per lang) as a STANDING ARTIFACT.
     * The profile costs a full corpus token explode + shuffle + per-lang
     * window, yet yields 5 rows that change only when the corpus does — at
     * 100 TB rebuilding it per query is a daily corpus-wide shuffle for a
-    * static tiny artifact. Same source-mtime freshness contract as the
-    * jaccard pairsCache (LlmDedup) / RollupRewrite / ResultCache: a
-    * rewritten documents table recomputes instead of serving stale rows.
-    * The checkpoint is 5 rows, so the cache costs nothing to hold. */
-  private case class ProfileEntry(mtime: Long, profile: org.apache.spark.sql.DataFrame)
-  private val profileCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ProfileEntry]()
-
-  private[graft] def langProfile(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = profileCache.get(dir)
-    // session guard: a checkpointed DataFrame is bound to the session that
-    // created it — its RDD blocks die with that session, so a hit from a
-    // stopped-and-recreated session would serve a dead plan
-    if (e != null && e.mtime == srcMtime && (e.profile.sparkSession eq s))
-      e.profile
-    else {
+    * static tiny artifact. The checkpoint is 5 rows, so the cache costs
+    * nothing to hold. */
+  private[graft] def langProfile(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("langProfile", dir, s, docsSrc(dir)) {
       import s.implicits._
       val tok = Tables.documents(s, dir)
         .select($"lang", explode(TextOps.tokenSet($"text")).as("tok"))
-      val profile = tok.groupBy($"lang", $"tok").agg(count(lit(1)).as("c"))
+      tok.groupBy($"lang", $"tok").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(
           Window.partitionBy($"lang").orderBy($"c".desc, $"tok".asc)))
         .filter($"rn" <= 20)
         .groupBy($"lang").agg(collect_list($"tok").as("ptoks"))
         .select($"lang".as("plang"), $"ptoks")
         .localCheckpoint(true)
-      profileCache.put(dir, ProfileEntry(srcMtime, profile))
-      profile
     }
-  }
-
-  private case class BigramEntry(mtime: Long, q: org.apache.spark.sql.DataFrame)
-  private val bigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, BigramEntry]()
 
   /** The data-derived phrase query shared by the MATCH_PHRASE family
     * (exact / prefix / edge): the corpus's most frequent true bigram as a
     * 1-row (ph: array<string>) DataFrame. Query DERIVATION is an offline
     * step at scale — a real deployment matches a user-given phrase against
     * the index — so the three keys share one corpus shingle pass instead
-    * of re-deriving it each. Same mtime + session freshness contract as
-    * langProfile above. */
-  private[graft] def topBigram(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = bigramCache.get(dir)
-    if (e != null && e.mtime == srcMtime && (e.q.sparkSession eq s)) e.q
-    else {
+    * of re-deriving it each. */
+  private[graft] def topBigram(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("topBigram", dir, s, docsSrc(dir)) {
       import s.implicits._
-      val q = Tables.documents(s, dir)
+      Tables.documents(s, dir)
         .select(explode(TextOps.shinglesUdf(2)($"text")).as("bg"))
         // sub-2-token docs emit their whole text as a pseudo-shingle; a
         // phrase query must be a true bigram (see llm_match_phrase note)
@@ -83,10 +62,7 @@ object LlmText {
         .orderBy($"n".desc, $"bg").limit(1)
         .select(split($"bg", " ").as("ph"))
         .localCheckpoint(true)
-      bigramCache.put(dir, BigramEntry(srcMtime, q))
-      q
     }
-  }
 
   /** Corpus term-frequency table (doc_id, tok, tf) — the standing artifact
     * of the lexical-scoring family: llm_tfidf and llm_bm25 both consume it,
@@ -96,50 +72,30 @@ object LlmText {
     * pair table (~tokens/doc_len smaller than the raw token stream) — the
     * measured anti-pattern was caching the exploded stream itself, which
     * broke whole-stage codegen for cheap recomputes; the post-shuffle
-    * aggregate is the right materialization grain. Same mtime + session
-    * freshness contract as langProfile above. */
-  private case class TermStatsEntry(mtime: Long, tf: org.apache.spark.sql.DataFrame)
-  private val termStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TermStatsEntry]()
-
-  private[graft] def termStats(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = termStatsCache.get(dir)
-    if (e != null && e.mtime == srcMtime && (e.tf.sparkSession eq s)) e.tf
-    else {
+    * aggregate is the right materialization grain. */
+  private[graft] def termStats(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("termStats", dir, s, docsSrc(dir)) {
       import s.implicits._
-      val tf = Tables.documents(s, dir)
+      Tables.documents(s, dir)
         .select($"doc_id", explode(TextOps.tokens($"text")).as("tok"))
         .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
         .localCheckpoint(true)
-      termStatsCache.put(dir, TermStatsEntry(srcMtime, tf))
-      tf
     }
-  }
 
   /** Per-document interpolated bigram LM score (the CCNet/KenLM-flavored
     * perplexity signal) — shared by llm_bigram_logprob (raw scores) and
     * llm_perplexity_bucket (per-language tercile partition). Returns
     * (doc_id, n_bigrams, logprob) with logprob rounded at 4 dp; see the
     * llm_bigram_logprob key comment for the plan-shape rationale.
-    * CHECKPOINTED standing artifact (doc-count rows) under the termStats
-    * freshness contract: both consumers otherwise pay the full bigram
-    * explode + three token joins each — at 100 TB the LM score table
-    * persists with the corpus and every filter stage reads it. */
-  private case class LmScoreEntry(mtime: Long, df: org.apache.spark.sql.DataFrame)
-  private val lmScoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LmScoreEntry]()
-
+    * CHECKPOINTED standing artifact (doc-count rows): both consumers
+    * otherwise pay the full bigram explode + three token joins each — at
+    * 100 TB the LM score table persists with the corpus and every filter
+    * stage reads it. */
   private[graft] def bigramDocScore(
-      s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = lmScoreCache.get(dir)
-    if (e != null && e.mtime == srcMtime && (e.df.sparkSession eq s))
-      return e.df
-    val df = bigramDocScoreBuild(s, dir).localCheckpoint(true)
-    lmScoreCache.put(dir, LmScoreEntry(srcMtime, df))
-    df
-  }
+      s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("bigramDocScore", dir, s, docsSrc(dir)) {
+      bigramDocScoreBuild(s, dir).localCheckpoint(true)
+    }
 
   /** Adjacent token pairs of a doc, one imperative pass — replaces the old
     * posexplode + lead-over-(doc_id ORDER BY pos) window spelling, whose
@@ -192,19 +148,11 @@ object LlmText {
     * interpreted expression re-evaluates the whole gram array per window —
     * measured 203 s for a bare explode of this column at sf0.1 vs 0.9 s
     * for the same compute aggregated, an O(n²) md5 blow-up the checkpoint
-    * (≈16 longs/doc) removes entirely. Same mtime + session freshness
-    * contract as termStats/langProfile above. */
-  private case class WinnowEntry(mtime: Long, fps: org.apache.spark.sql.DataFrame)
-  private val winnowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, WinnowEntry]()
-
-  private[graft] def winnowFps(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = winnowCache.get(dir)
-    if (e != null && e.mtime == srcMtime && (e.fps.sparkSession eq s)) e.fps
-    else {
+    * (≈16 longs/doc) removes entirely. */
+  private[graft] def winnowFps(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    Artifacts.memo("winnowFps", dir, s, docsSrc(dir)) {
       import s.implicits._
-      val fps = Tables.documents(s, dir)
+      Tables.documents(s, dir)
         .select($"doc_id", TextOps.tokens($"text").as("toks"))
         .withColumn("grams", expr(
           "transform(sequence(1, greatest(size(toks) - 3, 1)), i -> " +
@@ -214,10 +162,7 @@ object LlmText {
           "array_distinct(transform(sequence(1, greatest(size(grams) - 4, 1)), " +
             "j -> array_min(slice(grams, j, 5))))").as("fps"))
         .localCheckpoint(true)
-      winnowCache.put(dir, WinnowEntry(srcMtime, fps))
-      fps
     }
-  }
 
   def queries: Map[String, QueryDef] = Map(
     // Tokenization + basic text stats (also exercises metadata filters).
@@ -282,7 +227,8 @@ object LlmText {
         |SELECT doc_id, source, count(*) AS n_toks,
         |  round(avg(ln(c)) - (SELECT ln(n) FROM tot), 4) AS logprob
         |FROM toks JOIN uni USING (tok)
-        |GROUP BY doc_id, source ORDER BY doc_id""".stripMargin),
+        |GROUP BY doc_id, source ORDER BY doc_id""".stripMargin)
+      .staged(termStats),
 
     // Interpolated BIGRAM log-probability — the KenLM-flavored upgrade of
     // the unigram score (CCNet filters on n-gram LM perplexity; the bigram
@@ -320,7 +266,8 @@ object LlmText {
         |JOIN c2 ON c2.w1 = p.w1 AND c2.w2 = p.w2
         |JOIN c1 ca ON ca.w = p.w1
         |JOIN c1 cb ON cb.w = p.w2
-        |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin),
+        |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin)
+      .staged(bigramDocScore),
 
     // CCNet PERPLEXITY BUCKETING (Wenzek et al. 2020): partition each
     // language's documents into head/middle/tail terciles by LM score —
@@ -385,7 +332,8 @@ object LlmText {
         |  count(*) AS n_docs,
         |  CAST(sum(doc_id) AS BIGINT) AS sum_doc_ids,
         |  min(logprob) AS min_logprob, max(logprob) AS max_logprob
-        |FROM bk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+        |FROM bk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+      .staged(bigramDocScore),
 
     // TF-IDF top terms per document — the classic corpus-relevance signal
     // (keyword extraction, near-dup triage, topic labeling). score(d, t) =
@@ -424,7 +372,8 @@ object LlmText {
         |  FROM tf JOIN df USING (tok) CROSS JOIN n
         |  QUALIFY row_number() OVER (
         |    PARTITION BY doc_id ORDER BY score DESC, tok) <= 3) t
-        |ORDER BY doc_id, tok""".stripMargin),
+        |ORDER BY doc_id, tok""".stripMargin)
+      .staged(termStats),
 
     // WINNOWING document fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
     // algorithm): hash every k=4-token gram, slide a w=5 window over the
@@ -462,7 +411,8 @@ object LlmText {
         |SELECT doc_id, CAST(len(grams) AS INT) AS n_grams,
         |  CAST(len(fps) AS INT) AS n_fps,
         |  list_min(fps) AS fp_min, list_max(fps) AS fp_max
-        |FROM f ORDER BY doc_id""".stripMargin),
+        |FROM f ORDER BY doc_id""".stripMargin)
+      .staged(winnowFps),
 
     // Winnow-blocked candidate pairs — the dedup application of the
     // fingerprints: explode each doc's selection, self-join on the
@@ -495,7 +445,8 @@ object LlmText {
         |      FROM g)
         |SELECT a.doc_id AS i, b.doc_id AS j
         |FROM e a JOIN e b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+      .staged(winnowFps),
 
     // RAG-style document chunking — fixed token windows (64) with stride 48
     // (16-token overlap), the standard retrieval-corpus preparation step.
@@ -576,7 +527,8 @@ object LlmText {
         |    (tf * 2.2) / (tf + (0.25 + dl / avgdl * 0.75) * 1.2)), 4) AS bm25,
         |  count(*) AS n_terms_hit
         |FROM tf JOIN q USING (tok) JOIN dl USING (doc_id) CROSS JOIN s
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
+      .staged(termStats),
 
     // Quality scoring: length/stopword/repetition signals -> one score.
     "llm_quality" -> QueryDef(
@@ -693,10 +645,9 @@ object LlmText {
     // rows instead of |tokens|×|profile| join rows (recorded bench runs:
     // 7.5 s pre-rewrite -> 2.5 s, sf0.1; identical answers because
     // tokenSet is distinct, so |set ∩ profile| == the join-count it
-    // replaces). The profile itself is served from the mtime-guarded
-    // profileCache above — the standing-artifact treatment a production
-    // pipeline gives it — so steady-state runs pay only the map-only
-    // scoring pass.
+    // replaces). The profile itself is a standing artifact (langProfile
+    // above) — the treatment a production pipeline gives it — so
+    // steady-state runs pay only the map-only scoring pass.
     "llm_langid" -> QueryDef(
       (s, dir) => {
         import s.implicits._
@@ -730,7 +681,8 @@ object LlmText {
         |  FROM scored)
         |SELECT lang, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN plang = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_predicted_self
-        |FROM best WHERE rn = 1 GROUP BY lang ORDER BY lang""".stripMargin),
+        |FROM best WHERE rn = 1 GROUP BY lang ORDER BY lang""".stripMargin)
+      .staged(langProfile),
 
     // Inverted keyword match: MATCH_ANY / MATCH_ALL over the token index.
     "llm_match" -> QueryDef(
@@ -1745,7 +1697,8 @@ object LlmText {
             (sum(length($"word")) + count(lit(1))).as("n_sym0"))
           .orderBy($"doc_id")
       },
-      bpeEncodeOracleSql),
+      bpeEncodeOracleSql)
+      .staged(bpeLearned),
 
     // TOKENIZER FERTILITY BY LANGUAGE — subtokens per word under the
     // trained BPE vocabulary, the standard multilingual tokenizer-eval
@@ -1780,7 +1733,8 @@ object LlmText {
          |    AS fertility
          |FROM tl JOIN w$bpeMerges w ON w.word = tl.tok
          |  JOIN documents d USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin),
+         |GROUP BY 1 ORDER BY 1""".stripMargin)
+      .staged(bpeLearned),
 
     // DSIR — Data Selection via Importance Resampling (Xie et al. 2023):
     // select raw-corpus documents whose unigram distribution looks like a
@@ -1855,24 +1809,10 @@ object LlmText {
       merges: Seq[(Int, String, String, String, Long)],
       words: org.apache.spark.sql.DataFrame)
 
-  private case class BpeEntry(mtime: Long, model: BpeModel)
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, BpeEntry]()
-
-  /** Run (or serve) the BPE training loop for a corpus dir — the standing
-    * tokenizer artifact llm_bpe_train and llm_bpe_encode both consume.
-    * Same source-mtime freshness + session-rebind contract as termStats:
-    * a rewritten documents table retrains instead of serving stale merges,
-    * and a checkpointed word table from a dead session is rebuilt. */
-  private[graft] def bpeLearned(s: SparkSession, dir: String): BpeModel = {
-    val srcMtime = graft.Freshness.mtime(s"$dir/documents.parquet")
-    val e = bpeCache.get(dir)
-    if (e != null && e.mtime == srcMtime && (e.model.words.sparkSession eq s))
-      return e.model
-    val model = bpeTrainRun(s, dir)
-    bpeCache.put(dir, BpeEntry(srcMtime, model))
-    model
-  }
+  /** Serve the BPE training loop's model for a corpus dir — the standing
+    * tokenizer artifact llm_bpe_encode and llm_bpe_fertility consume. */
+  private[graft] def bpeLearned(s: SparkSession, dir: String): BpeModel =
+    Artifacts.memo("bpeLearned", dir, s, docsSrc(dir))(bpeTrainRun(s, dir))
 
   /** The training loop itself, UNCACHED — llm_bpe_train calls this
     * directly so the trainer key always times the build it demonstrates

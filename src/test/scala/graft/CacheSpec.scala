@@ -48,4 +48,43 @@ class CacheSpec extends SparkSpec {
     assert(h3 == h2 && m3 == m2 + 1, "source mutation must invalidate")
     assert(a == c)
   }
+
+  test("artifact memo: repeat serves, source bump and new session rebuild, " +
+    "racing first callers build once, a build may call memo") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val dir = TempDirs.create("graft_memo_src")
+    val builds = new AtomicInteger
+    def get(s: org.apache.spark.sql.SparkSession) =
+      Artifacts.memo("memoSpec", dir, s, dir) {
+        builds.incrementAndGet(); new Object }
+    val a = get(spark)
+    assert(get(spark) eq a, "repeat must serve the same object")
+    assert(builds.get == 1)
+    new java.io.File(dir).setLastModified(System.currentTimeMillis() + 5000)
+    val b = get(spark)
+    assert(!(b eq a) && builds.get == 2, "source mtime bump must rebuild")
+    val c = get(spark.newSession())
+    assert(!(c eq b) && builds.get == 3, "a new session must rebuild")
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val raced = new AtomicInteger
+      val go = new CountDownLatch(1)
+      val calls = (1 to 4).map(_ => pool.submit(() => {
+        go.await()
+        Artifacts.memo("memoSpecRace", dir, spark, dir) {
+          raced.incrementAndGet(); Thread.sleep(200); new Object }
+      }))
+      go.countDown()
+      val got = calls.map(_.get(60, TimeUnit.SECONDS))
+      assert(raced.get == 1, s"cold key built ${raced.get} times")
+      assert(got.forall(_ eq got.head))
+      // on a pool thread so a lock-order bug fails by timeout, not a hang
+      val nested = pool.submit(() =>
+        Artifacts.memo("memoSpecOuter", dir, spark, dir) {
+          Artifacts.memo("memoSpecInner", dir, spark, dir)("inner") + "+outer"
+        })
+      assert(nested.get(60, TimeUnit.SECONDS) == "inner+outer")
+    } finally pool.shutdownNow()
+  }
 }
