@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
+import scala.util.matching.Regex
 
 /** Doris DDL/DML STATEMENT front-end (SURVEY §3.1 steps 1-2, §1.1): the
   * text surface a Palo user actually drives the key-model layer with —
@@ -325,109 +326,195 @@ final class DorisDdl(s: SparkSession) {
     // canonical flat names), so authorization and dispatch below see
     // exactly the names the catalog keys on.
     guardReservedCreateName(sqlText.trim)
-    val t = rewriteDbRefs(rewriteVarReads(sqlText.trim.stripSuffix(";").trim))
-    val up = t.toUpperCase
+    val t = normalize(sqlText)
+    val up = headOf(t)
+    val st = statement(up)
     // fail CLOSED on scope-less orphan views for every reading/writing
     // statement; DROP (retract) and CREATE (re-scope) heads are the
     // remediation paths and stay allowed
-    if (!up.startsWith("DROP ") && !up.startsWith("CREATE "))
-      failOrphanViews(t)
-    authorize(t, up)
+    if (!up.startsWith("DROP ") && !up.startsWith("CREATE ")) failOrphanViews(t)
+    denial(st, t).foreach { case (priv, o) =>
+      sys.error(s"access denied: user '$currentUser' needs $priv on " +
+        s"${if (o == "*") "*" else s"'$o'"}")
+    }
     // r21 registration-skip: any statement that can change what a table
-    // view must serve (loads, deletes, DDL, restores, variable-free reads
-    // excluded) advances the mutation epoch BEFORE dispatch, so a
+    // view must serve advances the mutation epoch BEFORE dispatch, so a
     // registered view stamped with an OLDER epoch is re-registered by the
-    // next select. Pure reads (SELECT/WITH/VALUES/SHOW/DESC/EXPLAIN)
-    // leave the epoch alone — that is what makes warm selects skippable.
-    locally {
-      val readOnly = up.startsWith("SELECT") || up.startsWith("WITH") ||
-        up.startsWith("VALUES") || up.startsWith("(") ||
-        up.startsWith("SHOW") || up.startsWith("DESC") ||
-        up.startsWith("EXPLAIN")
-      if (!readOnly) mutationEpoch.incrementAndGet()
-    }
+    // next select. Read-only rows leave the epoch alone — that is what
+    // makes warm selects skippable.
+    if (st.mutates) mutationEpoch.incrementAndGet()
     maintainScheduledMtmvs()
-    if (up.startsWith("CREATE DATABASE")) { createDatabase(t); None }
-    else if (up.startsWith("DROP DATABASE")) { dropDatabase(t); None }
-    else if (up.startsWith("USE ") || up == "USE") { useDatabase(t); None }
-    else if (up.startsWith("SHOW DATABASES")) Some(showDatabases())
-    else if (up.startsWith("CREATE TABLE")) { createTable(t); None }
-    else if (up.startsWith("CREATE INDEX")) {
-      t match {
-        case CreateIndexRe(iname, tname, rest) =>
-          addIndex(tname, s"INDEX $iname $rest")
-        case _ => sys.error(s"unparseable CREATE INDEX: ${t.take(80)}")
-      }
-      None
-    }
-    else if (up.startsWith("DROP INDEX")) {
-      t match {
-        case DropIndexRe(iname, tname) => dropIndex(tname, iname)
-        case _ => sys.error(s"unparseable DROP INDEX: ${t.take(80)}")
-      }
-      None
-    }
-    else if (up.startsWith("CREATE MATERIALIZED VIEW")) { createMv(t); None }
-    else if (up.startsWith("CREATE VIEW") ||
-      up.startsWith("CREATE OR REPLACE VIEW")) { createView(t); None }
-    else if (up.startsWith("INSERT OVERWRITE")) { insertOverwrite(t); None }
-    else if (up.startsWith("INSERT INTO")) { insertInto(t); None }
-    else if (up.startsWith("LOAD LABEL")) { loadLabel(t); None }
-    else if (up.startsWith("CREATE ROUTINE LOAD")) { createRoutineLoad(t); None }
-    else if (up.startsWith("STOP ROUTINE LOAD")) { stopRoutineLoad(t); None }
-    else if (up.startsWith("PAUSE ROUTINE LOAD")) { pauseRoutineLoad(t); None }
-    else if (up.startsWith("RESUME ROUTINE LOAD")) { resumeRoutineLoad(t); None }
-    else if (up.startsWith("SHOW ROUTINE LOAD")) Some(showRoutineLoad())
-    else if (up.startsWith("CANCEL LOAD")) { cancelLoad(t); None }
-    else if (up.startsWith("BACKUP SNAPSHOT")) Some(backup(t))
-    else if (up.startsWith("RESTORE SNAPSHOT")) Some(restore(t))
-    else if (up.startsWith("SHOW SNAPSHOT")) Some(showSnapshot(t))
-    else if (up.startsWith("SHOW BACKUP")) Some(showBackupJobs(restoreSide = false))
-    else if (up.startsWith("SHOW RESTORE")) Some(showBackupJobs(restoreSide = true))
-    else if (up.startsWith("UPDATE ")) { update(t); None }
-    else if (up.startsWith("DELETE FROM")) { deleteFrom(t); None }
-    else if (up.startsWith("DROP MATERIALIZED VIEW")) { dropMv(t); None }
-    else if (up.startsWith("DROP VIEW")) { dropView(t); None }
-    else if (up.startsWith("ALTER VIEW")) { alterView(t); None }
-    else if (up.startsWith("SHOW CREATE MATERIALIZED VIEW"))
-      Some(showCreateMtmv(t))
-    else if (up.startsWith("SHOW CREATE VIEW")) Some(showCreateView(t))
-    else if (up.startsWith("DROP TABLE")) { dropTable(t); None }
-    else if (up.startsWith("ALTER TABLE")) { alterTable(t); None }
-    else if (up.startsWith("TRUNCATE TABLE")) { truncate(t); None }
-    else if (up.startsWith("REFRESH MATERIALIZED VIEW")) Some(refreshStmt(t))
-    else if (up.startsWith("EXPORT TABLE")) Some(exportTable(t))
-    else if (up.startsWith("EXPLAIN")) Some(explainStmt(t))
-    else if (up.startsWith("ANALYZE TABLE")) Some(analyzeStmt(t))
-    else if (up.startsWith("SHOW COLUMN STATS")) Some(showColumnStats(t))
-    else if (up.startsWith("SHOW INDEX")) Some(showIndex(t))
-    else if (up.startsWith("SHOW DYNAMIC PARTITION TABLES"))
-      Some(showDynamicPartitionTables())
-    else if (up.startsWith("SHOW TEMPORARY PARTITIONS")) Some(showTempPartitions(t))
-    else if (up.startsWith("SHOW PARTITIONS")) Some(showPartitions(t))
-    else if (up.startsWith("SHOW CREATE TABLE")) Some(showCreateTable(t))
-    else if (up.startsWith("SHOW COLUMNS")) Some(showColumns(t))
-    else if (up.startsWith("SHOW LOAD")) Some(showLoad(t))
-    else if (up.startsWith("SHOW DATA")) Some(showData(t))
-    else if (up.startsWith("CREATE USER")) { createUser(t); None }
-    else if (up.startsWith("DROP USER")) { dropUser(t); None }
-    else if (up.startsWith("CREATE ROLE")) { createRole(t); None }
-    else if (up.startsWith("DROP ROLE")) { dropRole(t); None }
-    else if (up.startsWith("SHOW ROLES")) Some(showRoles())
-    else if (up.startsWith("GRANT ")) { grantStmt(t); None }
-    else if (up.startsWith("REVOKE ")) { revokeStmt(t); None }
-    else if (up.startsWith("SHOW GRANTS")) Some(showGrants(t))
-    else if (up.startsWith("SHOW VARIABLES") ||
-      up.startsWith("SHOW SESSION VARIABLES") ||
-      up.startsWith("SHOW GLOBAL VARIABLES")) Some(showVariables(t))
-    else if (up.startsWith("SET ")) { setVariable(t); None }
-    else if (up.startsWith("SHOW TABLES")) Some(showTables())
-    else if (up.startsWith("DESC")) Some(describe(t))
-    // sql_select_limit caps TOP-LEVEL SELECT results only (the MySQL/Doris
-    // contract) — internal SELECT consumers (CTAS, OUTFILE) call select()
-    // directly and stay uncapped
-    else Some(applySelectLimit(select(t)))
+    st.run(t)
   }
+
+  private def normalize(sqlText: String): String =
+    rewriteDbRefs(rewriteVarReads(sqlText.trim.stripSuffix(";").trim))
+
+  /** The lookup key of a statement: upper-cased, whitespace runs collapsed
+    * to one space, so `DROP\nTABLE t` is the DROP TABLE statement. */
+  private def headOf(text: String): String =
+    text.trim.toUpperCase.replaceAll("\\s+", " ")
+
+  /** `up` starts with the head keywords `h`, ending at a word boundary. */
+  private def headed(up: String, h: String): Boolean =
+    up.startsWith(h) && (up.length == h.length || !h.last.isLetter ||
+      !(up.charAt(h.length).isLetterOrDigit || up.charAt(h.length) == '_'))
+
+  // ------------------------------------------------------- statement table
+  // Doris's FE parses a statement once into one typed statement that both
+  // execution and the privilege check read ([doris: fe/fe-core/src/main/
+  // cup/sql_parser.cup]). Here one row per statement form plays that part:
+  // `execute` selects the row by its head keywords, and the row decides
+  // the privilege (`needs`: the (privilege, objects) a non-root user must
+  // hold, each row extracting its own target), the mutation epoch
+  // (`mutates`: every row but SELECT/WITH/VALUES, SHOW, DESC and EXPLAIN)
+  // and the handler. No two rows' heads overlap at a word boundary, so the
+  // table order is immaterial; a statement matching no row is a query.
+  private type Needs = String => Seq[(String, Iterable[String])]
+  private final class Stmt(val heads: Seq[String], val mutates: Boolean,
+      val needs: Needs, val run: String => Option[DataFrame]) {
+    def name: String = heads.head
+  }
+  private def write(heads: String*)(needs: Needs)(h: String => Unit) =
+    new Stmt(heads, mutates = true, needs, t => { h(t); None })
+  private def writeRows(heads: String*)(needs: Needs)(h: String => DataFrame) =
+    new Stmt(heads, mutates = true, needs, t => Some(h(t)))
+  private def read(heads: String*)(needs: Needs)(h: String => DataFrame) =
+    new Stmt(heads, mutates = false, needs, t => Some(h(t)))
+
+  // privilege rules. Sources of a gated write (INSERT ... SELECT, CTAS,
+  // UPDATE ... FROM) additionally need SELECT_PRIV, matching Doris; a row
+  // whose regex finds no target demands the privilege on all objects.
+  private val ungated: Needs = _ => Nil
+  private def global(priv: String): Needs = _ => Seq(priv -> Seq("*"))
+  private val selects: Needs = t => Seq("SELECT_PRIV" -> directRefs(t))
+  private val creates: Needs =
+    t => Seq("CREATE_PRIV" -> Seq("*"), "SELECT_PRIV" -> directRefs(t))
+  private val alters: Needs = t => Seq("ALTER_PRIV" -> directRefs(t))
+  private def onObject(priv: String, re: Regex): Needs =
+    t => Seq(priv -> Seq(first(re, t).getOrElse("*")))
+  private def loads(re: Regex): Needs = t => {
+    val tgt = first(re, t)
+    Seq("LOAD_PRIV" -> Seq(tgt.getOrElse("*")),
+      "SELECT_PRIV" -> (directRefs(t) -- tgt))
+  }
+  // load-job control (routine-load state, CANCEL LOAD) names no table
+  private val controlsLoads: Needs =
+    t => Seq("LOAD_PRIV" -> Seq("*"), "SELECT_PRIV" -> directRefs(t))
+  private val altersView: Needs = t => {
+    val v = first(after("ALTER VIEW"), t).getOrElse("*")
+    Seq("ALTER_PRIV" -> Seq(v), "SELECT_PRIV" -> (directRefs(t) - v))
+  }
+  // own grants are always visible; listing someone else's needs GRANT
+  private val grantsOf: Needs = {
+    case ShowGrantsRe(u) if u == null || u == currentUser => Nil
+    case _ => Seq("GRANT_PRIV" -> Seq("*"))
+  }
+
+  private def first(re: Regex, t: String): Option[String] =
+    re.findFirstMatchIn(t).map(_.group(1))
+  private def headRe(head: String): String = "(?is)^" + head.replace(" ", "\\s+")
+  /** The object right after `head`: `DROP TABLE [IF EXISTS] t`, `UPDATE t`. */
+  private def after(head: String): Regex =
+    (headRe(head) + """\s+(?:TABLE\s+|IF\s+EXISTS\s+)?`?(\w+)`?""").r
+  /** The object of `head name ON t` (indexes, routine loads). */
+  private def on(head: String): Regex =
+    (headRe(head) + """\s+\S+\s+ON\s+`?(\w+)`?""").r
+
+  // sql_select_limit caps TOP-LEVEL SELECT results only (the MySQL/Doris
+  // contract) — internal SELECT consumers (CTAS, OUTFILE) call select()
+  // directly and stay uncapped
+  private val query =
+    read("SELECT", "WITH", "VALUES", "(")(selects)(t => applySelectLimit(select(t)))
+
+  private val statements: Seq[Stmt] = Seq(
+    write("CREATE DATABASE")(global("CREATE_PRIV"))(createDatabase),
+    write("DROP DATABASE")(global("DROP_PRIV"))(dropDatabase),
+    write("USE")(ungated)(useDatabase), // session navigation, ungated
+    read("SHOW DATABASES")(ungated)(_ => showDatabases()),
+    write("CREATE TABLE")(creates)(createTable),
+    write("CREATE INDEX")(onObject("ALTER_PRIV", on("CREATE INDEX"))) {
+      case CreateIndexRe(iname, tname, rest) =>
+        addIndex(tname, s"INDEX $iname $rest")
+      case t => sys.error(s"unparseable CREATE INDEX: ${t.take(80)}")
+    },
+    write("DROP INDEX")(onObject("ALTER_PRIV", on("DROP INDEX"))) {
+      case DropIndexRe(iname, tname) => dropIndex(tname, iname)
+      case t => sys.error(s"unparseable DROP INDEX: ${t.take(80)}")
+    },
+    write("CREATE MATERIALIZED VIEW")(alters)(createMv),
+    write("CREATE VIEW", "CREATE OR REPLACE VIEW")(creates)(createView),
+    write("INSERT OVERWRITE")(loads(after("INSERT OVERWRITE")))(insertOverwrite),
+    write("INSERT INTO")(loads(after("INSERT INTO")))(insertInto),
+    write("LOAD LABEL")(loads("""(?is)\bINTO\s+TABLE\s+`?(\w+)`?""".r))(loadLabel),
+    write("CREATE ROUTINE LOAD")(loads(on("CREATE ROUTINE LOAD")))(createRoutineLoad),
+    write("STOP ROUTINE LOAD")(controlsLoads)(stopRoutineLoad),
+    write("PAUSE ROUTINE LOAD")(controlsLoads)(pauseRoutineLoad),
+    write("RESUME ROUTINE LOAD")(controlsLoads)(resumeRoutineLoad),
+    read("SHOW ROUTINE LOAD")(ungated)(_ => showRoutineLoad()),
+    write("CANCEL LOAD")(controlsLoads)(cancelLoad),
+    writeRows("BACKUP SNAPSHOT")(global("ADMIN_PRIV"))(backup),
+    writeRows("RESTORE SNAPSHOT")(global("ADMIN_PRIV"))(restore),
+    read("SHOW SNAPSHOT")(ungated)(showSnapshot),
+    read("SHOW BACKUP")(ungated)(_ => showBackupJobs(restoreSide = false)),
+    read("SHOW RESTORE")(ungated)(_ => showBackupJobs(restoreSide = true)),
+    write("UPDATE")(loads(after("UPDATE")))(update),
+    write("DELETE FROM")(loads(after("DELETE FROM")))(deleteFrom),
+    write("DROP MATERIALIZED VIEW")(global("DROP_PRIV"))(dropMv),
+    write("DROP VIEW")(onObject("DROP_PRIV", after("DROP VIEW")))(dropView),
+    write("ALTER VIEW")(altersView)(alterView),
+    read("SHOW CREATE MATERIALIZED VIEW")(selects)(showCreateMtmv),
+    read("SHOW CREATE VIEW")(selects)(showCreateView),
+    write("DROP TABLE")(onObject("DROP_PRIV", after("DROP TABLE")))(dropTable),
+    write("ALTER TABLE")(onObject("ALTER_PRIV", after("ALTER TABLE")))(alterTable),
+    write("TRUNCATE TABLE")(onObject("ALTER_PRIV", after("TRUNCATE TABLE")))(truncate),
+    writeRows("REFRESH MATERIALIZED VIEW")(alters)(refreshStmt),
+    writeRows("EXPORT TABLE")(onObject("SELECT_PRIV", after("EXPORT TABLE")))(exportTable),
+    read("EXPLAIN")(selects)(explainStmt),
+    writeRows("ANALYZE TABLE")(selects)(analyzeStmt),
+    read("SHOW COLUMN STATS")(selects)(showColumnStats),
+    read("SHOW INDEX", "SHOW INDEXES")(selects)(showIndex),
+    read("SHOW DYNAMIC PARTITION TABLES")(ungated)(_ => showDynamicPartitionTables()),
+    read("SHOW TEMPORARY PARTITIONS")(selects)(showTempPartitions),
+    read("SHOW PARTITIONS")(selects)(showPartitions),
+    read("SHOW CREATE TABLE")(selects)(showCreateTable),
+    read("SHOW COLUMNS")(selects)(showColumns),
+    read("SHOW LOAD")(selects)(showLoad),
+    read("SHOW DATA")(selects)(showData),
+    write("CREATE USER")(global("GRANT_PRIV"))(createUser),
+    write("DROP USER")(global("GRANT_PRIV"))(dropUser),
+    write("CREATE ROLE")(global("GRANT_PRIV"))(createRole),
+    write("DROP ROLE")(global("GRANT_PRIV"))(dropRole),
+    read("SHOW ROLES")(global("GRANT_PRIV"))(_ => showRoles()),
+    write("GRANT")(global("GRANT_PRIV"))(grantStmt),
+    write("REVOKE")(global("GRANT_PRIV"))(revokeStmt),
+    read("SHOW GRANTS")(grantsOf)(showGrants),
+    read("SHOW VARIABLES", "SHOW SESSION VARIABLES", "SHOW GLOBAL VARIABLES")(
+      selects)(showVariables),
+    write("SET")(selects)(setVariable),
+    read("SHOW TABLES")(ungated)(_ => showTables()),
+    read("DESC", "DESCRIBE")(selects)(describe),
+    query)
+
+  private def statement(up: String): Stmt =
+    statements.find(_.heads.exists(headed(up, _))).getOrElse(query)
+
+  /** The first (privilege, object) the current user lacks for statement
+    * `t` under row `st`. root holds everything and skips the scan. */
+  private def denial(st: Stmt, t: String): Option[(String, String)] =
+    if (currentUser == "root") None
+    else st.needs(t).iterator.flatMap { case (priv, objs) =>
+      objs.find(o => !hasPriv(currentUser, priv, o)).map(priv -> _)
+    }.nextOption()
+
+  /** Side-effect free, for tests: the row `sqlText` selects (by first
+    * head), its `mutates`, and the current user's first denial. */
+  private[graft] def classify(sqlText: String) = {
+    val t = normalize(sqlText)
+    val st = statement(headOf(t))
+    (st.name, st.mutates, denial(st, t))
+  }
+  private[graft] def statementNames: Seq[String] = statements.map(_.name)
 
   /** Execute a SELECT (or any statement returning rows). */
   def sql(sqlText: String): DataFrame =
@@ -4045,11 +4132,20 @@ final class DorisDdl(s: SparkSession) {
       .linesIterator.toSeq.toDF("plan")
   }
 
-  private def select(text: String): DataFrame = text match {
-    case IntoOutfileRe(sel, path, fmt)
-        if text.toUpperCase.contains("INTO OUTFILE") =>
-      selectIntoOutfile(sel, path, Option(fmt).getOrElse("CSV"))
-    case _ => selectPlain(text)
+  /** The query path (the query row, EXPLAIN, CTAS, OUTFILE). Only query
+    * heads reach `spark.sql`: it runs commands eagerly, so `DROP TABLE t`
+    * there would drop t's temp view, `CREATE TABLE ... USING` would write
+    * a Spark-catalog table and `SHOW TABLES` would list the session
+    * catalog, all past the statement table's privileges. */
+  private def select(text: String): DataFrame = {
+    if (!query.heads.exists(headed(headOf(text), _))) sys.error(
+      s"not a query (SELECT/WITH/VALUES expected): ${text.take(80)}")
+    text match {
+      case IntoOutfileRe(sel, path, fmt)
+          if text.toUpperCase.contains("INTO OUTFILE") =>
+        selectIntoOutfile(sel, path, Option(fmt).getOrElse("CSV"))
+      case _ => selectPlain(text)
+    }
   }
 
   // FILE('path', 'format') table-valued function ([doris: fe/.../
@@ -4736,6 +4832,13 @@ final class DorisDdl(s: SparkSession) {
     case _ => sys.error(s"unparseable SHOW COLUMNS: ${text.take(80)}")
   }
 
+  /** Every table the current user holds SELECT_PRIV on (root: all) — the
+    * unqualified SHOW LOAD / SHOW DATA listings filter by privilege, as
+    * Doris's do. */
+  private def readableTables: Seq[TableState] =
+    tables.synchronized(tables.values.toSeq)
+      .filter(t => hasPriv(currentUser, "SELECT_PRIV", t.def_.name))
+
   private val ShowLoadRe =
     """(?is)^SHOW\s+LOAD(?:\s+FROM\s+`?(\w+)`?)?$""".r
 
@@ -4744,10 +4847,8 @@ final class DorisDdl(s: SparkSession) {
     * FINISHED here — failed loads never publish a version). */
   private def showLoad(text: String): DataFrame = text match {
     case ShowLoadRe(name) =>
-      val targets = Option(name) match {
-        case Some(n) => Seq(state(n))
-        case None => tables.synchronized(tables.values.toSeq)
-      }
+      val targets = Option(name).map(n => Seq(state(n)))
+        .getOrElse(readableTables)
       import s.implicits._
       targets.flatMap { t =>
         t.synchronized(t.loads.toSeq).map { case (ver, lbl) =>
@@ -4785,10 +4886,8 @@ final class DorisDdl(s: SparkSession) {
     * accounting Doris's FE serves from tablet metadata. */
   private def showData(text: String): DataFrame = text match {
     case ShowDataRe(name) =>
-      val targets = Option(name) match {
-        case Some(n) => Seq(state(n))
-        case None => tables.synchronized(tables.values.toSeq)
-      }
+      val targets = Option(name).map(n => Seq(state(n)))
+        .getOrElse(readableTables)
       import s.implicits._
       targets.map { t =>
         val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(t.dir))
@@ -5111,16 +5210,6 @@ final class DorisDdl(s: SparkSession) {
       (at(splitDb(obj)._1 + ".*") || at(obj)))
   }
 
-  /** Check `priv` on every object in `objs` (empty = nothing to check —
-    * an empty SOURCE set must not escalate to a global requirement). A
-    * target-less fallback passes "*" explicitly. */
-  private def requirePriv(priv: String, objs: Iterable[String]): Unit =
-    objs.foreach { o =>
-      if (!hasPriv(currentUser, priv, o))
-        sys.error(s"access denied: user '$currentUser' needs $priv on " +
-          s"${if (o == "*") "*" else s"'$o'"}")
-    }
-
   /** Managed objects (tables or views) the statement names DIRECTLY,
     * outside string literals — no view expansion: per Doris, querying a
     * view needs SELECT on the VIEW, not on its base tables. */
@@ -5151,98 +5240,6 @@ final class DorisDdl(s: SparkSession) {
     // not grantable objects: a direct reference demands the superuser
     // scope rather than slipping past every check.
     if (hit("__(?:file_tvf|mtmv_src)_\\w+")) scopes + "*" else scopes
-  }
-
-  // The write target of a DML/DDL statement, by form.
-  private val TargetRes: Seq[scala.util.matching.Regex] = Seq(
-    """(?is)^INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?`?(\w+)`?""".r,
-    """(?is)^UPDATE\s+`?(\w+)`?""".r,
-    """(?is)^DELETE\s+FROM\s+`?(\w+)`?""".r,
-    """(?is)^(?:ALTER|TRUNCATE)\s+TABLE\s+`?(\w+)`?""".r,
-    """(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?""".r,
-    """(?is)^(?:CREATE|DROP)\s+INDEX\s+\S+\s+ON\s+`?(\w+)`?""".r,
-    """(?is)^EXPORT\s+TABLE\s+`?(\w+)`?""".r,
-    """(?is).*?\bINTO\s+TABLE\s+`?(\w+)`?""".r, // LOAD LABEL body
-    """(?is)^(?:CREATE|STOP|PAUSE|RESUME)\s+ROUTINE\s+LOAD\s+\S+\s+ON\s+`?(\w+)`?""".r)
-
-  private def targetOf(t: String): Option[String] =
-    TargetRes.view.flatMap(_.findFirstMatchIn(t)).headOption.map(_.group(1))
-
-  private val ViewStmtTargetRe =
-    """(?is)^(?:ALTER|DROP)\s+VIEW\s+(?:IF\s+EXISTS\s+)?`?(\w+)`?""".r
-
-  private def viewStmtTarget(t: String): Iterable[String] =
-    ViewStmtTargetRe.findFirstMatchIn(t).map(_.group(1))
-      .orElse(Some("*"))
-
-  private val RoutineLoadStmtRe =
-    """^(?:CREATE|STOP|PAUSE|RESUME)\s+ROUTINE\s+LOAD\b""".r
-
-  /** Statement-family → required privilege, evaluated BEFORE execution.
-    * root short-circuits (the default session — zero overhead for every
-    * existing caller). Sources of a gated write (INSERT ... SELECT, CTAS,
-    * UPDATE ... FROM) additionally need SELECT_PRIV, matching Doris. */
-  private def authorize(t: String, up: String): Unit = {
-    if (currentUser == "root") return
-    val tgt = targetOf(t)
-    def sources(): Set[String] = directRefs(t) -- tgt
-    if (up.startsWith("GRANT ") || up.startsWith("REVOKE ") ||
-      up.startsWith("CREATE USER") || up.startsWith("DROP USER") ||
-      up.startsWith("CREATE ROLE") || up.startsWith("DROP ROLE") ||
-      up.startsWith("SHOW ROLES"))
-      requirePriv("GRANT_PRIV", Seq("*"))
-    else if (up.startsWith("SHOW GRANTS")) t match {
-      // own grants are always visible; listing someone else's needs GRANT
-      case ShowGrantsRe(forUser)
-        if forUser == null || forUser == currentUser => ()
-      case _ => requirePriv("GRANT_PRIV", Seq("*"))
-    }
-    else if (up.startsWith("BACKUP") || up.startsWith("RESTORE"))
-      requirePriv("ADMIN_PRIV", Seq("*"))
-    else if (up.startsWith("CREATE DATABASE"))
-      requirePriv("CREATE_PRIV", Seq("*"))
-    else if (up.startsWith("DROP DATABASE"))
-      requirePriv("DROP_PRIV", Seq("*"))
-    else if (up.startsWith("USE ") || up == "USE" ||
-      up.startsWith("SHOW DATABASES")) () // session navigation, ungated
-    else if (up.startsWith("CREATE TABLE") || up.startsWith("CREATE VIEW") ||
-      up.startsWith("CREATE OR REPLACE VIEW")) {
-      requirePriv("CREATE_PRIV", Seq("*"))
-      requirePriv("SELECT_PRIV", sources())
-    }
-    else if (up.startsWith("CREATE MATERIALIZED VIEW") ||
-      up.startsWith("REFRESH MATERIALIZED VIEW"))
-      requirePriv("ALTER_PRIV", sources())
-    else if (up.startsWith("DROP MATERIALIZED VIEW"))
-      requirePriv("DROP_PRIV", Seq("*"))
-    else if (up.startsWith("ALTER VIEW")) {
-      requirePriv("ALTER_PRIV", viewStmtTarget(t))
-      requirePriv("SELECT_PRIV", sources() -- viewStmtTarget(t))
-    }
-    else if (up.startsWith("DROP VIEW"))
-      requirePriv("DROP_PRIV", viewStmtTarget(t))
-    else if (up.startsWith("CREATE INDEX") || up.startsWith("DROP INDEX") ||
-      up.startsWith("ALTER TABLE") || up.startsWith("TRUNCATE TABLE"))
-      requirePriv("ALTER_PRIV", tgt.orElse(Some("*")))
-    else if (up.startsWith("DROP TABLE"))
-      requirePriv("DROP_PRIV", tgt.orElse(Some("*")))
-    else if (up.startsWith("INSERT ") || up.startsWith("LOAD LABEL") ||
-      up.startsWith("UPDATE ") || up.startsWith("DELETE FROM") ||
-      up.startsWith("CANCEL LOAD") ||
-      // anchored to the statement START: a SELECT whose literal merely
-      // contains the words 'routine load' must stay on the SELECT path
-      RoutineLoadStmtRe.findFirstIn(up).isDefined) {
-      requirePriv("LOAD_PRIV", tgt.orElse(Some("*")))
-      requirePriv("SELECT_PRIV", sources())
-    }
-    else if (up.startsWith("EXPORT TABLE"))
-      requirePriv("SELECT_PRIV", tgt.orElse(Some("*")))
-    else if (up.startsWith("SHOW TABLES") || up.startsWith("SHOW ROUTINE") ||
-      up.startsWith("SHOW BACKUP") || up.startsWith("SHOW RESTORE") ||
-      up.startsWith("SHOW SNAPSHOT") ||
-      up.startsWith("SHOW DYNAMIC PARTITION TABLES")) ()
-    else // SELECT / DESC / EXPLAIN / ANALYZE / remaining SHOW ... FROM t
-      requirePriv("SELECT_PRIV", directRefs(t))
   }
 
   // ------------------------------------------------------ session variables
@@ -5358,7 +5355,6 @@ final class DorisDdl(s: SparkSession) {
     """(?is)^GRANT\s+('\w+'(?:\s*,\s*'\w+')*)\s+TO\s+'(\w+)'(?:@'[^']*')?$""".r
   private val RevokeRolesRe =
     """(?is)^REVOKE\s+('\w+'(?:\s*,\s*'\w+')*)\s+FROM\s+'(\w+)'(?:@'[^']*')?$""".r
-  private val ShowRolesRe = """(?is)^SHOW\s+ROLES$""".r
   private val GrantRe =
     """(?is)^GRANT\s+(.+?)\s+ON\s+(\*(?:\.\*)?|`?\w+`?\.\*|`?\w+`?(?:\.`?\w+`?)?)\s+TO\s+(?:USER\s+)?'(\w+)'(?:@'[^']*')?$""".r
   private val RevokeRe =

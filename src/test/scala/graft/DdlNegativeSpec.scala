@@ -18,6 +18,10 @@ class DdlNegativeSpec extends SparkSpec {
 
   private def freshContext(): (DorisDdl, Seq[String]) = {
     val ddl = track(new DorisDdl(TestSpark.spark))
+    val dir = TempDirs.create("graft_nf")
+    val csv = java.nio.file.Paths.get(dir, "in.csv")
+    java.nio.file.Files.write(csv, "7,7.0,g\n".getBytes("UTF-8"))
+    val routineSrc = TempDirs.create("graft_nf_routine")
     val statements = Seq(
       """CREATE TABLE nf_u (k BIGINT, v DOUBLE, note VARCHAR(20))
         |UNIQUE KEY(k) DISTRIBUTED BY HASH(k) BUCKETS 2""".stripMargin,
@@ -38,6 +42,8 @@ class DdlNegativeSpec extends SparkSpec {
       "INSERT INTO nf_a VALUES ('2024-01-10 01:00:00', 1, 1.0)",
       "INSERT INTO nf_s VALUES (1, 10.0)",
       "INSERT INTO nf_u WITH LABEL nf_lbl VALUES (3, 3.0, 'c')",
+      s"LOAD LABEL nf_ll (DATA INFILE('$csv') INTO TABLE nf_u)",
+      "CANCEL LOAD WHERE LABEL = 'nf_ll'", // rejects by design (FINISHED)
       "UPDATE nf_u SET v = 9.0 WHERE k = 1",
       "UPDATE nf_u SET v = nf_s.w FROM nf_s WHERE nf_u.k = nf_s.r",
       "DELETE FROM nf_u WHERE k = 2",
@@ -52,6 +58,8 @@ class DdlNegativeSpec extends SparkSpec {
       "CREATE VIEW nf_vw AS SELECT k, v FROM nf_u",
       "ALTER VIEW nf_vw AS SELECT k FROM nf_u",
       "SHOW CREATE VIEW nf_vw",
+      "CREATE VIEW nf_vd AS SELECT k FROM nf_u",
+      "DROP VIEW nf_vd",
       "ALTER TABLE nf_d ADD PARTITION p3 VALUES LESS THAN ('2024-04-01')",
       "ALTER TABLE nf_d ADD COLUMN tag VARCHAR(8) DEFAULT 'none'",
       "ALTER TABLE nf_d DROP PARTITION p3",
@@ -63,18 +71,38 @@ class DdlNegativeSpec extends SparkSpec {
         "VALUES [('2024-02-01'), ('2024-03-01'))",
       "INSERT INTO nf_d TEMPORARY PARTITION (tp1) " +
         "VALUES (5, '2024-02-15', 5.0, 'tmp')",
+      "SHOW TEMPORARY PARTITIONS FROM nf_d",
       "ALTER TABLE nf_d REPLACE PARTITION (pmid) WITH TEMPORARY PARTITION (tp1)",
       """ALTER TABLE nf_a SET ("dynamic_partition.enable" = "true",
         |  "dynamic_partition.start" = "-30",
         |  "dynamic_partition.end" = "2")""".stripMargin,
+      "INSERT OVERWRITE TABLE nf_s SELECT 7 AS r, 70.0 AS w",
       "TRUNCATE TABLE nf_s",
       "INSERT INTO nf_s VALUES (2, 20.0)",
+      s"CREATE ROUTINE LOAD nf_job ON nf_s FROM FILE('$routineSrc', 'parquet')",
+      "PAUSE ROUTINE LOAD FOR nf_job",
+      "RESUME ROUTINE LOAD FOR nf_job",
+      "SHOW ROUTINE LOAD",
+      "STOP ROUTINE LOAD FOR nf_job",
+      """CREATE TABLE nf_b (k BIGINT, v DOUBLE) DUPLICATE KEY(k)
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin,
+      "INSERT INTO nf_b VALUES (1, 1.0)",
+      s"EXPORT TABLE nf_b TO '$dir/export'",
+      s"BACKUP SNAPSHOT nf_snap TO '$dir/repo' ON (nf_b)",
+      s"SHOW SNAPSHOT ON '$dir/repo'",
+      "SHOW BACKUP",
+      "DROP TABLE nf_b",
+      s"RESTORE SNAPSHOT nf_snap FROM '$dir/repo'",
+      "SHOW RESTORE",
       "ANALYZE TABLE nf_u",
       "SHOW COLUMN STATS nf_u",
       "SHOW PARTITIONS FROM nf_d",
       "SHOW CREATE TABLE nf_u",
       "SHOW INDEX FROM nf_u",
       "SHOW LOAD FROM nf_u",
+      "SHOW COLUMNS FROM nf_u",
+      "SHOW DATA",
+      "SHOW TABLES",
       "SHOW DYNAMIC PARTITION TABLES",
       "DESC nf_u",
       "EXPLAIN SELECT k FROM nf_u",
@@ -105,7 +133,14 @@ class DdlNegativeSpec extends SparkSpec {
       "REFRESH MATERIALIZED VIEW nf_mtv",
       "DROP MATERIALIZED VIEW nf_mtv",
       "DROP USER 'nf_user'",
-      "SELECT k, v FROM nf_u ORDER BY k")
+      "SELECT k, v FROM nf_u ORDER BY k",
+      // last: a mutant that switches the current database only affects
+      // the mutants after it
+      "CREATE DATABASE nf_db",
+      "USE nf_db",
+      "SHOW DATABASES",
+      "USE default_db",
+      "DROP DATABASE nf_db")
     (ddl, statements)
   }
 
@@ -124,7 +159,9 @@ class DdlNegativeSpec extends SparkSpec {
     "STATS", "LOAD", "DYNAMIC", "GRANT", "REVOKE", "TO", "USER", "GRANTS",
     "VARIABLES", "LIKE", "SESSION", "GLOBAL", "IDENTIFIED",
     "ROLE", "ROLES", "BUILD", "IMMEDIATE", "REFRESH", "SCHEDULE", "EVERY",
-    "MINUTE", "COMMIT", "MANUAL")
+    "MINUTE", "COMMIT", "MANUAL", "DATABASE", "DATABASES", "USE",
+    "OVERWRITE", "ROUTINE", "STOP", "PAUSE", "RESUME", "FOR", "CANCEL",
+    "BACKUP", "RESTORE", "SNAPSHOT", "EXPORT", "COLUMNS", "DATA", "TABLES")
 
   private def mutants(st: String): Seq[String] = {
     val toks = st.split("\\s+").toVector
@@ -159,7 +196,13 @@ class DdlNegativeSpec extends SparkSpec {
     "statement or rejects with a NAMED error — never a MatchError/NPE/" +
     "index crash") {
     val (ddl, statements) = freshContext()
-    statements.foreach(ddl.execute) // the originals must all be valid
+    // the originals must all be valid; CANCEL LOAD of a published label is
+    // valid and its contract is a named reject
+    statements.foreach { st =>
+      if (st.startsWith("CANCEL LOAD")) assert(intercept[RuntimeException](
+        ddl.execute(st)).getMessage.contains("cannot be cancelled"))
+      else ddl.execute(st)
+    }
     var checked = 0
     val crashes = scala.collection.mutable.ArrayBuffer.empty[String]
     for (st <- statements; mut <- mutants(st)) {
@@ -172,8 +215,18 @@ class DdlNegativeSpec extends SparkSpec {
       }
     }
     info(s"checked $checked mutants across ${statements.size} statements")
+    // a mutant may have started a routine-load job: stop every running one
+    ddl.sql("SHOW ROUTINE LOAD").collect().filter(_.getString(2) == "RUNNING")
+      .foreach(r => ddl.execute(s"STOP ROUTINE LOAD FOR ${r.getString(0)}"))
     assert(crashes.isEmpty,
       s"${crashes.size} unnamed crashes:\n  ${crashes.take(12).mkString("\n  ")}")
+  }
+
+  test("the corpus holds a valid statement for every statement-table row") {
+    val (ddl, statements) = freshContext()
+    val reached = statements.map(ddl.classify(_)._1).toSet
+    val missing = ddl.statementNames.filterNot(reached)
+    assert(missing.isEmpty, s"rows with no corpus statement: $missing")
   }
 
   test("dispatch probes: bare prefixes, half-statements, garbage, and the " +

@@ -2888,6 +2888,209 @@ class DdlSpec extends SparkSpec {
       .contains("LOAD_PRIV"))
   }
 
+  test("statement table: every row's lookup, mutation-epoch flag and first " +
+    "denial for a user with no grants match the pre-table dispatch chain, " +
+    "read-only list and authorize") {
+    val ddl = fresh()
+    ddl.execute("""CREATE TABLE st_t (k BIGINT, v DOUBLE) UNIQUE KEY(k)
+      |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+    ddl.execute("""CREATE TABLE st_u (k BIGINT, v DOUBLE) DUPLICATE KEY(k)
+      |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+    ddl.execute("CREATE VIEW st_v AS SELECT k FROM st_t")
+    ddl.execute(
+      "CREATE MATERIALIZED VIEW st_smv AS SELECT k, SUM(v) AS sv FROM st_u GROUP BY k")
+    ddl.execute("CREATE USER 'nobody'")
+    ddl.login("nobody")
+    // (statement, row, mutates, first denial). Recorded from the parent
+    // commit's three classifications; the query row is the old fallback.
+    val cases: Seq[(String, String, Boolean, Option[(String, String)])] = Seq(
+      ("CREATE DATABASE st_db", "CREATE DATABASE", true, Some("CREATE_PRIV" -> "*")),
+      ("DROP DATABASE st_db", "DROP DATABASE", true, Some("DROP_PRIV" -> "*")),
+      ("USE default_db", "USE", true, None),
+      ("SHOW DATABASES", "SHOW DATABASES", false, None),
+      ("CREATE TABLE st_n (k BIGINT) DUPLICATE KEY(k) " +
+        "DISTRIBUTED BY HASH(k) BUCKETS 1", "CREATE TABLE", true,
+        Some("CREATE_PRIV" -> "*")),
+      ("CREATE TABLE st_n2 DUPLICATE KEY(k) DISTRIBUTED BY HASH(k) " +
+        "BUCKETS 1 AS SELECT k FROM st_t", "CREATE TABLE", true,
+        Some("CREATE_PRIV" -> "*")),
+      ("CREATE INDEX st_ix ON st_t (v) USING INVERTED", "CREATE INDEX", true,
+        Some("ALTER_PRIV" -> "st_t")),
+      ("DROP INDEX st_ix ON st_t", "DROP INDEX", true, Some("ALTER_PRIV" -> "st_t")),
+      ("CREATE MATERIALIZED VIEW st_mv AS SELECT k, SUM(v) AS sv FROM st_u " +
+        "GROUP BY k", "CREATE MATERIALIZED VIEW", true, Some("ALTER_PRIV" -> "st_u")),
+      ("CREATE VIEW st_v2 AS SELECT k FROM st_t", "CREATE VIEW", true,
+        Some("CREATE_PRIV" -> "*")),
+      ("CREATE OR REPLACE VIEW st_v AS SELECT k FROM st_t", "CREATE VIEW", true,
+        Some("CREATE_PRIV" -> "*")),
+      ("INSERT OVERWRITE TABLE st_t SELECT * FROM st_u", "INSERT OVERWRITE", true,
+        Some("LOAD_PRIV" -> "st_t")),
+      ("INSERT INTO st_t SELECT k, v FROM st_u", "INSERT INTO", true,
+        Some("LOAD_PRIV" -> "st_t")),
+      ("INSERT INTO st_t VALUES (1, 1.0)", "INSERT INTO", true,
+        Some("LOAD_PRIV" -> "st_t")),
+      ("LOAD LABEL st_l (DATA INFILE('/tmp/x.csv') INTO TABLE st_t)", "LOAD LABEL",
+        true, Some("LOAD_PRIV" -> "st_t")),
+      ("CREATE ROUTINE LOAD st_j ON st_t FROM FILE('/tmp/d', 'parquet')",
+        "CREATE ROUTINE LOAD", true, Some("LOAD_PRIV" -> "st_t")),
+      ("STOP ROUTINE LOAD FOR st_j", "STOP ROUTINE LOAD", true, Some("LOAD_PRIV" -> "*")),
+      ("PAUSE ROUTINE LOAD FOR st_j", "PAUSE ROUTINE LOAD", true,
+        Some("LOAD_PRIV" -> "*")),
+      ("RESUME ROUTINE LOAD FOR st_j", "RESUME ROUTINE LOAD", true,
+        Some("LOAD_PRIV" -> "*")),
+      ("SHOW ROUTINE LOAD", "SHOW ROUTINE LOAD", false, None),
+      ("CANCEL LOAD WHERE LABEL = 'st_l'", "CANCEL LOAD", true, Some("LOAD_PRIV" -> "*")),
+      ("BACKUP SNAPSHOT st_s TO '/tmp/r' ON (st_t)", "BACKUP SNAPSHOT", true,
+        Some("ADMIN_PRIV" -> "*")),
+      ("RESTORE SNAPSHOT st_s FROM '/tmp/r'", "RESTORE SNAPSHOT", true,
+        Some("ADMIN_PRIV" -> "*")),
+      ("SHOW SNAPSHOT ON '/tmp/r'", "SHOW SNAPSHOT", false, None),
+      ("SHOW BACKUP", "SHOW BACKUP", false, None),
+      ("SHOW RESTORE", "SHOW RESTORE", false, None),
+      ("UPDATE st_t SET v = 2.0 WHERE k = 1", "UPDATE", true, Some("LOAD_PRIV" -> "st_t")),
+      ("UPDATE st_t SET v = st_u.v FROM st_u WHERE st_t.k = st_u.k", "UPDATE", true,
+        Some("LOAD_PRIV" -> "st_t")),
+      ("DELETE FROM st_t WHERE k = 1", "DELETE FROM", true, Some("LOAD_PRIV" -> "st_t")),
+      ("DROP MATERIALIZED VIEW st_smv ON st_u", "DROP MATERIALIZED VIEW", true,
+        Some("DROP_PRIV" -> "*")),
+      ("DROP VIEW st_v", "DROP VIEW", true, Some("DROP_PRIV" -> "st_v")),
+      ("DROP VIEW IF EXISTS st_v", "DROP VIEW", true, Some("DROP_PRIV" -> "st_v")),
+      ("ALTER VIEW st_v AS SELECT k, v FROM st_t", "ALTER VIEW", true,
+        Some("ALTER_PRIV" -> "st_v")),
+      ("SHOW CREATE MATERIALIZED VIEW st_smv", "SHOW CREATE MATERIALIZED VIEW", false,
+        Some("SELECT_PRIV" -> "st_u")),
+      ("SHOW CREATE VIEW st_v", "SHOW CREATE VIEW", false, Some("SELECT_PRIV" -> "st_v")),
+      ("DROP TABLE st_t", "DROP TABLE", true, Some("DROP_PRIV" -> "st_t")),
+      ("DROP TABLE IF EXISTS st_t", "DROP TABLE", true, Some("DROP_PRIV" -> "st_t")),
+      ("ALTER TABLE st_t ADD COLUMN c BIGINT", "ALTER TABLE", true,
+        Some("ALTER_PRIV" -> "st_t")),
+      ("TRUNCATE TABLE st_t", "TRUNCATE TABLE", true, Some("ALTER_PRIV" -> "st_t")),
+      ("REFRESH MATERIALIZED VIEW st_smv", "REFRESH MATERIALIZED VIEW", true,
+        Some("ALTER_PRIV" -> "st_u")),
+      ("EXPORT TABLE st_t TO '/tmp/e'", "EXPORT TABLE", true,
+        Some("SELECT_PRIV" -> "st_t")),
+      ("EXPLAIN SELECT k FROM st_t", "EXPLAIN", false, Some("SELECT_PRIV" -> "st_t")),
+      ("ANALYZE TABLE st_t", "ANALYZE TABLE", true, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW COLUMN STATS st_t", "SHOW COLUMN STATS", false,
+        Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW INDEX FROM st_t", "SHOW INDEX", false, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW INDEXES FROM st_t", "SHOW INDEX", false, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW DYNAMIC PARTITION TABLES", "SHOW DYNAMIC PARTITION TABLES", false, None),
+      ("SHOW TEMPORARY PARTITIONS FROM st_t", "SHOW TEMPORARY PARTITIONS", false,
+        Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW PARTITIONS FROM st_t", "SHOW PARTITIONS", false,
+        Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW CREATE TABLE st_t", "SHOW CREATE TABLE", false,
+        Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW COLUMNS FROM st_t", "SHOW COLUMNS", false, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW LOAD FROM st_t", "SHOW LOAD", false, Some("SELECT_PRIV" -> "st_t")),
+      // still admitted, but now lists only the readable tables (tested below)
+      ("SHOW LOAD", "SHOW LOAD", false, None),
+      ("SHOW DATA FROM st_t", "SHOW DATA", false, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW DATA", "SHOW DATA", false, None), // likewise filtered
+      ("CREATE USER 'st_w'", "CREATE USER", true, Some("GRANT_PRIV" -> "*")),
+      ("DROP USER 'st_w'", "DROP USER", true, Some("GRANT_PRIV" -> "*")),
+      ("CREATE ROLE 'st_r'", "CREATE ROLE", true, Some("GRANT_PRIV" -> "*")),
+      ("DROP ROLE 'st_r'", "DROP ROLE", true, Some("GRANT_PRIV" -> "*")),
+      ("SHOW ROLES", "SHOW ROLES", false, Some("GRANT_PRIV" -> "*")),
+      ("GRANT SELECT_PRIV ON st_t TO 'nobody'", "GRANT", true,
+        Some("GRANT_PRIV" -> "*")),
+      ("GRANT 'st_r' TO 'nobody'", "GRANT", true, Some("GRANT_PRIV" -> "*")),
+      ("REVOKE SELECT_PRIV ON st_t FROM 'nobody'", "REVOKE", true,
+        Some("GRANT_PRIV" -> "*")),
+      ("SHOW GRANTS", "SHOW GRANTS", false, None),
+      ("SHOW GRANTS FOR 'nobody'", "SHOW GRANTS", false, None),
+      ("SHOW GRANTS FOR 'root'", "SHOW GRANTS", false, Some("GRANT_PRIV" -> "*")),
+      ("SHOW VARIABLES", "SHOW VARIABLES", false, None),
+      ("SHOW SESSION VARIABLES", "SHOW VARIABLES", false, None),
+      ("SHOW GLOBAL VARIABLES LIKE 'time%'", "SHOW VARIABLES", false, None),
+      ("SET sql_select_limit = 10", "SET", true, None),
+      ("SHOW TABLES", "SHOW TABLES", false, None),
+      ("DESC st_t", "DESC", false, Some("SELECT_PRIV" -> "st_t")),
+      ("DESCRIBE st_t", "DESC", false, Some("SELECT_PRIV" -> "st_t")),
+      ("SELECT k FROM st_t", "SELECT", false, Some("SELECT_PRIV" -> "st_t")),
+      ("WITH x AS (SELECT k FROM st_t) SELECT * FROM x", "SELECT", false,
+        Some("SELECT_PRIV" -> "st_t")),
+      ("VALUES (1)", "SELECT", false, None),
+      ("(SELECT k FROM st_t)", "SELECT", false, Some("SELECT_PRIV" -> "st_t")),
+      // EXPLAIN's inner text must be a query; the query path rejects it
+      ("EXPLAIN DROP TABLE st_t", "EXPLAIN", false, Some("SELECT_PRIV" -> "st_t")),
+      // Deliberate changes. Whitespace-robust heads: the parent sent these
+      // to the query fallback (mutates = true, except SHOW: false) with
+      // SELECT_PRIV on st_t (SHOW: no check), where spark.sql ran them.
+      ("DROP\nTABLE st_t", "DROP TABLE", true, Some("DROP_PRIV" -> "st_t")),
+      ("CREATE\nTABLE st_x USING parquet AS SELECT * FROM st_t", "CREATE TABLE",
+        true, Some("CREATE_PRIV" -> "*")),
+      ("SHOW\nTABLES", "SHOW TABLES", false, None),
+      ("INSERT\tINTO st_t VALUES (1, 1.0)", "INSERT INTO", true,
+        Some("LOAD_PRIV" -> "st_t")),
+      // A literal naming a table is no target: the parent's catch-all
+      // `INTO TABLE` target regex demanded LOAD_PRIV on st_t here
+      ("CANCEL LOAD WHERE LABEL = 'into table st_t'", "CANCEL LOAD", true,
+        Some("LOAD_PRIV" -> "*")))
+    val wrong = cases.filterNot { case (st, row, mut, den) =>
+      ddl.classify(st) == ((row, mut, den))
+    }.map { case (st, _, _, _) => s"$st -> ${ddl.classify(st)}" }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    assert(ddl.statementNames.toSet == cases.map(_._2).toSet,
+      "one case per statement-table row")
+  }
+
+  test("privileges: the query path admits only queries — newline-spelled " +
+    "DDL is its own row, EXPLAIN of a command rejects, and neither reaches " +
+    "the Spark catalog") {
+    val ddl = authFixture()
+    ddl.execute("GRANT SELECT_PRIV ON sec_t TO 'alice'")
+    ddl.login("alice")
+    assert(denied(ddl.execute("DROP\nTABLE sec_t")).contains("DROP_PRIV"))
+    val e = intercept[RuntimeException](ddl.execute("EXPLAIN DROP TABLE sec_t"))
+    assert(e.getMessage.startsWith("not a query"), e.getMessage)
+    assert(denied(ddl.execute(
+      "CREATE\nTABLE sec_x USING parquet AS SELECT * FROM sec_t"))
+      .contains("CREATE_PRIV"))
+    // the engine's own listing, not the Spark session catalog
+    val listed = ddl.sql("SHOW\nTABLES").as[String].collect().toSeq
+    assert(listed == ddl.sql("SHOW TABLES").as[String].collect().toSeq)
+    assert(listed == Seq("sec_t"))
+    ddl.login("root")
+    assert(ddl.sql("SELECT count(*) AS n FROM sec_t").as[Long].head() == 3L)
+    assert(!spark.catalog.listTables().collect().map(_.name).contains("sec_x"))
+  }
+
+  test("privileges: unqualified SHOW DATA and SHOW LOAD list only the " +
+    "tables the user may SELECT; root sees every table") {
+    val ddl = authFixture()
+    ddl.execute(
+      """CREATE TABLE sec_u (k BIGINT) DUPLICATE KEY(k)
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+    ddl.execute("INSERT INTO sec_u VALUES (1)")
+    def names(st: String) =
+      ddl.sql(st).select("table_name").as[String].collect().toSet
+    ddl.login("alice")
+    assert(names("SHOW DATA").isEmpty)
+    assert(names("SHOW LOAD").isEmpty)
+    ddl.login("root")
+    ddl.execute("GRANT SELECT_PRIV ON sec_t TO 'alice'")
+    ddl.login("alice")
+    assert(names("SHOW DATA") == Set("sec_t"))
+    assert(names("SHOW LOAD") == Set("sec_t"))
+    assert(denied(ddl.sql("SHOW DATA FROM sec_u")).contains("SELECT_PRIV"))
+    ddl.login("root")
+    assert(names("SHOW DATA") == Set("sec_t", "sec_u"))
+    assert(names("SHOW LOAD") == Set("sec_t", "sec_u"))
+  }
+
+  test("privileges: a string literal spelling 'into table t' does not " +
+    "waive SELECT_PRIV on t for a CREATE TABLE ... AS SELECT source") {
+    val ddl = authFixture()
+    ddl.execute("GRANT CREATE_PRIV ON * TO 'alice'")
+    ddl.login("alice")
+    assert(denied(ddl.execute(
+      """CREATE TABLE sec_c DUPLICATE KEY(k) DISTRIBUTED BY HASH(k) BUCKETS 1
+        |AS SELECT k FROM sec_t WHERE 'into table sec_t' <> ''""".stripMargin))
+      .contains("SELECT_PRIV on 'sec_t'"))
+  }
+
   test("ALTER VIEW validates the new body BEFORE committing: a broken " +
     "definition rejects and the working one survives") {
     val ddl = fresh()
