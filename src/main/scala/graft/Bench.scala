@@ -157,19 +157,13 @@ object Bench {
         val sdir = TempDirs.create("graft_streamwarm")
         spark.range(4L).selectExpr("id", "timestamp_micros(id * 1000000) ts")
           .write.mode("overwrite").parquet(s"$sdir/in")
-        Confs.withStreamShuffle(spark) {
-          val q = spark.readStream.schema("id BIGINT, ts TIMESTAMP")
-            .parquet(s"$sdir/in")
-            .withWatermark("ts", "1 second")
-            .selectExpr("window(ts, '1 second') w", "id")
-            .groupBy("w").count()
-            .writeStream.outputMode("update")
-            .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => {
-              b.count(); ()
-            })
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+        graft.streaming.Streaming.runToCompletion(
+            spark.readStream.schema("id BIGINT, ts TIMESTAMP")
+              .parquet(s"$sdir/in")
+              .withWatermark("ts", "1 second")
+              .selectExpr("window(ts, '1 second') w", "id")
+              .groupBy("w").count(),
+            mode = "update") { (b, _) => b.count() }
       }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warm-up failed (timings of early keys " +

@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   *     consumed eagerly inside the operator body — a stream's state-partition
   *     count and store provider are frozen at `.start()`. These use
   *     [[withConf]]: set, run, restore — no other key ever observes the
-  *     mutation, so key order can't change results.
+  *     mutation, so key order can't change results. The streaming state
+  *     cap is scoped to the stream's lifetime by
+  *     [[graft.streaming.Streaming.runToCompletion]].
   *
   *  2. Read-schema knobs (`spark.sql.legacy.parquet.nanosAsLong`): consumed
   *     LAZILY — Spark re-reads the session conf at physical-planning time,
@@ -25,7 +27,10 @@ object Confs {
 
   /** Set `kvs`, run `body`, restore prior values (unset if previously unset). */
   def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    // getAll, not getOption: getOption reports a registered key's default
+    // even when unset, and restoring that would pin the default explicitly
+    val set = s.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
     finally prev.foreach {
@@ -33,19 +38,6 @@ object Confs {
       case (k, None)    => s.conf.unset(k)
     }
   }
-
-  /** Streaming keys: cap `spark.sql.shuffle.partitions` for the duration of
-    * the stream so each stateful operator materializes `n` state-store
-    * instances per micro-batch instead of inheriting the ambient session
-    * parallelism (32 in the harness). On small per-batch volumes state-store
-    * setup dominates wall-clock and scales with the partition count, not the
-    * data; at production scale the same knob is raised per-stream to match
-    * throughput — the point is that state parallelism is a per-stream
-    * decision, never ambient config. The restore runs before the returned
-    * read-back DataFrame executes, so batch post-processing keeps the
-    * session's full parallelism. */
-  def withStreamShuffle[T](s: SparkSession, n: Int = 4)(body: => T): T =
-    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** events.ts is TIMESTAMP(NANOS) parquet; Spark 4 refuses NANOS unless the
     * legacy conf maps it to Long. Idempotent, single-value, engine-wide —

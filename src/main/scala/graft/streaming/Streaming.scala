@@ -18,11 +18,11 @@ import org.apache.spark.sql.types._
   * and custom state (funnel) — all Structured Streaming builtins.
   *
   * Harness note: the driver's Verify/Bench run batch DataFrames, so each key
-  * starts a stream over the events parquet (file source), drains it with
-  * processAllAvailable, and returns the materialized sink as a batch
-  * DataFrame; the oracle is the batch-equivalent SQL. Late-data/multi-batch
-  * behavior (not reachable deterministically from a one-file source) is
-  * covered in ScalaTest with MemoryStream.
+  * runs a stream over the events parquet (file source) to completion
+  * ([[Streaming.runToCompletion]]) and returns the materialized sink as a
+  * batch DataFrame; the oracle is the batch-equivalent SQL.
+  * Late-data/multi-batch behavior (not reachable deterministically from a
+  * one-file source) is covered in ScalaTest with MemoryStream.
   *
   * Scale notes: in production the file source becomes Kafka with checkpointed
   * offsets (same exactly-once contract); windows and dropDuplicates carry
@@ -198,31 +198,81 @@ object Streaming {
       .isEmpty
   }
 
-  /** Scope for streams that need NO post-data flush batch: disables the
-    * no-data micro-batch Spark otherwise appends after the last data batch
-    * to advance watermark-dependent state. Only applied where the result
-    * is provably identical without it — update-mode / immediate-emission
-    * operators whose no-data batch can only EVICT state, never emit:
-    * inner stream-stream joins (matches emit in the data batch), bounded
-    * dropDuplicatesWithinWatermark (a filter — emission is immediate),
-    * and update-mode flatMapGroupsWithState (timeouts emit nothing here).
-    * Append-mode / sentinel-flush keys (stream_session, stream_watermark,
-    * stream_stream_left/full) NEED the flush batch and never use this. */
-  private def withoutFlushBatch[T](s: SparkSession)(body: => T): T =
-    Confs.withConf(s,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
-
-  /** Every streaming key runs under a 4-partition state cap: the stream's
-    * state-store instance count per stateful operator per micro-batch is
-    * frozen at `.start()` from `spark.sql.shuffle.partitions`, and at the
+  /** Run a bounded stream to completion — the one start → drain → stop
+    * lifecycle every streaming key shares: `df` starts with `sink` as its
+    * foreachBatch body, processAllAvailable drains everything the source
+    * holds, and the query stops in `finally`. Both confs it sets are
+    * restored on return, so only the stream's lifetime sees them; batch
+    * work before or after (read-backs, equality checks, artifact builds)
+    * runs at full session parallelism.
+    *
+    * State cap: `spark.sql.shuffle.partitions` is 4 while the stream runs.
+    * A stream's state-store instance count per stateful operator per
+    * micro-batch is frozen at `.start()` from that conf, and at the
     * harness's per-batch volumes state-store setup — not data — dominates
     * wall-clock (measured: 12 keys, 72.7 s of a 132.6 s bench at 32
-    * partitions). Save/restored via [[Confs.withStreamShuffle]] so batch keys
-    * never see the cap; the read-back DataFrame executes after restore at
-    * full session parallelism. */
-  private def streamKey(
-      build: (SparkSession, String) => DataFrame, oracle: String): QueryDef =
-    QueryDef((s, dir) => Confs.withStreamShuffle(s)(build(s, dir)), oracle)
+    * partitions). At production scale the same knob is raised per stream to
+    * match throughput: state parallelism is a per-stream decision, never
+    * ambient config.
+    *
+    * `flush = false` disables the no-data micro-batch Spark otherwise
+    * appends after the last data batch to advance watermark-dependent
+    * state. Only pass it where the result is provably identical without it
+    * — shapes whose no-data batch can only EVICT state, never emit: inner
+    * stream-stream joins (matches emit in the data batch), bounded
+    * dropDuplicatesWithinWatermark (a filter — emission is immediate), and
+    * update-mode flatMapGroupsWithState (timeouts emit nothing here).
+    * Append-mode / sentinel-flush keys (stream_session, stream_watermark,
+    * stream_stream_left/full) NEED the flush batch and keep the default. */
+  private[graft] def runToCompletion(df: DataFrame, mode: String = "append",
+      flush: Boolean = true)(sink: (DataFrame, Long) => Unit): Unit = {
+    val noFlush =
+      if (flush) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    Confs.withConf(df.sparkSession,
+        ("spark.sql.shuffle.partitions" -> "4") +: noFlush: _*) {
+      val q = df.writeStream.outputMode(mode).foreachBatch(sink).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+  }
+
+  /** foreachBatch-to-parquet sink: each micro-batch appends its rows,
+    * tagged with the batch id (`_batch`), to a fresh dir; returns the
+    * read-back. Sink writes are executor-parallel parquet and the driver
+    * never materializes the result table. In append mode every row (every
+    * finalized group) emits exactly once, so the read-back needs no merge. */
+  private def parquetSink(df: DataFrame, mode: String = "append",
+      flush: Boolean = true): DataFrame = {
+    val out = graft.TempDirs.create("graft_sink")
+    runToCompletion(df, mode, flush) { (batch, id) =>
+      batch.withColumn("_batch", lit(id)).write.mode("append").parquet(out)
+    }
+    df.sparkSession.read.parquet(out)
+  }
+
+  /** Update-mode sink + merge-on-read: each micro-batch's changed rows land
+    * through [[parquetSink]]; read-back keeps the last `_batch` per key. This
+    * is the Doris merge-on-read contract (UNIQUE/AGGREGATE key models)
+    * applied to stream compute, and everything stays distributed: aggregate
+    * state lives in the executor state store and the driver never
+    * materializes the result table. At 100 TB the parquet dir becomes the
+    * serving table and the read-back merge is the same row_number() merge
+    * the UNIQUE key model already uses.
+    *
+    * Caveat (documented, exercised in ScalaTest): for session windows a later
+    * batch can merge two sessions — the merged session is re-emitted but the
+    * superseded sub-sessions are not retracted, so multi-batch session jobs
+    * should use append mode + watermark (finalized sessions only). With the
+    * harness's single-batch file source both modes agree. */
+  private def upsert(df: DataFrame, keys: Seq[String],
+      flush: Boolean = true): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(col("_batch").desc)
+    parquetSink(df, "update", flush)
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_batch", "_rn")
+  }
 
   /** The canonical exactly-once foreachBatch sink body: tag every row with
     * its batchId and DELETE-then-INSERT, so a micro-batch retried after a
@@ -264,8 +314,11 @@ object Streaming {
       .jdbc(url, "events_sink", new java.util.Properties)
   }
 
+  /** The events parquet as a file-source stream. The landing dir holds the
+    * file `copies` times — copies beyond the first replay it, the
+    * at-least-once redelivery case (stream_dedup). */
   private def eventStream(s: SparkSession, dir: String,
-      withSentinel: Boolean = false): DataFrame = {
+      withSentinel: Boolean = false, copies: Int = 1): DataFrame = {
     Confs.ensureNanosAsLong(s)
     // the file source requires a directory: expose the events parquet file
     // through a temp dir (in production this is the landing dir / Kafka topic)
@@ -275,10 +328,12 @@ object Streaming {
     // temp dir — a silently broken link and an empty stream (caught when a
     // relative-dir scoped run read 0 rows at sf1; the driver always passes
     // absolute dirs, which is why the full gates never saw it)
-    java.nio.file.Files.createSymbolicLink(
-      streamDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet")
-        .toAbsolutePath.normalize)
+    val events = java.nio.file.Paths.get(s"$dir/events.parquet")
+      .toAbsolutePath.normalize
+    for (i <- 0 until copies) {
+      val name = if (i == 0) "events.parquet" else s"events_retry$i.parquet"
+      java.nio.file.Files.createSymbolicLink(streamDir.resolve(name), events)
+    }
     val tsLong = graft.Tables.eventsTsIsLong(s, dir)
     if (withSentinel) {
       // Append-mode aggregations only emit state finalized BELOW the
@@ -296,68 +351,31 @@ object Streaming {
       s.readStream.schema(rawSchema(tsLong)).parquet(streamDir.toString))
   }
 
-  /** Update-mode foreachBatch sink + merge-on-read: each micro-batch's
-    * changed rows append to parquet tagged with the batch id; read-back keeps
-    * the last write per key. This is the Doris merge-on-read contract
-    * (UNIQUE/AGGREGATE key models) applied to stream compute, and — unlike a
-    * memory sink — everything stays distributed: aggregate state lives in the
-    * executor state store, sink writes are executor-parallel parquet, and the
-    * driver never materializes the result table. At 100 TB the parquet dir
-    * becomes the serving table and the read-back merge is the same
-    * row_number() merge the UNIQUE key model already uses.
-    *
-    * Caveat (documented, exercised in ScalaTest): for session windows a later
-    * batch can merge two sessions — the merged session is re-emitted but the
-    * superseded sub-sessions are not retracted, so multi-batch session jobs
-    * should use append mode + watermark (finalized sessions only). With the
-    * harness's single-batch file source both modes agree. */
-  private def runUpsertSink(s: SparkSession, df: DataFrame, keys: Seq[String],
-      mode: String = "update"): DataFrame = {
-    val out = graft.TempDirs.create("graft_sink")
-    val q = df.writeStream.outputMode(mode).foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        batch.withColumn("_batch", lit(id)).write.mode("append").parquet(out)
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    if (mode == "append") {
-      // append emits each finalized group exactly once — no merge needed
-      s.read.parquet(out).drop("_batch")
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col("_batch").desc)
-      s.read.parquet(out)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_batch", "_rn")
-    }
-  }
-
   /** Pre-split the events table into 3 parquet files once per (dir, JVM) so
     * a maxFilesPerTrigger=1 stream delivers 3 REAL micro-batches — the
     * merge-per-batch ingest keys below must demonstrate multi-batch
     * re-aggregation (the single-file eventStream yields exactly one batch).
-    * Columns are pre-projected: the ingest keys never need ts/props. */
+    * Columns are pre-projected: the ingest keys never need ts/props.
+    * Cached as (split dir, events.parquet mtime observed when the split was
+    * cut) — MV keys derived from the split must register THAT mtime as their
+    * freshness horizon, not "now": a base edit between split-cache and
+    * registration would otherwise pass the mtime guard while the MV serves
+    * pre-edit data. */
   private val splitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // events.parquet mtime observed when the split copy was cut — MV keys
-  // derived from the split must register THIS as their freshness horizon,
-  // not "now": a base edit between split-cache and registration would
-  // otherwise pass the mtime guard while the MV serves pre-edit data
-  private val splitSourceMtime =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   private val splitSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("user_id", LongType),
     StructField("event_type", StringType), StructField("value", DoubleType)))
-  private def splitEventsDir(s: SparkSession, dir: String): String =
+  private def splitEvents(s: SparkSession, dir: String): (String, Long) =
     splitCache.computeIfAbsent(dir, { _ =>
       Confs.ensureNanosAsLong(s) // events.ts is ns-precision (see Tables.events)
-      splitSourceMtime.put(dir, graft.Freshness.mtime(s"$dir/events.parquet"))
+      val mtime = graft.Freshness.mtime(s"$dir/events.parquet")
       val out = graft.TempDirs.create("graft_stream_split")
       s.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .repartition(3)
         .write.mode("overwrite").parquet(out)
-      out
+      (out, mtime)
     })
 
   /** Merge-per-micro-batch ingest harness shared by the sketch and rollup
@@ -375,21 +393,17 @@ object Streaming {
       mergeOf: DataFrame => DataFrame): String = {
     val table = graft.TempDirs.createPath("graft_merge_table")
     @volatile var current: Option[String] = None
-    val q = s.readStream.schema(splitSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitEventsDir(s, dir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val partial = partialOf(batch)
-        val unioned = current
-          .map(v => s.read.parquet(v).unionByName(partial))
-          .getOrElse(partial)
-        val next = table.resolve(s"v$id").toString
-        mergeOf(unioned).write.mode("overwrite").parquet(next)
-        current = Some(next)
-        ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    runToCompletion(s.readStream.schema(splitSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(splitEvents(s, dir)._1)) { (batch, id) =>
+      val partial = partialOf(batch)
+      val unioned = current
+        .map(v => s.read.parquet(v).unionByName(partial))
+        .getOrElse(partial)
+      val next = table.resolve(s"v$id").toString
+      mergeOf(unioned).write.mode("overwrite").parquet(next)
+      current = Some(next)
+    }
     current.getOrElse(sys.error("mergeIngest: no micro-batch ran"))
   }
 
@@ -479,8 +493,7 @@ object Streaming {
           ("count", "*") -> "cnt",
           ("sum", "value") -> "sum_value",
           ("count", "value") -> "cnt_value"),
-        registeredAt = Option(splitSourceMtime.get(dir))
-          .fold(graft.Freshness.mtime(s"$dir/events.parquet"))(_.longValue()))
+        registeredAt = splitEvents(s, dir)._2)
       graft.plans.JoinMvRewrite.register(d)
       (path, d)
     })._1
@@ -528,44 +541,40 @@ object Streaming {
       val docsSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
       @volatile var indexNonEmpty = false
-      val q = s.readStream.schema(docsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(split)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // band the batch once; both consumers below reuse the tiny result
-          val bands = batch.select(col("doc_id"),
-            posexplode(TextOps.minhashBandsUdf(4, 4)(
-              TextOps.shinglesUdf(3)(col("text")))).as(Seq("band", "key")))
-            .localCheckpoint(true)
-          val intra = bands.as("a")
-            .join(broadcast(bands.as("b")), Seq("band", "key"))
-            .filter(col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-          val cands = if (!indexNonEmpty) intra else {
-            s.read.parquet(table).select(col("band"), col("key"), col("doc_id")).as("c")
-              .join(broadcast(bands.as("d")), Seq("band", "key"))
-              .select(least(col("c.doc_id"), col("d.doc_id")).as("i"),
-                greatest(col("c.doc_id"), col("d.doc_id")).as("j"))
-              .union(intra)
-          }
-          // RETRY-IDEMPOTENT delta append: each batch owns a deterministic
-          // batch=<id> subpath written with overwrite — a foreachBatch
-          // retry after a partial failure replaces its own rowset instead
-          // of double-appending into the dir-union (which would turn the
-          // index into a multiset and fail the index_equals_batch pin).
-          // Readers see the same dir-union semantics via partition
-          // discovery and just drop the synthetic `batch` column.
-          cands.distinct().write.mode("overwrite")
-            .parquet(s"$candsDir/batch=$batchId")
-          // delta-rowset append: the batch's bands land as a new rowset;
-          // the probe above deliberately read the index as it stood
-          // pre-append
-          bands.write.mode("overwrite").parquet(s"$table/batch=$batchId")
-          indexNonEmpty = true
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+      runToCompletion(s.readStream.schema(docsSchema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(split)) { (batch, batchId) =>
+        // band the batch once; both consumers below reuse the tiny result
+        val bands = batch.select(col("doc_id"),
+          posexplode(TextOps.minhashBandsUdf(4, 4)(
+            TextOps.shinglesUdf(3)(col("text")))).as(Seq("band", "key")))
+          .localCheckpoint(true)
+        val intra = bands.as("a")
+          .join(broadcast(bands.as("b")), Seq("band", "key"))
+          .filter(col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+        val cands = if (!indexNonEmpty) intra else {
+          s.read.parquet(table).select(col("band"), col("key"), col("doc_id")).as("c")
+            .join(broadcast(bands.as("d")), Seq("band", "key"))
+            .select(least(col("c.doc_id"), col("d.doc_id")).as("i"),
+              greatest(col("c.doc_id"), col("d.doc_id")).as("j"))
+            .union(intra)
+        }
+        // RETRY-IDEMPOTENT delta append: each batch owns a deterministic
+        // batch=<id> subpath written with overwrite — a foreachBatch
+        // retry after a partial failure replaces its own rowset instead
+        // of double-appending into the dir-union (which would turn the
+        // index into a multiset and fail the index_equals_batch pin).
+        // Readers see the same dir-union semantics via partition
+        // discovery and just drop the synthetic `batch` column.
+        cands.distinct().write.mode("overwrite")
+          .parquet(s"$candsDir/batch=$batchId")
+        // delta-rowset append: the batch's bands land as a new rowset;
+        // the probe above deliberately read the index as it stood
+        // pre-append
+        bands.write.mode("overwrite").parquet(s"$table/batch=$batchId")
+        indexNonEmpty = true
+      }
       if (!indexNonEmpty) sys.error("stream_dedup_index: no micro-batch ran")
       (table, candsDir)
     })
@@ -573,19 +582,11 @@ object Streaming {
   def queries: Map[String, QueryDef] = Map(
     // Stream Load analogue: micro-batch ingest through foreachBatch into
     // partitioned parquet (atomic per batch), then read-back stats.
-    "stream_ingest" -> streamKey(
+    "stream_ingest" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val out = graft.TempDirs.create("graft_ingest")
-        val q = eventStream(s, dir)
-          .select($"event_id", $"event_type", $"value")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.read.parquet(out)
+        parquetSink(eventStream(s, dir)
+            .select($"event_id", $"event_type", $"value"))
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .orderBy($"event_type")
@@ -605,20 +606,15 @@ object Streaming {
     // micro-batch retried after a transient failure replaces its own rows
     // instead of double-appending (a fresh DB per call only guards
     // cross-run duplication, not intra-run retries).
-    "stream_jdbc_sink" -> streamKey(
+    "stream_jdbc_sink" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val db = graft.TempDirs.create("graft_derbysink") + "/db"
         val url = s"jdbc:derby:$db;create=true"
-        val props = new java.util.Properties
-        val q = eventStream(s, dir)
-          .select($"event_id", $"event_type", $"value")
-          .writeStream
-          .foreachBatch((batch: DataFrame, batchId: Long) =>
-            jdbcIdempotentAppend(url, batch, batchId))
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        s.read.jdbc(s"jdbc:derby:$db", "events_sink", props)
+        runToCompletion(eventStream(s, dir)
+            .select($"event_id", $"event_type", $"value"))(
+          jdbcIdempotentAppend(url, _, _))
+        s.read.jdbc(s"jdbc:derby:$db", "events_sink", new java.util.Properties)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .orderBy($"event_type")
@@ -628,21 +624,13 @@ object Streaming {
 
     // UNIQUE-key upsert on ingest: batches append (Doris versions), merge on
     // read = last-write-wins — identical to model_unique_key semantics.
-    "stream_upsert" -> streamKey(
+    "stream_upsert" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val out = graft.TempDirs.create("graft_upsert")
-        val q = eventStream(s, dir)
-          .select($"user_id", $"event_id", $"event_type", $"value", $"ts")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
-        s.read.parquet(out)
+        parquetSink(eventStream(s, dir)
+            .select($"user_id", $"event_id", $"event_type", $"value", $"ts"))
           .withColumn("rn", row_number().over(w))
           .filter($"rn" === 1)
           .select($"user_id", $"event_type".as("last_type"), $"value".as("last_value"))
@@ -657,14 +645,14 @@ object Streaming {
     // AGGREGATE-key incremental aggregation on ingest (Doris aggregate-key
     // merge): streaming groupBy in update mode — each micro-batch emits only
     // the keys it touched; the sink merges last-write-wins per key.
-    "stream_agg" -> streamKey(
+    "stream_agg" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val agg = eventStream(s, dir)
           .groupBy($"user_id", $"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("sum_value"),
             max($"event_id").as("max_event"))
-        runUpsertSink(s, agg, Seq("user_id", "event_type"))
+        upsert(agg, Seq("user_id", "event_type"))
           .orderBy($"user_id", $"event_type")
       },
       """SELECT user_id, event_type, count(*) AS n,
@@ -675,7 +663,7 @@ object Streaming {
     // production streaming join): the static nation dim broadcasts; every
     // micro-batch joins map-side with no stream-side state at all, then the
     // enriched stream aggregates in update mode.
-    "stream_join_static" -> streamKey(
+    "stream_join_static" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val dim = Tables.nation(s, dir)
@@ -684,7 +672,7 @@ object Streaming {
           .join(broadcast(dim), $"nk" === $"n_nationkey")
         val agg = enriched.groupBy($"n_name")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
-        runUpsertSink(s, agg, Seq("n_name"))
+        upsert(agg, Seq("n_name"))
           .orderBy($"n_name")
       },
       """SELECT n_name, count(*) AS n, round(sum(value), 2) AS total_value
@@ -698,7 +686,7 @@ object Streaming {
     // arrive (inner join doesn't hold output for the watermark), so the
     // bounded source drains in one pass; event_id is unique so each event
     // matches exactly itself and the batch oracle is the plain aggregate.
-    "stream_stream_join" -> streamKey(
+    "stream_stream_join" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val a = eventStream(s, dir)
@@ -714,17 +702,9 @@ object Streaming {
           // project to the read-back's columns BEFORE the sink write
           // (guide §2.3): the matched event_id/ts/ts2 never leave the join
           .select($"event_type", $"value")
-        val out = graft.TempDirs.create("graft_ssj")
         // inner join: matches emit in the data batch itself; the trailing
         // no-data flush batch only evicts state — skip it (r21)
-        withoutFlushBatch(s) {
-          val q = joined.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-          }.start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.read.parquet(out)
+        parquetSink(joined, flush = false)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .orderBy($"event_type")
@@ -759,7 +739,7 @@ object Streaming {
     // matter where Catalyst lands the filter. The sentinel pair then meets
     // itself in the join (-1 = -1, same ts) and emits one matched row,
     // which the event_id >= 0 read-back filter removes.
-    "stream_stream_left" -> streamKey(
+    "stream_stream_left" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val a = eventStream(s, dir, withSentinel = true)
@@ -777,13 +757,7 @@ object Streaming {
           // project to the read-back's columns before the sink (§2.3);
           // the flush batch stays ON — unmatched rows emit there
           .select($"event_id", $"event_type", $"value", $"eid2")
-        val out = graft.TempDirs.create("graft_ssjl")
-        val q = joined.writeStream.foreachBatch {
-          (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-        }.start()
-        try q.processAllAvailable() finally q.stop()
-        s.read.parquet(out)
+        parquetSink(joined)
           .filter($"event_id" >= 0)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"),
@@ -807,7 +781,7 @@ object Streaming {
     // the sentinels match each other and are dropped at read-back.
     // Error events with event_id % 3 != 0 are in NEITHER side and must
     // not appear — the oracle's WHERE pins that.
-    "stream_stream_full" -> streamKey(
+    "stream_stream_full" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val a = eventStream(s, dir, withSentinel = true)
@@ -826,13 +800,7 @@ object Streaming {
           // project to the read-back's columns before the sink (§2.3);
           // the flush batch stays ON — null-extensions emit there
           .select($"event_id", $"event_type", $"value", $"eid2")
-        val out = graft.TempDirs.create("graft_ssjf")
-        val q = joined.writeStream.foreachBatch {
-          (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-        }.start()
-        try q.processAllAvailable() finally q.stop()
-        s.read.parquet(out)
+        parquetSink(joined)
           .filter(coalesce($"event_id", $"eid2") >= 0)
           .groupBy(coalesce($"event_type", lit("(right-only)")).as("side"))
           .agg(count(lit(1)).as("n"),
@@ -853,7 +821,7 @@ object Streaming {
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Tumbling window aggregate (1 hour).
-    "stream_tumble" -> streamKey(
+    "stream_tumble" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val agg = eventStream(s, dir)
@@ -861,7 +829,7 @@ object Streaming {
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .select(date_format($"w.start", "yyyy-MM-dd HH:00").as("win_start"),
             $"event_type", $"n", $"total_value")
-        runUpsertSink(s, agg, Seq("win_start", "event_type"))
+        upsert(agg, Seq("win_start", "event_type"))
           .orderBy($"win_start", $"event_type")
       },
       """SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:00') AS win_start,
@@ -870,14 +838,14 @@ object Streaming {
 
     // Sliding window aggregate (2 hours every 1 hour): each event lands in 2
     // windows — oracle replays the expansion with unnest.
-    "stream_slide" -> streamKey(
+    "stream_slide" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val agg = eventStream(s, dir)
           .groupBy(window($"ts", "2 hours", "1 hour").as("w"))
           .agg(count(lit(1)).as("n"))
           .select(date_format($"w.start", "yyyy-MM-dd HH:00").as("win_start"), $"n")
-        runUpsertSink(s, agg, Seq("win_start"))
+        upsert(agg, Seq("win_start"))
           .orderBy($"win_start")
       },
       """SELECT strftime(ws, '%Y-%m-%d %H:00') AS win_start, count(*) AS n
@@ -887,7 +855,7 @@ object Streaming {
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Session windows (30-minute gap) per user.
-    "stream_session" -> streamKey(
+    "stream_session" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         // Spark rejects update output mode for session-window aggs — append
@@ -897,7 +865,7 @@ object Streaming {
           .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
           .agg(count(lit(1)).as("n_events"))
           .select($"user_id", unix_micros($"w.start").as("session_start_us"), $"n_events")
-        runUpsertSink(s, agg, Seq("user_id", "session_start_us"), mode = "append")
+        parquetSink(agg).drop("_batch")
           .filter($"user_id" >= 0)
           .orderBy($"user_id", $"session_start_us")
       },
@@ -922,35 +890,17 @@ object Streaming {
     // dedup state WATERMARK-BOUNDED — at 100 TB an unbounded dropDuplicates
     // state is the thing that kills the job, so the bounded variant is the
     // only production-valid spelling.
-    "stream_dedup" -> streamKey(
+    "stream_dedup" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        Confs.ensureNanosAsLong(s)
-        val streamDir = graft.TempDirs.createPath("graft_dedup")
-        for (name <- Seq("events.parquet", "events_retry.parquet"))
-          // absolutized for the same relative-sfDir reason as eventStream
-          java.nio.file.Files.createSymbolicLink(
-            streamDir.resolve(name),
-            java.nio.file.Paths.get(s"$dir/events.parquet")
-              .toAbsolutePath.normalize)
-        val deduped = graft.Tables.normalizeEventTs(
-            s.readStream.schema(rawSchema(graft.Tables.eventsTsIsLong(s, dir)))
-              .parquet(streamDir.toString))
+        val deduped = eventStream(s, dir, copies = 2)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .select($"event_type", $"value")
-        val out = graft.TempDirs.create("graft_dedup_out")
         // dropDuplicatesWithinWatermark is a row filter — every surviving
         // row emits in its own data batch; the no-data flush batch only
         // evicts dedup state, so it is skipped (r21)
-        withoutFlushBatch(s) {
-          val q = deduped.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-          }.start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        s.read.parquet(out)
+        parquetSink(deduped, flush = false)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .orderBy($"event_type")
@@ -962,7 +912,7 @@ object Streaming {
     // window is emitted exactly once when the watermark passes it, so the
     // read-back needs no merge (late-drop behavior is exercised with
     // MemoryStream in ScalaTest).
-    "stream_watermark" -> streamKey(
+    "stream_watermark" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val agg = eventStream(s, dir, withSentinel = true)
@@ -970,7 +920,7 @@ object Streaming {
           .groupBy(window($"ts", "6 hours").as("w"))
           .agg(count(lit(1)).as("n"))
           .select(date_format($"w.start", "yyyy-MM-dd HH:00").as("win_start"), $"n")
-        runUpsertSink(s, agg, Seq("win_start"), mode = "append")
+        parquetSink(agg).drop("_batch")
           .filter($"win_start" < "2099")
           .orderBy($"win_start")
       },
@@ -984,7 +934,7 @@ object Streaming {
     // the stream starts and restored after it stops, so no other key sees
     // it). Update mode emits the running totals each batch; the read-back
     // keeps the last emission per user.
-    "stream_tws" -> streamKey(
+    "stream_tws" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         Confs.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
@@ -996,7 +946,7 @@ object Streaming {
               org.apache.spark.sql.streaming.TimeMode.None(),
               OutputMode.Update())
             .toDF("user_id", "n", "sum_value")
-          runUpsertSink(s, totals, Seq("user_id"))
+          upsert(totals, Seq("user_id"))
             .select($"user_id", $"n", round($"sum_value", 2).as("total_value"))
             .orderBy($"user_id")
         }
@@ -1009,7 +959,7 @@ object Streaming {
     // the two histograms is asserted in ScalaTest. State is bounded: events
     // prune at watermark − 12h and idle users' event lists evict on
     // event-time timeout (see funnelStep/funnelLevels above).
-    "stream_funnel" -> streamKey(
+    "stream_funnel" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val ev = eventStream(s, dir)
@@ -1022,7 +972,7 @@ object Streaming {
         val levels = funnelLevels(ev)
         // update-mode fMGWS: levels emit in data batches; the no-data
         // flush batch only fires timeouts (which emit nothing here) (r21)
-        withoutFlushBatch(s)(runUpsertSink(s, levels, Seq("user_id")))
+        upsert(levels, Seq("user_id"), flush = false)
           .groupBy($"funnel_level")
           .agg(count(lit(1)).as("n_users"))
           .orderBy($"funnel_level")
@@ -1068,7 +1018,7 @@ object Streaming {
     // distinct = exact distinct); the HLL estimate is statistical, so its
     // accuracy bound and the across-restart re-aggregability contract live
     // in StreamingSpec, not the oracle hash (the ADVICE-r10 rule).
-    "stream_agg_sketch" -> streamKey(
+    "stream_agg_sketch" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val BF = graft.functions.BitmapFunctions
@@ -1092,7 +1042,7 @@ object Streaming {
     // query aggregates THE BASE events scan — the optimizer retargets it
     // onto the O(event_types)-row rollup (StreamingSpec asserts the
     // rewritten scan; the oracle recomputes from the base table).
-    "stream_rollup" -> streamKey(
+    "stream_rollup" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         streamRollupIngest(s, dir)
@@ -1124,7 +1074,7 @@ object Streaming {
     // is |mktsegment × event_type| rows however much stream history the
     // MV has absorbed. Events side reads only (user_id, value) so the
     // scan stays an attr-only projection the MV matcher recognizes.
-    "stream_join_mv" -> streamKey(
+    "stream_join_mv" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         streamJoinMvIngest(s, dir)
@@ -1156,7 +1106,7 @@ object Streaming {
     // candidate set, and the final maintained index equals the batch-built
     // band table (both driver-contract-sized comparisons over O(pairs) /
     // O(docs×bands) rows).
-    "stream_dedup_index" -> streamKey(
+    "stream_dedup_index" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         val (indexPath, candsDir) = streamDedupIndexIngest(s, dir)
