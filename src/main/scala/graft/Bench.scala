@@ -13,6 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 private class WorkListener extends org.apache.spark.scheduler.SparkListener {
   import java.util.concurrent.atomic.AtomicLong
+  val jobs = new AtomicLong
   val shuffleRead = new AtomicLong
   val shuffleWrite = new AtomicLong
   val spill = new AtomicLong
@@ -24,8 +25,10 @@ private class WorkListener extends org.apache.spark.scheduler.SparkListener {
   val cpu = new AtomicLong
   private val running = new AtomicLong
   override def onJobStart(
-      j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    jobs.incrementAndGet()
     running.incrementAndGet()
+  }
   override def onJobEnd(
       j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
     running.decrementAndGet()
@@ -46,8 +49,30 @@ private class WorkListener extends org.apache.spark.scheduler.SparkListener {
     while (running.get > 0 && i < 500) { Thread.sleep(10); i += 1 }
     Thread.sleep(50) // grace for trailing task-end events behind the job end
   }
-  def snapshot(): (Long, Long, Long, Long) =
-    (shuffleRead.get, shuffleWrite.get, spill.get, cpu.get)
+  /** One timed run of `body` (which returns its result rows) with the work
+    * it scheduled: the counters' delta across the run, drained on both
+    * sides so neither the previous run's stragglers nor this run's late
+    * events are misattributed. */
+  def measure(body: => Long): Work = {
+    val counters = Seq(jobs, shuffleRead, shuffleWrite, spill, cpu)
+    drain() // don't let the previous key's stragglers leak in
+    val before = counters.map(_.get)
+    val t0 = System.nanoTime()
+    val rows = body
+    val sec = (System.nanoTime() - t0) / 1e9
+    drain() // untimed: sec is already recorded
+    val Seq(j, r, w, s, c) = counters.zip(before).map { case (a, b) => a.get - b }
+    Work(sec, rows, j, r, w, s, c / 1e9)
+  }
+}
+
+/** One measured run: wall seconds, result rows and its work counters. */
+private case class Work(sec: Double, rows: Long, jobs: Long, shuffleRead: Long,
+    shuffleWrite: Long, spill: Long, cpuSec: Double) {
+  /** The per-key `work{}` entry of Bench's JSON line (jobs not included). */
+  def json: String =
+    s"""{"sec":$sec,"rows":$rows,"shuffle_read":$shuffleRead,""" +
+      s""""shuffle_write":$shuffleWrite,"spill":$spill,"cpu_sec":$cpuSec}"""
 }
 
 object Bench {
@@ -102,32 +127,24 @@ object Bench {
       java.nio.file.Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // local-iteration filter: comma-separated key prefixes; absent → all keys
-    // (the driver never sets it, so the driver contract is unchanged)
-    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(",").toSeq)
-    val selected = SparkEntry.defs.filter { case (name, _) =>
-      keyFilter.forall(_.exists(name.startsWith)) }
-    val staged = stagedKeys(selected)
-    // warm-up outside the timed loop: JIT + codegen + parquet footers, so the
-    // first timed key doesn't absorb session start (~5s skew otherwise).
-    // Also initialize JVM-wide write machinery that otherwise lands on
-    // whichever timed key touches it first (driver r4: first parquet write
-    // ~12s on cache_result, first metastore op ~6s on join_bucketed): one
-    // tiny write per output format plus one catalog round trip. A warm-up
-    // failure is non-fatal but must be visible — otherwise its one-time
-    // costs silently land on the first timed keys.
+  private[graft] def sfDirFromEnv: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The keys whose names start with one of `prefixes` (`None`: all). */
+  private[graft] def select(defs: Map[String, QueryDef],
+      prefixes: Option[Seq[String]]): Map[String, QueryDef] =
+    defs.filter { case (name, _) => prefixes.forall(_.exists(name.startsWith)) }
+
+  /** Warm-up outside the timed loop: JIT + codegen + parquet footers, so
+    * the first timed key doesn't absorb session start (~5s skew otherwise).
+    * Also initializes JVM-wide write machinery that otherwise lands on
+    * whichever timed key touches it first (driver r4: first parquet write
+    * ~12s on cache_result, first metastore op ~6s on join_bucketed): one
+    * tiny write per output format plus one catalog round trip. A warm-up
+    * failure is non-fatal but must be visible — otherwise its one-time
+    * costs silently land on the first timed keys. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String,
+      selected: Map[String, QueryDef]): Unit =
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       Tables.lineitem(spark, sfDir).count()
@@ -169,6 +186,18 @@ object Bench {
       System.err.println(s"[bench] warm-up failed (timings of early keys " +
         s"may absorb one-time costs): ${e.getMessage}")
     }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sfDirFromEnv
+    val loadStart = loadAvg()
+    val spark = Graft.session()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions") // = the session's cpus
+    // local-iteration filter: comma-separated key prefixes; absent → all keys
+    // (the driver never sets it, so the driver contract is unchanged)
+    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(",").toSeq)
+    val selected = select(SparkEntry.defs, keyFilter)
+    val staged = stagedKeys(selected)
+    warmUp(spark, sfDir, selected)
     // Time keys in a DETERMINISTIC order: HashMap iteration order is
     // arbitrary, so shared one-time work (the exact-pair table behind
     // jaccardPairsAuto's cache) would land on whichever consumer happened
@@ -189,23 +218,17 @@ object Bench {
     val work = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val cpuSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val results = ordered.map { case (name, d) =>
-      listener.drain() // don't let the previous key's stragglers leak in
-      val (r0, w0, s0, c0) = listener.snapshot()
-      val t0 = System.nanoTime()
-      var rows = -1L
-      try { rows = d.build(spark, sfDir).count() }
-      catch { case e: Throwable =>
-        errors += name
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      val w = listener.measure {
+        try d.build(spark, sfDir).count()
+        catch { case e: Throwable =>
+          errors += name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          -1L
+        }
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      listener.drain() // untimed: sec is already recorded
-      val (r1, w1, s1, c1) = listener.snapshot()
-      val cpuSec = (c1 - c0) / 1e9
-      cpuSecs(name) = cpuSec
-      work(name) = s"""{"sec":$sec,"rows":$rows,"shuffle_read":${r1 - r0},""" +
-        s""""shuffle_write":${w1 - w0},"spill":${s1 - s0},"cpu_sec":$cpuSec}"""
-      name -> sec
+      cpuSecs(name) = w.cpuSec
+      work(name) = w.json
+      name -> w.sec
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -82,14 +82,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "data/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
 
     // composing (e.g. sf1→sf10)? the input must itself be current-version
     assertVersion(srcDir)
@@ -102,9 +95,8 @@ object GenScale {
     // silently delivers an empty stream if the path is a directory. Parquet
     // files are row-group-splittable, so a single file costs no read
     // parallelism; the single-threaded write is a one-time generation cost.
-    def write(df: DataFrame, name: String, parts: Int): Unit = {
+    def write(df: DataFrame, name: String): Unit = {
       val tmp = s"$outDir/_tmp_$name"
-      val _ = parts // file-count knob retired: single-file layout is required
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
         .toArray.map(_.toString).find(_.endsWith(".parquet")).get
@@ -118,21 +110,21 @@ object GenScale {
     }
 
     // fixed dims: copy unchanged (TPC-H keeps region/nation constant per SF)
-    for (t <- Seq("region", "nation")) write(read(t), t, 1)
+    for (t <- Seq("region", "nation")) write(read(t), t)
 
     // per-SF dims and facts: ×10 with consistent FK renumbering
     write(renumber(replicate(read("customer"), spark), Seq("c_custkey"))
-      .drop("r"), "customer", 2)
+      .drop("r"), "customer")
     write(renumber(replicate(read("supplier"), spark), Seq("s_suppkey"))
-      .drop("r"), "supplier", 1)
+      .drop("r"), "supplier")
     write(renumber(replicate(read("part"), spark), Seq("p_partkey"))
-      .drop("r"), "part", 2)
+      .drop("r"), "part")
     write(renumber(replicate(read("orders"), spark),
-      Seq("o_orderkey", "o_custkey")).drop("r"), "orders", 8)
+      Seq("o_orderkey", "o_custkey")).drop("r"), "orders")
     write(renumber(replicate(read("lineitem"), spark),
-      Seq("l_orderkey", "l_partkey", "l_suppkey")).drop("r"), "lineitem", 16)
+      Seq("l_orderkey", "l_partkey", "l_suppkey")).drop("r"), "lineitem")
     write(renumber(replicate(read("events"), spark),
-      Seq("event_id", "user_id")).drop("r"), "events", 8)
+      Seq("event_id", "user_id")).drop("r"), "events")
 
     // documents: token-bijective per-replica rename keeps within-replica
     // similarity structure identical and cross-replica overlap zero;
@@ -152,7 +144,7 @@ object GenScale {
           t => concat(t, lit("_x"), col("r"))), " "))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .drop("r")
-    write(docs, "documents", 4)
+    write(docs, "documents")
 
     // embeddings: orthogonal per-replica transform Q_r = S_r · P_r where
     // P_r is a cyclic shift by 7r coordinates and S_r flips signs by a
@@ -169,7 +161,7 @@ object GenScale {
             * when(pmod(hash(col("r"), i), lit(2)) === 0, 1.0f).otherwise(-1.0f))
             .cast("float")))
       .drop("r")
-    write(emb, "embeddings", 2)
+    write(emb, "embeddings")
 
     // version marker: written AFTER all tables so a crashed run leaves an
     // (unmarked ⇒ rejected) dir rather than a marked partial one

@@ -33,6 +33,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object Graft {
+  /** The local session every main and the test suite run on: `local[cpus]`,
+    * `cpus` shuffle partitions, UTC session time, no UI, WARN logging. It
+    * builds the session only — no [[install]], which would change plans. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      : SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Attach the optimizer rule and register every SQL-name function the
     * library ships on an already-running session. Idempotent. */
   def install(spark: SparkSession): Unit = {

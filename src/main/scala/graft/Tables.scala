@@ -35,7 +35,7 @@ object Tables {
 
   // Schema cache (r21, guide §6): spark.read.parquet infers the schema
   // with a footer-read Spark JOB on every call — one ~30-100 ms job per
-  // Tables.* call, paid by nearly every key (measured via ProfileDdl: the
+  // Tables.* call, paid by nearly every key (`graft.Tool profile`: the
   // `Tables.raw` job shows up inside each warm timed run). The schema of
   // an unchanged file is immutable, so cache it by (dir, name, mtime) and
   // hand it to the reader explicitly. Each call still returns a FRESH

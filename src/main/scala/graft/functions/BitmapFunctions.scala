@@ -50,15 +50,11 @@ object BitmapFunctions {
     if (b == null) 0L else deserialize(b).getLongCardinality)
   def bitmap_count(c: Column): Column = countUdf(c)
 
-  /** Native-Expression SPIKE of bitmap_count, built to MEASURE whether the
-    * UDF layer costs anything on the bitmap scalar hot path (r12 verdict
-    * task 7; graft.BitmapBench is the harness, BASELINE.md the record).
-    * The dominant cost in every bitmap scalar is deserialize() — which both
-    * spellings pay identically — so the only delta is the UDF's
-    * encoder/boxing wrapper vs a direct eval. Kept alongside the UDF (not
-    * swapped in) unless the measurement clears the 20% bar; the AGGREGATES
-    * are already native (NativeAggregates.BitmapUnion) because there the
-    * partial-merge path IS the shuffle hot loop. */
+  /** Codegen'd cardinality of a serialized bitmap: the expression the
+    * count-distinct → bitmap_union rollup rewrite (`plans.RollupRewrite`)
+    * puts over the merged union. Not a SQL name; the `bitmap_count` UDF
+    * stays the user-facing spelling (measured within 1.7% of this native
+    * form, BASELINE.md round 13). */
   case class BitmapCardinality(child: org.apache.spark.sql.catalyst.expressions.Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
     import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,17 +77,6 @@ object BitmapFunctions {
         newChild: org.apache.spark.sql.catalyst.expressions.Expression): BitmapCardinality =
       copy(child = newChild)
   }
-
-  def bitmap_count_native(c: Column): Column = {
-    // Column-from-Expression without a registry round-trip: reuse the same
-    // call_function plumbing the other native expressions use
-    org.apache.spark.sql.functions.call_function("bitmap_cardinality", c)
-  }
-
-  /** Register the native spike's SQL name (idempotent). */
-  def registerNativeCount(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_cardinality", exprs => BitmapCardinality(exprs.head), "built-in")
 
   private val andUdf = functions.udf((a: Array[Byte], b: Array[Byte]) => {
     val m = deserialize(a); m.and(deserialize(b)); serialize(m)

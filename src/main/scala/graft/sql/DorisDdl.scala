@@ -4176,7 +4176,7 @@ final class DorisDdl(s: SparkSession) {
     // r21 registration-skip (guide §2.4 — remove duplicate passes): the
     // unconditional per-select re-registration of EVERY table cost one
     // eager footer-merge Spark job plus full view analysis per table per
-    // statement (ProfileDdl: 2-4 such jobs inside each warm sql_ddl_*
+    // statement (`graft.Tool profile`: 2-4 such jobs in each warm sql_ddl_*
     // timed run). A table's views are provably current when (a) no
     // possibly-mutating statement ran since they were stamped
     // (mutationEpoch) and (b) this instance still owns every temp-view

@@ -5,14 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide SparkSession). */
 object TestSpark {
+  // "4" explicitly: the suite must not follow SPARK_GRAFT_CPUS
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
