@@ -51,7 +51,7 @@ object SketchScalars {
     if (b == null) null
     else NativeAggregates.queryState(b, p)
       .map(java.lang.Double.valueOf).orNull
-  })
+  }).withName("quantile_percent")
   /** QUANTILE_PERCENT(state, p): estimate the p-quantile from a sketch. */
   def quantile_percent(state: Column, p: Column): Column =
     quantilePercentUdf(state, p)
@@ -72,5 +72,6 @@ object SketchScalars {
     })
     spark.udf.register("hll_cardinality", (b: Array[Byte]) =>
       if (b == null) 0L else Math.round(HllSketch.heapify(b).getEstimate))
+    spark.udf.register("quantile_percent", quantilePercentUdf)
   }
 }

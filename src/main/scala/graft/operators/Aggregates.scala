@@ -362,19 +362,22 @@ object Aggregates {
     // Exact percentiles + median + PERCENTILE_ARRAY (Doris PERCENTILE /
     // MEDIAN / PERCENTILE_ARRAY). The array result is stringified through
     // DECIMAL so both engines print identically and the driver compares a
-    // scalar.
+    // scalar. The five percentiles share one percentile buffer: one
+    // percentile(l_extendedprice, array(...)) keeps one value-count map per
+    // flag and sorts it once, where four separate calls kept and sorted four.
     "agg_percentile" -> QueryDef(
       (s, dir) => {
         import s.implicits._
         Tables.lineitem(s, dir)
           .groupBy($"l_returnflag")
-          .agg(
-            round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
-            round(expr("percentile(l_extendedprice, 0.9)"), 4).as("p90"),
-            round(expr("percentile(l_extendedprice, 0.99)"), 4).as("p99"),
-            array_join(expr(
-              "transform(percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D)), " +
-                "x -> CAST(CAST(round(x, 4) AS DECIMAL(18,4)) AS STRING))"), ",")
+          .agg(expr("percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D, 0.9D, 0.99D))")
+            .as("ps"))
+          .select($"l_returnflag",
+            round(element_at($"ps", 2), 4).as("p50"),
+            round(element_at($"ps", 4), 4).as("p90"),
+            round(element_at($"ps", 5), 4).as("p99"),
+            array_join(transform(slice($"ps", 1, 3),
+              x => round(x, 4).cast("decimal(18,4)").cast("string")), ",")
               .as("p_array"))
           .orderBy($"l_returnflag")
       },

@@ -709,11 +709,11 @@ object Joins {
       (s, dir) => {
         import s.implicits._
         val (out, dimDir) = ensureDppStaged(s, dir)
-        val fact = s.read.parquet(out)
+        val fact = Tables.parquet(s, out)
         // the dim must be a real scan with a residual filter (a local
         // relation constant-folds the filter away and the pruning rule sees
         // no selective predicate to subscribe to)
-        val dim = s.read.parquet(dimDir).filter($"tag" === "returned")
+        val dim = Tables.parquet(s, dimDir).filter($"tag" === "returned")
         fact.join(broadcast(dim), $"l_returnflag" === $"rf")
           .groupBy($"rf")
           .agg(count(lit(1)).as("n"), round(sum($"l_quantity"), 2).as("sum_qty"))

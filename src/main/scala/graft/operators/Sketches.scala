@@ -233,10 +233,10 @@ object Sketches {
         |     SELECT user_id FROM events WHERE event_type = 'purchase') t)
         |    AS n_view_only""".stripMargin),
 
-    // QUANTILE_STATE analogue #2 — the MERGEABLE kind: per-(flag, status) KLL
-    // sketches, quantile_union'd to per-flag, then QUANTILE_PERCENT. KLL
-    // error bound (k=200 -> ~1.3% rank error) asserted vs exact percentile in
-    // ScalaTest; estimates are engine-specific -> rows-only here.
+    // QUANTILE_STATE analogue #2 — the MERGEABLE kind: per-(flag, status) GK
+    // summaries, quantile_union'd to per-flag, then QUANTILE_PERCENT. The GK
+    // error bound is asserted vs exact percentile in ScalaTest; estimates are
+    // engine-specific -> rows-only here.
     // The GK summary bytes are engine-internal, but the split-merge
     // contract is oracle-pinnable by RANK (same trick as
     // agg_percentile_approx): the estimate from union-merging
@@ -244,6 +244,11 @@ object Sketches {
     // <= 2*eps = 0.02 (engine eps 0.01 per summary + one eps headroom for
     // the union — the bound SketchSpec proves directly; measured <= 0.0095
     // on all SFs, deterministic per dataset). n_rows is DuckDB-replayable.
+    // The 3-row estimate side is broadcast on purpose. Left to the planner,
+    // lineitem becomes the build side, and whole-stage codegen defers the
+    // estimate side's deterministic quantile_percent projection into the
+    // per-match loop: every joined row re-read its flag's state image. As
+    // the build side, the estimate is computed once per flag.
     "agg_quantile_state" -> QueryDef(
       (s, dir) => {
         import s.implicits._
@@ -256,7 +261,7 @@ object Sketches {
           .select($"l_returnflag",
             SS.quantile_percent($"qs", lit(0.5)).as("p50_est"),
             SS.quantile_percent($"qs", lit(0.95)).as("p95_est"))
-        Tables.lineitem(s, dir).join(est, Seq("l_returnflag"))
+        Tables.lineitem(s, dir).join(broadcast(est), Seq("l_returnflag"))
           .groupBy($"l_returnflag")
           .agg(
             count(lit(1)).as("n_rows"),

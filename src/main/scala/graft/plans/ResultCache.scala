@@ -58,13 +58,13 @@ object ResultCache {
     val e = entries.get(key)
     if (e != null && e.canonical == canonical && e.mtimes == mtimes) {
       hitCount.incrementAndGet()
-      s.read.parquet(e.path)
+      graft.Tables.parquet(s, e.path)
     } else {
       missCount.incrementAndGet()
       val out = graft.TempDirs.create("graft_rescache")
       df.write.mode("overwrite").parquet(out)
       entries.put(key, Entry(canonical, out, mtimes))
-      s.read.parquet(out)
+      graft.Tables.parquet(s, out)
     }
   }
 }

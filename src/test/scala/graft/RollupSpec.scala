@@ -392,7 +392,7 @@ class RollupSpec extends SparkSpec {
   test("Graft.install registers the full SQL-name surface in one call") {
     Graft.install(spark)
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    Seq("to_quantile_state", "quantile_union", "bitmap_union",
+    Seq("to_quantile_state", "quantile_union", "quantile_percent", "bitmap_union",
       "cosine_sim", "token_count")
       .foreach { fn =>
         assert(spark.sessionState.functionRegistry

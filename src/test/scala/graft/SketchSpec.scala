@@ -270,6 +270,80 @@ class SketchSpec extends SparkSpec {
     }
   }
 
+  test("agg_percentile holds one Percentile aggregate; rows equal four separate calls") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
+    val df = run("agg_percentile")
+    val percentiles = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case p: Percentile => p })
+    assert(percentiles.size == 1, percentiles.mkString(", "))
+    val separate = Tables.lineitem(spark, sf)
+      .groupBy($"l_returnflag")
+      .agg(
+        round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
+        round(expr("percentile(l_extendedprice, 0.9)"), 4).as("p90"),
+        round(expr("percentile(l_extendedprice, 0.99)"), 4).as("p99"),
+        array_join(expr(
+          "transform(percentile(l_extendedprice, array(0.25D, 0.5D, 0.75D)), " +
+            "x -> CAST(CAST(round(x, 4) AS DECIMAL(18,4)) AS STRING))"), ",")
+          .as("p_array"))
+      .orderBy($"l_returnflag")
+    assert(df.schema == separate.schema)
+    assert(df.collect().toSeq == separate.collect().toSeq)
+  }
+
+  test("quantile_percent: the SQL name round-trips and equals the DataFrame API") {
+    import graft.functions.{NativeAggregates => NA, SketchScalars => SS}
+    Graft.install(spark)
+    val fine = Tables.lineitem(spark, sf)
+      .groupBy($"l_returnflag", $"l_linestatus")
+      .agg(NA.to_quantile_state($"l_extendedprice").as("qs"))
+    fine.createOrReplaceTempView("qp_fine")
+    try {
+      val viaSql = spark.sql(
+        """SELECT l_returnflag, quantile_percent(quantile_union(qs), 0.5) AS p50,
+          |  quantile_percent(quantile_union(qs), 0.95) AS p95
+          |FROM qp_fine GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+        .as[(String, Double, Double)].collect().toSeq
+      val viaApi = fine.groupBy($"l_returnflag")
+        .agg(NA.quantile_union($"qs").as("m"))
+        .select($"l_returnflag", SS.quantile_percent($"m", lit(0.5)),
+          SS.quantile_percent($"m", lit(0.95)))
+        .orderBy($"l_returnflag")
+        .as[(String, Double, Double)].collect().toSeq
+      assert(viaSql.nonEmpty && viaSql == viaApi)
+    } finally spark.catalog.dropTempView("qp_fine")
+  }
+
+  test("agg_quantile_state reads each flag's state only on the broadcast side") {
+    // The estimate side is the join's build side, so the readout runs once
+    // per flag inside the BroadcastExchange — never on the lineitem side,
+    // where codegen would re-run it per joined row.
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val df = run("agg_quantile_state")
+    df.collect() // materialize so AQE finalizes the plan
+    def walk(p: SparkPlan, under: Boolean): Seq[(SparkPlan, Boolean)] = {
+      val u = under || p.isInstanceOf[BroadcastExchangeExec]
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }
+      (p, u) +: kids.flatMap(walk(_, u))
+    }
+    val readers = walk(df.queryExecution.executedPlan, under = false).filter {
+      case (n, _) => n.expressions.exists(_.exists {
+        case u: ScalaUDF => u.udfName.contains("quantile_percent")
+        case _ => false
+      })
+    }
+    assert(readers.nonEmpty, "no quantile_percent in the plan")
+    assert(readers.forall(_._2),
+      s"readout outside the BroadcastExchange: ${readers.filterNot(_._2).map(_._1.nodeName)}")
+  }
+
   test("streaming funnel histogram equals batch funnel histogram") {
     val a = run("agg_window_funnel").as[(Int, Long)].collect().sorted.toSeq
     val b = run("stream_funnel").as[(Int, Long)].collect().sorted.toSeq
