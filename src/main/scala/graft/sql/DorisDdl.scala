@@ -94,7 +94,7 @@ final class DorisDdl(s: SparkSession) {
   private def registerTemp(df: DataFrame, name: String): Unit = {
     df.createOrReplaceTempView(name)
     engineViews.add(name)
-    // ownership record (r21 registration-skip): the session temp-view
+    // ownership record (registration skip): the session temp-view
     // namespace is shared by every DorisDdl instance on this session, so
     // a select may only SKIP re-registering a table view while this
     // instance still owns the name (another instance taking it — the
@@ -337,12 +337,18 @@ final class DorisDdl(s: SparkSession) {
       sys.error(s"access denied: user '$currentUser' needs $priv on " +
         s"${if (o == "*") "*" else s"'$o'"}")
     }
-    // r21 registration-skip: any statement that can change what a table
-    // view must serve advances the mutation epoch BEFORE dispatch, so a
-    // registered view stamped with an OLDER epoch is re-registered by the
-    // next select. Read-only rows leave the epoch alone — that is what
-    // makes warm selects skippable.
-    if (st.mutates) mutationEpoch.incrementAndGet()
+    // registration skip: a statement that can change what a table view
+    // serves advances the mutation epoch BEFORE dispatch and marks what it
+    // writes with the new value — its one target table, or every table —
+    // so the next select re-registers exactly the views stamped below
+    // their table's mark (a Doris load publishes only its own table's
+    // version). Read-only rows leave epoch and marks alone; that is what
+    // keeps warm selects, and reads of tables nobody wrote, skippable.
+    st.writes(t).foreach { w =>
+      val e = mutationEpoch.incrementAndGet()
+      if (w == "*") allTablesMark.accumulateAndGet(e, (a, b) => a max b)
+      else tableMarks.merge(w, e, (a, b) => if (a >= b) a else b)
+    }
     maintainScheduledMtmvs()
     st.run(t)
   }
@@ -366,21 +372,38 @@ final class DorisDdl(s: SparkSession) {
   // cup/sql_parser.cup]). Here one row per statement form plays that part:
   // `execute` selects the row by its head keywords, and the row decides
   // the privilege (`needs`: the (privilege, objects) a non-root user must
-  // hold, each row extracting its own target), the mutation epoch
-  // (`mutates`: every row but SELECT/WITH/VALUES, SHOW, DESC and EXPLAIN)
-  // and the handler. No two rows' heads overlap at a word boundary, so the
-  // table order is immaterial; a statement matching no row is a query.
+  // hold, each row extracting its own target), the table it can write
+  // (`writes`, which the registration skip reads) and the handler.
+  // No two rows' heads overlap at a word boundary, so the table order is
+  // immaterial; a statement matching no row is a query.
   private type Needs = String => Seq[(String, Iterable[String])]
-  private final class Stmt(val heads: Seq[String], val mutates: Boolean,
+  /** The table a row's statement `t` can change: None for a read
+    * (SELECT/WITH/VALUES, SHOW, DESC, EXPLAIN), the one table the row's
+    * target regex names, or "*" for every table. A row that can write a
+    * table its regex does not name (several `INTO TABLE` clauses, a
+    * rename, a restore, a dropped database) writes "*", and so does a
+    * one-table row whose regex finds no target, as its privilege rule
+    * then demands "*". */
+  private type Writes = String => Option[String]
+  private val reads: Writes = _ => None
+  private val everything: Writes = _ => Some("*")
+  private final class Stmt(val heads: Seq[String], val writes: Writes,
       val needs: Needs, val run: String => Option[DataFrame]) {
     def name: String = heads.head
   }
   private def write(heads: String*)(needs: Needs)(h: String => Unit) =
-    new Stmt(heads, mutates = true, needs, t => { h(t); None })
+    new Stmt(heads, everything, needs, t => { h(t); None })
   private def writeRows(heads: String*)(needs: Needs)(h: String => DataFrame) =
-    new Stmt(heads, mutates = true, needs, t => Some(h(t)))
+    new Stmt(heads, everything, needs, t => Some(h(t)))
   private def read(heads: String*)(needs: Needs)(h: String => DataFrame) =
-    new Stmt(heads, mutates = false, needs, t => Some(h(t)))
+    new Stmt(heads, reads, needs, t => Some(h(t)))
+  /** A write to the one table right after `head`; the same target regex
+    * feeds the row's privilege rule. */
+  private def writeTable(head: String)(needs: Regex => Needs)(h: String => Unit) = {
+    val target = after(head)
+    new Stmt(Seq(head), t => Some(first(target, t).getOrElse("*")),
+      needs(target), t => { h(t); None })
+  }
 
   // privilege rules. Sources of a gated write (INSERT ... SELECT, CTAS,
   // UPDATE ... FROM) additionally need SELECT_PRIV, matching Doris; a row
@@ -414,9 +437,10 @@ final class DorisDdl(s: SparkSession) {
   private def first(re: Regex, t: String): Option[String] =
     re.findFirstMatchIn(t).map(_.group(1))
   private def headRe(head: String): String = "(?is)^" + head.replace(" ", "\\s+")
-  /** The object right after `head`: `DROP TABLE [IF EXISTS] t`, `UPDATE t`. */
+  /** The object right after `head`: `DROP TABLE [IF EXISTS] t`, `UPDATE t`,
+    * `CREATE TABLE [IF NOT EXISTS] t`. */
   private def after(head: String): Regex =
-    (headRe(head) + """\s+(?:TABLE\s+|IF\s+EXISTS\s+)?`?(\w+)`?""").r
+    (headRe(head) + """\s+(?:TABLE\s+|IF\s+(?:NOT\s+)?EXISTS\s+)?`?(\w+)`?""").r
   /** The object of `head name ON t` (indexes, routine loads). */
   private def on(head: String): Regex =
     (headRe(head) + """\s+\S+\s+ON\s+`?(\w+)`?""").r
@@ -432,7 +456,7 @@ final class DorisDdl(s: SparkSession) {
     write("DROP DATABASE")(global("DROP_PRIV"))(dropDatabase),
     write("USE")(ungated)(useDatabase), // session navigation, ungated
     read("SHOW DATABASES")(ungated)(_ => showDatabases()),
-    write("CREATE TABLE")(creates)(createTable),
+    writeTable("CREATE TABLE")(_ => creates)(createTable),
     write("CREATE INDEX")(onObject("ALTER_PRIV", on("CREATE INDEX"))) {
       case CreateIndexRe(iname, tname, rest) =>
         addIndex(tname, s"INDEX $iname $rest")
@@ -444,8 +468,8 @@ final class DorisDdl(s: SparkSession) {
     },
     write("CREATE MATERIALIZED VIEW")(alters)(createMv),
     write("CREATE VIEW", "CREATE OR REPLACE VIEW")(creates)(createView),
-    write("INSERT OVERWRITE")(loads(after("INSERT OVERWRITE")))(insertOverwrite),
-    write("INSERT INTO")(loads(after("INSERT INTO")))(insertInto),
+    writeTable("INSERT OVERWRITE")(loads)(insertOverwrite),
+    writeTable("INSERT INTO")(loads)(insertInto),
     write("LOAD LABEL")(loads("""(?is)\bINTO\s+TABLE\s+`?(\w+)`?""".r))(loadLabel),
     write("CREATE ROUTINE LOAD")(loads(on("CREATE ROUTINE LOAD")))(createRoutineLoad),
     write("STOP ROUTINE LOAD")(controlsLoads)(stopRoutineLoad),
@@ -458,8 +482,8 @@ final class DorisDdl(s: SparkSession) {
     read("SHOW SNAPSHOT")(ungated)(showSnapshot),
     read("SHOW BACKUP")(ungated)(_ => showBackupJobs(restoreSide = false)),
     read("SHOW RESTORE")(ungated)(_ => showBackupJobs(restoreSide = true)),
-    write("UPDATE")(loads(after("UPDATE")))(update),
-    write("DELETE FROM")(loads(after("DELETE FROM")))(deleteFrom),
+    writeTable("UPDATE")(loads)(update),
+    writeTable("DELETE FROM")(loads)(deleteFrom),
     write("DROP MATERIALIZED VIEW")(global("DROP_PRIV"))(dropMv),
     write("DROP VIEW")(onObject("DROP_PRIV", after("DROP VIEW")))(dropView),
     write("ALTER VIEW")(altersView)(alterView),
@@ -467,7 +491,7 @@ final class DorisDdl(s: SparkSession) {
     read("SHOW CREATE VIEW")(selects)(showCreateView),
     write("DROP TABLE")(onObject("DROP_PRIV", after("DROP TABLE")))(dropTable),
     write("ALTER TABLE")(onObject("ALTER_PRIV", after("ALTER TABLE")))(alterTable),
-    write("TRUNCATE TABLE")(onObject("ALTER_PRIV", after("TRUNCATE TABLE")))(truncate),
+    writeTable("TRUNCATE TABLE")(onObject("ALTER_PRIV", _))(truncate),
     writeRows("REFRESH MATERIALIZED VIEW")(alters)(refreshStmt),
     writeRows("EXPORT TABLE")(onObject("SELECT_PRIV", after("EXPORT TABLE")))(exportTable),
     read("EXPLAIN")(selects)(explainStmt),
@@ -508,11 +532,11 @@ final class DorisDdl(s: SparkSession) {
     }.nextOption()
 
   /** Side-effect free, for tests: the row `sqlText` selects (by first
-    * head), its `mutates`, and the current user's first denial. */
+    * head), the table it can write, and the current user's first denial. */
   private[graft] def classify(sqlText: String) = {
     val t = normalize(sqlText)
     val st = statement(headOf(t))
-    (st.name, st.mutates, denial(st, t))
+    (st.name, st.writes(t), denial(st, t))
   }
   private[graft] def statementNames: Seq[String] = statements.map(_.name)
 
@@ -4029,7 +4053,7 @@ final class DorisDdl(s: SparkSession) {
     case ShowPartsRe(name) =>
       val t = state(name)
       require(t.def_.partCol.isDefined, s"$name: table is not partitioned")
-      // freshness-aware like selectPlain (r21): the unconditional pass
+      // freshness-aware like selectPlain: the unconditional pass
       // re-analyzed every partition view per SHOW — ~31 views for the
       // auto-partitioned table, the bulk of sql_ddl_auto_partition's
       // warm 1.3 s wall
@@ -4173,16 +4197,15 @@ final class DorisDdl(s: SparkSession) {
     })
 
   private def selectPlain(text: String): DataFrame = {
-    // r21 registration-skip (guide §2.4 — remove duplicate passes): the
-    // unconditional per-select re-registration of EVERY table cost one
-    // eager footer-merge Spark job plus full view analysis per table per
-    // statement (`graft.Tool profile`: 2-4 such jobs in each warm sql_ddl_*
-    // timed run). A table's views are provably current when (a) no
-    // possibly-mutating statement ran since they were stamped
-    // (mutationEpoch) and (b) this instance still owns every temp-view
-    // name it registered (viewOwners — another instance on the shared
-    // session namespace may have taken them). Anything else re-registers
-    // exactly as before; mutation paths always re-register.
+    // registration skip (guide §2.4 — remove duplicate passes): each
+    // re-registration costs one eager footer-merge Spark job plus full
+    // view analysis, so a select re-registers only the tables whose views
+    // are not provably current. They are current when (a) no statement
+    // that could write THIS table ran since they were stamped (its write
+    // mark, see viewsFresh — a write to another table does not count) and
+    // (b) this instance still owns every temp-view name it registered
+    // (viewOwners — another instance on the shared session namespace may
+    // have taken them). Mutation paths always re-register their table.
     tables.synchronized(tables.values.toSeq).foreach { t =>
       if (!viewsFresh(t)) registerViews(t)
     }
@@ -4194,7 +4217,8 @@ final class DorisDdl(s: SparkSession) {
     // UNRESOLVED_COLUMN from exactly that lost wait. The epoch stamp
     // restores it: warm read-only statements skip (stamp current), any
     // statement after a mutation refreshes once — and, crucially, BLOCKS
-    // on the lock behind an in-flight refresh.
+    // on the lock behind an in-flight refresh. This stamp stays on the
+    // global epoch, not a write mark: a user view can read any table.
     if (userViewsStamp.get != mutationEpoch.get) refreshUserViews()
     // Doris partition selection: FROM t PARTITION (p) → the partition-
     // restricted view (a partition-PRUNED scan, filtered before the merge
@@ -4239,8 +4263,8 @@ final class DorisDdl(s: SparkSession) {
       val r0 = files.fold(s.read)(_ => s.read.option("basePath", t.dir))
       val r = schemaHint match {
         case Some(sc) => r0.schema(sc)
-        // whole-tree read with no hint: the epoch-keyed cache serves the
-        // same merged schema the footer job would produce (r21). A FILE
+        // whole-tree read with no hint: the write-mark-checked cache serves
+        // the same merged schema the footer job would produce. A FILE
         // SUBSET without a hint still merges over exactly those files.
         case None if files.isEmpty => r0.schema(mergedSchemaOf(t))
         case None => r0.option("mergeSchema", "true")
@@ -4372,48 +4396,56 @@ final class DorisDdl(s: SparkSession) {
     * catalog entry: vanished → drop exactly what was just registered;
     * replaced by a NEW TableState (drop + recreate) → re-register from
     * the live state so readers never stick on the dead snapshot. */
-  /** r21 registration-skip state: [[mutationEpoch]] advances on every
-    * possibly-mutating statement (execute() entry); a successful
-    * registerViews stamps the table with the epoch captured at ITS start,
-    * and selectPlain skips tables whose stamp equals the current epoch
-    * AND whose temp-view names this instance still owns. Registrations of
-    * one table serialize on a per-name lock so that of two racing passes
-    * the LAST one to publish also READ the state last — without it, a
-    * reader's pass that snapshotted pre-mutation state could land after
-    * the mutator's own trailing pass and pin a stale view under a fresh
-    * stamp. */
+  /** Registration-skip state. [[mutationEpoch]] advances on every
+    * possibly-mutating statement (execute() entry), which records the new
+    * value as the WRITE MARK of the one table it writes ([[tableMarks]])
+    * or of every table ([[allTablesMark]]). A successful registerViews
+    * stamps the table with the epoch captured at ITS start, and a table
+    * whose stamp has reached its mark ([[writeMark]]) is current: a write
+    * to another table leaves it alone, as a Doris load publishes only its
+    * own table's version. Registrations of one table serialize on a
+    * per-name lock so that of two racing passes the LAST one to publish
+    * also READ the state last — without it, a reader's pass that
+    * snapshotted pre-mutation state could land after the mutator's own
+    * trailing pass and pin a stale view under a fresh stamp. */
   private val mutationEpoch = new java.util.concurrent.atomic.AtomicLong(0)
+  private val tableMarks =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val allTablesMark = new java.util.concurrent.atomic.AtomicLong(0)
+  private def writeMark(name: String): Long =
+    math.max(tableMarks.getOrDefault(name, 0L), allTablesMark.get)
   private val tableViewStamp =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private val registerLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** `t`'s views are provably current: stamped at the current mutation
-    * epoch and every registered temp-view name still owned by this
-    * instance on the shared session namespace. Used by [[selectPlain]]
-    * and [[showPartitions]] to skip re-registration on warm reads. */
+  /** `t`'s views are provably current: stamped no earlier than the last
+    * statement that could write `t` and every registered temp-view name
+    * still owned by this instance on the shared session namespace. Used
+    * by [[selectPlain]] and [[showPartitions]] to skip re-registration. */
   private def viewsFresh(t: TableState): Boolean = {
     val name = t.def_.name
     val st = tableViewStamp.get(name)
-    st != null && st.longValue == mutationEpoch.get &&
+    st != null && st.longValue >= writeMark(name) &&
       (viewOwners.get((s, name)) eq this) &&
       partitionNames(t).forall(p =>
         viewOwners.get((s, s"${name}__part_$p")) eq this)
   }
 
-  /** Merged parquet schema of `t`'s rowset tree, cached per mutation
-    * epoch (r21, guide §6): the eager footer-merge inference is a Spark
-    * job; between mutations the file set cannot change (every rowset
-    * writer runs under an epoch-bumping statement; MTMV refresh writes
-    * only the MV's own dir and re-registers its view itself), so warm
-    * reads reuse the schema instead of re-reading every footer. */
+  /** Merged parquet schema of `t`'s rowset tree, cached until the next
+    * statement that can write `t` (guide §6): the eager footer-merge
+    * inference is a Spark job, and between such statements the file set
+    * cannot change (every rowset writer runs under a statement that marks
+    * its table; MTMV refresh writes only the MV's own dir and re-registers
+    * its view itself), so warm reads reuse the schema instead of
+    * re-reading every footer. */
   private val mergedSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Long, org.apache.spark.sql.types.StructType)]()
   private def mergedSchemaOf(t: TableState)
       : org.apache.spark.sql.types.StructType = {
     val cur = mutationEpoch.get
     val e = mergedSchemaCache.get(t.def_.name)
-    if (e != null && e._1 == cur) e._2
+    if (e != null && e._1 >= writeMark(t.def_.name)) e._2
     else {
       val sc = s.read.option("mergeSchema", "true").parquet(t.dir).schema
       mergedSchemaCache.put(t.def_.name, (cur, sc))
@@ -5543,7 +5575,7 @@ final class DorisDdl(s: SparkSession) {
 
 object DorisDdl {
   /** Which DorisDdl instance last registered each engine temp view on a
-    * session (r21 registration-skip support; see selectPlain). Values are
+    * session (registration-skip support; see selectPlain). Values are
     * compared by `eq` only. */
   private val viewOwners =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()

@@ -2899,141 +2899,283 @@ class DdlSpec extends SparkSpec {
     ddl.execute("CREATE VIEW st_v AS SELECT k FROM st_t")
     ddl.execute(
       "CREATE MATERIALIZED VIEW st_smv AS SELECT k, SUM(v) AS sv FROM st_u GROUP BY k")
+    ddl.execute("CREATE DATABASE st_wdb")
+    ddl.execute("""CREATE TABLE st_wdb.st_w (k BIGINT) DUPLICATE KEY(k)
+      |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
     ddl.execute("CREATE USER 'nobody'")
     ddl.login("nobody")
-    // (statement, row, mutates, first denial). Recorded from the parent
-    // commit's three classifications; the query row is the old fallback.
-    val cases: Seq[(String, String, Boolean, Option[(String, String)])] = Seq(
-      ("CREATE DATABASE st_db", "CREATE DATABASE", true, Some("CREATE_PRIV" -> "*")),
-      ("DROP DATABASE st_db", "DROP DATABASE", true, Some("DROP_PRIV" -> "*")),
-      ("USE default_db", "USE", true, None),
-      ("SHOW DATABASES", "SHOW DATABASES", false, None),
+    // (statement, row, written table, first denial). Rows and denials were
+    // recorded from the pre-table dispatch chain; the query row is its old
+    // fallback. The written table is what the statement's mutation-epoch
+    // step marks: None for a read, "*" for every table.
+    val (reads, all, st_t) = (Option.empty[String], Some("*"), Some("st_t"))
+    val cases: Seq[(String, String, Option[String], Option[(String, String)])] = Seq(
+      ("CREATE DATABASE st_db", "CREATE DATABASE", all, Some("CREATE_PRIV" -> "*")),
+      ("DROP DATABASE st_db", "DROP DATABASE", all, Some("DROP_PRIV" -> "*")),
+      ("USE default_db", "USE", all, None),
+      ("SHOW DATABASES", "SHOW DATABASES", reads, None),
       ("CREATE TABLE st_n (k BIGINT) DUPLICATE KEY(k) " +
-        "DISTRIBUTED BY HASH(k) BUCKETS 1", "CREATE TABLE", true,
+        "DISTRIBUTED BY HASH(k) BUCKETS 1", "CREATE TABLE", Some("st_n"),
         Some("CREATE_PRIV" -> "*")),
       ("CREATE TABLE st_n2 DUPLICATE KEY(k) DISTRIBUTED BY HASH(k) " +
-        "BUCKETS 1 AS SELECT k FROM st_t", "CREATE TABLE", true,
+        "BUCKETS 1 AS SELECT k FROM st_t", "CREATE TABLE", Some("st_n2"),
         Some("CREATE_PRIV" -> "*")),
-      ("CREATE INDEX st_ix ON st_t (v) USING INVERTED", "CREATE INDEX", true,
+      ("CREATE INDEX st_ix ON st_t (v) USING INVERTED", "CREATE INDEX", all,
         Some("ALTER_PRIV" -> "st_t")),
-      ("DROP INDEX st_ix ON st_t", "DROP INDEX", true, Some("ALTER_PRIV" -> "st_t")),
+      ("DROP INDEX st_ix ON st_t", "DROP INDEX", all, Some("ALTER_PRIV" -> "st_t")),
       ("CREATE MATERIALIZED VIEW st_mv AS SELECT k, SUM(v) AS sv FROM st_u " +
-        "GROUP BY k", "CREATE MATERIALIZED VIEW", true, Some("ALTER_PRIV" -> "st_u")),
-      ("CREATE VIEW st_v2 AS SELECT k FROM st_t", "CREATE VIEW", true,
+        "GROUP BY k", "CREATE MATERIALIZED VIEW", all, Some("ALTER_PRIV" -> "st_u")),
+      ("CREATE VIEW st_v2 AS SELECT k FROM st_t", "CREATE VIEW", all,
         Some("CREATE_PRIV" -> "*")),
-      ("CREATE OR REPLACE VIEW st_v AS SELECT k FROM st_t", "CREATE VIEW", true,
+      ("CREATE OR REPLACE VIEW st_v AS SELECT k FROM st_t", "CREATE VIEW", all,
         Some("CREATE_PRIV" -> "*")),
-      ("INSERT OVERWRITE TABLE st_t SELECT * FROM st_u", "INSERT OVERWRITE", true,
+      ("INSERT OVERWRITE TABLE st_t SELECT * FROM st_u", "INSERT OVERWRITE", st_t,
         Some("LOAD_PRIV" -> "st_t")),
-      ("INSERT INTO st_t SELECT k, v FROM st_u", "INSERT INTO", true,
+      ("INSERT INTO st_t SELECT k, v FROM st_u", "INSERT INTO", st_t,
         Some("LOAD_PRIV" -> "st_t")),
-      ("INSERT INTO st_t VALUES (1, 1.0)", "INSERT INTO", true,
+      ("INSERT INTO st_t VALUES (1, 1.0)", "INSERT INTO", st_t,
         Some("LOAD_PRIV" -> "st_t")),
       ("LOAD LABEL st_l (DATA INFILE('/tmp/x.csv') INTO TABLE st_t)", "LOAD LABEL",
-        true, Some("LOAD_PRIV" -> "st_t")),
+        all, Some("LOAD_PRIV" -> "st_t")),
       ("CREATE ROUTINE LOAD st_j ON st_t FROM FILE('/tmp/d', 'parquet')",
-        "CREATE ROUTINE LOAD", true, Some("LOAD_PRIV" -> "st_t")),
-      ("STOP ROUTINE LOAD FOR st_j", "STOP ROUTINE LOAD", true, Some("LOAD_PRIV" -> "*")),
-      ("PAUSE ROUTINE LOAD FOR st_j", "PAUSE ROUTINE LOAD", true,
+        "CREATE ROUTINE LOAD", all, Some("LOAD_PRIV" -> "st_t")),
+      ("STOP ROUTINE LOAD FOR st_j", "STOP ROUTINE LOAD", all, Some("LOAD_PRIV" -> "*")),
+      ("PAUSE ROUTINE LOAD FOR st_j", "PAUSE ROUTINE LOAD", all,
         Some("LOAD_PRIV" -> "*")),
-      ("RESUME ROUTINE LOAD FOR st_j", "RESUME ROUTINE LOAD", true,
+      ("RESUME ROUTINE LOAD FOR st_j", "RESUME ROUTINE LOAD", all,
         Some("LOAD_PRIV" -> "*")),
-      ("SHOW ROUTINE LOAD", "SHOW ROUTINE LOAD", false, None),
-      ("CANCEL LOAD WHERE LABEL = 'st_l'", "CANCEL LOAD", true, Some("LOAD_PRIV" -> "*")),
-      ("BACKUP SNAPSHOT st_s TO '/tmp/r' ON (st_t)", "BACKUP SNAPSHOT", true,
+      ("SHOW ROUTINE LOAD", "SHOW ROUTINE LOAD", reads, None),
+      ("CANCEL LOAD WHERE LABEL = 'st_l'", "CANCEL LOAD", all, Some("LOAD_PRIV" -> "*")),
+      ("BACKUP SNAPSHOT st_s TO '/tmp/r' ON (st_t)", "BACKUP SNAPSHOT", all,
         Some("ADMIN_PRIV" -> "*")),
-      ("RESTORE SNAPSHOT st_s FROM '/tmp/r'", "RESTORE SNAPSHOT", true,
+      ("RESTORE SNAPSHOT st_s FROM '/tmp/r'", "RESTORE SNAPSHOT", all,
         Some("ADMIN_PRIV" -> "*")),
-      ("SHOW SNAPSHOT ON '/tmp/r'", "SHOW SNAPSHOT", false, None),
-      ("SHOW BACKUP", "SHOW BACKUP", false, None),
-      ("SHOW RESTORE", "SHOW RESTORE", false, None),
-      ("UPDATE st_t SET v = 2.0 WHERE k = 1", "UPDATE", true, Some("LOAD_PRIV" -> "st_t")),
-      ("UPDATE st_t SET v = st_u.v FROM st_u WHERE st_t.k = st_u.k", "UPDATE", true,
+      ("SHOW SNAPSHOT ON '/tmp/r'", "SHOW SNAPSHOT", reads, None),
+      ("SHOW BACKUP", "SHOW BACKUP", reads, None),
+      ("SHOW RESTORE", "SHOW RESTORE", reads, None),
+      ("UPDATE st_t SET v = 2.0 WHERE k = 1", "UPDATE", st_t, Some("LOAD_PRIV" -> "st_t")),
+      ("UPDATE st_t SET v = st_u.v FROM st_u WHERE st_t.k = st_u.k", "UPDATE", st_t,
         Some("LOAD_PRIV" -> "st_t")),
-      ("DELETE FROM st_t WHERE k = 1", "DELETE FROM", true, Some("LOAD_PRIV" -> "st_t")),
-      ("DROP MATERIALIZED VIEW st_smv ON st_u", "DROP MATERIALIZED VIEW", true,
+      ("DELETE FROM st_t WHERE k = 1", "DELETE FROM", st_t, Some("LOAD_PRIV" -> "st_t")),
+      ("DROP MATERIALIZED VIEW st_smv ON st_u", "DROP MATERIALIZED VIEW", all,
         Some("DROP_PRIV" -> "*")),
-      ("DROP VIEW st_v", "DROP VIEW", true, Some("DROP_PRIV" -> "st_v")),
-      ("DROP VIEW IF EXISTS st_v", "DROP VIEW", true, Some("DROP_PRIV" -> "st_v")),
-      ("ALTER VIEW st_v AS SELECT k, v FROM st_t", "ALTER VIEW", true,
+      ("DROP VIEW st_v", "DROP VIEW", all, Some("DROP_PRIV" -> "st_v")),
+      ("DROP VIEW IF EXISTS st_v", "DROP VIEW", all, Some("DROP_PRIV" -> "st_v")),
+      ("ALTER VIEW st_v AS SELECT k, v FROM st_t", "ALTER VIEW", all,
         Some("ALTER_PRIV" -> "st_v")),
-      ("SHOW CREATE MATERIALIZED VIEW st_smv", "SHOW CREATE MATERIALIZED VIEW", false,
+      ("SHOW CREATE MATERIALIZED VIEW st_smv", "SHOW CREATE MATERIALIZED VIEW", reads,
         Some("SELECT_PRIV" -> "st_u")),
-      ("SHOW CREATE VIEW st_v", "SHOW CREATE VIEW", false, Some("SELECT_PRIV" -> "st_v")),
-      ("DROP TABLE st_t", "DROP TABLE", true, Some("DROP_PRIV" -> "st_t")),
-      ("DROP TABLE IF EXISTS st_t", "DROP TABLE", true, Some("DROP_PRIV" -> "st_t")),
-      ("ALTER TABLE st_t ADD COLUMN c BIGINT", "ALTER TABLE", true,
+      ("SHOW CREATE VIEW st_v", "SHOW CREATE VIEW", reads, Some("SELECT_PRIV" -> "st_v")),
+      ("DROP TABLE st_t", "DROP TABLE", all, Some("DROP_PRIV" -> "st_t")),
+      ("DROP TABLE IF EXISTS st_t", "DROP TABLE", all, Some("DROP_PRIV" -> "st_t")),
+      ("ALTER TABLE st_t ADD COLUMN c BIGINT", "ALTER TABLE", all,
         Some("ALTER_PRIV" -> "st_t")),
-      ("TRUNCATE TABLE st_t", "TRUNCATE TABLE", true, Some("ALTER_PRIV" -> "st_t")),
-      ("REFRESH MATERIALIZED VIEW st_smv", "REFRESH MATERIALIZED VIEW", true,
+      ("TRUNCATE TABLE st_t", "TRUNCATE TABLE", st_t, Some("ALTER_PRIV" -> "st_t")),
+      ("REFRESH MATERIALIZED VIEW st_smv", "REFRESH MATERIALIZED VIEW", all,
         Some("ALTER_PRIV" -> "st_u")),
-      ("EXPORT TABLE st_t TO '/tmp/e'", "EXPORT TABLE", true,
+      ("EXPORT TABLE st_t TO '/tmp/e'", "EXPORT TABLE", all,
         Some("SELECT_PRIV" -> "st_t")),
-      ("EXPLAIN SELECT k FROM st_t", "EXPLAIN", false, Some("SELECT_PRIV" -> "st_t")),
-      ("ANALYZE TABLE st_t", "ANALYZE TABLE", true, Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW COLUMN STATS st_t", "SHOW COLUMN STATS", false,
+      ("EXPLAIN SELECT k FROM st_t", "EXPLAIN", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("ANALYZE TABLE st_t", "ANALYZE TABLE", all, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW COLUMN STATS st_t", "SHOW COLUMN STATS", reads,
         Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW INDEX FROM st_t", "SHOW INDEX", false, Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW INDEXES FROM st_t", "SHOW INDEX", false, Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW DYNAMIC PARTITION TABLES", "SHOW DYNAMIC PARTITION TABLES", false, None),
-      ("SHOW TEMPORARY PARTITIONS FROM st_t", "SHOW TEMPORARY PARTITIONS", false,
+      ("SHOW INDEX FROM st_t", "SHOW INDEX", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW INDEXES FROM st_t", "SHOW INDEX", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW DYNAMIC PARTITION TABLES", "SHOW DYNAMIC PARTITION TABLES", reads, None),
+      ("SHOW TEMPORARY PARTITIONS FROM st_t", "SHOW TEMPORARY PARTITIONS", reads,
         Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW PARTITIONS FROM st_t", "SHOW PARTITIONS", false,
+      ("SHOW PARTITIONS FROM st_t", "SHOW PARTITIONS", reads,
         Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW CREATE TABLE st_t", "SHOW CREATE TABLE", false,
+      ("SHOW CREATE TABLE st_t", "SHOW CREATE TABLE", reads,
         Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW COLUMNS FROM st_t", "SHOW COLUMNS", false, Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW LOAD FROM st_t", "SHOW LOAD", false, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW COLUMNS FROM st_t", "SHOW COLUMNS", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW LOAD FROM st_t", "SHOW LOAD", reads, Some("SELECT_PRIV" -> "st_t")),
       // still admitted, but now lists only the readable tables (tested below)
-      ("SHOW LOAD", "SHOW LOAD", false, None),
-      ("SHOW DATA FROM st_t", "SHOW DATA", false, Some("SELECT_PRIV" -> "st_t")),
-      ("SHOW DATA", "SHOW DATA", false, None), // likewise filtered
-      ("CREATE USER 'st_w'", "CREATE USER", true, Some("GRANT_PRIV" -> "*")),
-      ("DROP USER 'st_w'", "DROP USER", true, Some("GRANT_PRIV" -> "*")),
-      ("CREATE ROLE 'st_r'", "CREATE ROLE", true, Some("GRANT_PRIV" -> "*")),
-      ("DROP ROLE 'st_r'", "DROP ROLE", true, Some("GRANT_PRIV" -> "*")),
-      ("SHOW ROLES", "SHOW ROLES", false, Some("GRANT_PRIV" -> "*")),
-      ("GRANT SELECT_PRIV ON st_t TO 'nobody'", "GRANT", true,
+      ("SHOW LOAD", "SHOW LOAD", reads, None),
+      ("SHOW DATA FROM st_t", "SHOW DATA", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("SHOW DATA", "SHOW DATA", reads, None), // likewise filtered
+      ("CREATE USER 'st_w'", "CREATE USER", all, Some("GRANT_PRIV" -> "*")),
+      ("DROP USER 'st_w'", "DROP USER", all, Some("GRANT_PRIV" -> "*")),
+      ("CREATE ROLE 'st_r'", "CREATE ROLE", all, Some("GRANT_PRIV" -> "*")),
+      ("DROP ROLE 'st_r'", "DROP ROLE", all, Some("GRANT_PRIV" -> "*")),
+      ("SHOW ROLES", "SHOW ROLES", reads, Some("GRANT_PRIV" -> "*")),
+      ("GRANT SELECT_PRIV ON st_t TO 'nobody'", "GRANT", all,
         Some("GRANT_PRIV" -> "*")),
-      ("GRANT 'st_r' TO 'nobody'", "GRANT", true, Some("GRANT_PRIV" -> "*")),
-      ("REVOKE SELECT_PRIV ON st_t FROM 'nobody'", "REVOKE", true,
+      ("GRANT 'st_r' TO 'nobody'", "GRANT", all, Some("GRANT_PRIV" -> "*")),
+      ("REVOKE SELECT_PRIV ON st_t FROM 'nobody'", "REVOKE", all,
         Some("GRANT_PRIV" -> "*")),
-      ("SHOW GRANTS", "SHOW GRANTS", false, None),
-      ("SHOW GRANTS FOR 'nobody'", "SHOW GRANTS", false, None),
-      ("SHOW GRANTS FOR 'root'", "SHOW GRANTS", false, Some("GRANT_PRIV" -> "*")),
-      ("SHOW VARIABLES", "SHOW VARIABLES", false, None),
-      ("SHOW SESSION VARIABLES", "SHOW VARIABLES", false, None),
-      ("SHOW GLOBAL VARIABLES LIKE 'time%'", "SHOW VARIABLES", false, None),
-      ("SET sql_select_limit = 10", "SET", true, None),
-      ("SHOW TABLES", "SHOW TABLES", false, None),
-      ("DESC st_t", "DESC", false, Some("SELECT_PRIV" -> "st_t")),
-      ("DESCRIBE st_t", "DESC", false, Some("SELECT_PRIV" -> "st_t")),
-      ("SELECT k FROM st_t", "SELECT", false, Some("SELECT_PRIV" -> "st_t")),
-      ("WITH x AS (SELECT k FROM st_t) SELECT * FROM x", "SELECT", false,
+      ("SHOW GRANTS", "SHOW GRANTS", reads, None),
+      ("SHOW GRANTS FOR 'nobody'", "SHOW GRANTS", reads, None),
+      ("SHOW GRANTS FOR 'root'", "SHOW GRANTS", reads, Some("GRANT_PRIV" -> "*")),
+      ("SHOW VARIABLES", "SHOW VARIABLES", reads, None),
+      ("SHOW SESSION VARIABLES", "SHOW VARIABLES", reads, None),
+      ("SHOW GLOBAL VARIABLES LIKE 'time%'", "SHOW VARIABLES", reads, None),
+      ("SET sql_select_limit = 10", "SET", all, None),
+      ("SHOW TABLES", "SHOW TABLES", reads, None),
+      ("DESC st_t", "DESC", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("DESCRIBE st_t", "DESC", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("SELECT k FROM st_t", "SELECT", reads, Some("SELECT_PRIV" -> "st_t")),
+      ("WITH x AS (SELECT k FROM st_t) SELECT * FROM x", "SELECT", reads,
         Some("SELECT_PRIV" -> "st_t")),
-      ("VALUES (1)", "SELECT", false, None),
-      ("(SELECT k FROM st_t)", "SELECT", false, Some("SELECT_PRIV" -> "st_t")),
+      ("VALUES (1)", "SELECT", reads, None),
+      ("(SELECT k FROM st_t)", "SELECT", reads, Some("SELECT_PRIV" -> "st_t")),
       // EXPLAIN's inner text must be a query; the query path rejects it
-      ("EXPLAIN DROP TABLE st_t", "EXPLAIN", false, Some("SELECT_PRIV" -> "st_t")),
+      ("EXPLAIN DROP TABLE st_t", "EXPLAIN", reads, Some("SELECT_PRIV" -> "st_t")),
       // Deliberate changes. Whitespace-robust heads: the parent sent these
-      // to the query fallback (mutates = true, except SHOW: false) with
+      // to the query fallback (mutating, except SHOW) with
       // SELECT_PRIV on st_t (SHOW: no check), where spark.sql ran them.
-      ("DROP\nTABLE st_t", "DROP TABLE", true, Some("DROP_PRIV" -> "st_t")),
+      ("DROP\nTABLE st_t", "DROP TABLE", all, Some("DROP_PRIV" -> "st_t")),
       ("CREATE\nTABLE st_x USING parquet AS SELECT * FROM st_t", "CREATE TABLE",
-        true, Some("CREATE_PRIV" -> "*")),
-      ("SHOW\nTABLES", "SHOW TABLES", false, None),
-      ("INSERT\tINTO st_t VALUES (1, 1.0)", "INSERT INTO", true,
+        Some("st_x"), Some("CREATE_PRIV" -> "*")),
+      ("SHOW\nTABLES", "SHOW TABLES", reads, None),
+      ("INSERT\tINTO st_t VALUES (1, 1.0)", "INSERT INTO", st_t,
         Some("LOAD_PRIV" -> "st_t")),
       // A literal naming a table is no target: the parent's catch-all
       // `INTO TABLE` target regex demanded LOAD_PRIV on st_t here
-      ("CANCEL LOAD WHERE LABEL = 'into table st_t'", "CANCEL LOAD", true,
-        Some("LOAD_PRIV" -> "*")))
-    val wrong = cases.filterNot { case (st, row, mut, den) =>
-      ddl.classify(st) == ((row, mut, den))
+      ("CANCEL LOAD WHERE LABEL = 'into table st_t'", "CANCEL LOAD", all,
+        Some("LOAD_PRIV" -> "*")),
+      // Write scopes. A qualified or backticked target marks the canonical
+      // flat name, IF NOT EXISTS names nothing, a one-table row whose regex
+      // finds no target marks every table, and so does a row that can
+      // write a table its regex does not name.
+      ("INSERT INTO st_wdb.st_w VALUES (1)", "INSERT INTO",
+        Some("st_wdb__st_w"), Some("LOAD_PRIV" -> "st_wdb__st_w")),
+      ("DELETE FROM `st_wdb`.`st_w` WHERE k = 1", "DELETE FROM",
+        Some("st_wdb__st_w"), Some("LOAD_PRIV" -> "st_wdb__st_w")),
+      ("UPDATE `st_t` SET v = 2.0 WHERE k = 1", "UPDATE", st_t,
+        Some("LOAD_PRIV" -> "st_t")),
+      ("CREATE TABLE IF NOT EXISTS st_n3 (k BIGINT) DUPLICATE KEY(k) " +
+        "DISTRIBUTED BY HASH(k) BUCKETS 1", "CREATE TABLE", Some("st_n3"),
+        Some("CREATE_PRIV" -> "*")),
+      ("UPDATE", "UPDATE", all, Some("LOAD_PRIV" -> "*")),
+      ("LOAD LABEL st_l2 (DATA INFILE('/tmp/x.csv') INTO TABLE st_t, " +
+        "DATA INFILE('/tmp/y.csv') INTO TABLE st_u)", "LOAD LABEL", all,
+        Some("LOAD_PRIV" -> "st_t")),
+      ("ALTER TABLE st_t RENAME st_t2", "ALTER TABLE", all,
+        Some("ALTER_PRIV" -> "st_t")))
+    val wrong = cases.filterNot { case (st, row, wrote, den) =>
+      ddl.classify(st) == ((row, wrote, den))
     }.map { case (st, _, _, _) => s"$st -> ${ddl.classify(st)}" }
     assert(wrong.isEmpty, wrong.mkString("\n"))
     assert(ddl.statementNames.toSet == cases.map(_._2).toSet,
       "one case per statement-table row")
+  }
+
+  /** `body`'s result and the Spark jobs it ran on this thread, counted by
+    * a listener on a job group of its own. Listener events arrive in
+    * order, so once a marker job's start is seen every job `body` ran has
+    * been counted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs_of_${java.util.UUID.randomUUID()}"
+    val marker = s"$group.marker"
+    val counts = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => counts.computeIfAbsent(g,
+            _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet())
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup[R](g: String)(f: => R): R = {
+        sc.setJobGroup(g, g, interruptOnCancel = false)
+        try f finally sc.clearJobGroup()
+      }
+      val out = inGroup(group)(body)
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 10000000000L
+      while (!counts.containsKey(marker) && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(counts.containsKey(marker), "the listener never saw the marker job")
+      (out, Option(counts.get(group)).fold(0)(_.get))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("freshness: a write re-registers only the table it wrote; a " +
+    "statement that can write any table re-registers every table") {
+    val ddl = fresh()
+    for (n <- Seq("fr_a", "fr_b")) {
+      ddl.execute(s"""CREATE TABLE $n (k BIGINT, v BIGINT) UNIQUE KEY(k)
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+      ddl.execute(s"INSERT INTO $n VALUES (1, 10), (2, 20)")
+    }
+    def rows(n: String) =
+      ddl.sql(s"SELECT k, v FROM $n ORDER BY k").as[(Long, Long)].collect().toSeq
+    assert(rows("fr_a") == rows("fr_b"))
+    ddl.execute("INSERT INTO fr_a VALUES (3, 30)")
+    // fr_b's views are still current: its build re-registers nothing, so
+    // it runs no footer-merge job
+    val (b, bJobs) = jobsOf(ddl.sql("SELECT k, v FROM fr_b ORDER BY k"))
+    assert(bJobs == 0, s"SELECT on fr_b ran $bJobs jobs while it built")
+    assert(b.as[(Long, Long)].collect().toSeq == Seq((1L, 10L), (2L, 20L)))
+    assert(rows("fr_a") == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+    // SET may change what any statement reads: the next select
+    // re-registers every table, one footer-merge job each
+    ddl.execute("SET sql_select_limit = DEFAULT")
+    val (_, setJobs) = jobsOf(ddl.sql("SELECT k, v FROM fr_b"))
+    assert(setJobs >= 2, s"the first select after SET ran $setJobs jobs")
+    // so does ALTER TABLE, whose regex names one table but whose schema
+    // change reaches every view over it
+    ddl.execute("ALTER TABLE fr_b ADD COLUMN c BIGINT DEFAULT '7'")
+    val (_, aJobs) = jobsOf(ddl.sql("SELECT k, v FROM fr_a"))
+    assert(aJobs >= 1, "SELECT on fr_a re-registered nothing after ALTER TABLE")
+    assert(ddl.sql("SELECT c FROM fr_b").as[Long].collect().toSeq == Seq(7L, 7L))
+  }
+
+  test("freshness: a SELECT that starts after another thread's write has " +
+    "returned sees that write") {
+    val ddl = fresh()
+    for (n <- Seq("ryw_a", "ryw_b")) ddl.execute(
+      s"""CREATE TABLE $n (k BIGINT, v BIGINT) UNIQUE KEY(k)
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+    ddl.execute("INSERT INTO ryw_b VALUES (1, 1), (2, 2)")
+    ddl.execute("INSERT INTO ryw_a VALUES (0, 0)")
+    // the writer inserts key i, then deletes key i - 1: ryw_a's live keys
+    // are always {i - 1, i} or {i}, so a view older than the last returned
+    // INSERT lacks its key, and one older than the last returned DELETE
+    // still holds that key
+    val inserted = new java.util.concurrent.atomic.AtomicLong(0)
+    val deleted = new java.util.concurrent.atomic.AtomicLong(-1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val writerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def guarded(body: => Unit): Thread = {
+      val th = new Thread(() =>
+        try body catch { case e: Throwable => errors.add(e.toString) })
+      th.start()
+      th
+    }
+    val writer = guarded {
+      try (1 to 4).foreach { i =>
+        ddl.execute(s"INSERT INTO ryw_a VALUES ($i, $i)")
+        inserted.set(i)
+        ddl.execute(s"DELETE FROM ryw_a WHERE k = ${i - 1}")
+        deleted.set(i - 1)
+      } finally writerDone.set(true)
+    }
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = guarded {
+      var last = false
+      while (!last && errors.isEmpty) {
+        last = writerDone.get
+        val (ins, del) = (inserted.get, deleted.get)
+        val keys = ddl.sql("SELECT k FROM ryw_a").as[Long].collect()
+        if (keys.isEmpty || keys.max < ins || keys.min <= del)
+          errors.add(s"after INSERT $ins and DELETE $del read ${keys.sorted.toSeq}")
+        val b = ddl.sql("SELECT k FROM ryw_b ORDER BY k").as[Long].collect().toSeq
+        if (b != Seq(1L, 2L)) errors.add(s"ryw_b read $b")
+        reads.incrementAndGet()
+      }
+    }
+    val deadline = System.currentTimeMillis() + 20000
+    writer.join(20000)
+    reader.join(math.max(1L, deadline - System.currentTimeMillis()))
+    assert(!writer.isAlive && !reader.isAlive, "the threads ran past 20 s")
+    assert(errors.isEmpty, errors.toArray.mkString("\n"))
+    assert(reads.get >= 1 && ddl.sql("SELECT k FROM ryw_a").as[Long]
+      .collect().toSeq == Seq(4L))
   }
 
   test("privileges: the query path admits only queries — newline-spelled " +

@@ -229,6 +229,39 @@ class SketchSpec extends SparkSpec {
     assert(pct.nonEmpty && pct.forall(r => r._3 && r._4), pct.mkString(", "))
   }
 
+  test("agg_percentile_approx reads p50 and p95 from one percentile_approx " +
+    "buffer, with the schema and rows of the two-call spelling") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+    val df = run("agg_percentile_approx")
+    val buffers = df.queryExecution.optimizedPlan.flatMap(
+      _.expressions.flatMap(_.collect { case a: ApproximatePercentile => a }))
+    assert(buffers.size == 1, buffers.mkString("\n"))
+    val narrow = Tables.lineitem(spark, sf)
+      .select($"l_returnflag", $"l_extendedprice")
+    val approx = narrow.groupBy($"l_returnflag").agg(
+      percentile_approx($"l_extendedprice", lit(0.5), lit(1000)).as("p50a"),
+      percentile_approx($"l_extendedprice", lit(0.95), lit(1000)).as("p95a"))
+    val twoCalls = narrow.join(approx, Seq("l_returnflag"))
+      .groupBy($"l_returnflag")
+      .agg(
+        count(lit(1)).as("n_rows"),
+        (abs(sum(when($"l_extendedprice" <= $"p50a", 1L).otherwise(0L))
+          / count(lit(1)) - 0.5) <= 0.01).as("p50_rank_ok"),
+        (abs(sum(when($"l_extendedprice" <= $"p95a", 1L).otherwise(0L))
+          / count(lit(1)) - 0.95) <= 0.01).as("p95_rank_ok"))
+      .orderBy($"l_returnflag")
+    assert(df.schema == twoCalls.schema)
+    assert(df.collect().toSeq == twoCalls.collect().toSeq)
+    // the one buffer's quantiles are the two buffers' quantiles
+    val oneBuffer = narrow.groupBy($"l_returnflag")
+      .agg(percentile_approx($"l_extendedprice", array(lit(0.5), lit(0.95)),
+        lit(1000)).as("ps"))
+      .select($"l_returnflag", element_at($"ps", 1).as("p50a"),
+        element_at($"ps", 2).as("p95a"))
+    assert(oneBuffer.orderBy($"l_returnflag").collect().toSeq ==
+      approx.orderBy($"l_returnflag").collect().toSeq)
+  }
+
   test("quantile_state split-merge pipeline: deterministic, GK-bounded") {
     // Direct invariants of the TO_QUANTILE_STATE -> QUANTILE_UNION ->
     // estimate pipeline (the agg_quantile_state key only demonstrates it):
