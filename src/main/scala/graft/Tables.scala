@@ -33,31 +33,22 @@ object Tables {
   private val versionChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  // Schema cache (r21, guide §6): spark.read.parquet infers the schema
-  // with a footer-read Spark JOB on every call — one ~30-230 ms job per
-  // read, paid by nearly every key (`graft.Tool profile`: the inference job
-  // shows up inside each warm timed run). The schema of an unchanged
-  // parquet dir is immutable, so cache it by (path, Freshness.mtime) and
-  // hand it to the reader explicitly. Each call still returns a FRESH
-  // DataFrame (new exprIds) — the self-join hazard that forbids caching
-  // the DataFrame itself does not apply to the schema.
-  private case class SchemaEntry(mtime: Long, schema: org.apache.spark.sql.types.StructType)
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SchemaEntry]()
-
   /** Read a parquet dir, inferring its schema only when the dir is new or
     * changed since the last read. For the fixture tables and for parquet
-    * the engine wrote itself: result snapshots, staged layouts. */
+    * the engine wrote itself: result snapshots, staged layouts.
+    *
+    * spark.read.parquet infers the schema with a footer-read Spark JOB on
+    * every call — one ~30-230 ms job per read, paid by nearly every key
+    * (`graft.Tool profile`: the inference job shows up inside each warm
+    * timed run). The schema of an unchanged parquet dir is immutable, so
+    * it is memoized per path version ([[Artifacts.memo]]) and handed to
+    * the reader explicitly. Each call still returns a FRESH DataFrame (new
+    * exprIds) — the self-join hazard that forbids caching the DataFrame
+    * itself does not apply to the schema. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val m = Freshness.mtime(path)
-    val e = schemaCache.get(path)
-    val schema =
-      if (e != null && e.mtime == m) e.schema
-      else {
-        val sc = spark.read.parquet(path).schema
-        schemaCache.put(path, SchemaEntry(m, sc))
-        sc
-      }
+    val schema = Artifacts.memo("parquetSchema", path, spark, path) {
+      spark.read.parquet(path).schema
+    }
     spark.read.schema(schema).parquet(path)
   }
 

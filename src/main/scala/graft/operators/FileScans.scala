@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 /** File-format scans beyond parquet (SURVEY.md §2.1): CSV and JSON readers —
   * the load/TVF surface of Doris (file scan nodes under
   * [doris: be/src/vec/exec/format/], `s3()`/`file()` TVFs). Data is staged
-  * from the canonical parquet into the format under test once per sf dir, so
-  * the DuckDB oracle (which reads the parquet) checks the full
-  * write->read->query round trip.
+  * from the canonical parquet into the format under test once per source
+  * version and session ([[graft.Artifacts.memo]]), so the DuckDB oracle
+  * (which reads the parquet) checks the full write->read->query round trip.
   *
   * Scale notes: schemas are explicit (never inferSchema — inference is a
   * full extra pass at 100 TB); CSV/JSON scans parallelize by file splits
@@ -20,10 +20,8 @@ import org.apache.spark.sql.types._
   */
 object FileScans {
 
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
   private def ensureStaged(s: SparkSession, dir: String): (String, String, String) =
-    staged.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("formatsStaged", dir, s, s"$dir/orders.parquet") {
       val csv = graft.TempDirs.create("graft_csv")
       val json = graft.TempDirs.create("graft_json")
       val orc = graft.TempDirs.create("graft_orc")
@@ -44,10 +42,11 @@ object FileScans {
         Future(ord.write.mode("overwrite").orc(orc)))
       writes.foreach(Await.result(_, Duration.Inf))
       (csv, json, orc)
-    })
+    }
 
-  /** Embedded-Derby JDBC database staged once per sf dir — the federated /
-    * external-table scan surface (Doris JDBC catalog,
+  /** Embedded-Derby JDBC database staged once per nation version and
+    * session ([[graft.Artifacts.memo]]) — the federated / external-table
+    * scan surface (Doris JDBC catalog,
     * [doris: be/src/vec/exec/vjdbc_connector.cpp]) exercised without any
     * external service: Derby ships in Spark's jars and runs in-JVM. The
     * nation table is written THROUGH Spark's distributed JDBC sink
@@ -55,10 +54,8 @@ object FileScans {
     * the key covers the full external round trip. VARCHAR column types are
     * forced at create (Derby's default CLOB mapping for StringType rejects
     * comparison predicates, which would break pushdown). */
-  private val jdbcStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def ensureJdbc(s: SparkSession, dir: String): String =
-    jdbcStaged.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("jdbcStaged", dir, s, s"$dir/nation.parquet") {
       val db = graft.TempDirs.create("graft_derby") + "/db"
       val url = s"jdbc:derby:$db;create=true"
       Tables.nation(s, dir)
@@ -66,7 +63,7 @@ object FileScans {
         .option("createTableColumnTypes", "n_name VARCHAR(64)")
         .jdbc(url, "nation_jdbc", new java.util.Properties)
       s"jdbc:derby:$db"
-    })
+    }
 
   /** Typed row for the Dataset[T] demo (top-level so Encoders derive). */
   final case class Ord(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,

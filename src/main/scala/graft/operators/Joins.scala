@@ -26,20 +26,19 @@ import org.apache.spark.sql.functions._
   */
 object Joins {
 
-  // One-time DPP layout per sf dir (fact re-written partitioned on the join
-  // column + tiny dim parquet): the layout is the *precondition* the key
-  // demonstrates, not the operation under test, so repeated bench/verify runs
-  // reuse it instead of re-writing ~600k rows each call.
-  private val dppStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** join_dpp's `stage`: pre-stage the DPP layout so `join_dpp` times the
-    * partition-pruned join itself, not the one-time ~600k-row layout write
-    * (driver r6: 4.4 s of the key's 4.4 s was this write). */
+    * partition-pruned join itself, not the ~600k-row layout write (round
+    * 6: 4.4 s of the key's 4.4 s was this write). */
   def stageDpp(s: SparkSession, dir: String): Unit = ensureDppStaged(s, dir)
 
+  /** The DPP layout (fact re-written partitioned on the join column + tiny
+    * dim parquet): the layout is the *precondition* the key demonstrates,
+    * not the operation under test, so repeated bench/verify runs reuse it
+    * instead of re-writing ~600k rows each call. Built once per lineitem
+    * version and session ([[graft.Artifacts.memo]]), so a rewritten lineitem
+    * is re-staged rather than joined from its old copy. */
   private def ensureDppStaged(s: SparkSession, dir: String): (String, String) =
-    dppStaged.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("dppStaged", dir, s, s"$dir/lineitem.parquet") {
       import s.implicits._
       val out = graft.TempDirs.create("graft_dpp")
       // repartition on the partition column: 1 file per partition value
@@ -52,7 +51,7 @@ object Joins {
       Seq(("A", "accepted"), ("N", "neutral"), ("R", "returned"))
         .toDF("rf", "tag").write.mode("overwrite").parquet(dimDir)
       (out, dimDir)
-    })
+    }
 
   /** One-time bucketed-table layout per sf dir (the colocate-group storage
     * contract join_bucketed demonstrates). Idempotent via tableExists, so

@@ -36,9 +36,6 @@ object MaterializedViews {
   final case class MvState(basePath: String, mvPath: String,
       refreshHistory: List[Int])
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, MvState]()
-
   private def versionsFile(tablePath: String) =
     Paths.get(tablePath, "_graft_versions.tsv")
 
@@ -95,11 +92,12 @@ object MaterializedViews {
     stale.size
   }
 
-  /** Build the demo lifecycle once per sf dir: v1 base with the newest
-    * year's load incomplete → full refresh; the late slice lands (bumping
-    * ONE partition's version) → incremental refresh touches only it. */
+  /** Build the demo lifecycle once per orders version and session
+    * ([[graft.Artifacts.memo]]): v1 base with the newest year's load
+    * incomplete → full refresh; the late slice lands (bumping ONE
+    * partition's version) → incremental refresh touches only it. */
   def ensure(s: SparkSession, dir: String): MvState =
-    built.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("mtmvLifecycle", dir, s, s"$dir/orders.parquet") {
       import s.implicits._
       val base = TempDirs.create("graft_mtmv_base")
       val mv = TempDirs.create("graft_mtmv_mv")
@@ -121,21 +119,22 @@ object MaterializedViews {
         years.map(y => y.toString -> (if (y == maxYear) 2L else 1L)).toMap)
       val r2 = refresh(s, base, mv) // must touch exactly 1 partition
       MvState(base, mv, List(r1, r2))
-    })
+    }
 
   final case class JoinMvState(
       mvPath: String, def_ : graft.plans.JoinMvRewrite.JoinMvDef)
 
-  private val joinMvBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, JoinMvState]()
-
-  /** Build + register the demo JOIN MV once per sf dir: orders ⋈ customer
+  /** Build + register the demo JOIN MV once per (orders, customer)
+    * version and session ([[graft.Artifacts.memo]]): orders ⋈ customer
     * pre-aggregated by (c_mktsegment, o_orderpriority) with re-aggregable
-    * state (cnt, sum, per-column cnt), then install the rewrite rule. The
-    * serving query groups by a SUBSET of the MV keys, so the rule must both
-    * retarget the join and merge across the collapsed dimension. */
+    * state (cnt, sum, per-column cnt), then install the rewrite rule in the
+    * building session. A rebuild's def replaces the old one in the
+    * registry. The serving query groups by a SUBSET of the MV keys, so the
+    * rule must both retarget the join and merge across the collapsed
+    * dimension. */
   def ensureJoinMv(s: SparkSession, dir: String): JoinMvState =
-    joinMvBuilt.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("joinMv", dir, s,
+        s"$dir/orders.parquet", s"$dir/customer.parquet") {
       import s.implicits._
       val mvPath = TempDirs.create("graft_joinmv")
       Tables.orders(s, dir)
@@ -158,7 +157,7 @@ object MaterializedViews {
       graft.plans.JoinMvRewrite.register(d)
       graft.plans.JoinMvRewrite.install(s)
       JoinMvState(mvPath, d)
-    })
+    }
 
   def queries: Map[String, QueryDef] = Map(
     // Transparent JOIN-MV serving (Doris 2.1 MTMV): the USER QUERY below is

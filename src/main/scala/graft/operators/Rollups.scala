@@ -9,74 +9,71 @@ import org.apache.spark.sql.functions._
 /** Rollup materialization + transparent retargeting demo (SURVEY.md §4).
   *
   * Builds a physical rollup of lineitem keyed by (l_returnflag, l_linestatus)
-  * once per sf dir, registers it with [[RollupRewrite]], and then runs an
-  * aggregate ON THE BASE TABLE — the optimizer rule retargets the plan onto
+  * once per lineitem version, registers it with [[RollupRewrite]], and then
+  * runs an aggregate ON THE BASE TABLE — the optimizer rule retargets the plan onto
   * the 6-row rollup (ScalaTest asserts the rewritten scan; the DuckDB oracle
   * asserts the answer equals aggregating the base table).
   */
 object Rollups {
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def lineitemSrc(dir: String): String = s"$dir/lineitem.parquet"
 
-  /** Create (once) and register the lineitem rollup for this sf dir. */
+  /** Create and register the lineitem rollup for this sf dir. */
   def ensureRollup(s: SparkSession, dir: String): String =
-    built.computeIfAbsent(dir, { _ =>
-      import s.implicits._
-      val out = graft.TempDirs.create("graft_rollup")
-      Tables.lineitem(s, dir)
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(
-          sum($"l_quantity").as("sum_qty"),
-          sum($"l_extendedprice").as("sum_price"),
-          min($"l_quantity").as("min_qty"),
-          max($"l_quantity").as("max_qty"),
-          count(lit(1)).as("cnt"),
-          count($"l_quantity").as("cnt_qty"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(out)
-      RollupRewrite.register(RollupDef(
-        basePath = s"$dir/lineitem.parquet",
-        rollupPath = out,
-        keys = Seq("l_returnflag", "l_linestatus"),
-        columns = Map(
-          ("sum", "l_quantity") -> "sum_qty",
-          ("sum", "l_extendedprice") -> "sum_price",
-          ("min", "l_quantity") -> "min_qty",
-          ("max", "l_quantity") -> "max_qty",
-          ("count", "*") -> "cnt",
-          // the column's own non-null count: what avg(l_quantity) merges on
-          ("count", "l_quantity") -> "cnt_qty")))
-      out
-    })
-
-  private val builtCoarse = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    stageRollup(s, dir, "rollup_fine", "graft_rollup",
+      Seq("l_returnflag", "l_linestatus"), Seq(
+        ("sum", "l_quantity") -> "sum_qty",
+        ("sum", "l_extendedprice") -> "sum_price",
+        ("min", "l_quantity") -> "min_qty",
+        ("max", "l_quantity") -> "max_qty",
+        ("count", "*") -> "cnt",
+        // the column's own non-null count: what avg(l_quantity) merges on
+        ("count", "l_quantity") -> "cnt_qty"))
 
   /** A SECOND, coarser rollup of the same base — keyed by l_returnflag
     * alone with a reduced column set — so the rule has overlapping
     * candidates to RANK (Doris MaterializedViewSelector: among all rollups
     * that cover the aggregate, serve the cheapest). */
   def ensureCoarseRollup(s: SparkSession, dir: String): String =
-    builtCoarse.computeIfAbsent(dir, { _ =>
-      import s.implicits._
-      val out = graft.TempDirs.create("graft_rollup_coarse")
+    stageRollup(s, dir, "rollup_coarse", "graft_rollup_coarse",
+      Seq("l_returnflag"), Seq(
+        ("sum", "l_quantity") -> "sum_qty",
+        ("count", "*") -> "cnt",
+        ("count", "l_quantity") -> "cnt_qty"))
+
+  /** Aggregate lineitem by `keys` into one parquet file holding `columns`
+    * (the RollupDef mapping, (agg, base column) -> rollup column) and
+    * register it as rollup `name`. Built once per lineitem version and
+    * session ([[graft.Artifacts.memo]]): a rewritten lineitem rebuilds it,
+    * and the rebuilt version replaces the old one in the registry. Returns
+    * the rollup path. */
+  private def stageRollup(s: SparkSession, dir: String, name: String,
+      prefix: String, keys: Seq[String],
+      columns: Seq[((String, String), String)]): String =
+    graft.Artifacts.memo(name, dir, s, lineitemSrc(dir)) {
+      // the base version read is the def's freshness horizon, not "now": a
+      // base edit landing during the build then retires the rollup
+      val seen = graft.Freshness.mtime(lineitemSrc(dir))
+      val out = graft.TempDirs.create(prefix)
+      val aggs = columns.map { case ((fn, c), as) =>
+        (fn match {
+          case "count" if c == "*" => count(lit(1))
+          case "count" => count(col(c))
+          case "sum" => sum(col(c))
+          case "min" => min(col(c))
+          case "max" => max(col(c))
+        }).as(as)
+      }
       Tables.lineitem(s, dir)
-        .groupBy($"l_returnflag")
-        .agg(
-          sum($"l_quantity").as("sum_qty"),
-          count(lit(1)).as("cnt"),
-          count($"l_quantity").as("cnt_qty"))
+        .groupBy(keys.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
         .coalesce(1)
         .write.mode("overwrite").parquet(out)
-      RollupRewrite.register(RollupDef(
-        basePath = s"$dir/lineitem.parquet",
-        rollupPath = out,
-        keys = Seq("l_returnflag"),
-        columns = Map(
-          ("sum", "l_quantity") -> "sum_qty",
-          ("count", "*") -> "cnt",
-          ("count", "l_quantity") -> "cnt_qty")))
+      RollupRewrite.registerReplacing(RollupDef(lineitemSrc(dir), out,
+        name = name, keys = keys, columns = columns.toMap,
+        registeredAt = seen))
       out
-    })
+    }
 
   /** Which registered artifact ultimately feeds this plan: inspects the
     * optimized plan's leaf relations (driver-side metadata only). */

@@ -51,7 +51,15 @@ object JoinMvRewrite {
       registeredAt: Long = System.currentTimeMillis())
 
   private val registry = new java.util.concurrent.CopyOnWriteArrayList[JoinMvDef]()
-  def register(d: JoinMvDef): Unit = registry.add(d)
+
+  /** Register `d`, replacing the def of the same MV — same base pair and
+    * group keys — so a rebuilt MV supersedes its old version instead of
+    * serving beside it. */
+  def register(d: JoinMvDef): Unit = registry.synchronized {
+    registry.removeIf(o => o.leftPath == d.leftPath &&
+      o.rightPath == d.rightPath && o.keys == d.keys)
+    registry.add(d)
+  }
   def clear(): Unit = registry.clear()
 
   /** Install the rule once per session (extraOptimizations route; the
@@ -64,21 +72,6 @@ object JoinMvRewrite {
   }
 
   class JoinMvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-    // analyzed MV scan resolved once per path, exprIds re-instanced per use
-    // (the RollupRewriteRule planCache discipline — no IO per apply())
-    private val planCache =
-      new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]()
-
-    private def mvScan(path: String): Option[LogicalPlan] = {
-      val cached = planCache.computeIfAbsent(path, p =>
-        try spark.read.parquet(p).queryExecution.analyzed
-        catch { case _: Throwable => null })
-      Option(cached).map {
-        case lr: LogicalRelation => lr.newInstance()
-        case other => other
-      }
-    }
 
     private def norm(p: String): String = "file:" + p.stripPrefix("file:")
 
@@ -173,7 +166,7 @@ object JoinMvRewrite {
       if (graft.Freshness.mtime(d.leftPath) > d.registeredAt ||
           graft.Freshness.mtime(d.rightPath) > d.registeredAt) return None
 
-      val mvPlan = mvScan(d.mvPath).getOrElse(return None)
+      val mvPlan = RollupRewrite.servedScan(spark, d.mvPath).getOrElse(return None)
       val attr: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
       if (!d.keys.forall(attr.contains) ||
           !d.columns.values.forall(attr.contains)) return None

@@ -77,54 +77,36 @@ object RollupRewrite {
       // rowsets of an AGGREGATE table are already merge-compacted.
       innerAgg: Option[(Seq[String], Seq[String])] = None)
 
-  /** Session-wide registry (append-only; cleared by tests as needed). */
+  /** Session-wide registry (cleared by tests as needed). */
   private val registry = new java.util.concurrent.CopyOnWriteArrayList[RollupDef]()
 
   def register(d: RollupDef): Unit = registry.add(d)
   def clear(): Unit = registry.clear()
+  private[graft] def registered: Seq[RollupDef] =
+    registry.toArray(Array.empty[RollupDef]).toSeq
 
   /** Replace the registered version of THIS rollup (same base, same
     * declared name) by `d` — transactional rollup maintenance (the DDL
-    * front-end's sync-MV rebuild): a superseded version must leave the
-    * registry, because a versioned DELETE changes visible data WITHOUT
-    * touching the base dir's mtime, so the freshness guard alone cannot
-    * retire it. Keyed on identity, NOT on (basePath, keys): two distinct
-    * MVs sharing group keys on one base must coexist (both serve; the
-    * multi-candidate selection picks the cheaper scan). */
+    * front-end's sync-MV rebuild, a rebuilt standing rollup): a superseded
+    * version must leave the registry, because a versioned DELETE changes
+    * visible data WITHOUT touching the base dir's mtime, so the freshness
+    * guard alone cannot retire it. Keyed on identity, NOT on (basePath,
+    * keys): two distinct MVs sharing group keys on one base must coexist
+    * (both serve; the multi-candidate selection picks the cheaper scan). */
   def registerReplacing(d: RollupDef): Unit = registry.synchronized {
-    val it = registry.iterator()
-    val doomed = new java.util.ArrayList[RollupDef]()
-    while (it.hasNext) {
-      val old = it.next()
-      if (old.basePath == d.basePath && old.name == d.name) doomed.add(old)
-    }
-    registry.removeAll(doomed)
+    deregister(d.basePath, d.name)
     registry.add(d)
   }
 
   /** Remove ONE named rollup of `basePath` (ALTER TABLE ... DROP ROLLUP /
     * DROP MATERIALIZED VIEW in the DDL front-end). */
-  def deregister(basePath: String, name: String): Unit = registry.synchronized {
-    val it = registry.iterator()
-    val doomed = new java.util.ArrayList[RollupDef]()
-    while (it.hasNext) {
-      val d = it.next()
-      if (d.basePath == basePath && d.name == name) doomed.add(d)
-    }
-    registry.removeAll(doomed)
-  }
+  def deregister(basePath: String, name: String): Unit =
+    registry.removeIf(d => d.basePath == basePath && d.name == name)
 
   /** Remove every rollup registered for `basePath` (DROP TABLE in the DDL
     * front-end — a dropped base must stop serving immediately). */
-  def deregisterBase(basePath: String): Unit = registry.synchronized {
-    val it = registry.iterator()
-    val doomed = new java.util.ArrayList[RollupDef]()
-    while (it.hasNext) {
-      val d = it.next()
-      if (d.basePath == basePath) doomed.add(d)
-    }
-    registry.removeAll(doomed)
-  }
+  def deregisterBase(basePath: String): Unit =
+    registry.removeIf(d => d.basePath == basePath)
 
   /** Install the rule once per session. */
   def install(spark: SparkSession): Unit = {
@@ -134,23 +116,23 @@ object RollupRewrite {
         spark.experimental.extraOptimizations :+ new RollupRewriteRule(spark)
   }
 
-  class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-    // analyzed rollup scan, resolved ONCE per rollup path — apply() must not
-    // do IO/analysis on every rule application (round-1 finding); per use we
-    // only re-instance exprIds so two rewrites in one query can't collide
-    private val planCache =
-      new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]()
-
-    private def rollupScan(path: String): Option[LogicalPlan] = {
-      val cached = planCache.computeIfAbsent(path, p =>
-        try spark.read.parquet(p).queryExecution.analyzed
-        catch { case _: Throwable => null })
-      Option(cached).map {
-        case lr: LogicalRelation => lr.newInstance()
-        case other => other
-      }
+  /** The analyzed scan of a rollup or MV parquet path, shared by both
+    * rewrite rules. Resolved once per path, version and session through
+    * [[graft.Artifacts.memo]]: apply() must not do IO/analysis on every
+    * rule application (round-1 finding). Per use only the exprIds are
+    * re-instanced, so two rewrites in one query can't collide. A path that
+    * is missing or unreadable serves None until its mtime moves. */
+  private[plans] def servedScan(
+      spark: SparkSession, path: String): Option[LogicalPlan] =
+    Option(graft.Artifacts.memo("servedScan", path, spark, path) {
+      try spark.read.parquet(path).queryExecution.analyzed
+      catch { case scala.util.control.NonFatal(_) => null }
+    }).map {
+      case lr: LogicalRelation => lr.newInstance()
+      case other => other
     }
+
+  class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     /** Base-table mtime (a couple of stats, no data IO); 0 if unknowable.
       * Shared definition of "source unchanged" — graft.Freshness. */
@@ -217,7 +199,7 @@ object RollupRewrite {
           condOpt.flatMap(c => tryRewrite(agg, d, c).map(out => (d, out)))
         }
         served.sortBy { case (d, _) =>
-          (rollupScan(d.rollupPath).map(_.stats.sizeInBytes)
+          (servedScan(spark, d.rollupPath).map(_.stats.sizeInBytes)
             .getOrElse(BigInt(Long.MaxValue)), d.rollupPath)
         }.headOption.map(_._2).getOrElse(agg)
     }
@@ -239,7 +221,7 @@ object RollupRewrite {
       // freshness: skip if base table changed after registration
       if (baseMTime(d) > d.registeredAt) return None
 
-      val rollupPlan = rollupScan(d.rollupPath).getOrElse(return None)
+      val rollupPlan = servedScan(spark, d.rollupPath).getOrElse(return None)
       val rollupAttr: Map[String, Attribute] = rollupPlan.output.map(a => a.name -> a).toMap
       // every column the def maps to must exist in the rollup schema —
       // otherwise rollupAttr(c) would throw inside the optimizer and fail

@@ -73,27 +73,26 @@ object Streaming {
   /** Sentinel event time (2100-01-01) — far past every real event. */
   private val SentinelEpochSec = 4102444800L
 
-  /** One-row sentinel parquet per ts layout, written once per JVM (each
-    * withSentinel stream used to pay a full write job for the identical
-    * file). The sentinel shares the stream dir with the real events file, so
-    * its physical ts type must match. */
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[Boolean, java.nio.file.Path]()
-
+  /** One-row sentinel parquet per ts layout, written once per session
+    * ([[graft.Artifacts.memo]]; it reads no input, so only a new session
+    * rewrites it) and shared by every withSentinel stream, which used to pay
+    * a full write job each for the identical file. The sentinel shares the
+    * stream dir with the real events file, so its physical ts type must
+    * match. */
   private def sentinelFile(s: SparkSession, tsLong: Boolean): java.nio.file.Path =
-    sentinelCache.computeIfAbsent(tsLong, { tsl =>
+    graft.Artifacts.memo("streamSentinel", tsLong, s) {
       val tmp = graft.TempDirs.createPath("graft_sentinel")
       val tsVal: Any =
-        if (tsl) SentinelEpochSec * 1000000000L
+        if (tsLong) SentinelEpochSec * 1000000000L
         else java.time.LocalDateTime.ofEpochSecond(SentinelEpochSec, 0,
           java.time.ZoneOffset.UTC)
       val row = org.apache.spark.sql.Row(-1L, tsVal, -1L, "sentinel", 0.0, "{}")
-      s.createDataFrame(java.util.List.of(row), rawSchema(tsl))
+      s.createDataFrame(java.util.List.of(row), rawSchema(tsLong))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .find(_.endsWith(".parquet")).get
       java.nio.file.Paths.get(part)
-    })
+    }
 
   /** view→click→purchase funnel window: 12 hours, in µs. */
   private[graft] val FunnelWindowUs = 12L * 3600 * 1000000L
@@ -343,7 +342,7 @@ object Streaming {
       // the no-data micro-batch that follows emits every real group. This is
       // the standard bounded-replay flush trick; in production the stream is
       // unbounded and no sentinel is needed. The one-row parquet is written
-      // once per JVM and copied into each stream dir.
+      // once per session and copied into each stream dir.
       java.nio.file.Files.copy(
         sentinelFile(s, tsLong), streamDir.resolve("zz_sentinel.parquet"))
     }
@@ -351,7 +350,8 @@ object Streaming {
       s.readStream.schema(rawSchema(tsLong)).parquet(streamDir.toString))
   }
 
-  /** Pre-split the events table into 3 parquet files once per (dir, JVM) so
+  /** Pre-split the events table into 3 parquet files once per events
+    * version and session ([[graft.Artifacts.memo]]) so
     * a maxFilesPerTrigger=1 stream delivers 3 REAL micro-batches — the
     * merge-per-batch ingest keys below must demonstrate multi-batch
     * re-aggregation (the single-file eventStream yields exactly one batch).
@@ -361,22 +361,21 @@ object Streaming {
     * freshness horizon, not "now": a base edit between split-cache and
     * registration would otherwise pass the mtime guard while the MV serves
     * pre-edit data. */
-  private val splitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   private val splitSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("user_id", LongType),
     StructField("event_type", StringType), StructField("value", DoubleType)))
+  private def eventsSrc(dir: String): String = s"$dir/events.parquet"
   private def splitEvents(s: SparkSession, dir: String): (String, Long) =
-    splitCache.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("eventsSplit", dir, s, eventsSrc(dir)) {
       Confs.ensureNanosAsLong(s) // events.ts is ns-precision (see Tables.events)
-      val mtime = graft.Freshness.mtime(s"$dir/events.parquet")
+      val mtime = graft.Freshness.mtime(eventsSrc(dir))
       val out = graft.TempDirs.create("graft_stream_split")
-      s.read.parquet(s"$dir/events.parquet")
+      s.read.parquet(eventsSrc(dir))
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .repartition(3)
         .write.mode("overwrite").parquet(out)
       (out, mtime)
-    })
+    }
 
   /** Merge-per-micro-batch ingest harness shared by the sketch and rollup
     * ingest keys: stream the 3-file split source one file per trigger; each
@@ -422,21 +421,19 @@ object Streaming {
       graft.functions.NativeAggregates.bitmap_union_binary(col("user_bm"))
         .as("user_bm"),
       sum(col("n")).as("n"))
-  private val sketchIngested =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def sketchIngest(s: SparkSession, dir: String): String =
-    sketchIngested.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("sketchIngest", dir, s, eventsSrc(dir)) {
       graft.functions.NativeAggregates.register(s)
       mergeIngest(s, dir, sketchPartial, sketchMerge)
-    })
+    }
 
   /** The streaming-maintained events rollup (see stream_rollup): built once
-    * per (dir, JVM) and registered with RollupRewrite once — repeated key
-    * runs in one JVM must not append duplicate registry entries. */
-  private val rollupIngested =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * per events version and session ([[graft.Artifacts.memo]]) and
+    * registered with RollupRewrite under its own name, so a rebuild replaces
+    * its old version instead of appending a second candidate. Its freshness
+    * horizon is the events version the split was cut from. */
   private[graft] def streamRollupIngest(s: SparkSession, dir: String): String =
-    rollupIngested.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("streamRollup", dir, s, eventsSrc(dir)) {
       val path = mergeIngest(s, dir,
         batch => batch.groupBy(col("event_type"))
           .agg(sum(col("value")).as("sum_value"), count(lit(1)).as("cnt"),
@@ -448,29 +445,34 @@ object Streaming {
             sum(col("cnt")).as("cnt"), sum(col("cnt_value")).as("cnt_value"),
             min(col("min_value")).as("min_value"),
             max(col("max_value")).as("max_value")))
-      graft.plans.RollupRewrite.register(graft.plans.RollupRewrite.RollupDef(
-        basePath = s"$dir/events.parquet",
-        rollupPath = path,
-        keys = Seq("event_type"),
-        columns = Map(
-          ("sum", "value") -> "sum_value",
-          ("count", "*") -> "cnt",
-          ("count", "value") -> "cnt_value",
-          ("min", "value") -> "min_value",
-          ("max", "value") -> "max_value")))
+      graft.plans.RollupRewrite.registerReplacing(
+        graft.plans.RollupRewrite.RollupDef(
+          basePath = eventsSrc(dir),
+          rollupPath = path,
+          name = "stream_rollup",
+          keys = Seq("event_type"),
+          columns = Map(
+            ("sum", "value") -> "sum_value",
+            ("count", "*") -> "cnt",
+            ("count", "value") -> "cnt_value",
+            ("min", "value") -> "min_value",
+            ("max", "value") -> "max_value"),
+          registeredAt = splitEvents(s, dir)._2))
       path
-    })
+    }
 
   /** The streaming-maintained JOIN MV (see stream_join_mv): per micro-batch
     * the event rows enrich against the broadcast customer dim and fold into
     * a pre-joined aggregate keyed (c_mktsegment, event_type) — the
     * mergeIngest delta-merge, so per-batch cost is O(|keys| + |batch|) and
     * the dim join is map-side. The final version registers with
-    * JoinMvRewrite exactly like streamRollupIngest registers its rollup. */
-  private val joinMvIngested = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.plans.JoinMvRewrite.JoinMvDef)]()
-  private[graft] def streamJoinMvIngest(s: SparkSession, dir: String): String =
-    joinMvIngested.computeIfAbsent(dir, { _ =>
+    * JoinMvRewrite exactly like streamRollupIngest registers its rollup,
+    * once per (events, customer) version and session
+    * ([[graft.Artifacts.memo]]). Returns (MV path, its registered def). */
+  private def joinMvIngest(s: SparkSession,
+      dir: String): (String, graft.plans.JoinMvRewrite.JoinMvDef) =
+    graft.Artifacts.memo("streamJoinMv", dir, s,
+        eventsSrc(dir), s"$dir/customer.parquet") {
       val dim = graft.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
       val path = mergeIngest(s, dir,
@@ -484,7 +486,7 @@ object Streaming {
             sum(col("cnt")).as("cnt"),
             sum(col("cnt_value")).as("cnt_value")))
       val d = graft.plans.JoinMvRewrite.JoinMvDef(
-        leftPath = s"$dir/events.parquet",
+        leftPath = eventsSrc(dir),
         rightPath = s"$dir/customer.parquet",
         joinKeys = Seq(("user_id", "c_custkey")),
         mvPath = path,
@@ -496,13 +498,17 @@ object Streaming {
         registeredAt = splitEvents(s, dir)._2)
       graft.plans.JoinMvRewrite.register(d)
       (path, d)
-    })._1
+    }
+
+  private[graft] def streamJoinMvIngest(s: SparkSession, dir: String): String =
+    joinMvIngest(s, dir)._1
 
   /** The registered def of the streamed join MV (spec support: re-register
-    * after a registry clear without re-running the ingest). */
-  private[graft] def streamJoinMvDef(
+    * after a registry clear; the memo serves it without re-running the
+    * ingest when this session already built it). */
+  private[graft] def streamJoinMvDef(s: SparkSession,
       dir: String): Option[graft.plans.JoinMvRewrite.JoinMvDef] =
-    Option(joinMvIngested.get(dir)).map(_._2)
+    Some(joinMvIngest(s, dir)._2)
 
   /** The streaming-maintained MinHash DEDUP INDEX (see stream_dedup_index):
     * documents arrive in micro-batches; each batch is minhash-banded
@@ -524,12 +530,13 @@ object Streaming {
     * BEFORE its own append lands. Because bands are per-row, the union of
     * per-batch candidate sets EQUALS the batch-built candidate set (every
     * pair meets when its later member arrives) — the key pins that equality.
+    * Built once per documents version and session
+    * ([[graft.Artifacts.memo]]).
     * Returns (index dir, accumulated candidate-pairs dir). */
-  private val dedupIndexIngested =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private[graft] def streamDedupIndexIngest(
       s: SparkSession, dir: String): (String, String) =
-    dedupIndexIngested.computeIfAbsent(dir, { _ =>
+    graft.Artifacts.memo("streamDedupIndex", dir, s,
+        s"$dir/documents.parquet") {
       import graft.text.TextOps
       val split = graft.TempDirs.create("graft_docs_split")
       s.read.parquet(s"$dir/documents.parquet")
@@ -577,7 +584,7 @@ object Streaming {
       }
       if (!indexNonEmpty) sys.error("stream_dedup_index: no micro-batch ran")
       (table, candsDir)
-    })
+    }
 
   def queries: Map[String, QueryDef] = Map(
     // Stream Load analogue: micro-batch ingest through foreachBatch into

@@ -361,7 +361,7 @@ class StreamingSpec extends SparkSpec {
     val served = df.collect().toSeq
     plans.JoinMvRewrite.clear()
     try assert(served == base.collect().toSeq)
-    finally streaming.Streaming.streamJoinMvDef(sf)
+    finally streaming.Streaming.streamJoinMvDef(spark, sf)
       .foreach(plans.JoinMvRewrite.register)
   }
 
