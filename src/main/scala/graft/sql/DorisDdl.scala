@@ -4249,6 +4249,10 @@ final class DorisDdl(s: SparkSession) {
       // basePath keeps `_p` partition-column inference intact.
       files: Option[Seq[String]] = None)
       : DataFrame = {
+    // one read of the def: a concurrent light ADD COLUMN swaps `t.def_`,
+    // and a frame built from one def but projected with the next fails
+    // analysis on the new column
+    val d = t.def_
     // mergeSchema: rowsets written before a light ADD COLUMN lack the new
     // column; the union schema surfaces it as NULL, and the default-
     // coalesce below backfills it (model_schema_change's read contract —
@@ -4278,11 +4282,11 @@ final class DorisDdl(s: SparkSession) {
     // visible until REPLACE PARTITION publishes them. The startsWith is a
     // partition-column predicate, so it prunes at planning (no temp file
     // is even listed into the scan).
-    if (t.def_.partCol.isDefined)
+    if (d.partCol.isDefined)
       df = df.filter(!col("_p").startsWith("__tmp_"))
     part.foreach(p => df = df.filter(col("_p") === p))
     val have = df.columns.toSet
-    t.def_.cols.foreach { c =>
+    d.cols.foreach { c =>
       // light RENAME COLUMN: rowsets written before the rename keep their
       // bytes under the old name(s); surface them under the current one
       val sources = (c.name +: c.priors).filter(have.contains)
@@ -4305,8 +4309,7 @@ final class DorisDdl(s: SparkSession) {
       }
     }
     df = graft.operators.KeyModels.applyDeletePredicates(
-      df, t.synchronized(t.deletes.toSeq).map(d => (expr(d.compiled), d.ver)))
-    val d = t.def_
+      df, t.synchronized(t.deletes.toSeq).map(x => (expr(x.compiled), x.ver)))
     val merged = d.keysType match {
       case "DUPLICATE" => df
       case "UNIQUE" =>
@@ -4379,11 +4382,12 @@ final class DorisDdl(s: SparkSession) {
     * ZERO ROWS from an empty table, not an error, and views over it read
     * empty rather than breaking. */
   private def emptyVisible(t: TableState): DataFrame = {
-    val fields = t.def_.cols.map(c => org.apache.spark.sql.types.StructField(
+    val cols = t.def_.cols // one read: see visible
+    val fields = cols.map(c => org.apache.spark.sql.types.StructField(
       c.name, org.apache.spark.sql.types.DataType.fromDDL(c.sparkType)))
     val df = s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(fields))
-    df.select(t.def_.cols.map(c =>
+    df.select(cols.map(c =>
       if (c.variant) parse_json(col(c.name)).as(c.name) else col(c.name)): _*)
   }
 
