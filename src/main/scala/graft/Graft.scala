@@ -7,11 +7,12 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   *
   *  1. Config-time (production clusters): set
   *     `spark.sql.extensions=graft.GraftExtensions` on the session builder /
-  *     spark-submit conf. The extension injects the rollup-selection
+  *     spark-submit conf. The extension injects the one rollup/MV-selection
   *     optimizer rule through Spark's public injection point, so every
-  *     session built from that conf serves registered rollups with no code
-  *     change. ([doris: fe/.../planner/MaterializedViewSelector.java] is
-  *     wired into the planner the same transparently-on way.)
+  *     session built from that conf serves registered rollups and MVs with
+  *     no code change. ([doris: fe/.../planner/MaterializedViewSelector.java]
+  *     is wired into the planner the same transparently-on way: one selector
+  *     picks among rollups and MVs.)
   *
   *  2. Runtime ([[Graft.install]]): for an already-running session (the
   *     Verify/Bench harness path, notebooks). Adds the same optimizer rule
@@ -21,14 +22,15 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   *
   * Both routes are equivalent for the optimizer rule: injected user rules
   * and extraOptimizations run in the optimizer's user-rules batch after the
-  * main batches. The rule itself is a no-op until [[plans.RollupRewrite
-  * .register]] publishes a rollup definition, so installing the extension
-  * on sessions that never use rollups costs nothing.
+  * main batches. The rule serves a registered def (one registry, see
+  * [[plans.RollupRewrite.register]]) only while its bases are at the exact
+  * version its build read ([[Freshness.version]]), and is a no-op while
+  * the registry is empty, so installing the extension on sessions that
+  * never use rollups costs nothing.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(s => new plans.RollupRewrite.RollupRewriteRule(s))
-    ext.injectOptimizerRule(s => new plans.JoinMvRewrite.JoinMvRewriteRule(s))
   }
 }
 
@@ -52,7 +54,6 @@ object Graft {
     * library ships on an already-running session. Idempotent. */
   def install(spark: SparkSession): Unit = {
     plans.RollupRewrite.install(spark)
-    plans.JoinMvRewrite.install(spark)
     functions.NativeAggregates.register(spark)
     functions.BitmapFunctions.registerAll(spark)
     functions.SketchScalars.registerAll(spark)

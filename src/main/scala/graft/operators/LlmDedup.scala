@@ -678,7 +678,7 @@ object LlmDedup {
         // span-fingerprint table every substring-dedup pipeline keeps.
         // Same short-doc convention as the jaccard shingles: a doc with
         // fewer than w tokens contributes its whole text as one span.
-        // Served from the mtime+session-guarded spanTable cache (ADVICE
+        // Served from the version+session-guarded spanTable cache (ADVICE
         // r20) so repeated builds in one session reuse the checkpoint.
         val spans = spanTable(s, dir, w, positional = false)
         val dup = spans.groupBy($"h")

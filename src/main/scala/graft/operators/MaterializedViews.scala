@@ -122,20 +122,23 @@ object MaterializedViews {
     }
 
   final case class JoinMvState(
-      mvPath: String, def_ : graft.plans.JoinMvRewrite.JoinMvDef)
+      mvPath: String, def_ : graft.plans.RollupRewrite.JoinMvDef)
 
   /** Build + register the demo JOIN MV once per (orders, customer)
     * version and session ([[graft.Artifacts.memo]]): orders ⋈ customer
     * pre-aggregated by (c_mktsegment, o_orderpriority) with re-aggregable
     * state (cnt, sum, per-column cnt), then install the rewrite rule in the
-    * building session. A rebuild's def replaces the old one in the
+    * building session. The def is served at the base versions taken before
+    * the build reads them, and a rebuild's def replaces the old one in the
     * registry. The serving query groups by a SUBSET of the MV keys, so the
     * rule must both retarget the join and merge across the collapsed
     * dimension. */
-  def ensureJoinMv(s: SparkSession, dir: String): JoinMvState =
-    graft.Artifacts.memo("joinMv", dir, s,
-        s"$dir/orders.parquet", s"$dir/customer.parquet") {
+  def ensureJoinMv(s: SparkSession, dir: String): JoinMvState = {
+    val ordersSrc = s"$dir/orders.parquet"
+    val customerSrc = s"$dir/customer.parquet"
+    graft.Artifacts.memo("joinMv", dir, s, ordersSrc, customerSrc) {
       import s.implicits._
+      val seen = graft.Freshness.version(ordersSrc, customerSrc)
       val mvPath = TempDirs.create("graft_joinmv")
       Tables.orders(s, dir)
         .join(Tables.customer(s, dir), $"o_custkey" === $"c_custkey")
@@ -144,20 +147,23 @@ object MaterializedViews {
           sum($"o_totalprice").as("sum_price"),
           count($"o_totalprice").as("cnt_price"))
         .write.mode("overwrite").parquet(mvPath)
-      val d = graft.plans.JoinMvRewrite.JoinMvDef(
-        leftPath = s"$dir/orders.parquet",
-        rightPath = s"$dir/customer.parquet",
+      val d = graft.plans.RollupRewrite.JoinMvDef(
+        leftPath = ordersSrc,
+        rightPath = customerSrc,
         joinKeys = Seq(("o_custkey", "c_custkey")),
         mvPath = mvPath,
+        name = "mv_join",
         keys = Seq("c_mktsegment", "o_orderpriority"),
         columns = Map(
           ("count", "*") -> "cnt",
           ("sum", "o_totalprice") -> "sum_price",
-          ("count", "o_totalprice") -> "cnt_price"))
-      graft.plans.JoinMvRewrite.register(d)
-      graft.plans.JoinMvRewrite.install(s)
+          ("count", "o_totalprice") -> "cnt_price"),
+        version = seen)
+      graft.plans.RollupRewrite.register(d)
+      graft.plans.RollupRewrite.install(s)
       JoinMvState(mvPath, d)
     }
+  }
 
   def queries: Map[String, QueryDef] = Map(
     // Transparent JOIN-MV serving (Doris 2.1 MTMV): the USER QUERY below is

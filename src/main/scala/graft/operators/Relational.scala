@@ -323,7 +323,7 @@ object Relational {
     // SQL result cache (Doris SQL cache): the same semantic plan runs twice —
     // the first run snapshots the result set, the second is served from the
     // snapshot (a few-KB parquet scan instead of the fact-table aggregate).
-    // Freshness is mtime-guarded like the rollup rule; hit/miss accounting
+    // Freshness is version-guarded like the rollup rule; hit/miss accounting
     // and source-mutation invalidation are asserted in CacheSpec. Row order
     // is not part of the cache contract, so the key orders after retrieval.
     "cache_result" -> QueryDef(

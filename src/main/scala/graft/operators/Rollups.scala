@@ -51,9 +51,9 @@ object Rollups {
       prefix: String, keys: Seq[String],
       columns: Seq[((String, String), String)]): String =
     graft.Artifacts.memo(name, dir, s, lineitemSrc(dir)) {
-      // the base version read is the def's freshness horizon, not "now": a
-      // base edit landing during the build then retires the rollup
-      val seen = graft.Freshness.mtime(lineitemSrc(dir))
+      // the def is served at the base version taken before the build reads
+      // it: a base edit landing during the build then retires the rollup
+      val seen = graft.Freshness.version(lineitemSrc(dir))
       val out = graft.TempDirs.create(prefix)
       val aggs = columns.map { case ((fn, c), as) =>
         (fn match {
@@ -69,9 +69,8 @@ object Rollups {
         .agg(aggs.head, aggs.tail: _*)
         .coalesce(1)
         .write.mode("overwrite").parquet(out)
-      RollupRewrite.registerReplacing(RollupDef(lineitemSrc(dir), out,
-        name = name, keys = keys, columns = columns.toMap,
-        registeredAt = seen))
+      RollupRewrite.register(RollupDef(lineitemSrc(dir), out,
+        name = name, keys = keys, columns = columns.toMap, version = seen))
       out
     }
 

@@ -3,12 +3,19 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Rollup / sync-materialized-view selection (SURVEY.md §4, M4 stretch).
+import graft.Freshness.Version
+
+/** Rollup / materialized-view selection (SURVEY.md §4, M4 stretch): one
+  * registry and one optimizer rule serve every precomputed aggregate —
+  * standing rollups, DDL sync MVs, the streamed rollup, and two-table join
+  * MVs (Doris 2.1 async MTMV, [doris: fe/.../mtmv/ + nereids
+  * MaterializedViewUtils — SPJG rewrite]).
   *
   * Doris keeps physically pre-aggregated rollups of a base table and its
   * planner transparently retargets matching aggregates onto the smallest one
@@ -19,47 +26,62 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *
   *   Aggregate(G, aggs, scan(base))   where G ⊆ rollup keys and every agg is
   *                                    a re-aggregable sum/min/max/count(*)
+  *   Aggregate(G, aggs, Join(scan(a), scan(b), Inner, a.k = b.k))
+  *                                    where a join MV was DEFINED as that
+  *                                    join pre-aggregated by a superset of G
   * into
-  *   Aggregate(G, merged-aggs, scan(rollup))
+  *   Aggregate(G, merged-aggs, scan(rollup or MV))
   *
   * with the standard merge mapping sum→sum(sum_c), min→min(min_c),
   * max→max(max_c), count(*)→sum(cnt), count(c)→sum(cnt_c), and
-  * avg(c)→sum(sum_c)/sum(cnt_c). Output exprIds are preserved so parent
-  * operators resolve unchanged.
+  * avg(c)→sum(sum_c)/sum(cnt_c) ([[MergeAgg]]). Output exprIds are
+  * preserved so parent operators resolve unchanged.
   *
   * Scale rationale: at 100 TB the rollup is orders of magnitude smaller than
   * the fact table (|groups| vs |rows|); retargeting turns a full fact scan +
   * shuffle into a scan of an already-collapsed table — the same reason Doris
-  * AGGREGATE-key tables exist. A filter over rollup KEY columns is served
+  * AGGREGATE-key tables exist — and a fact⋈dim join MV also removes the join
+  * shuffle. A filter over rollup KEY columns is served
   * (pushed onto the rollup scan — it selects whole groups, so it commutes
   * with the merge), as are DISTINCT aggregates and min/max whose arguments
   * are all key columns (duplicate-insensitive over the preserved distinct
   * key-tuple set) and aggregate FILTER clauses over key columns (the
   * predicate transplants onto the merged aggregate). Decimal avg is served
   * by reproducing Average's own decimal lowering over the merged sums (see
-  * the rewrite case). Filters or FILTER clauses touching non-key columns
+  * [[MergeAgg]]). Filters or FILTER clauses touching non-key columns
   * and non-key DISTINCT aggregates make the rewrite bail (conservative by
-  * design).
+  * design); a join MV additionally bails on any predicate beyond the join's
+  * own inferred IsNotNull constraints and on outer joins (conservative
+  * containment, not general SPJG subsumption).
   */
 object RollupRewrite {
 
-  /** One registered rollup: base table path -> pre-aggregated parquet.
-    * `registeredAt` snapshots the registration instant: the rewrite is
-    * skipped if the base table dir was modified after it (freshness guard —
-    * in Doris the rollup is maintained transactionally on every load, so
-    * staleness can't occur; here re-register after rebuilding). */
+  /** One precomputed aggregate the rule can serve. Its identity is
+    * (`bases`, `name`): registering a def replaces the def with the same
+    * identity, so a rebuild supersedes its old version while two distinct
+    * MVs over one base (even sharing group keys) coexist. It is served only
+    * while [[graft.Freshness.version]] of its bases equals `version`, the
+    * version its build read — taken BEFORE the build reads them. `columns`
+    * maps a base aggregate to its precomputed column: ("sum", "l_quantity")
+    * -> "sum_qty", count(*) -> ("count", "*") -> "cnt". */
+  sealed trait ServedDef {
+    def bases: Seq[String]
+    def name: String
+    def path: String
+    def keys: Seq[String]
+    def columns: Map[(String, String), String]
+    def version: Version
+  }
+
+  /** A single-table rollup or sync MV: `basePath` -> pre-aggregated
+    * `rollupPath`. */
   case class RollupDef(
       basePath: String,
       rollupPath: String,
-      // stable identity of the rollup/MV (its declared name) — the
-      // registerReplacing key. Two distinct MVs may share (basePath, keys)
-      // and must coexist; only a REBUILD of the same MV replaces it.
-      name: String = "",
+      name: String,
       keys: Seq[String],
-      // base agg -> rollup column: e.g. ("sum", "l_quantity") -> "sum_qty",
-      // count(*) -> ("count", "*") -> "cnt"
       columns: Map[(String, String), String],
-      registeredAt: Long = System.currentTimeMillis(),
+      version: Version,
       // Canonical SQL of filter conjuncts this rollup's data has ALREADY
       // had applied (the DDL layer's versioned-delete read filters: the MV
       // is rebuilt post-delete, so the same conjunct arriving in a query
@@ -76,37 +98,46 @@ object RollupRewrite {
       // maps unchanged. Doris analogue: "pre-aggregation: ON" — rollup
       // rowsets of an AGGREGATE table are already merge-compacted.
       innerAgg: Option[(Seq[String], Seq[String])] = None)
+      extends ServedDef {
+    def bases: Seq[String] = Seq(basePath)
+    def path: String = rollupPath
+  }
 
-  /** Session-wide registry (cleared by tests as needed). */
-  private val registry = new java.util.concurrent.CopyOnWriteArrayList[RollupDef]()
+  /** A two-table join MV. `joinKeys` are (leftCol, rightCol) pairs of the
+    * DEFINING inner join; `keys` its grouping columns (must be unambiguous
+    * names across both bases). */
+  case class JoinMvDef(
+      leftPath: String,
+      rightPath: String,
+      joinKeys: Seq[(String, String)],
+      mvPath: String,
+      name: String,
+      keys: Seq[String],
+      columns: Map[(String, String), String],
+      version: Version) extends ServedDef {
+    def bases: Seq[String] = Seq(leftPath, rightPath)
+    def path: String = mvPath
+  }
 
-  def register(d: RollupDef): Unit = registry.add(d)
-  def clear(): Unit = registry.clear()
-  private[graft] def registered: Seq[RollupDef] =
-    registry.toArray(Array.empty[RollupDef]).toSeq
+  private val registry = new java.util.concurrent.CopyOnWriteArrayList[ServedDef]()
 
-  /** Replace the registered version of THIS rollup (same base, same
-    * declared name) by `d` — transactional rollup maintenance (the DDL
-    * front-end's sync-MV rebuild, a rebuilt standing rollup): a superseded
-    * version must leave the registry, because a versioned DELETE changes
-    * visible data WITHOUT touching the base dir's mtime, so the freshness
-    * guard alone cannot retire it. Keyed on identity, NOT on (basePath,
-    * keys): two distinct MVs sharing group keys on one base must coexist
-    * (both serve; the multi-candidate selection picks the cheaper scan). */
-  def registerReplacing(d: RollupDef): Unit = registry.synchronized {
-    deregister(d.basePath, d.name)
+  /** Register `d`, replacing the registered def with its identity. A
+    * superseded version must leave the registry even when the version
+    * guard would also retire it: a versioned DELETE changes visible data
+    * WITHOUT touching the base dir. */
+  def register(d: ServedDef): Unit = registry.synchronized {
+    registry.removeIf(o => o.bases == d.bases && o.name == d.name)
     registry.add(d)
   }
 
-  /** Remove ONE named rollup of `basePath` (ALTER TABLE ... DROP ROLLUP /
-    * DROP MATERIALIZED VIEW in the DDL front-end). */
-  def deregister(basePath: String, name: String): Unit =
-    registry.removeIf(d => d.basePath == basePath && d.name == name)
+  /** Remove the def named `name` over `base` (ALTER TABLE ... DROP ROLLUP /
+    * DROP MATERIALIZED VIEW), or every def over `base` (DROP TABLE — a
+    * dropped base must stop serving immediately). */
+  def deregister(base: String, name: Option[String] = None): Unit =
+    registry.removeIf(d => d.bases.contains(base) && name.forall(_ == d.name))
 
-  /** Remove every rollup registered for `basePath` (DROP TABLE in the DDL
-    * front-end — a dropped base must stop serving immediately). */
-  def deregisterBase(basePath: String): Unit =
-    registry.removeIf(d => d.basePath == basePath)
+  private[graft] def registered: Seq[ServedDef] =
+    registry.toArray(Array.empty[ServedDef]).toSeq
 
   /** Install the rule once per session. */
   def install(spark: SparkSession): Unit = {
@@ -116,12 +147,12 @@ object RollupRewrite {
         spark.experimental.extraOptimizations :+ new RollupRewriteRule(spark)
   }
 
-  /** The analyzed scan of a rollup or MV parquet path, shared by both
-    * rewrite rules. Resolved once per path, version and session through
-    * [[graft.Artifacts.memo]]: apply() must not do IO/analysis on every
-    * rule application (round-1 finding). Per use only the exprIds are
-    * re-instanced, so two rewrites in one query can't collide. A path that
-    * is missing or unreadable serves None until its mtime moves. */
+  /** The analyzed scan of a rollup or MV parquet path. Resolved once per
+    * path, version and session through [[graft.Artifacts.memo]]: apply()
+    * must not do IO/analysis on every rule application (round-1 finding).
+    * Per use only the exprIds are re-instanced, so two rewrites in one
+    * query can't collide. A path that is missing or unreadable serves None
+    * until its version moves. */
   private[plans] def servedScan(
       spark: SparkSession, path: String): Option[LogicalPlan] =
     Option(graft.Artifacts.memo("servedScan", path, spark, path) {
@@ -132,81 +163,146 @@ object RollupRewrite {
       case other => other
     }
 
-  class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
 
-    /** Base-table mtime (a couple of stats, no data IO); 0 if unknowable.
-      * Shared definition of "source unchanged" — graft.Freshness. */
-    private def baseMTime(d: RollupDef): Long = graft.Freshness.mtime(d.basePath)
+  /** A scan of the base at `path` (file:// prefix tolerance). */
+  private def isScanOf(p: LogicalPlan, path: String): Boolean = p match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+      fs.location.rootPaths.headOption
+        .exists(_.toString.stripPrefix("file:") == path.stripPrefix("file:"))
+    case _ => false
+  }
 
-    @annotation.tailrec
-    private def peelFiltersAndProjects(
-        p: LogicalPlan, acc: Seq[Expression]): (Seq[Expression], LogicalPlan) =
-      p match {
-        case Filter(c, child) => peelFiltersAndProjects(child, acc :+ c)
-        case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-          peelFiltersAndProjects(child, acc)
-        case other => (acc, other)
-      }
-
-    private def scanPath(p: LogicalPlan): Option[String] = p match {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        fs.location.rootPaths.headOption.map(_.toString)
-      case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
-        scanPath(child)
-      case _ => None
+  @annotation.tailrec
+  private def peelFiltersAndProjects(
+      p: LogicalPlan, acc: Seq[Expression]): (Seq[Expression], LogicalPlan) =
+    p match {
+      case Filter(c, child) => peelFiltersAndProjects(child, acc :+ c)
+      case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
+        peelFiltersAndProjects(child, acc)
+      case other => (acc, other)
     }
 
-    override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-      case agg @ Aggregate(_, _, child, _) =>
-        // a filter the user wrote above the aggregate arrives here pushed
-        // BELOW it by PushDownPredicate (extraOptimizations run after the
-        // main batches), possibly interleaved with column-pruning Projects;
-        // peel those layers and let tryRewrite decide whether the rollup can
-        // serve the collected predicate
-        val (conds, scanChild) = peelFiltersAndProjects(child, Nil)
-        // MULTI-CANDIDATE selection (Doris MaterializedViewSelector: among
-        // all rollups that can serve the aggregate, take the cheapest): try
-        // every registered rollup of this base and keep the one whose scan
-        // is smallest by file-size stats — at 100 TB a coarse 6-row rollup
-        // vs a fine million-row one is the difference between a metadata
-        // read and a real scan. Tiebreak on path for determinism.
-        val served = registry.toArray(Array.empty[RollupDef]).flatMap { d =>
-          def pathOk(p: LogicalPlan): Boolean =
-            scanPath(p).exists(x => x == d.rollupBaseNorm || x == d.basePath)
-          val condOpt: Option[Option[Expression]] = scanChild match {
-            // direct base scan (plain tables, DUPLICATE-table views)
-            case _ if d.innerAgg.isEmpty && pathOk(scanChild) =>
-              Some(conds.reduceOption(And))
-            // the base's own MERGE aggregate (AGGREGATE-key table view):
-            // serve THROUGH it when it matches the recorded merge shape —
-            // the rollup was materialized over this very aggregate, so
-            // the outer re-aggregation maps unchanged ("pre-aggregation:
-            // ON"). Column pruning may have dropped unused agg columns
-            // from the inner node, hence the subset match; filters pushed
-            // below the inner aggregate join the servability check (they
-            // are either absorbed delete filters or key predicates, which
-            // commute with both aggregations).
-            case Aggregate(g1, ae1, c1, _) if d.innerAgg.isDefined =>
-              val (conds1, s1) = peelFiltersAndProjects(c1, Nil)
-              val (recG, recA) = d.innerAgg.get
-              if (pathOk(s1) &&
-                  g1.map(_.sql).toSet == recG.toSet &&
-                  ae1.forall(e => recA.contains(e.sql)))
-                Some((conds ++ conds1).reduceOption(And))
+  class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+
+    override def apply(plan: LogicalPlan): LogicalPlan = {
+      val defs = registry.toArray(Array.empty[ServedDef])
+      if (defs.isEmpty) plan else plan.transformUp {
+        case agg @ Aggregate(_, _, child, _) =>
+          // a filter the user wrote above the aggregate arrives here pushed
+          // BELOW it by PushDownPredicate (extraOptimizations run after the
+          // main batches), possibly interleaved with column-pruning
+          // Projects; peel those layers and let each def decide whether it
+          // can serve the collected predicate
+          val (conds, input) = peelFiltersAndProjects(child, Nil)
+          // MULTI-CANDIDATE selection (Doris MaterializedViewSelector:
+          // among all candidates that can serve the aggregate, take the
+          // cheapest): keep the one whose scan is smallest by file-size
+          // stats — at 100 TB a coarse 6-row rollup vs a fine million-row
+          // one is the difference between a metadata read and a real scan.
+          // Tiebreak on path for determinism.
+          val served = defs.flatMap { d =>
+            val residual = d match {
+              case r: RollupDef => rollupResidual(r, conds, input)
+              // a join MV pre-applied no predicate but the join's own
+              case j: JoinMvDef if conds.isEmpty && joinMatches(j, input) =>
+                Some(Nil)
+              case _ => None
+            }
+            residual.flatMap(tryRewrite(agg, d, _)).map(out => (d, out))
+          }
+          served.sortBy { case (d, _) =>
+            (servedScan(spark, d.path).map(_.stats.sizeInBytes)
+              .getOrElse(BigInt(Long.MaxValue)), d.path)
+          }.headOption.map(_._2).getOrElse(agg)
+      }
+    }
+
+    /** The conjuncts `d` must still apply over its scan to stand in for
+      * `input` under the peeled `conds`, or None when `input` is not `d`'s
+      * base. Conjuncts the rollup's data has already absorbed (the DDL
+      * layer's versioned-delete filters, matched on canonical SQL, which
+      * both sides derive from the same optimizer pipeline) are dropped. */
+    private def rollupResidual(d: RollupDef, conds: Seq[Expression],
+        input: LogicalPlan): Option[Seq[Expression]] = {
+      val all = input match {
+        // direct base scan (plain tables, DUPLICATE-table views)
+        case _ if d.innerAgg.isEmpty && isScanOf(input, d.basePath) =>
+          Some(conds)
+        // the base's own MERGE aggregate (AGGREGATE-key table view): serve
+        // THROUGH it when it matches the recorded merge shape — the rollup
+        // was materialized over this very aggregate, so the outer
+        // re-aggregation maps unchanged ("pre-aggregation: ON"). Column
+        // pruning may have dropped unused agg columns from the inner node,
+        // hence the subset match; filters pushed below the inner aggregate
+        // join the servability check (they are either absorbed delete
+        // filters or key predicates, which commute with both aggregations).
+        case Aggregate(g1, ae1, c1, _) if d.innerAgg.isDefined =>
+          val (conds1, s1) = peelFiltersAndProjects(c1, Nil)
+          val (recG, recA) = d.innerAgg.get
+          if (isScanOf(s1, d.basePath) &&
+              g1.map(_.sql).toSet == recG.toSet &&
+              ae1.forall(e => recA.contains(e.sql)))
+            Some(conds ++ conds1)
+          else None
+        case _ => None
+      }
+      all.map(_.flatMap(conjuncts).filterNot(c => d.absorbed.contains(c.sql)))
+    }
+
+    /** `input` is `d`'s defining inner equi-join in either orientation,
+      * sides matched by path: the whole join condition is plain column
+      * equi-pairs equal to `d.joinKeys`. */
+    private def joinMatches(d: JoinMvDef, input: LogicalPlan): Boolean =
+      input match {
+        case j: Join if j.joinType == Inner && j.condition.isDefined =>
+          val (lOut, rOut) = (j.left.outputSet, j.right.outputSet)
+          val pairs = conjuncts(j.condition.get).map {
+            case EqualTo(a: AttributeReference, b: AttributeReference) =>
+              if (lOut.contains(a) && rOut.contains(b)) Some((a.name, b.name))
+              else if (lOut.contains(b) && rOut.contains(a)) Some((b.name, a.name))
               else None
             case _ => None
           }
-          condOpt.flatMap(c => tryRewrite(agg, d, c).map(out => (d, out)))
-        }
-        served.sortBy { case (d, _) =>
-          (servedScan(spark, d.rollupPath).map(_.stats.sizeInBytes)
-            .getOrElse(BigInt(Long.MaxValue)), d.rollupPath)
-        }.headOption.map(_._2).getOrElse(agg)
+          val lKeys = d.joinKeys.map(_._1).toSet
+          val rKeys = d.joinKeys.map(_._2).toSet
+          !pairs.contains(None) && {
+            val ps = pairs.flatten.toSet
+            (ps == d.joinKeys.toSet &&
+              sideMatches(j.left, d.leftPath, lKeys) &&
+              sideMatches(j.right, d.rightPath, rKeys)) ||
+            (ps == d.joinKeys.map(_.swap).toSet &&
+              sideMatches(j.left, d.rightPath, rKeys) &&
+              sideMatches(j.right, d.leftPath, lKeys))
+          }
+        case _ => false
+      }
+
+    /** A join side matches a base table when, after peeling attr-only
+      * Projects and Filters that are pure conjunctions of IsNotNull over
+      * that side's JOIN KEYS (the inner join's own inferred constraints —
+      * InferFiltersFromConstraints adds them below us, and the MV's
+      * defining inner join discards those null keys identically), we reach
+      * a scan of the base. Any other residual predicate means the query is
+      * more selective than the MV: no match. */
+    @annotation.tailrec
+    private def sideMatches(
+        p: LogicalPlan, path: String, sideKeys: Set[String]): Boolean = p match {
+      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
+        sideMatches(c, path, sideKeys)
+      case Filter(cond, c) if conjuncts(cond).forall {
+            case IsNotNull(a: AttributeReference) => sideKeys.contains(a.name)
+            case _ => false
+          } =>
+        sideMatches(c, path, sideKeys)
+      case _ => isScanOf(p, path)
     }
 
-    private def tryRewrite(
-        agg: Aggregate, d: RollupDef,
-        filterCond: Option[Expression]): Option[LogicalPlan] = {
+    private def tryRewrite(agg: Aggregate, d: ServedDef,
+        residual: Seq[Expression]): Option[LogicalPlan] = {
       // global (ungrouped) aggregates bail: count(*)→sum(cnt) over an empty
       // rollup would yield NULL where Count yields 0, and nullability of the
       // preserved exprIds would change (ADVICE round 1)
@@ -218,10 +314,10 @@ object RollupRewrite {
       }
       if (groupNames.exists(_.isEmpty)) return None
       if (!groupNames.flatten.forall(d.keys.contains)) return None
-      // freshness: skip if base table changed after registration
-      if (baseMTime(d) > d.registeredAt) return None
+      // freshness: serve only the version of the bases the build read
+      if (graft.Freshness.version(d.bases: _*) != d.version) return None
 
-      val rollupPlan = servedScan(spark, d.rollupPath).getOrElse(return None)
+      val rollupPlan = servedScan(spark, d.path).getOrElse(return None)
       val rollupAttr: Map[String, Attribute] = rollupPlan.output.map(a => a.name -> a).toMap
       // every column the def maps to must exist in the rollup schema —
       // otherwise rollupAttr(c) would throw inside the optimizer and fail
@@ -238,16 +334,6 @@ object RollupRewrite {
       def keyOnlyPred(c: Expression): Boolean = c.deterministic &&
         c.references.forall(a => d.keys.contains(a.name)) &&
         c.find(_.isInstanceOf[PlanExpression[_]]).isEmpty
-      // drop conjuncts the rollup's data has already absorbed (the DDL
-      // layer's versioned-delete filters — matched on canonical SQL, which
-      // both sides derive from the same optimizer pipeline); whatever
-      // remains must be key-only as before
-      def splitConj(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => splitConj(l) ++ splitConj(r)
-        case other => Seq(other)
-      }
-      val residual = filterCond.toSeq.flatMap(splitConj)
-        .filterNot(c => d.absorbed.contains(c.sql))
       val condOpt: Option[Expression] = residual.reduceOption(And) match {
         case None => None
         case Some(c) =>
@@ -273,15 +359,10 @@ object RollupRewrite {
       Some(Aggregate(newGrouping, newAggExprs.flatten, newChild))
     }
   }
-
-  implicit private class DefOps(d: RollupDef) {
-    // normalized base path (file:// prefix tolerance)
-    def rollupBaseNorm: String = "file:" + d.basePath.stripPrefix("file:")
-  }
 }
 
-/** The merge-form rewrite shared by [[RollupRewrite]] (single-table rollups)
-  * and [[JoinMvRewrite]] (multi-table async MVs): given a pre-aggregated
+/** The merge-form rewrite [[RollupRewrite]] applies for single-table
+  * rollups and multi-table join MVs alike: given a pre-aggregated
   * table whose schema is `attr`, swap every AggregateExpression for its
   * re-aggregation over the collapsed rows and every key attribute for the
   * table's own; any unmappable node bails the whole rewrite (conservative).

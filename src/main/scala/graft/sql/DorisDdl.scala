@@ -2001,9 +2001,12 @@ final class DorisDdl(s: SparkSession) {
   /** Recompute one MV from the current visible data and swap it into the
     * RollupRewrite registry. Each rebuild lands in a fresh version dir
     * (immutable snapshots — the rule's plan cache never sees mutated
-    * files) and REPLACES the previous registration. */
+    * files) and REPLACES the previous registration. It is served at the
+    * rowset version taken before the rebuild reads the table, so a load
+    * landing during the rebuild retires it until the next refresh. */
   private def refreshMv(t: TableState, mv: MvDef): Unit = {
     if (!hasRowsets(t.dir)) return
+    val seen = graft.Freshness.version(t.dir)
     registerViews(t)
     val df = DorisSqlDialect.sql(s, mv.selectText)
     val ver = t.synchronized { t.mvVer += 1; t.mvVer }
@@ -2042,10 +2045,11 @@ final class DorisDdl(s: SparkSession) {
         case org.apache.spark.sql.catalyst.plans.logical.Aggregate(g, ae, _, _) =>
           (g.map(_.sql), ae.map(_.sql))
       }
-    graft.plans.RollupRewrite.registerReplacing(
+    graft.plans.RollupRewrite.register(
       graft.plans.RollupRewrite.RollupDef(
         basePath = t.dir, rollupPath = out, name = mv.name, keys = mv.keys,
-        columns = mv.columns, absorbed = absorbed, innerAgg = innerAgg))
+        columns = mv.columns, version = seen, absorbed = absorbed,
+        innerAgg = innerAgg))
   }
 
   private def refreshMvs(t: TableState): Unit = {
@@ -2240,7 +2244,7 @@ final class DorisDdl(s: SparkSession) {
       owner.filter(t => t.synchronized(t.mvs.exists(_.name == mvName))) match {
         case Some(t) =>
           t.synchronized { t.mvs.filterInPlace(_.name != mvName) }
-          graft.plans.RollupRewrite.deregister(t.dir, mvName)
+          graft.plans.RollupRewrite.deregister(t.dir, Some(mvName))
         case None =>
           // remove + temp-view drop atomic under the mtmvs monitor, so
           // registerMtmvView's drop-aware re-check observes them as one
@@ -3194,18 +3198,15 @@ final class DorisDdl(s: SparkSession) {
     * `_SUCCESS`, an aborted job's `_temporary` — don't count: Spark's
     * reader ignores them, so a dir containing only markers (e.g. after
     * DROP PARTITION removed the last data partition) must be treated as
-    * EMPTY or the read fails schema inference. Close-safe walk. */
+    * EMPTY or the read fails schema inference. An in-flight load's
+    * `_temporary` files don't count either: counting them made a
+    * concurrent registerViews attempt a schema read over a dir whose only
+    * readable content was still being written (UNABLE_TO_INFER_SCHEMA,
+    * caught by the DDL-racing-DML fuzz). */
   private def hasRowsets(dir: String): Boolean = {
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    // an IN-FLIGHT load's `_temporary` staging files are not committed
-    // rowsets: counting them made a concurrent registerViews attempt a
-    // schema read over a dir whose only readable content was still being
-    // written (UNABLE_TO_INFER_SCHEMA — caught by the DDL-racing-DML
-    // fuzz; Spark's reader ignores `_`-prefixed dirs, so the walk must
-    // ignore them too)
-    try walk.anyMatch(f => f.toString.endsWith(".parquet") &&
-      !f.toString.contains("_temporary"))
-    finally walk.close()
+    var found = false
+    DorisDdl.walkCommitted(dir) { _ => found = true; false }
+    found
   }
 
   /** Publish a staged write: move its parquet files (with their partition
@@ -3913,7 +3914,7 @@ final class DorisDdl(s: SparkSession) {
       require(t.synchronized(t.mvs.exists(_.name == rname)),
         s"$name: unknown rollup $rname")
       t.synchronized { t.mvs.filterInPlace(_.name != rname) }
-      graft.plans.RollupRewrite.deregister(t.dir, rname)
+      graft.plans.RollupRewrite.deregister(t.dir, Some(rname))
     case RenameTableRe(name, newName) =>
       // table rename: catalog re-key + view re-registration; the rowset
       // dir (and hence rollup registrations, keyed on the dir) is
@@ -3988,9 +3989,9 @@ final class DorisDdl(s: SparkSession) {
         graft.TempDirs.deleteTree(java.nio.file.Paths.get(t.dir, s"_p=$p"))
         s.catalog.dropTempView(s"${t.def_.name}__part_$p")
       }
-      // truncating the LAST populated partition empties the table: the
-      // stale rollup snapshots must deregister, same as full TRUNCATE
-      if (!hasRowsets(t.dir)) graft.plans.RollupRewrite.deregisterBase(t.dir)
+      // the wiped partition moved the rowset version, so the rule stops
+      // serving the pre-truncate rollup snapshots (even when refreshMv
+      // early-returns on a now-empty table)
       registerViews(t)
       refreshMvs(t)
     case TruncateRe(name) =>
@@ -4002,10 +4003,10 @@ final class DorisDdl(s: SparkSession) {
       s.catalog.dropTempView(t.def_.name)
       partViews.foreach(p =>
         s.catalog.dropTempView(s"${t.def_.name}__part_$p"))
-      // ... and neither may its rollups: refreshMv early-returns on the
-      // now-empty dir, so the stale pre-truncate snapshots must be
-      // DEREGISTERED here; the next load's refreshMvs re-registers fresh
-      graft.plans.RollupRewrite.deregisterBase(t.dir)
+      // ... and neither may its rollups: the wipe moved the rowset version,
+      // so the rule retires the pre-truncate snapshots; refreshMv
+      // early-returns on the now-empty dir, and the next load's refreshMvs
+      // registers fresh ones
       refreshMvs(t)
     case _ => sys.error(s"unparseable TRUNCATE: ${text.take(80)}")
   }
@@ -4710,7 +4711,7 @@ final class DorisDdl(s: SparkSession) {
       s.catalog.dropTempView(name)
       partViews.foreach(p =>
         s.catalog.dropTempView(s"${name}__part_$p"))
-      graft.plans.RollupRewrite.deregisterBase(t.dir)
+      graft.plans.RollupRewrite.deregister(t.dir)
       // dependent async MTMVs die with their base
       mtmvs.synchronized {
         val dead = mtmvs.values.filter(_.table == name).map(_.name).toSeq
@@ -4926,13 +4927,11 @@ final class DorisDdl(s: SparkSession) {
         .getOrElse(readableTables)
       import s.implicits._
       targets.map { t =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(t.dir))
-        val files =
-          try walk.filter(f => f.toString.endsWith(".parquet"))
-            .toArray(new Array[java.nio.file.Path](_)).toSeq
-          finally walk.close()
-        (t.def_.name, files.map(f => java.nio.file.Files.size(f)).sum,
-          files.size.toLong)
+        val files = Seq.newBuilder[java.nio.file.Path]
+        DorisDdl.walkCommitted(t.dir) { f => files += f; true }
+        // a file compacted away since the walk listed it counts 0 bytes
+        val fs = files.result()
+        (t.def_.name, fs.map(_.toFile.length()).sum, fs.size.toLong)
       }.toDF("table_name", "size_bytes", "n_files")
     case _ => sys.error(s"unparseable SHOW DATA: ${text.take(80)}")
   }
@@ -5583,6 +5582,42 @@ object DorisDdl {
     * compared by `eq` only. */
   private val viewOwners =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()
+
+  /** Visit each committed rowset file under `dir` until `visit` returns
+    * false: the `.parquet` files Spark's reader lists, so the walk never
+    * descends into a `_`- or `.`-prefixed entry (a writer's in-flight
+    * `_temporary` tree, `_SUCCESS`, the index sidecar dirs) except a
+    * `_p=X` partition dir, whose name holds `=`. An entry that vanishes
+    * mid-walk (a commit renaming its in-flight file away, a DROP deleting
+    * the tree) is skipped, not thrown. */
+  private[graft] def walkCommitted(dir: String)(
+      visit: java.nio.file.Path => Boolean): Unit = {
+    import java.nio.file.{FileVisitResult, NoSuchFileException, Path}
+    import FileVisitResult.{CONTINUE, SKIP_SUBTREE, TERMINATE}
+    val root = java.nio.file.Paths.get(dir)
+    def hidden(p: Path): Boolean = {
+      val n = p.getFileName.toString
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    }
+    def vanished(e: java.io.IOException): FileVisitResult =
+      if (e == null || e.isInstanceOf[NoSuchFileException]) CONTINUE
+      else throw e
+    java.nio.file.Files.walkFileTree(root,
+      new java.nio.file.SimpleFileVisitor[Path] {
+        override def preVisitDirectory(d: Path,
+            a: java.nio.file.attribute.BasicFileAttributes) =
+          if (d != root && hidden(d)) SKIP_SUBTREE else CONTINUE
+        override def visitFile(f: Path,
+            a: java.nio.file.attribute.BasicFileAttributes) =
+          if (hidden(f) || !f.toString.endsWith(".parquet") || visit(f))
+            CONTINUE
+          else TERMINATE
+        override def visitFileFailed(f: Path, e: java.io.IOException) =
+          vanished(e)
+        override def postVisitDirectory(d: Path, e: java.io.IOException) =
+          vanished(e)
+      })
+  }
 
   /** Content address of a rowset file's sidecar — in the companion so the
     * executor-side sidecar writer serializes without the session. */

@@ -355,26 +355,23 @@ object Streaming {
     * a maxFilesPerTrigger=1 stream delivers 3 REAL micro-batches — the
     * merge-per-batch ingest keys below must demonstrate multi-batch
     * re-aggregation (the single-file eventStream yields exactly one batch).
-    * Columns are pre-projected: the ingest keys never need ts/props.
-    * Cached as (split dir, events.parquet mtime observed when the split was
-    * cut) — MV keys derived from the split must register THAT mtime as their
-    * freshness horizon, not "now": a base edit between split-cache and
-    * registration would otherwise pass the mtime guard while the MV serves
-    * pre-edit data. */
+    * Columns are pre-projected: the ingest keys never need ts/props. MV
+    * keys derived from the split take the events version BEFORE they reach
+    * the split, so a split re-cut from a newer events version leaves their
+    * def unservable instead of serving it under the old version. */
   private val splitSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("user_id", LongType),
     StructField("event_type", StringType), StructField("value", DoubleType)))
   private def eventsSrc(dir: String): String = s"$dir/events.parquet"
-  private def splitEvents(s: SparkSession, dir: String): (String, Long) =
+  private def splitEvents(s: SparkSession, dir: String): String =
     graft.Artifacts.memo("eventsSplit", dir, s, eventsSrc(dir)) {
       Confs.ensureNanosAsLong(s) // events.ts is ns-precision (see Tables.events)
-      val mtime = graft.Freshness.mtime(eventsSrc(dir))
       val out = graft.TempDirs.create("graft_stream_split")
       s.read.parquet(eventsSrc(dir))
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .repartition(3)
         .write.mode("overwrite").parquet(out)
-      (out, mtime)
+      out
     }
 
   /** Merge-per-micro-batch ingest harness shared by the sketch and rollup
@@ -394,7 +391,7 @@ object Streaming {
     @volatile var current: Option[String] = None
     runToCompletion(s.readStream.schema(splitSchema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(splitEvents(s, dir)._1)) { (batch, id) =>
+        .parquet(splitEvents(s, dir))) { (batch, id) =>
       val partial = partialOf(batch)
       val unioned = current
         .map(v => s.read.parquet(v).unionByName(partial))
@@ -430,10 +427,11 @@ object Streaming {
   /** The streaming-maintained events rollup (see stream_rollup): built once
     * per events version and session ([[graft.Artifacts.memo]]) and
     * registered with RollupRewrite under its own name, so a rebuild replaces
-    * its old version instead of appending a second candidate. Its freshness
-    * horizon is the events version the split was cut from. */
+    * its old version instead of appending a second candidate. It is served
+    * at the events version the split was cut from. */
   private[graft] def streamRollupIngest(s: SparkSession, dir: String): String =
     graft.Artifacts.memo("streamRollup", dir, s, eventsSrc(dir)) {
+      val seen = graft.Freshness.version(eventsSrc(dir))
       val path = mergeIngest(s, dir,
         batch => batch.groupBy(col("event_type"))
           .agg(sum(col("value")).as("sum_value"), count(lit(1)).as("cnt"),
@@ -445,7 +443,7 @@ object Streaming {
             sum(col("cnt")).as("cnt"), sum(col("cnt_value")).as("cnt_value"),
             min(col("min_value")).as("min_value"),
             max(col("max_value")).as("max_value")))
-      graft.plans.RollupRewrite.registerReplacing(
+      graft.plans.RollupRewrite.register(
         graft.plans.RollupRewrite.RollupDef(
           basePath = eventsSrc(dir),
           rollupPath = path,
@@ -457,7 +455,7 @@ object Streaming {
             ("count", "value") -> "cnt_value",
             ("min", "value") -> "min_value",
             ("max", "value") -> "max_value"),
-          registeredAt = splitEvents(s, dir)._2))
+          version = seen))
       path
     }
 
@@ -466,13 +464,16 @@ object Streaming {
     * a pre-joined aggregate keyed (c_mktsegment, event_type) — the
     * mergeIngest delta-merge, so per-batch cost is O(|keys| + |batch|) and
     * the dim join is map-side. The final version registers with
-    * JoinMvRewrite exactly like streamRollupIngest registers its rollup,
+    * RollupRewrite exactly like streamRollupIngest registers its rollup,
     * once per (events, customer) version and session
-    * ([[graft.Artifacts.memo]]). Returns (MV path, its registered def). */
+    * ([[graft.Artifacts.memo]]), served at the events version the split was
+    * cut from and the customer version the dim read. Returns (MV path, its
+    * registered def). */
   private def joinMvIngest(s: SparkSession,
-      dir: String): (String, graft.plans.JoinMvRewrite.JoinMvDef) =
-    graft.Artifacts.memo("streamJoinMv", dir, s,
-        eventsSrc(dir), s"$dir/customer.parquet") {
+      dir: String): (String, graft.plans.RollupRewrite.JoinMvDef) = {
+    val customerSrc = s"$dir/customer.parquet"
+    graft.Artifacts.memo("streamJoinMv", dir, s, eventsSrc(dir), customerSrc) {
+      val seen = graft.Freshness.version(eventsSrc(dir), customerSrc)
       val dim = graft.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
       val path = mergeIngest(s, dir,
@@ -485,30 +486,32 @@ object Streaming {
           .agg(sum(col("sum_value")).as("sum_value"),
             sum(col("cnt")).as("cnt"),
             sum(col("cnt_value")).as("cnt_value")))
-      val d = graft.plans.JoinMvRewrite.JoinMvDef(
+      val d = graft.plans.RollupRewrite.JoinMvDef(
         leftPath = eventsSrc(dir),
-        rightPath = s"$dir/customer.parquet",
+        rightPath = customerSrc,
         joinKeys = Seq(("user_id", "c_custkey")),
         mvPath = path,
+        name = "stream_join_mv",
         keys = Seq("c_mktsegment", "event_type"),
         columns = Map(
           ("count", "*") -> "cnt",
           ("sum", "value") -> "sum_value",
           ("count", "value") -> "cnt_value"),
-        registeredAt = splitEvents(s, dir)._2)
-      graft.plans.JoinMvRewrite.register(d)
+        version = seen)
+      graft.plans.RollupRewrite.register(d)
       (path, d)
     }
+  }
 
   private[graft] def streamJoinMvIngest(s: SparkSession, dir: String): String =
     joinMvIngest(s, dir)._1
 
   /** The registered def of the streamed join MV (spec support: re-register
-    * after a registry clear; the memo serves it without re-running the
-    * ingest when this session already built it). */
+    * after a deregister; the memo serves it without re-running the ingest
+    * when this session already built it). */
   private[graft] def streamJoinMvDef(s: SparkSession,
-      dir: String): Option[graft.plans.JoinMvRewrite.JoinMvDef] =
-    Some(joinMvIngest(s, dir)._2)
+      dir: String): graft.plans.RollupRewrite.JoinMvDef =
+    joinMvIngest(s, dir)._2
 
   /** The streaming-maintained MinHash DEDUP INDEX (see stream_dedup_index):
     * documents arrive in micro-batches; each batch is minhash-banded
@@ -1073,7 +1076,7 @@ object Streaming {
     // stream_rollup, closing the MTMV lifecycle: micro-batches of events
     // enrich map-side against the broadcast customer dim and delta-merge
     // into a pre-joined aggregate (streamJoinMvIngest); the final version
-    // registers with JoinMvRewrite, and the returned query is a PLAIN
+    // registers with RollupRewrite, and the returned query is a PLAIN
     // batch join+aggregate over the BASE tables that the optimizer
     // transparently retargets onto the streamed MV (StreamingSpec asserts
     // the served plan scans the MV and contains no join; the oracle
@@ -1085,7 +1088,7 @@ object Streaming {
       (s, dir) => {
         import s.implicits._
         streamJoinMvIngest(s, dir)
-        graft.plans.JoinMvRewrite.install(s)
+        graft.plans.RollupRewrite.install(s)
         s.read.parquet(s"$dir/events.parquet").select($"user_id", $"value")
           .join(s.read.parquet(s"$dir/customer.parquet")
               .select($"c_custkey", $"c_mktsegment"),

@@ -25,12 +25,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("a rewritten lineitem re-stages join_dpp's layout and rebuilds the " +
     "rollups rollup_rewrite_choice serves from") {
-    val dir = TempDirs.create("graft_stale_src")
-    val ls = Files.list(Paths.get(sf))
-    try ls.iterator.asScala.filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, Paths.get(dir).resolve(p.getFileName)))
-    finally ls.close()
-    GenScale.stamp(dir)
+    val dir = copyOfSf("graft_stale_src")
     // stage the DPP layout and both rollups from the original lineitem
     run("join_dpp", dir).collect()
     assert(servedFrom(run("rollup_rewrite_choice", dir)) == pinnedChoice)
@@ -72,7 +67,7 @@ class ArtifactsSpec extends SparkSpec {
       rows(SparkEntry.defs("rollup_rewrite_choice").build(spark.newSession(), sf))
     assert(fresh == shared)
     val names = RollupRewrite.registered
-      .filter(_.basePath == s"$sf/lineitem.parquet").map(_.name)
+      .filter(_.bases == Seq(s"$sf/lineitem.parquet")).map(_.name)
     assert(Set("rollup_fine", "rollup_coarse").subsetOf(names.toSet) &&
       names.distinct.size == names.size, s"registered rollup names: $names")
   }

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** SQL result cache semantics (SURVEY.md §2 result-cache row): a semantic
   * repeat is a hit even through fresh exprIds, and any source mutation
-  * invalidates via the mtime guard.
+  * invalidates via the version guard ([[Freshness.version]]).
   */
 class CacheSpec extends SparkSpec {
   import TestSpark.spark.implicits._
 
   test("result cache: semantic repeat hits, source mutation invalidates") {
-    ResultCache.clear()
     // private copy of a dim table so mutating the source is allowed
     val dir = TempDirs.create("graft_cache_src")
     Tables.nation(spark, sf).write.mode("overwrite").parquet(dir)
@@ -66,6 +65,32 @@ class CacheSpec extends SparkSpec {
     assert(!(b eq a) && builds.get == 2, "source mtime bump must rebuild")
     val c = get(spark.newSession())
     assert(!(c eq b) && builds.get == 3, "a new session must rebuild")
+    // two sources: rewriting the OLDER one while its mtime stays below the
+    // newer one's, then rewriting it again at the same mtime with a new
+    // length — neither moves the newest mtime, and both must rebuild
+    val older = java.nio.file.Paths.get(dir, "older.bin")
+    val newer = java.nio.file.Paths.get(dir, "newer.bin")
+    val t0 = System.currentTimeMillis() - 60000
+    def put(f: java.nio.file.Path, body: String, mtime: Long): Unit = {
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      assert(f.toFile.setLastModified(mtime))
+    }
+    put(older, "a", t0)
+    put(newer, "b", t0 + 30000)
+    def two() = Artifacts.memo("memoSpecTwo", dir, spark,
+        older.toString, newer.toString) {
+      builds.incrementAndGet(); new Object }
+    val d = two()
+    assert(two() eq d)
+    val n0 = builds.get
+    put(older, "a2", t0 + 10000)
+    val e = two()
+    assert(!(e eq d) && builds.get == n0 + 1,
+      "rewriting the older of two sources must rebuild")
+    put(older, "a22", t0 + 10000)
+    val f = two()
+    assert(!(f eq e) && builds.get == n0 + 2,
+      "a same-mtime rewrite that changes the length must rebuild")
     val pool = Executors.newFixedThreadPool(4)
     try {
       val raced = new AtomicInteger

@@ -267,9 +267,9 @@ class DdlSpec extends SparkSpec {
     assert(servedByMv(agg()), "post-insert aggregate must still be MV-served")
     assert(agg().as[(String, Double, Long)].collect().toSeq ==
       Seq(("a", 4.0, 2L), ("b", 2.0, 1L)))
-    // versioned DELETE does NOT touch the base dir's mtime — only the
-    // registerReplacing swap retires the stale MV version (the race the
-    // freshness guard alone cannot see)
+    // versioned DELETE does NOT touch the base dir's version — only the
+    // register swap (replace by identity) retires the stale MV version
+    // (the race the version guard alone cannot see)
     ddl.execute("DELETE FROM mvb WHERE g = 'b'")
     assert(servedByMv(agg()), "post-delete aggregate must still be MV-served")
     assert(agg().as[(String, Double, Long)].collect().toSeq ==
@@ -2391,6 +2391,31 @@ class DdlSpec extends SparkSpec {
     val f = ddl.getClass.getDeclaredField("tables")
     f.setAccessible(true)
     f.get(ddl).asInstanceOf[scala.collection.mutable.LinkedHashMap[String, DorisDdl.TableState]](table).dir
+  }
+
+  test("SHOW DATA counts only committed rowsets while a writer's " +
+    "_temporary tree comes and goes") {
+    import java.nio.file.{Files, Paths}
+    val ddl = fresh()
+    ddl.execute("CREATE TABLE tmp_walk (k BIGINT, v INT) DUPLICATE KEY(k) " +
+      "DISTRIBUTED BY HASH(k) BUCKETS 1")
+    ddl.execute("INSERT INTO tmp_walk VALUES (1, 10), (2, 20)")
+    def nFiles() = ddl.sql("SHOW DATA FROM tmp_walk").head().getLong(2)
+    val committed = nFiles()
+    val tmp = Paths.get(ddlDir(ddl, "tmp_walk"), "_temporary")
+    @volatile var stop = false
+    val writer = new Thread(() =>
+      while (!stop) {
+        val attempt = tmp.resolve("0/_temporary/attempt_0")
+        Files.createDirectories(attempt)
+        Files.write(attempt.resolve("part-00000.parquet"), Array[Byte](1))
+        TempDirs.deleteTree(tmp)
+      })
+    writer.start()
+    try (1 to 200).foreach { i =>
+      val n = nFiles()
+      assert(n == committed, s"pass $i counted $n files, $committed committed")
+    } finally { stop = true; writer.join() }
   }
 
   // -------------------------------------------------------- view lifecycle

@@ -170,6 +170,37 @@ class JoinsSpec extends SparkSpec {
     assert(!plan.contains("hashpartitioning(c_custkey"), "customer side shuffled")
   }
 
+  test("join_bucketed re-stages its bucketed copies when orders is rewritten") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = copyOfSf("graft_bucket_src")
+    run("join_bucketed", dir).collect()
+    // rewrite orders in place to a subset; bump the mtime explicitly so the
+    // test is deterministic on coarse-mtime filesystems
+    val ord = Paths.get(dir, "orders.parquet")
+    val subset = TempDirs.create("graft_bucket_ord")
+    spark.read.parquet(ord.toString).filter($"o_orderkey" % 3 =!= 0)
+      .write.mode("overwrite").parquet(subset)
+    Files.delete(ord)
+    Files.move(Paths.get(subset), ord)
+    ord.toFile.setLastModified(System.currentTimeMillis() + 5000)
+    def rows(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    val got = rows(run("join_bucketed", dir))
+    val want = rows(spark.read.parquet(ord.toString)
+      .join(spark.read.parquet(s"$dir/customer.parquet"),
+        $"o_custkey" === $"c_custkey")
+      .groupBy($"c_mktsegment")
+      .agg(count(lit(1)).as("n_orders"),
+        round(sum($"o_totalprice"), 2).as("revenue"))
+      .orderBy($"c_mktsegment"))
+    // revenue sums in a different order than the bucketed plan: a cent
+    assert(got.map(r => (r._1, r._2)) == want.map(r => (r._1, r._2)) &&
+      got.zip(want).forall { case (g, w) => math.abs(g._3 - w._3) <= 0.011 },
+      s"join_bucketed read stale bucketed copies:\n$got\nvs\n$want")
+  }
+
   test("join_bucket_shuffle exchanges ONLY the non-bucketed probe side") {
     val plan = planOf(run("join_bucket_shuffle"))
     assert(plan.contains("SortMergeJoin"), plan)

@@ -248,6 +248,7 @@ class RollupSpec extends SparkSpec {
     // RollupRewrite.install call anywhere on this session.
     import org.apache.spark.sql.SparkSession
     operators.Rollups.ensureRollup(spark, sf) // publishes the RollupDef
+    operators.MaterializedViews.ensureJoinMv(spark, sf) // ... and the JoinMvDef
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
@@ -260,13 +261,21 @@ class RollupSpec extends SparkSpec {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s2 ne spark, "test needs a fresh session to prove injection")
-      val df = Tables.lineitem(s2, sf)
-        .groupBy(col("l_returnflag"))
-        .agg(sum(col("l_quantity")).as("sq"))
-      val leafCols = df.queryExecution.optimizedPlan.collectLeaves()
-        .flatMap(_.output.map(_.name)).toSet
-      assert(leafCols.contains("sum_qty") && !leafCols.contains("l_orderkey"),
-        s"extensions-injected rule did not retarget (leaf cols: $leafCols)")
+      // (query, a column only the served table has, a base-only column)
+      Seq(
+        (Tables.lineitem(s2, sf)
+          .groupBy(col("l_returnflag"))
+          .agg(sum(col("l_quantity")).as("sq")), "sum_qty", "l_orderkey"),
+        (Tables.orders(s2, sf)
+          .join(Tables.customer(s2, sf), col("o_custkey") === col("c_custkey"))
+          .groupBy(col("c_mktsegment"))
+          .agg(count(lit(1)).as("n")), "cnt_price", "o_custkey")
+      ).foreach { case (df, served, base) =>
+        val leafCols = df.queryExecution.optimizedPlan.collectLeaves()
+          .flatMap(_.output.map(_.name)).toSet
+        assert(leafCols.contains(served) && !leafCols.contains(base),
+          s"extensions-injected rule did not retarget (leaf cols: $leafCols)")
+      }
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
@@ -296,11 +305,13 @@ class RollupSpec extends SparkSpec {
     RollupRewrite.register(RollupDef(
       basePath = base,
       rollupPath = roll,
+      name = "dec_roll",
       keys = Seq("l_returnflag", "l_linestatus"),
       columns = Map(
         ("sum", "d_qty") -> "sum_dqty",
         ("count", "d_qty") -> "cnt_dqty",
-        ("count", "*") -> "cnt")))
+        ("count", "*") -> "cnt"),
+      version = Freshness.version(base)))
     RollupRewrite.install(spark)
     val planCheck = spark.read.parquet(base)
       .groupBy($"l_returnflag").agg(avg($"d_qty").as("avg_d"))
@@ -354,12 +365,14 @@ class RollupSpec extends SparkSpec {
       Seq("l_returnflag", "l_linestatus", "l_suppkey"), "sum_qty_f", "cnt_f")
     val coarse = buildRollup(
       Seq("l_returnflag", "l_linestatus"), "sum_qty_c", "cnt_c")
-    RollupRewrite.register(RollupDef(base, fine,
+    RollupRewrite.register(RollupDef(base, fine, name = "mc_fine",
       keys = Seq("l_returnflag", "l_linestatus", "l_suppkey"),
-      columns = Map(("sum", "l_quantity") -> "sum_qty_f", ("count", "*") -> "cnt_f")))
-    RollupRewrite.register(RollupDef(base, coarse,
+      columns = Map(("sum", "l_quantity") -> "sum_qty_f", ("count", "*") -> "cnt_f"),
+      version = Freshness.version(base)))
+    RollupRewrite.register(RollupDef(base, coarse, name = "mc_coarse",
       keys = Seq("l_returnflag", "l_linestatus"),
-      columns = Map(("sum", "l_quantity") -> "sum_qty_c", ("count", "*") -> "cnt_c")))
+      columns = Map(("sum", "l_quantity") -> "sum_qty_c", ("count", "*") -> "cnt_c"),
+      version = Freshness.version(base)))
     RollupRewrite.install(spark)
     val df = spark.read.parquet(base)
       .groupBy($"l_returnflag")
@@ -535,14 +548,13 @@ class RollupSpec extends SparkSpec {
   }
 
   test("join MV: served answer equals the rule-off base join") {
-    operators.MaterializedViews.ensureJoinMv(spark, sf)
+    val d = operators.MaterializedViews.ensureJoinMv(spark, sf).def_
     val served = run("mv_join_rewrite").collect().toSeq
-    plans.JoinMvRewrite.clear()
+    RollupRewrite.deregister(d.leftPath, Some(d.name))
     try {
       val base = run("mv_join_rewrite").collect().toSeq
       assert(served == base, s"MV serve drifted from base:\n$served\nvs\n$base")
-    } finally plans.JoinMvRewrite.register(
-      operators.MaterializedViews.ensureJoinMv(spark, sf).def_)
+    } finally RollupRewrite.register(d)
   }
 
   test("join MV: swapped orientation serves; extra filters and outer joins bail") {

@@ -21,6 +21,19 @@ abstract class SparkSpec extends AnyFunSuite
   def run(key: String, dir: String = sf) =
     SparkEntry.defs(key).build(spark, dir)
 
+  /** A private, stamped copy of the fixture's parquet files, for tests
+    * that rewrite a source. */
+  def copyOfSf(prefix: String): String = {
+    import java.nio.file.{Files, Paths}
+    val dir = TempDirs.create(prefix)
+    val ls = Files.list(Paths.get(sf))
+    try ls.filter(_.toString.endsWith(".parquet"))
+      .forEach(p => Files.copy(p, Paths.get(dir).resolve(p.getFileName)))
+    finally ls.close()
+    GenScale.stamp(dir)
+    dir
+  }
+
   /** DorisDdl instances a suite wants namespace-audited: every engine-
     * registered temp view still live at suite end must map to a grant
     * scope (the generalized r17 privilege-bypass tripwire). Suites opt in

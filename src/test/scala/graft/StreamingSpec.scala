@@ -341,28 +341,34 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream_join_mv: post-ingest join+agg is served by the streamed join MV") {
-    val df = run("stream_join_mv")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_merge_table"),
-      s"join+agg not retargeted onto the streaming-maintained join MV:\n$plan")
-    assert(!plan.contains("events.parquet") && !plan.contains("customer.parquet"),
-      s"a base table is still scanned post-rewrite:\n$plan")
-    assert(!plan.contains("Join"), s"join survived the MV rewrite:\n$plan")
-    // and the MV-served answer equals the base-table join recompute
-    val base = spark.read.parquet(s"$sf/events.parquet")
-      .select($"user_id", $"value")
-      .join(spark.read.parquet(s"$sf/customer.parquet")
-          .select($"c_custkey", $"c_mktsegment"),
-        $"user_id" === $"c_custkey")
-      .groupBy($"c_mktsegment")
-      .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"),
-        round(avg($"value"), 2).as("avg_value"))
-      .orderBy($"c_mktsegment")
-    val served = df.collect().toSeq
-    plans.JoinMvRewrite.clear()
-    try assert(served == base.collect().toSeq)
-    finally streaming.Streaming.streamJoinMvDef(spark, sf)
-      .foreach(plans.JoinMvRewrite.register)
+    val newerDim = copyOfSf("graft_stream_dim")
+    val events = new java.io.File(newerDim, "events.parquet")
+    assert(new java.io.File(newerDim, "customer.parquet")
+      .setLastModified(events.lastModified() + 2000))
+    Seq(sf, newerDim).foreach { dir =>
+      val df = run("stream_join_mv", dir)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_merge_table"),
+        s"[$dir] join+agg not retargeted onto the streaming-maintained join MV:\n$plan")
+      assert(!plan.contains("events.parquet") && !plan.contains("customer.parquet"),
+        s"[$dir] a base table is still scanned post-rewrite:\n$plan")
+      assert(!plan.contains("Join"), s"[$dir] join survived the MV rewrite:\n$plan")
+      // and the MV-served answer equals the base-table join recompute
+      val base = spark.read.parquet(s"$dir/events.parquet")
+        .select($"user_id", $"value")
+        .join(spark.read.parquet(s"$dir/customer.parquet")
+            .select($"c_custkey", $"c_mktsegment"),
+          $"user_id" === $"c_custkey")
+        .groupBy($"c_mktsegment")
+        .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"),
+          round(avg($"value"), 2).as("avg_value"))
+        .orderBy($"c_mktsegment")
+      val served = df.collect().toSeq
+      val d = streaming.Streaming.streamJoinMvDef(spark, dir)
+      plans.RollupRewrite.deregister(d.leftPath, Some(d.name))
+      try assert(served == base.collect().toSeq)
+      finally plans.RollupRewrite.register(d)
+    }
   }
 
   test("stream_dedup_index: maintained index and candidates equal the batch build") {
