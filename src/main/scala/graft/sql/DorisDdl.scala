@@ -378,7 +378,8 @@ final class DorisDdl(s: SparkSession) {
   // immaterial; a statement matching no row is a query.
   private type Needs = String => Seq[(String, Iterable[String])]
   /** The table a row's statement `t` can change: None for a read
-    * (SELECT/WITH/VALUES, SHOW, DESC, EXPLAIN), the one table the row's
+    * (SELECT/WITH/VALUES, SHOW, DESC, EXPLAIN, and ANALYZE, EXPORT and
+    * BACKUP, which read tables and change no view), the one table the row's
     * target regex names, or "*" for every table. A row that can write a
     * table its regex does not name (several `INTO TABLE` clauses, a
     * rename, a restore, a dropped database) writes "*", and so does a
@@ -477,7 +478,7 @@ final class DorisDdl(s: SparkSession) {
     write("RESUME ROUTINE LOAD")(controlsLoads)(resumeRoutineLoad),
     read("SHOW ROUTINE LOAD")(ungated)(_ => showRoutineLoad()),
     write("CANCEL LOAD")(controlsLoads)(cancelLoad),
-    writeRows("BACKUP SNAPSHOT")(global("ADMIN_PRIV"))(backup),
+    read("BACKUP SNAPSHOT")(global("ADMIN_PRIV"))(backup),
     writeRows("RESTORE SNAPSHOT")(global("ADMIN_PRIV"))(restore),
     read("SHOW SNAPSHOT")(ungated)(showSnapshot),
     read("SHOW BACKUP")(ungated)(_ => showBackupJobs(restoreSide = false)),
@@ -493,9 +494,9 @@ final class DorisDdl(s: SparkSession) {
     write("ALTER TABLE")(onObject("ALTER_PRIV", after("ALTER TABLE")))(alterTable),
     writeTable("TRUNCATE TABLE")(onObject("ALTER_PRIV", _))(truncate),
     writeRows("REFRESH MATERIALIZED VIEW")(alters)(refreshStmt),
-    writeRows("EXPORT TABLE")(onObject("SELECT_PRIV", after("EXPORT TABLE")))(exportTable),
+    read("EXPORT TABLE")(onObject("SELECT_PRIV", after("EXPORT TABLE")))(exportTable),
     read("EXPLAIN")(selects)(explainStmt),
-    writeRows("ANALYZE TABLE")(selects)(analyzeStmt),
+    read("ANALYZE TABLE")(selects)(analyzeStmt),
     read("SHOW COLUMN STATS")(selects)(showColumnStats),
     read("SHOW INDEX", "SHOW INDEXES")(selects)(showIndex),
     read("SHOW DYNAMIC PARTITION TABLES")(ungated)(_ => showDynamicPartitionTables()),
@@ -539,6 +540,11 @@ final class DorisDdl(s: SparkSession) {
     (st.name, st.writes(t), denial(st, t))
   }
   private[graft] def statementNames: Seq[String] = statements.map(_.name)
+  /** For tests: a table's rowset dir and its read schema. */
+  private[graft] def readSchemaOf(name: String) = {
+    val t = state(name)
+    (t.dir, DorisDdl.readSchema(t.def_))
+  }
 
   /** Execute a SELECT (or any statement returning rows). */
   def sql(sqlText: String): DataFrame =
@@ -631,13 +637,14 @@ final class DorisDdl(s: SparkSession) {
       // partitions — including DROPPED holes, as a SHOW CREATE replay
       // would — distribution, sequence column), no data. Physical-lineage
       // metadata resets: the new table has no rowsets, so addedVer
-      // backfill stamps and rename priors do not carry over.
+      // backfill stamps, rename priors and dropped names do not carry over.
       val src = state(srcName).def_
       require(tables.synchronized(!tables.contains(name)),
         s"table $name already exists")
       val st = TableState(
         src.copy(name = name,
-          cols = src.cols.map(_.copy(addedVer = 0L, priors = Nil))),
+          cols = src.cols.map(_.copy(addedVer = 0L, priors = Nil)),
+          droppedCols = Map.empty),
         graft.TempDirs.create(s"graft_ddl_$name"))
       tables.synchronized { tables(name) = st }
     case CtasRe(name, clauses, sel) => createTableAs(name, clauses, sel)
@@ -1274,7 +1281,16 @@ final class DorisDdl(s: SparkSession) {
     * land next to the rowsets instead of on executor-local disk. */
   private def ngramDir(t: TableState, ix: IndexDef): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(t.dir,
-      s"_ngram_bf/${ix.col}_g${ix.gramSize}_b${ix.bfSize}")
+      s"_ngram_bf/${sidecarCol(t, ix)}_g${ix.gramSize}_b${ix.bfSize}")
+
+  /** The column part of a sidecar dir name. A column a light ADD COLUMN
+    * added (addedVer > 0) reads its DEFAULT on older rowsets (readCol), so
+    * its part also names addedVer and the DEFAULT: sidecars built for a
+    * dropped column of the same name, or under another DEFAULT, are never
+    * consulted. */
+  private def sidecarCol(t: TableState, ix: IndexDef): String =
+    t.def_.cols.find(c => c.name == ix.col && c.addedVer > 0).fold(ix.col)(c =>
+      s"${c.name}_v${c.addedVer}_${sha1hex(c.default.toString).take(8)}")
 
   private def hadoopFs(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1329,25 +1345,16 @@ final class DorisDdl(s: SparkSession) {
     Nil // unreachable
   }
 
-  /** The read-side VALUE of the indexed column, replicated for the
-    * sidecar build: the same priors-coalesce (light RENAME) and
-    * pre-change DEFAULT backfill (light ADD COLUMN) visible() applies —
-    * the index must be true to what queries actually see, not to the raw
-    * file bytes. None = the column has no stored source yet (unprunable,
-    * never unsound). */
-  private def ngramReadCol(t: TableState, df: DataFrame,
-      ix: IndexDef): Option[Column] = {
-    val c = t.def_.cols.find(_.name == ix.col).getOrElse(return None)
-    val have = df.columns.toSet
-    val sources = (c.name +: c.priors).filter(have.contains)
-    if (sources.isEmpty) return None
-    val base = if (sources == Seq(c.name)) col(c.name).cast("string")
-      else coalesce(sources.map(n => col(n).cast("string")): _*)
-    Some(c.default match {
-      case Some(d) if have.contains("_ver") =>
-        when(base.isNull && col("_ver") <= c.addedVer, lit(d)).otherwise(base)
-      case _ => base
-    })
+  /** The rowset files `missing` read as queries see the indexed column:
+    * the index must be true to what queries read (the one column-read
+    * rule, [[DorisDdl.readCol]]), not to the raw file bytes. None = the
+    * column left the def. */
+  private def indexedRead(t: TableState, missing: Seq[String],
+      ix: IndexDef): Option[(DataFrame, Column)] = {
+    val d = t.def_
+    d.cols.find(_.name == ix.col).map(c => (
+      rowsets(t, d, Some(missing.map(rel => s"${t.dir}/$rel"))),
+      DorisDdl.readCol(c).getOrElse(col(c.name)).cast("string")))
   }
 
   /** Build missing per-rowset-file gram-bloom sidecars for every NGRAM_BF
@@ -1376,10 +1383,7 @@ final class DorisDdl(s: SparkSession) {
         fs.exists(new org.apache.hadoop.fs.Path(dir, sha1hex(rel) + ".bf")))
       if (missing.nonEmpty) {
         fs.mkdirs(dir)
-        val read = s.read.option("basePath", t.dir)
-          .option("mergeSchema", "true")
-          .parquet(missing.map(rel => s"${t.dir}/$rel"): _*)
-        ngramReadCol(t, read, ix).foreach { c =>
+        indexedRead(t, missing, ix).foreach { case (read, c) =>
           val g = ix.gramSize
           // one distinct (file, gram-bucket) pair stream: map-side partial
           // distinct, then a file-keyed shuffle of ≤ files × bf_size ints
@@ -1519,7 +1523,7 @@ final class DorisDdl(s: SparkSession) {
   private val BitmapLenCap = 256
 
   private def bitmapDir(t: TableState, ix: IndexDef): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(t.dir, s"_bitmap_ix/${ix.col}")
+    new org.apache.hadoop.fs.Path(t.dir, s"_bitmap_ix/${sidecarCol(t, ix)}")
 
   /** Build missing per-rowset-file value-set sidecars for every BITMAP
     * index on `t` — same triggers as the NGRAM build (per publish, at
@@ -1539,10 +1543,7 @@ final class DorisDdl(s: SparkSession) {
         fs.exists(new org.apache.hadoop.fs.Path(dir, sha1hex(rel) + ".vs")))
       if (missing.nonEmpty) {
         fs.mkdirs(dir)
-        val read = s.read.option("basePath", t.dir)
-          .option("mergeSchema", "true")
-          .parquet(missing.map(rel => s"${t.dir}/$rel"): _*)
-        ngramReadCol(t, read, ix).foreach { c =>
+        indexedRead(t, missing, ix).foreach { case (read, c) =>
           val (dirStr, rootQualified) = (dir.toString, fs.makeQualified(
             new org.apache.hadoop.fs.Path(t.dir)).toString)
           val serConf = new org.apache.spark.util.SerializableConfiguration(
@@ -1597,7 +1598,7 @@ final class DorisDdl(s: SparkSession) {
     val all = rowsetFiles(t)
     val dir = bitmapDir(t, ix)
     val fs = hadoopFs(dir)
-    val sub = ix.col
+    val sub = dir.getName
     val surv = all.filter { rel =>
       val key = sha1hex(rel)
       val vs = t.bitmapCache.synchronized(t.bitmapCache.get((sub, key)))
@@ -1695,9 +1696,7 @@ final class DorisDdl(s: SparkSession) {
       if (surv.isEmpty) acc // multi-predicate intersection emptied: no view
       else {
         val pv = s"${n}__bmix_${bmixCounter.incrementAndGet()}"
-        val mergedSchema =
-          s.read.option("mergeSchema", "true").parquet(t.dir).schema
-        registerTemp(visible(t, None, schemaHint = Some(mergedSchema),
+        registerTemp(visible(t, None,
           files = Some(surv.toSeq.sorted.map(rel => s"${t.dir}/$rel"))), pv)
         views += pv
         replaceTableToken(acc, n, pv)
@@ -1893,9 +1892,7 @@ final class DorisDdl(s: SparkSession) {
       if (surv.isEmpty) acc
       else {
         val pv = s"${n}__ngbf_${ngbfCounter.incrementAndGet()}"
-        val mergedSchema =
-          s.read.option("mergeSchema", "true").parquet(t.dir).schema
-        registerTemp(visible(t, None, schemaHint = Some(mergedSchema),
+        registerTemp(visible(t, None,
           files = Some(surv.toSeq.sorted.map(rel => s"${t.dir}/$rel"))), pv)
         views += pv
         replaceTableToken(acc, n, pv)
@@ -2020,8 +2017,9 @@ final class DorisDdl(s: SparkSession) {
     val absorbed: Set[String] =
       if (t.synchronized(t.deletes.isEmpty)) Set.empty
       else {
+        val d = t.def_
         val filteredRead = graft.operators.KeyModels.applyDeletePredicates(
-          s.read.option("mergeSchema", "true").parquet(t.dir),
+          DorisDdl.readCols(rowsets(t, d), d.cols),
           t.synchronized(t.deletes.toSeq).map(d => (expr(d.compiled), d.ver)))
         filteredRead.queryExecution.optimizedPlan.collect {
           case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) =>
@@ -2352,14 +2350,11 @@ final class DorisDdl(s: SparkSession) {
     case _ => sys.error(s"unparseable INSERT: ${text.take(80)}")
   }
 
-  /** One load = one versioned rowset: missing columns filled from their
-    * DEFAULT (NULL absent one), every column cast to its declared type,
-    * range-partition name assigned (or the load rejected), bucketed by
-    * the distribution column, appended. */
   /** One load's rowset frame: missing columns filled from their DEFAULT,
     * every column cast to its declared type, range-partition name assigned
     * (or the load rejected), version stamped, bucketed by the distribution
-    * column. */
+    * column. Every read of the rowsets goes through the schema this fixes,
+    * [[DorisDdl.readSchema]]. */
   private def rowset(t: TableState, src0: DataFrame, ver: Long): DataFrame = {
     // AUTO_INCREMENT fill first, so the alignment below sees the column
     // populated like any other supplied value
@@ -2434,6 +2429,21 @@ final class DorisDdl(s: SparkSession) {
       .sortWithinPartitions(sortCols: _*)
   }
 
+  /** A read of `t`'s rowset tree (or of the `files` subset) through `d`'s
+    * read schema ([[DorisDdl.readSchema]]): the table def, not the
+    * footers, is the schema — Doris's light schema change reads every
+    * segment through the FE's table schema — so building the read runs no
+    * Spark job. basePath keeps `_p` partition discovery for a file subset.
+    * Callers pass the one `t.def_` they read (see visible). */
+  private def rowsets(t: TableState, d: TableDef,
+      files: Option[Seq[String]] = None): DataFrame = {
+    val r = s.read.schema(readSchema(d))
+    files match {
+      case Some(fs) => r.option("basePath", t.dir).parquet(fs: _*)
+      case None => r.parquet(t.dir)
+    }
+  }
+
   /** Claim a contiguous AUTO_INCREMENT id block [returned, returned+n)
     * for one load — a driver-side, metadata-sized operation: the counter
     * persists per table (`_auto_inc` sidecar, atomic tmp+rename, the
@@ -2450,7 +2460,8 @@ final class DorisDdl(s: SparkSession) {
           new String(java.nio.file.Files.readAllBytes(f),
             java.nio.charset.StandardCharsets.UTF_8).trim.toLong
         else if (hasRowsets(t.dir)) {
-          val r = s.read.parquet(t.dir).agg(max(col(c.name))).head()
+          val r = rowsets(t, t.def_)
+            .agg(max(DorisDdl.readCol(c).getOrElse(col(c.name)))).head()
           if (r.isNullAt(0)) c.autoInc.get else r.getLong(0) + 1L
         } else c.autoInc.get
       val tmp = java.nio.file.Paths.get(t.dir, "_auto_inc.tmp")
@@ -2873,8 +2884,9 @@ final class DorisDdl(s: SparkSession) {
     * parquet meta sidecar carrying the SHOW CREATE text (the full
     * definition round-trip: key model, partitions including holes,
     * indexes, bloom columns, generated exprs) and the visibility metadata
-    * a physical copy alone would lose — nextVer and the standing VERSIONED
-    * DELETES. Sync MVs are not captured (recreate after restore), matching
+    * a physical copy alone would lose — nextVer, the standing VERSIONED
+    * DELETES and the light-schema-change history. Sync MVs are
+    * not captured (recreate after restore), matching
     * the "materializations are derived" stance. Returns the one-row job
     * summary. */
   private def backup(text: String): DataFrame = text match {
@@ -2891,15 +2903,21 @@ final class DorisDdl(s: SparkSession) {
         val createText = showCreateTable(s"SHOW CREATE TABLE $n")
           .select("create_table").head().getString(0)
         val recs = t.synchronized(t.deletes.toSeq)
+        val d = t.def_
         import s.implicits._
         // deletes serialize field-per-field (pred / ver / scope / excluded)
         // so a restored table keeps the STRUCTURAL records — a post-restore
-        // partition rename must still amend them by name, not by splicing
+        // partition rename must still amend them by name, not by splicing.
+        // The light-schema-change history (each column's addedVer and
+        // rename priors, the dropped names) rides along: SHOW CREATE
+        // cannot say it, and the copied rowsets are read through it
         Seq((createText, t.synchronized(t.nextVer), recs.map(_.pred),
             recs.map(_.ver), recs.map(_.scope.getOrElse("")),
-            recs.map(_.excluded.mkString(","))))
+            recs.map(_.excluded.mkString(",")), d.cols.map(_.addedVer),
+            d.cols.map(_.priors), d.droppedCols))
           .toDF("create_text", "next_ver", "del_preds", "del_vers",
-            "del_scopes", "del_excls")
+            "del_scopes", "del_excls", "col_added_vers", "col_priors",
+            "dropped_cols")
           .coalesce(1).write.parquet(dst.resolve("_meta").toString)
       }
       backupJobs.synchronized {
@@ -2913,8 +2931,9 @@ final class DorisDdl(s: SparkSession) {
 
   /** `RESTORE SNAPSHOT snap FROM 'repo'`: every table in the snapshot is
     * recreated by replaying its SHOW CREATE text, its rowset files are
-    * copied back verbatim, and nextVer + the versioned deletes are
-    * reinstated — so the restored table reads EXACTLY the visible state at
+    * copied back verbatim, and nextVer, the versioned deletes and the
+    * columns' light-schema-change history are reinstated — so the
+    * restored table reads EXACTLY the visible state at
     * backup time (a delete recorded before the backup still hides
     * pre-delete rowsets; labels/load history reset, as a restore is a new
     * ingest lineage). Restoring over an existing table rejects. */
@@ -2946,6 +2965,15 @@ final class DorisDdl(s: SparkSession) {
           t.deletes ++= preds.indices.map(i => DeleteRec(preds(i), vers(i),
             Option(scopes(i)).filter(_.nonEmpty),
             excls(i).split(",").filter(_.nonEmpty).toSeq))
+          if (meta.schema.fieldNames.contains("col_priors")) {
+            val (added, priors) =
+              (meta.getSeq[Long](6), meta.getSeq[scala.collection.Seq[String]](7))
+            t.def_ = t.def_.copy(
+              cols = t.def_.cols.zipWithIndex.map { case (c, i) =>
+                c.copy(addedVer = added(i), priors = priors(i).toSeq)
+              },
+              droppedCols = meta.getMap[String, String](8).toMap)
+          }
         }
         registerViews(t)
         n
@@ -3195,14 +3223,11 @@ final class DorisDdl(s: SparkSession) {
   }
 
   /** Does `dir` hold any committed rowset file? Directory MARKERS —
-    * `_SUCCESS`, an aborted job's `_temporary` — don't count: Spark's
-    * reader ignores them, so a dir containing only markers (e.g. after
-    * DROP PARTITION removed the last data partition) must be treated as
-    * EMPTY or the read fails schema inference. An in-flight load's
-    * `_temporary` files don't count either: counting them made a
-    * concurrent registerViews attempt a schema read over a dir whose only
-    * readable content was still being written (UNABLE_TO_INFER_SCHEMA,
-    * caught by the DDL-racing-DML fuzz). */
+    * `_SUCCESS`, an aborted job's `_temporary` — and an in-flight load's
+    * `_temporary` files don't count: Spark's reader ignores them, so a dir
+    * holding only those (e.g. after DROP PARTITION removed the last data
+    * partition, or during a table's first load) is EMPTY, and its views
+    * serve the empty frame. */
   private def hasRowsets(dir: String): Boolean = {
     var found = false
     DorisDdl.walkCommitted(dir) { _ => found = true; false }
@@ -3587,18 +3612,23 @@ final class DorisDdl(s: SparkSession) {
     case AddColRe(name, colDef) =>
       // light schema change ([doris: fe/.../alter/SchemaChangeHandler.java]
       // "light schema change" 1.2+): metadata-only — no rowset is rewritten;
-      // rows from pre-change rowsets surface the DEFAULT at read time via
-      // the merge-schema + default-coalesce read (model_schema_change's
-      // contract). Key columns cannot be added this way.
+      // rows from pre-change rowsets surface the DEFAULT at read time
+      // through the column-read rule (DorisDdl.readCol). Key columns cannot
+      // be added this way.
       val t = state(name)
       val c = parseColDef(colDef)
       require(c.gen.isEmpty,
         s"$name: ADD COLUMN ... AS (expr) is not supported (generated " +
           "columns are CREATE-time only — old rowsets have no stored value)")
       val d = t.def_
-      require(!d.cols.exists(x => x.name == c.name || x.priors.contains(c.name)),
+      require(!d.cols.exists(_.storedNames.contains(c.name)),
         s"$name: column name ${c.name} already exists (or is a renamed " +
           "column's former name, still present in old rowsets)")
+      // a dropped column's bytes under the name read as the DEFAULT
+      // (readCol), but only at the type they were loaded at
+      d.droppedCols.get(c.name).foreach(ty => require(ty == c.sparkType,
+        s"$name: older rowsets hold a dropped ${c.name} of type $ty — " +
+          s"re-add it as $ty or under another name"))
       if (d.keysType != "AGGREGATE")
         require(c.agg.isEmpty,
           s"$name: aggregate marker on ${c.name} requires AGGREGATE KEY")
@@ -3608,7 +3638,8 @@ final class DorisDdl(s: SparkSession) {
       // addedVer) predate the column and read back its DEFAULT; later
       // explicit NULLs persist (Doris backfills only pre-change rowsets)
       t.synchronized {
-        t.def_ = d.copy(cols = d.cols :+ c.copy(addedVer = t.nextVer))
+        t.def_ = d.copy(cols = d.cols :+ c.copy(addedVer = t.nextVer),
+          droppedCols = d.droppedCols - c.name)
       }
       registerViews(t)
     case DropColRe(name, cname) =>
@@ -3648,9 +3679,11 @@ final class DorisDdl(s: SparkSession) {
       // indexes and the bloom declaration on the column die WITH it
       // (Doris drops a column's indexes in the same schema change);
       // leaving them dangling made SHOW CREATE non-replayable
+      val gone = d.cols.find(_.name == cname).get
       t.synchronized {
         t.def_ = d.copy(
           cols = d.cols.filterNot(_.name == cname),
+          droppedCols = d.droppedCols ++ gone.storedNames.map(_ -> gone.sparkType),
           indexes = d.indexes.filterNot(_.col == cname),
           bloomCols = d.bloomCols.filterNot(_ == cname))
       }
@@ -3702,11 +3735,14 @@ final class DorisDdl(s: SparkSession) {
       val t = state(name)
       val d = t.def_
       require(d.cols.exists(_.name == oldN), s"$name: unknown column $oldN")
-      require(!d.cols.exists(c => c.name == newN || c.priors.contains(newN)),
+      require(!d.cols.exists(_.storedNames.contains(newN)),
         s"$name: column name $newN is already in use")
       require(!d.cols.exists(c => c.gen.exists(g =>
         s"(?i)\\b$oldN\\b".r.findFirstIn(g).isDefined)),
         s"$name: column $oldN is referenced by a generated column")
+      require(!d.droppedCols.contains(newN),
+        s"$name: older rowsets hold a dropped column's values under $newN " +
+          "— rename to another name")
       require(t.synchronized(t.mvs.toSeq).forall(mv =>
         !mv.keys.contains(oldN) && !mv.columns.keys.exists(_._2 == oldN)),
         s"$name: column $oldN is referenced by a materialized view")
@@ -3734,7 +3770,7 @@ final class DorisDdl(s: SparkSession) {
         // standing versioned deletes amend structurally too: the stored
         // predicate TEXT names the old column, and while reads usually
         // still resolve it (old rowsets keep their bytes under the old
-        // name in the mergeSchema union), a delete recorded when NO
+        // name, a field of the read schema), a delete recorded when NO
         // rowset carried the old name poisoned every subsequent read
         // (caught by a round-18 probe). The new name resolves against
         // the same coalesced read surface, so the predicate's value is
@@ -3789,23 +3825,15 @@ final class DorisDdl(s: SparkSession) {
             old.copy(sparkType = c.sparkType, default = c.default)
           else x)
         if (hasRowsets(t.dir)) {
-          var df = s.read.option("mergeSchema", "true").parquet(t.dir)
-          val have = df.columns.toSet
-          // resolve rename priors FIRST (deletes may reference them), then
-          // bake in the standing versioned deletes
-          d.cols.foreach { x =>
-            val sources = (x.name +: x.priors).filter(have.contains)
-            if (sources.nonEmpty && sources != Seq(x.name))
-              df = df.withColumn(x.name, coalesce(sources.map(col): _*))
-          }
-          df = graft.operators.KeyModels.applyDeletePredicates(df,
+          // read every column as queries see it FIRST (deletes may name a
+          // renamed or defaulted column), then bake in the standing
+          // versioned deletes
+          val df = graft.operators.KeyModels.applyDeletePredicates(
+            DorisDdl.readCols(rowsets(t, d), d.cols),
             t.synchronized(t.deletes.toSeq).map(d => (expr(d.compiled), d.ver)))
-          val keep = newCols.map(x =>
-            (if (df.columns.contains(x.name)) col(x.name) else lit(null))
-              .cast(x.sparkType).as(x.name)) ++
-            Seq(col("_ver")) ++
-            (if (df.columns.contains("_pos")) Seq(col("_pos")) else Nil) ++
-            (if (df.columns.contains("_sign")) Seq(col("_sign")) else Nil) ++
+          val keep = newCols.map(x => col(x.name).cast(x.sparkType).as(x.name)) ++
+            Seq(col("_ver"), col("_pos")) ++
+            (if (d.keysType == "UNIQUE") Seq(col("_sign")) else Nil) ++
             (if (d.partCol.isDefined) Seq(col("_p")) else Nil)
           val out = bucketed(d, df.select(keep: _*))
           val staging = graft.TempDirs.create(s"graft_ddl_sc_$name")
@@ -4030,14 +4058,10 @@ final class DorisDdl(s: SparkSession) {
         .map(p => (p.name, p.inValues.map(_.mkString(","))
           .getOrElse(p.bound.getOrElse("MAXVALUE"))))
         .toDF("partition_name", "upper_bound")
-      val counts =
-        if (!hasRowsets(t.dir))
-          Seq.empty[(String, Long)].toDF("partition_name", "n_rows")
-        else s.read.option("mergeSchema", "true").parquet(t.dir)
-          .filter(col("_p").startsWith("__tmp_"))
-          .groupBy(regexp_replace(col("_p"), "^__tmp_", "")
-            .as("partition_name"))
-          .agg(count(lit(1)).as("n_rows"))
+      val counts = rowsets(t, t.def_)
+        .filter(col("_p").startsWith("__tmp_"))
+        .groupBy(regexp_replace(col("_p"), "^__tmp_", "").as("partition_name"))
+        .agg(count(lit(1)).as("n_rows"))
       defs.join(counts, Seq("partition_name"), "left")
         .select(col("partition_name"), col("upper_bound"),
           coalesce(col("n_rows"), lit(0L)).as("n_rows"))
@@ -4199,15 +4223,18 @@ final class DorisDdl(s: SparkSession) {
 
   private def selectPlain(text: String): DataFrame = {
     // registration skip (guide §2.4 — remove duplicate passes): each
-    // re-registration costs one eager footer-merge Spark job plus full
-    // view analysis, so a select re-registers only the tables whose views
-    // are not provably current. They are current when (a) no statement
-    // that could write THIS table ran since they were stamped (its write
-    // mark, see viewsFresh — a write to another table does not count) and
-    // (b) this instance still owns every temp-view name it registered
-    // (viewOwners — another instance on the shared session namespace may
-    // have taken them). Mutation paths always re-register their table.
-    tables.synchronized(tables.values.toSeq).foreach { t =>
+    // re-registration re-analyzes the table's view and every partition
+    // view, so a select re-registers only the tables it names (directly or
+    // through user views, before the PARTITION rewrite below hides `t` in
+    // `t__part_p`) whose views are not provably current. They are current
+    // when (a) no statement that could write THIS table ran since they
+    // were stamped (its write mark, see viewsFresh — a write to another
+    // table does not count) and (b) this instance still owns every
+    // temp-view name it registered (viewOwners — another instance on the
+    // shared session namespace may have taken them). Mutation paths
+    // always re-register their table.
+    val named = referencedTables(text)
+    tables.synchronized(named.toSeq.flatMap(tables.get)).foreach { t =>
       if (!viewsFresh(t)) registerViews(t)
     }
     // User-view derivations must be as current as the table views this
@@ -4241,44 +4268,22 @@ final class DorisDdl(s: SparkSession) {
 
   /** Merge-on-read view of the current visible data, per key model; the
     * versioned delete predicates apply BEFORE the merge (a deleted old
-    * version must not shadow-win; a post-delete reload must survive). */
+    * version must not shadow-win; a post-delete reload must survive). The
+    * rowsets are read through the def's read schema and the one
+    * column-read rule ([[DorisDdl.readCol]]): no rowset is ever rewritten
+    * for a light schema change, and building the view runs no Spark job. */
   private def visible(t: TableState, part: Option[String],
       keepPart: Boolean = false,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None,
-      // explicit rowset-file subset (NGRAM_BF file pruning): the scan
-      // LISTS only these files — true storage skipping, not a row filter.
-      // basePath keeps `_p` partition-column inference intact.
+      // explicit rowset-file subset (NGRAM_BF/BITMAP file pruning): the
+      // scan LISTS only these files — true storage skipping, not a row
+      // filter
       files: Option[Seq[String]] = None)
       : DataFrame = {
     // one read of the def: a concurrent light ADD COLUMN swaps `t.def_`,
     // and a frame built from one def but projected with the next fails
     // analysis on the new column
     val d = t.def_
-    // mergeSchema: rowsets written before a light ADD COLUMN lack the new
-    // column; the union schema surfaces it as NULL, and the default-
-    // coalesce below backfills it (model_schema_change's read contract —
-    // no rowset is ever rewritten for a schema change). The inference is
-    // an EAGER footer-merge Spark job at read() time — callers building
-    // many views over one rowset state (registerViews: main + every
-    // partition) pass the schema once via schemaHint, so each view still
-    // gets a FRESH plan (own exprIds — two filtered branches of one
-    // DataFrame must never be joined, the documented self-join hazard)
-    // but the footer job runs once, not once per partition.
-    var df = {
-      val r0 = files.fold(s.read)(_ => s.read.option("basePath", t.dir))
-      val r = schemaHint match {
-        case Some(sc) => r0.schema(sc)
-        // whole-tree read with no hint: the write-mark-checked cache serves
-        // the same merged schema the footer job would produce. A FILE
-        // SUBSET without a hint still merges over exactly those files.
-        case None if files.isEmpty => r0.schema(mergedSchemaOf(t))
-        case None => r0.option("mergeSchema", "true")
-      }
-      files match {
-        case Some(fs) => r.parquet(fs: _*)
-        case None => r.parquet(t.dir)
-      }
-    }
+    var df = rowsets(t, d, files)
     // TEMPORARY partition rowsets (`_p=__tmp_*`) are staging data: never
     // visible until REPLACE PARTITION publishes them. The startsWith is a
     // partition-column predicate, so it prunes at planning (no temp file
@@ -4286,29 +4291,7 @@ final class DorisDdl(s: SparkSession) {
     if (d.partCol.isDefined)
       df = df.filter(!col("_p").startsWith("__tmp_"))
     part.foreach(p => df = df.filter(col("_p") === p))
-    val have = df.columns.toSet
-    d.cols.foreach { c =>
-      // light RENAME COLUMN: rowsets written before the rename keep their
-      // bytes under the old name(s); surface them under the current one
-      val sources = (c.name +: c.priors).filter(have.contains)
-      if (sources.isEmpty) // added column with no load since
-        df = df.withColumn(c.name, lit(c.default.orNull).cast(c.sparkType))
-      else {
-        if (sources != Seq(c.name))
-          df = df.withColumn(c.name,
-            coalesce(sources.map(n => col(n).cast(c.sparkType)): _*))
-        c.default.foreach { dflt =>
-          // backfill ONLY rowsets that predate the column (_ver <=
-          // addedVer, where mergeSchema surfaced NULL): an explicit NULL
-          // written after a light ADD COLUMN — or in a CREATE-time column
-          // (addedVer 0, matching no rowset) — persists, per Doris
-          // light-schema-change
-          df = df.withColumn(c.name,
-            when(col(c.name).isNull && col("_ver") <= c.addedVer,
-              lit(dflt).cast(c.sparkType)).otherwise(col(c.name)))
-        }
-      }
-    }
+    df = DorisDdl.readCols(df, d.cols)
     df = graft.operators.KeyModels.applyDeletePredicates(
       df, t.synchronized(t.deletes.toSeq).map(x => (expr(x.compiled), x.ver)))
     val merged = d.keysType match {
@@ -4317,21 +4300,17 @@ final class DorisDdl(s: SparkSession) {
         // merge order: sequence column first (if declared — out-of-order
         // loads resolve by the LOGICAL order), version as tiebreak, then
         // within-load position (same-key rows in ONE batch: last wins, the
-        // Doris MemTable replace order; rowsets predating _pos surface
-        // NULL, which desc ranks last — harmless, they can't tie a _ver
-        // with a post-_pos rowset). The winner's delete sign then decides
+        // Doris MemTable replace order; a rowset without _pos reads NULL,
+        // which desc ranks last). The winner's delete sign then decides
         // visibility (a stale delete marker loses the window and deletes
         // nothing).
         val ord = d.seqCol.map(sc => col(sc).desc).toSeq ++
-          Seq(col("_ver").desc) ++
-          (if (df.columns.contains("_pos")) Seq(col("_pos").desc) else Nil)
+          Seq(col("_ver").desc, col("_pos").desc)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(d.keyCols.map(col): _*).orderBy(ord: _*)
-        val won = df.withColumn("_rn", row_number().over(w))
+        df.withColumn("_rn", row_number().over(w))
           .filter(col("_rn") === 1)
-        if (df.columns.contains("_sign"))
-          won.filter(coalesce(col("_sign"), lit(0)) === 0)
-        else won
+          .filter(coalesce(col("_sign"), lit(0)) === 0)
       case "AGGREGATE" =>
         val aggs = d.cols.filter(_.agg.isDefined).map { c =>
           (c.agg.get match {
@@ -4372,35 +4351,25 @@ final class DorisDdl(s: SparkSession) {
     // parse_json in the read projection (the merge/delete machinery above
     // ran on the stored text), so `variant_get(v, '$.path', type)` works
     // directly against the table view with no per-access re-parse
-    val outCols = d.cols.map(c =>
-      if (c.variant) parse_json(col(c.name)).as(c.name) else col(c.name)) ++
-      (if (keepPart && d.partCol.isDefined) Seq(col("_p")) else Nil)
-    merged.select(outCols: _*)
+    merged.select(queryCols(d) ++
+      (if (keepPart && d.partCol.isDefined) Seq(col("_p")) else Nil): _*)
   }
 
-  /** The declared schema as an empty, correctly-typed frame — what a
-    * created-but-never-loaded (or TRUNCATEd) table serves: Doris returns
-    * ZERO ROWS from an empty table, not an error, and views over it read
-    * empty rather than breaking. */
+  /** The def's columns as queries see them: VARIANT parsed, the rest as
+    * stored. */
+  private def queryCols(d: TableDef): Seq[Column] = d.cols.map(c =>
+    if (c.variant) parse_json(col(c.name)).as(c.name) else col(c.name))
+
+  /** The read schema as an empty frame — what a created-but-never-loaded
+    * (or TRUNCATEd) table serves: Doris returns ZERO ROWS from an empty
+    * table, not an error. A local relation, so a query over it folds to an
+    * empty result at planning and runs no job. */
   private def emptyVisible(t: TableState): DataFrame = {
-    val cols = t.def_.cols // one read: see visible
-    val fields = cols.map(c => org.apache.spark.sql.types.StructField(
-      c.name, org.apache.spark.sql.types.DataType.fromDDL(c.sparkType)))
-    val df = s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(fields))
-    df.select(cols.map(c =>
-      if (c.variant) parse_json(col(c.name)).as(c.name) else col(c.name)): _*)
+    val d = t.def_ // one read: see visible
+    s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      DorisDdl.readSchema(d)).select(queryCols(d): _*)
   }
 
-  /** Register the table's views, DROP-AWARE (the same race class as the
-    * r19 user-view orphan, generalized): a DROP TABLE landing between a
-    * publish and its view re-registration would otherwise leave live
-    * `t` / `t__part_*` temp views whose table no longer exists in the
-    * catalog — serving dropped data with NO grant scope (directRefs maps
-    * those names through `tables`). After registering, re-check the
-    * catalog entry: vanished → drop exactly what was just registered;
-    * replaced by a NEW TableState (drop + recreate) → re-register from
-    * the live state so readers never stick on the dead snapshot. */
   /** Registration-skip state. [[mutationEpoch]] advances on every
     * possibly-mutating statement (execute() entry), which records the new
     * value as the WRITE MARK of the one table it writes ([[tableMarks]])
@@ -4437,27 +4406,17 @@ final class DorisDdl(s: SparkSession) {
         viewOwners.get((s, s"${name}__part_$p")) eq this)
   }
 
-  /** Merged parquet schema of `t`'s rowset tree, cached until the next
-    * statement that can write `t` (guide §6): the eager footer-merge
-    * inference is a Spark job, and between such statements the file set
-    * cannot change (every rowset writer runs under a statement that marks
-    * its table; MTMV refresh writes only the MV's own dir and re-registers
-    * its view itself), so warm reads reuse the schema instead of
-    * re-reading every footer. */
-  private val mergedSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
-  private def mergedSchemaOf(t: TableState)
-      : org.apache.spark.sql.types.StructType = {
-    val cur = mutationEpoch.get
-    val e = mergedSchemaCache.get(t.def_.name)
-    if (e != null && e._1 >= writeMark(t.def_.name)) e._2
-    else {
-      val sc = s.read.option("mergeSchema", "true").parquet(t.dir).schema
-      mergedSchemaCache.put(t.def_.name, (cur, sc))
-      sc
-    }
-  }
-
+  /** Register the table's view and its partition views, DROP-AWARE (the
+    * same race class as the r19 user-view orphan, generalized): a DROP
+    * TABLE landing between a publish and its view re-registration would
+    * otherwise leave live `t` / `t__part_*` temp views whose table no
+    * longer exists in the catalog — serving dropped data with NO grant
+    * scope (directRefs maps those names through `tables`). After
+    * registering, re-check the catalog entry: vanished → drop exactly what
+    * was just registered; replaced by a NEW TableState (drop + recreate) →
+    * re-register from the live state so readers never stick on the dead
+    * snapshot. A pass lists the rowset tree and analyzes each view; it
+    * runs no Spark job (the def is the read schema, see visible). */
   private def registerViews(t: TableState): Unit = {
     val lock = registerLocks.computeIfAbsent(t.def_.name, _ => new Object)
     lock.synchronized {
@@ -4465,7 +4424,7 @@ final class DorisDdl(s: SparkSession) {
       var cur = t
       var settled = false
       while (!settled) {
-        // a DROP TABLE can delete the rowset tree mid-pass (schema read /
+        // a DROP TABLE can delete the rowset tree mid-pass (file listing /
         // partition listing): that's the dropped case, not an error — the
         // names the pass DID register are retracted below either way
         val names =
@@ -4501,33 +4460,14 @@ final class DorisDdl(s: SparkSession) {
   /** One registration pass; returns every temp-view name registered so
     * [[registerViews]] can retract a stale pass exactly. */
   private def doRegisterViews(t: TableState): Seq[String] = {
-    // a created-but-never-loaded (or emptied) table has no rowsets to
-    // read: it serves the EMPTY typed frame (never stale rows, never a
-    // not-found — SELECT on an empty table returns zero rows, as Doris)
-    if (!hasRowsets(t.dir)) {
-      registerTemp(emptyVisible(t), t.def_.name)
-      val parts = t.def_.parts.filterNot(_.dropped).map(_.name)
-      parts.foreach(p =>
-        registerTemp(emptyVisible(t), s"${t.def_.name}__part_$p"))
-      return t.def_.name +: parts.map(p => s"${t.def_.name}__part_$p")
-    }
-    // ONE footer-merge job per rowset state, shared by every view built
-    // below (an auto-partitioned table registers ~1 view per materialized
-    // day — 31 eager inference jobs per statement before this, the
-    // sql_ddl_auto_partition 13 s wall at cpus=32)
-    // drop any same-epoch cache entry first: a visible() call earlier in
-    // this statement (before its write published) may have cached the
-    // pre-write schema under the current epoch — registration must
-    // re-read the footers it is publishing views for
-    mergedSchemaCache.remove(t.def_.name)
-    val mergedSchema = mergedSchemaOf(t)
-    registerTemp(visible(t, None, schemaHint = Some(mergedSchema)),
-      t.def_.name)
-    val parts = partitionNames(t)
-    parts.foreach { p =>
-      registerTemp(visible(t, Some(p), schemaHint = Some(mergedSchema)),
-        s"${t.def_.name}__part_$p")
-    }
+    // a created-but-never-loaded (or emptied) table serves the EMPTY
+    // frame (never stale rows, never a not-found)
+    val loaded = hasRowsets(t.dir)
+    def view(p: Option[String]) = if (loaded) visible(t, p) else emptyVisible(t)
+    val parts =
+      if (loaded) partitionNames(t) else t.def_.parts.filterNot(_.dropped).map(_.name)
+    registerTemp(view(None), t.def_.name)
+    parts.foreach(p => registerTemp(view(Some(p)), s"${t.def_.name}__part_$p"))
     t.def_.name +: parts.map(p => s"${t.def_.name}__part_$p")
   }
 
@@ -4977,28 +4917,22 @@ final class DorisDdl(s: SparkSession) {
       val t = state(name)
       val d = t.def_
       val cols = d.cols.filter(statsable)
-      val collected: (Long, Seq[(String, Long, Long, String, String)]) =
-        if (!hasRowsets(t.dir)) (0L, cols.map(c => (c.name, 0L, 0L, null, null)))
-        else {
-          registerViews(t)
-          val df = visible(t, None)
-          // coalesce: rowsets can exist while ZERO rows are visible (every
-          // row removed by a versioned DELETE or delete-sign) — sum() over
-          // the empty relation is null and getLong would NPE
-          val aggs = Seq(count(lit(1)).as("__n")) ++ cols.zipWithIndex.flatMap {
-            case (c, i) => Seq(
-              countDistinct(col(c.name)).as(s"__ndv_$i"),
-              coalesce(sum(when(col(c.name).isNull, 1L).otherwise(0L)), lit(0L))
-                .as(s"__nul_$i"),
-              min(col(c.name)).cast("string").as(s"__min_$i"),
-              max(col(c.name)).cast("string").as(s"__max_$i"))
-          }
-          val r = df.agg(aggs.head, aggs.tail: _*).head()
-          (r.getLong(0), cols.zipWithIndex.map { case (c, i) =>
-            (c.name, r.getLong(1 + i * 4), r.getLong(2 + i * 4),
-              r.getString(3 + i * 4), r.getString(4 + i * 4))
-          })
-        }
+      // coalesce: zero rows can be visible (an empty table, or every row
+      // removed by a versioned DELETE or delete-sign) — sum() over the
+      // empty relation is null and getLong would NPE
+      val aggs = Seq(count(lit(1)).as("__n")) ++ cols.zipWithIndex.flatMap {
+        case (c, i) => Seq(
+          countDistinct(col(c.name)).as(s"__ndv_$i"),
+          coalesce(sum(when(col(c.name).isNull, 1L).otherwise(0L)), lit(0L))
+            .as(s"__nul_$i"),
+          min(col(c.name)).cast("string").as(s"__min_$i"),
+          max(col(c.name)).cast("string").as(s"__max_$i"))
+      }
+      val r = visible(t, None).agg(aggs.head, aggs.tail: _*).head()
+      val collected = (r.getLong(0), cols.zipWithIndex.map { case (c, i) =>
+        (c.name, r.getLong(1 + i * 4), r.getLong(2 + i * 4),
+          r.getString(3 + i * 4), r.getString(4 + i * 4))
+      })
       t.synchronized { t.stats = Some(collected) }
       import s.implicits._
       Seq((name, cols.size.toLong, collected._1))
@@ -5583,6 +5517,53 @@ object DorisDdl {
   private val viewOwners =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()
 
+  /** The schema every read of a table's rowset tree uses, fixed by the
+    * writer (`rowset()`): each def column at `DataType.fromDDL(sparkType)`,
+    * the type every load casts it to, under its current name and each
+    * prior name (light RENAME leaves old rowsets' bytes there), then the
+    * hidden `_sign` (UNIQUE), `_ver`, `_pos` and `_p` (partitioned). A
+    * rowset lacking a field reads it as NULL; fields of dropped columns
+    * are not read. */
+  private[graft] def readSchema(d: TableDef)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    val cols = d.cols.flatMap { c =>
+      val t = DataType.fromDDL(c.sparkType)
+      c.storedNames.map(StructField(_, t))
+    }
+    StructType(cols ++
+      (if (d.keysType == "UNIQUE") Seq(StructField("_sign", IntegerType))
+       else Nil) ++
+      Seq(StructField("_ver", LongType), StructField("_pos", LongType)) ++
+      d.partCol.map(_ => StructField("_p", StringType)))
+  }
+
+  /** The value a query reads for column `c` from a [[readSchema]] read —
+    * the one column-read rule: the current name coalesced over its prior
+    * names, and rows of rowsets that predate the column (`_ver <=
+    * addedVer`, a light ADD COLUMN) read its DEFAULT, NULL without one,
+    * whatever bytes they hold under its name (a dropped column's, when a
+    * dropped name is re-added). An explicit NULL loaded after the ADD
+    * persists, per Doris light schema change. None = the stored column
+    * as it is: no priors, and a CREATE-time column (addedVer 0) predates
+    * no rowset, as versions start at 1. */
+  private[sql] def readCol(c: ColDef): Option[Column] =
+    if (c.priors.isEmpty && c.addedVer == 0L) None
+    else {
+      val stored =
+        if (c.priors.isEmpty) col(c.name) else coalesce(c.storedNames.map(col): _*)
+      Some(if (c.addedVer == 0L) stored
+        else when(col("_ver") <= c.addedVer,
+          lit(c.default.orNull).cast(c.sparkType)).otherwise(stored))
+    }
+
+  /** `df` (a [[readSchema]] read) with every column `readCol` derives
+    * replaced by its read value. */
+  private[sql] def readCols(df: DataFrame, cols: Seq[ColDef]): DataFrame = {
+    val derived = cols.flatMap(c => readCol(c).map(c.name -> _))
+    if (derived.isEmpty) df else df.withColumns(derived.toMap)
+  }
+
   /** Visit each committed rowset file under `dir` until `visit` returns
     * false: the `.parquet` files Spark's reader lists, so the walk never
     * descends into a `_`- or `.`-prefixed entry (a writer's in-flight
@@ -5671,7 +5652,7 @@ object DorisDdl {
       // backfills pre-change rowsets, never later explicit writes)
       addedVer: Long = 0L,
       // former names after light RENAME COLUMN: old rowsets keep their
-      // bytes under the old name; the read coalesces (current, priors...)
+      // bytes under the old name; the read coalesces them (readCol)
       priors: Seq[String] = Nil,
       // GENERATED column (Doris 2.1 `col TYPE AS (expr)`): computed from
       // the other columns at LOAD time and stored — loads never supply it,
@@ -5696,7 +5677,10 @@ object DorisDdl {
       // (the claim counter persists per table and only moves forward);
       // a failed load burns its block — Doris also guarantees
       // uniqueness, not continuity.
-      autoInc: Option[Long] = None)
+      autoInc: Option[Long] = None) {
+    /** Every name a rowset may hold this column's bytes under. */
+    def storedNames: Seq[String] = name +: priors
+  }
   // bound None = MAXVALUE; a dropped partition keeps its PartDef (marked)
   // so the vacated range keeps REJECTING loads — Doris rejects rows with
   // no covering partition, and a drop leaves a hole, not a merged range.
@@ -5768,7 +5752,13 @@ object DorisDdl {
       // distribution key shuffle-free (the execution-side shape is the
       // bucketed join_colocate path; here the property is validated
       // metadata that round-trips SHOW CREATE).
-      colocateWith: Option[String] = None)
+      colocateWith: Option[String] = None,
+      // names light DROP COLUMN left bytes under in older rowsets, with
+      // the type they were loaded at: a rowset read matches columns by
+      // name (Doris matches by column unique id), so a re-ADD of the name
+      // must keep that type, and a RENAME onto it would read the dropped
+      // bytes
+      droppedCols: Map[String, String] = Map.empty)
   final case class MvDef(name: String, table: String, selectText: String,
       keys: Seq[String], columns: Map[(String, String), String])
   // routine-load job: the standing streaming query + its driver metadata
@@ -5850,7 +5840,7 @@ object DorisDdl {
     // are just unreferenced
     val ngramCache: mutable.Map[(String, String), java.util.BitSet] =
       mutable.Map()
-    // BITMAP index value sets, keyed (col, sha1(relpath)); None = the
+    // BITMAP index value sets, keyed (sidecar dir, sha1(relpath)); None = the
     // sidecar declared OVERFLOW at build (never prune). Immutable files,
     // so entries never invalidate.
     val bitmapCache: mutable.Map[(String, String), Option[Set[String]]] =

@@ -2971,7 +2971,8 @@ class DdlSpec extends SparkSpec {
         Some("LOAD_PRIV" -> "*")),
       ("SHOW ROUTINE LOAD", "SHOW ROUTINE LOAD", reads, None),
       ("CANCEL LOAD WHERE LABEL = 'st_l'", "CANCEL LOAD", all, Some("LOAD_PRIV" -> "*")),
-      ("BACKUP SNAPSHOT st_s TO '/tmp/r' ON (st_t)", "BACKUP SNAPSHOT", all,
+      // BACKUP, EXPORT and ANALYZE read tables and change no table view
+      ("BACKUP SNAPSHOT st_s TO '/tmp/r' ON (st_t)", "BACKUP SNAPSHOT", reads,
         Some("ADMIN_PRIV" -> "*")),
       ("RESTORE SNAPSHOT st_s FROM '/tmp/r'", "RESTORE SNAPSHOT", all,
         Some("ADMIN_PRIV" -> "*")),
@@ -2998,10 +2999,10 @@ class DdlSpec extends SparkSpec {
       ("TRUNCATE TABLE st_t", "TRUNCATE TABLE", st_t, Some("ALTER_PRIV" -> "st_t")),
       ("REFRESH MATERIALIZED VIEW st_smv", "REFRESH MATERIALIZED VIEW", all,
         Some("ALTER_PRIV" -> "st_u")),
-      ("EXPORT TABLE st_t TO '/tmp/e'", "EXPORT TABLE", all,
+      ("EXPORT TABLE st_t TO '/tmp/e'", "EXPORT TABLE", reads,
         Some("SELECT_PRIV" -> "st_t")),
       ("EXPLAIN SELECT k FROM st_t", "EXPLAIN", reads, Some("SELECT_PRIV" -> "st_t")),
-      ("ANALYZE TABLE st_t", "ANALYZE TABLE", all, Some("SELECT_PRIV" -> "st_t")),
+      ("ANALYZE TABLE st_t", "ANALYZE TABLE", reads, Some("SELECT_PRIV" -> "st_t")),
       ("SHOW COLUMN STATS st_t", "SHOW COLUMN STATS", reads,
         Some("SELECT_PRIV" -> "st_t")),
       ("SHOW INDEX FROM st_t", "SHOW INDEX", reads, Some("SELECT_PRIV" -> "st_t")),
@@ -3130,24 +3131,189 @@ class DdlSpec extends SparkSpec {
     def rows(n: String) =
       ddl.sql(s"SELECT k, v FROM $n ORDER BY k").as[(Long, Long)].collect().toSeq
     assert(rows("fr_a") == rows("fr_b"))
+    // a re-registration replaces the session's temp-view relation, so the
+    // same relation object before and after a statement means the
+    // statement left that table's view alone
+    def view(n: String) = spark.sessionState.catalog.getRawTempView(n).get
     ddl.execute("INSERT INTO fr_a VALUES (3, 30)")
-    // fr_b's views are still current: its build re-registers nothing, so
-    // it runs no footer-merge job
-    val (b, bJobs) = jobsOf(ddl.sql("SELECT k, v FROM fr_b ORDER BY k"))
-    assert(bJobs == 0, s"SELECT on fr_b ran $bJobs jobs while it built")
+    // fr_b's views are still current: its select re-registers nothing
+    val bView = view("fr_b")
+    val b = ddl.sql("SELECT k, v FROM fr_b ORDER BY k")
+    assert(view("fr_b") eq bView, "SELECT on fr_b re-registered fr_b")
     assert(b.as[(Long, Long)].collect().toSeq == Seq((1L, 10L), (2L, 20L)))
     assert(rows("fr_a") == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
-    // SET may change what any statement reads: the next select
-    // re-registers every table, one footer-merge job each
+    // SET may change what any statement reads: every table goes stale,
+    // and each re-registers on the next select that names it
     ddl.execute("SET sql_select_limit = DEFAULT")
-    val (_, setJobs) = jobsOf(ddl.sql("SELECT k, v FROM fr_b"))
-    assert(setJobs >= 2, s"the first select after SET ran $setJobs jobs")
+    val (aSet, bSet) = (view("fr_a"), view("fr_b"))
+    ddl.sql("SELECT k, v FROM fr_b")
+    assert(!(view("fr_b") eq bSet), "the first select on fr_b after SET " +
+      "did not re-register it")
+    assert(view("fr_a") eq aSet, "a select naming only fr_b re-registered fr_a")
+    ddl.sql("SELECT k, v FROM fr_a")
+    assert(!(view("fr_a") eq aSet), "the first select on fr_a after SET " +
+      "did not re-register it")
     // so does ALTER TABLE, whose regex names one table but whose schema
     // change reaches every view over it
     ddl.execute("ALTER TABLE fr_b ADD COLUMN c BIGINT DEFAULT '7'")
-    val (_, aJobs) = jobsOf(ddl.sql("SELECT k, v FROM fr_a"))
-    assert(aJobs >= 1, "SELECT on fr_a re-registered nothing after ALTER TABLE")
+    val aAlter = view("fr_a")
+    ddl.sql("SELECT k, v FROM fr_a")
+    assert(!(view("fr_a") eq aAlter),
+      "SELECT on fr_a re-registered nothing after ALTER TABLE")
     assert(ddl.sql("SELECT c FROM fr_b").as[Long].collect().toSeq == Seq(7L, 7L))
+  }
+
+  test("re-added column: a light ADD COLUMN of a dropped column's name " +
+    "reads its DEFAULT (NULL without one) on older rowsets, never the " +
+    "dropped bytes, and an explicit NULL loaded after the ADD persists") {
+    val ddl = fresh()
+    for ((n, dflt, old) <- Seq(("rz_d", " DEFAULT '7'", Some(7)), ("rz_n", "", None))) {
+      ddl.execute(s"""CREATE TABLE $n (k BIGINT, v BIGINT, c INT) DUPLICATE KEY(k)
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+      ddl.execute(s"INSERT INTO $n VALUES (1, 10, 100), (2, 20, 200)")
+      // sidecars built for the dropped column: {100, 200}
+      ddl.execute(s"CREATE INDEX ${n}_ix0 ON $n (c) USING BITMAP")
+      ddl.execute(s"ALTER TABLE $n DROP COLUMN c")
+      ddl.execute(s"ALTER TABLE $n ADD COLUMN c INT$dflt")
+      def read() = ddl.sql(s"SELECT k, c FROM $n ORDER BY k").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Int]))).toSeq
+      assert(read() == Seq((1L, old), (2L, old)), n)
+      ddl.execute(s"INSERT INTO $n VALUES (3, 30, NULL), (4, 40, 400)")
+      assert(read() == Seq((1L, old), (2L, old), (3L, None), (4L, Some(400))), n)
+    }
+    // the BITMAP sidecars index what queries read, never the dropped
+    // column's values: the older rowset holds 7, then 8 after a light
+    // DEFAULT change, so an equality on either must not prune it away
+    ddl.execute("CREATE INDEX rz_ix ON rz_d (c) USING BITMAP")
+    def eq(v: Int) = ddl.sql(s"SELECT k FROM rz_d WHERE c = $v ORDER BY k")
+      .as[Long].collect().toSeq
+    assert(eq(7) == Seq(1L, 2L))
+    ddl.execute("ALTER TABLE rz_d MODIFY COLUMN c INT DEFAULT '8'")
+    assert(eq(8) == Seq(1L, 2L) && eq(7).isEmpty)
+    // older rowsets hold a dropped column's bytes under its name at its
+    // type: a re-ADD at another type, or a RENAME onto the name, rejects
+    // and the table stays readable; a re-ADD at that type reads NULL
+    ddl.execute("ALTER TABLE rz_n DROP COLUMN v")
+    assertThrows[IllegalArgumentException](
+      ddl.execute("ALTER TABLE rz_n ADD COLUMN v VARCHAR(8)"))
+    assertThrows[IllegalArgumentException](
+      ddl.execute("ALTER TABLE rz_n RENAME COLUMN c v"))
+    ddl.execute("ALTER TABLE rz_n ADD COLUMN v BIGINT")
+    assert(ddl.sql("SELECT k, c, v FROM rz_n ORDER BY k").collect().map(r =>
+      (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq ==
+      Seq((1L, None, None), (2L, None, None), (3L, None, None),
+        (4L, Some(400), None)))
+  }
+
+  test("jobs: a DELETE on a loaded table runs no Spark job, and the SELECT " +
+    "after it builds with none") {
+    val ddl = fresh()
+    ddl.execute("""CREATE TABLE dj (k BIGINT, v BIGINT) UNIQUE KEY(k)
+      |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+    ddl.execute("INSERT INTO dj VALUES (1, 10), (2, 20)")
+    val (_, delJobs) = jobsOf(ddl.execute("DELETE FROM dj WHERE k = 1"))
+    assert(delJobs == 0, s"the DELETE ran $delJobs jobs")
+    val (df, selJobs) = jobsOf(ddl.sql("SELECT k, v FROM dj ORDER BY k"))
+    assert(selJobs == 0, s"the SELECT ran $selJobs jobs while it built")
+    assert(df.as[(Long, Long)].collect().toSeq == Seq((2L, 20L)))
+  }
+
+  test("read schema: it holds every field of the footer-merged rowset " +
+    "schema but dropped columns, at the same type, across key models, " +
+    "column kinds, partitionings, schema changes and a RESTORE") {
+    val ddl = fresh()
+    // each table's footer-merged schema (the reference) against its read
+    // schema; every table also reads back through its views
+    def check(n: String, dropped: Set[String] = Set.empty): Unit = {
+      val (dir, rs) = ddl.readSchemaOf(n)
+      val have = rs.fields.map(f => f.name -> f.dataType).toMap
+      val footers = spark.read.option("mergeSchema", "true").parquet(dir).schema
+      val bad = footers.fields.filterNot(f =>
+        dropped(f.name) || have.get(f.name).contains(f.dataType))
+      assert(bad.isEmpty, s"$n: footer fields ${bad.mkString(", ")} " +
+        s"missing from the read schema $rs")
+      ddl.sql(s"SELECT * FROM $n").collect()
+    }
+    def run(stmts: String*): Unit = stmts.foreach(st => ddl.execute(st.stripMargin))
+    run(
+      """CREATE TABLE rs_dup (k BIGINT, i INT, sm SMALLINT, ti TINYINT,
+        |  b BOOLEAN, f FLOAT, d DOUBLE, dc DECIMAL(10,2), lg LARGEINT,
+        |  s VARCHAR(8), dt DATE, ts DATETIME, tags ARRAY<VARCHAR(8)>,
+        |  props MAP<VARCHAR(4), INT>, who STRUCT<name: VARCHAR(8), score: DOUBLE>)
+        |DUPLICATE KEY(k) DISTRIBUTED BY HASH(k) BUCKETS 2""",
+      """INSERT INTO rs_dup VALUES (1, 2, 3, 4, true, 1.5, 2.5, 3.25, 99, 'a',
+        |  '2024-01-02', '2024-01-02 03:04:05', array('x'), map('p', 1),
+        |  named_struct('name', 'ada', 'score', 9.5))""",
+      """CREATE TABLE rs_uniq (k BIGINT, v VARCHAR(8), seq BIGINT)
+        |UNIQUE KEY(k) DISTRIBUTED BY HASH(k) BUCKETS 1
+        |PROPERTIES ("function_column.sequence_col" = "seq")""",
+      "INSERT INTO rs_uniq VALUES (1, 'a', 5), (2, 'b', 5)",
+      "INSERT INTO rs_uniq (k, v, seq, __DELETE_SIGN__) VALUES (2, 'x', 9, 1)",
+      """CREATE TABLE rs_agg (k BIGINT, bm BITMAP BITMAP_UNION,
+        |  h HLL HLL_UNION, c AGG_STATE<count(INT)> GENERIC,
+        |  a AGG_STATE<avg(INT)> GENERIC, r VARCHAR(4) REPLACE_IF_NOT_NULL)
+        |AGGREGATE KEY(k) DISTRIBUTED BY HASH(k) BUCKETS 1""",
+      """INSERT INTO rs_agg SELECT 1, to_bitmap(x), hll_hash(x), count_state(x),
+        |  avg_state(x), 'a' FROM (SELECT 1 AS x) GROUP BY x""",
+      """CREATE TABLE rs_var (k BIGINT, v VARIANT, w DOUBLE,
+        |  w2 DOUBLE AS (round(w * 2, 2))) UNIQUE KEY(k)
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""",
+      """INSERT INTO rs_var VALUES (1, '{"a":1}', 4.0)""",
+      """CREATE TABLE rs_range (k BIGINT, v DOUBLE) DUPLICATE KEY(k)
+        |PARTITION BY RANGE(k) (
+        |  PARTITION p1 VALUES LESS THAN ('10'),
+        |  PARTITION p2 VALUES LESS THAN ('20')
+        |) DISTRIBUTED BY HASH(k) BUCKETS 2""",
+      "INSERT INTO rs_range VALUES (1, 1.0), (15, 15.0)",
+      "ALTER TABLE rs_range ADD TEMPORARY PARTITION t1 VALUES LESS THAN ('10')",
+      "INSERT INTO rs_range TEMPORARY PARTITION (t1) VALUES (2, 2.0)",
+      """CREATE TABLE rs_list (seg VARCHAR(8), k BIGINT) DUPLICATE KEY(seg, k)
+        |PARTITION BY LIST(`seg`) (
+        |  PARTITION pa VALUES IN ('a'),
+        |  PARTITION pbc VALUES IN ('b', 'c')
+        |) DISTRIBUTED BY HASH(k) BUCKETS 2""",
+      "INSERT INTO rs_list VALUES ('a', 1), ('b', 2)",
+      """CREATE TABLE rs_auto (d DATETIME, k BIGINT) DUPLICATE KEY(d, k)
+        |AUTO PARTITION BY RANGE (date_trunc(`d`, 'month')) ()
+        |DISTRIBUTED BY HASH(k) BUCKETS 2""",
+      "INSERT INTO rs_auto VALUES ('2024-01-10 00:00:00', 1), ('2024-03-05 00:00:00', 2)")
+    Seq("rs_dup", "rs_uniq", "rs_agg", "rs_var", "rs_range", "rs_list",
+      "rs_auto").foreach(check(_))
+    // schema changes on a RANGE-partitioned UNIQUE table, each followed by
+    // a load so the footers carry every generation
+    run(
+      """CREATE TABLE rs_sc (k BIGINT, i INT, s VARCHAR(8), gone BIGINT,
+        |  keep DOUBLE) UNIQUE KEY(k)
+        |PARTITION BY RANGE(k) (PARTITION p1 VALUES LESS THAN ('100'))
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""",
+      "INSERT INTO rs_sc VALUES (1, 1, 'a', 1, 1.0)",
+      "ALTER TABLE rs_sc ADD COLUMN added BIGINT DEFAULT '5'",
+      "INSERT INTO rs_sc VALUES (2, 2, 'b', 2, 2.0, 6)",
+      "ALTER TABLE rs_sc RENAME COLUMN keep kept",
+      "INSERT INTO rs_sc VALUES (3, 3, 'c', 3, 3.0, 7)",
+      "ALTER TABLE rs_sc MODIFY COLUMN s VARCHAR(32) DEFAULT \"m\"",
+      "ALTER TABLE rs_sc DROP COLUMN gone",
+      "INSERT INTO rs_sc VALUES (4, 4, 'd', 4.0, 8)")
+    check("rs_sc", Set("gone"))
+    val light = ddl.sql("SELECT * FROM rs_sc ORDER BY k").collect().toSeq
+    assert(light.map(r => (r.getLong(0), r.getDouble(3), r.getLong(4))) ==
+      Seq((1L, 1.0, 5L), (2L, 2.0, 6L), (3L, 3.0, 7L), (4L, 4.0, 8L)), light)
+    // a RESTORE replays the def and copies the rowsets verbatim: it reads
+    // the rows the backup saw, renamed and added columns included
+    val bdir = graft.TempDirs.create("graft_rs_backup")
+    ddl.sql(s"BACKUP SNAPSHOT rs_snap TO '$bdir' ON (rs_sc, rs_range)").collect()
+    // heavy MODIFY rewrites every rowset at the new type
+    run("ALTER TABLE rs_sc MODIFY COLUMN i BIGINT")
+    check("rs_sc", Set("gone"))
+    assert(ddl.sql("SELECT * FROM rs_sc ORDER BY k").collect().toSeq.map(_.toSeq) ==
+      light.map(r => r.toSeq.updated(1, r.getInt(1).toLong)))
+    run("DROP TABLE rs_sc", "DROP TABLE rs_range")
+    ddl.sql(s"RESTORE SNAPSHOT rs_snap FROM '$bdir'").collect()
+    check("rs_sc", Set("gone"))
+    check("rs_range")
+    assert(ddl.sql("SELECT * FROM rs_sc ORDER BY k").collect().toSeq == light)
+    assertThrows[IllegalArgumentException](
+      ddl.execute("ALTER TABLE rs_sc ADD COLUMN gone VARCHAR(8)"))
   }
 
   test("freshness: a SELECT that starts after another thread's write has " +
