@@ -1201,14 +1201,17 @@ final class DorisDdl(s: SparkSession) {
     * with user-view bodies expanded transitively — a MATCH issued through
     * a view over an indexed table stays legal, while a table name that
     * appears only inside a literal ('see table lineitem') references
-    * nothing and must not leak index legality in. */
-  private def referencedTables(text: String): Set[String] = {
+    * nothing and must not leak index legality in. With `partViews` a
+    * partition view spelled directly (`t__part_p`) references `t` too. */
+  private def referencedTables(text: String,
+      partViews: Boolean = false): Set[String] = {
     val tableNames = tables.synchronized(tables.keys.toSeq)
     val views = viewDefs.synchronized(viewDefs.toMap)
+    val suffix = if (partViews) "(?:__part_\\w+)?" else ""
     def refs(t: String, cands: Seq[String]): Seq[String] = {
       val q = inLiteral(t)
-      cands.filter(n =>
-        s"(?is)\\b$n\\b".r.findAllMatchIn(t).exists(m => !q(m.start)))
+      cands.filter(n => s"(?is)\\b$n$suffix\\b".r.findAllMatchIn(t)
+        .exists(m => !q(m.start)))
     }
     val out = mutable.Set[String]() ++ refs(text, tableNames)
     val seen = mutable.Set[String]()
@@ -3227,7 +3230,7 @@ final class DorisDdl(s: SparkSession) {
     * `_temporary` files don't count: Spark's reader ignores them, so a dir
     * holding only those (e.g. after DROP PARTITION removed the last data
     * partition, or during a table's first load) is EMPTY, and its views
-    * serve the empty frame. */
+    * read zero rows. */
   private def hasRowsets(dir: String): Boolean = {
     var found = false
     DorisDdl.walkCommitted(dir) { _ => found = true; false }
@@ -3847,7 +3850,10 @@ final class DorisDdl(s: SparkSession) {
         }
         t.synchronized {
           t.deletes.clear()
-          t.def_ = d.copy(cols = newCols.map(_.copy(priors = Nil)))
+          // the rewrite keeps only newCols: no file holds a rename prior
+          // or a dropped column's bytes any more
+          t.def_ = d.copy(cols = newCols.map(_.copy(priors = Nil)),
+            droppedCols = Map.empty)
         }
       }
       registerViews(t)
@@ -4224,16 +4230,16 @@ final class DorisDdl(s: SparkSession) {
   private def selectPlain(text: String): DataFrame = {
     // registration skip (guide §2.4 — remove duplicate passes): each
     // re-registration re-analyzes the table's view and every partition
-    // view, so a select re-registers only the tables it names (directly or
-    // through user views, before the PARTITION rewrite below hides `t` in
-    // `t__part_p`) whose views are not provably current. They are current
+    // view, so a select re-registers only the tables it names (directly,
+    // through user views or as a partition view `t__part_p`; taken before
+    // the PARTITION rewrite below) whose views are not provably current. They are current
     // when (a) no statement that could write THIS table ran since they
     // were stamped (its write mark, see viewsFresh — a write to another
     // table does not count) and (b) this instance still owns every
     // temp-view name it registered (viewOwners — another instance on the
     // shared session namespace may have taken them). Mutation paths
     // always re-register their table.
-    val named = referencedTables(text)
+    val named = referencedTables(text, partViews = true)
     tables.synchronized(named.toSeq.flatMap(tables.get)).foreach { t =>
       if (!viewsFresh(t)) registerViews(t)
     }
@@ -4351,23 +4357,10 @@ final class DorisDdl(s: SparkSession) {
     // parse_json in the read projection (the merge/delete machinery above
     // ran on the stored text), so `variant_get(v, '$.path', type)` works
     // directly against the table view with no per-access re-parse
-    merged.select(queryCols(d) ++
-      (if (keepPart && d.partCol.isDefined) Seq(col("_p")) else Nil): _*)
-  }
-
-  /** The def's columns as queries see them: VARIANT parsed, the rest as
-    * stored. */
-  private def queryCols(d: TableDef): Seq[Column] = d.cols.map(c =>
-    if (c.variant) parse_json(col(c.name)).as(c.name) else col(c.name))
-
-  /** The read schema as an empty frame — what a created-but-never-loaded
-    * (or TRUNCATEd) table serves: Doris returns ZERO ROWS from an empty
-    * table, not an error. A local relation, so a query over it folds to an
-    * empty result at planning and runs no job. */
-  private def emptyVisible(t: TableState): DataFrame = {
-    val d = t.def_ // one read: see visible
-    s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      DorisDdl.readSchema(d)).select(queryCols(d): _*)
+    val outCols = d.cols.map(c =>
+      if (c.variant) parse_json(col(c.name)).as(c.name) else col(c.name)) ++
+      (if (keepPart && d.partCol.isDefined) Seq(col("_p")) else Nil)
+    merged.select(outCols: _*)
   }
 
   /** Registration-skip state. [[mutationEpoch]] advances on every
@@ -4460,14 +4453,11 @@ final class DorisDdl(s: SparkSession) {
   /** One registration pass; returns every temp-view name registered so
     * [[registerViews]] can retract a stale pass exactly. */
   private def doRegisterViews(t: TableState): Seq[String] = {
-    // a created-but-never-loaded (or emptied) table serves the EMPTY
-    // frame (never stale rows, never a not-found)
-    val loaded = hasRowsets(t.dir)
-    def view(p: Option[String]) = if (loaded) visible(t, p) else emptyVisible(t)
-    val parts =
-      if (loaded) partitionNames(t) else t.def_.parts.filterNot(_.dropped).map(_.name)
-    registerTemp(view(None), t.def_.name)
-    parts.foreach(p => registerTemp(view(Some(p)), s"${t.def_.name}__part_$p"))
+    // a created-but-never-loaded (or emptied) table reads zero rows
+    // through the read schema (never stale rows, never a not-found)
+    val parts = partitionNames(t)
+    registerTemp(visible(t, None), t.def_.name)
+    parts.foreach(p => registerTemp(visible(t, Some(p)), s"${t.def_.name}__part_$p"))
     t.def_.name +: parts.map(p => s"${t.def_.name}__part_$p")
   }
 

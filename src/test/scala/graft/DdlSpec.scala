@@ -3163,6 +3163,27 @@ class DdlSpec extends SparkSpec {
     assert(ddl.sql("SELECT c FROM fr_b").as[Long].collect().toSeq == Seq(7L, 7L))
   }
 
+  test("freshness: a SELECT naming a partition view directly (t__part_p) " +
+    "re-registers its stale table") {
+    val (ddl, other) = (fresh(), fresh())
+    for ((d, v) <- Seq((ddl, 10), (other, 99))) {
+      d.execute("""CREATE TABLE fr_p (k BIGINT, v BIGINT) DUPLICATE KEY(k)
+        |PARTITION BY RANGE(k) (PARTITION p1 VALUES LESS THAN ('100'))
+        |DISTRIBUTED BY HASH(k) BUCKETS 1""".stripMargin)
+      d.execute(s"INSERT INTO fr_p VALUES (1, $v)")
+    }
+    def view(n: String) = spark.sessionState.catalog.getRawTempView(n).get
+    // the other instance took the shared view names: this instance's
+    // views are stale, and its SELECT must serve its own rows
+    def part() = ddl.sql("SELECT v FROM fr_p__part_p1").as[Long].collect().toSeq
+    assert(part() == Seq(10L))
+    ddl.execute("SET sql_select_limit = DEFAULT")
+    val (tSet, pSet) = (view("fr_p"), view("fr_p__part_p1"))
+    assert(part() == Seq(10L))
+    assert(!(view("fr_p") eq tSet) && !(view("fr_p__part_p1") eq pSet),
+      "the first select on fr_p__part_p1 after SET did not re-register fr_p")
+  }
+
   test("re-added column: a light ADD COLUMN of a dropped column's name " +
     "reads its DEFAULT (NULL without one) on older rowsets, never the " +
     "dropped bytes, and an explicit NULL loaded after the ADD persists") {
@@ -3203,6 +3224,15 @@ class DdlSpec extends SparkSpec {
       (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq ==
       Seq((1L, None, None), (2L, None, None), (3L, None, None),
         (4L, Some(400), None)))
+    // a heavy MODIFY rewrites every rowset with the def's columns only:
+    // the dropped bytes are gone, so the name is free at any type
+    ddl.execute("ALTER TABLE rz_n DROP COLUMN v")
+    ddl.execute("ALTER TABLE rz_n MODIFY COLUMN c BIGINT")
+    ddl.execute("ALTER TABLE rz_n ADD COLUMN v VARCHAR(8)")
+    assert(ddl.sql("SELECT k, c, v FROM rz_n ORDER BY k").collect().map(r =>
+      (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq ==
+      Seq((1L, None, None), (2L, None, None), (3L, None, None),
+        (4L, Some(400L), None)))
   }
 
   test("jobs: a DELETE on a loaded table runs no Spark job, and the SELECT " +
