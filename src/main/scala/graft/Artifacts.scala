@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * its inputs once and serves across calls — checkpointed DataFrames
   * (language profiles, term tables, pair tables, ANN cells), staged file
   * layouts (DPP, bucket and format copies, rollups, MVs, stream-ingested
-  * tables), staged DDL catalogs, parquet schemas, result-cache snapshots
-  * and the rewrite rule's scans.
+  * tables), staged DDL catalogs, the footer schemas of the parquet paths
+  * read again ([[Tables.parquet]]; a path read once leaves no slot),
+  * result-cache snapshots and the rewrite rule's scans.
   *
   * One freshness contract for all of them, Doris's "a derived artifact is
   * valid for one version of its base": an entry is served while the

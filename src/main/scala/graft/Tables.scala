@@ -1,6 +1,15 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md, FIXTURES.md).
   *
@@ -33,23 +42,77 @@ object Tables {
   private val versionChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Read a parquet dir, inferring its schema only when the dir is new or
-    * changed since the last read. For the fixture tables and for parquet
-    * the engine wrote itself: result snapshots, staged layouts.
+  /** Read a parquet path under its [[footerSchema]], memoized per path
+    * version ([[Artifacts.memo]]): for the fixture tables and for parquet
+    * the engine wrote itself and reads again — result snapshots, staged
+    * layouts, standing stream tables.
     *
-    * spark.read.parquet infers the schema with a footer-read Spark JOB on
-    * every call — one ~30-230 ms job per read, paid by nearly every key
-    * (`graft.Tool profile`: the inference job shows up inside each warm
-    * timed run). The schema of an unchanged parquet dir is immutable, so
-    * it is memoized per path version ([[Artifacts.memo]]) and handed to
-    * the reader explicitly. Each call still returns a FRESH DataFrame (new
+    * A bare `spark.read.parquet` learns the schema by running a Spark job
+    * over the file footers: the 10 fixture tables took 740-840 ms that way
+    * against 11-20 ms for their 10 footer reads (warm JVM, `local[4]`,
+    * 4-cpu host). The memo makes a repeat read of an unchanged path cost
+    * one directory listing. Each call still returns a FRESH DataFrame (new
     * exprIds) — the self-join hazard that forbids caching the DataFrame
-    * itself does not apply to the schema. */
+    * itself does not apply to the schema. A path read once (a sink's fresh
+    * output dir, a version the next batch supersedes) goes through
+    * [[parquetOnce]] instead, so it leaves no memo slot behind. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val schema = Artifacts.memo("parquetSchema", path, spark, path) {
-      spark.read.parquet(path).schema
+      footerSchema(spark, path)
     }
     spark.read.schema(schema).parquet(path)
+  }
+
+  /** [[parquet]] without the memo: one footer read per call. */
+  def parquetOnce(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The data schema `spark.read.parquet(path)` infers, read on the driver
+    * from the one footer Spark's own inference touches: Spark lists the
+    * leaf files (skipping names that start with `_` or `.`, but keeping
+    * `_common_metadata`, `_metadata` and `k=v` partition dirs), sorts them
+    * by path and reads `_common_metadata`, else `_metadata`, else the first
+    * data file. The footer converts as Spark's inference converts it: the
+    * stored Spark schema when the writer left one, else the parquet schema
+    * through a converter built from the session's SQL conf
+    * (`nanosAsLong`, `binaryAsString`, `inferTimestampNTZ`, ...).
+    *
+    * Partition columns are not in the footer: a read under this schema
+    * discovers them from the directory names, as the inferring read does,
+    * so both reads return the same schema. Where the footer cannot stand
+    * for the inference — schema merging switched on in the session conf,
+    * a missing path, no data file, an unreadable footer — this falls back
+    * to Spark's own inference, which then merges, or raises the same error
+    * as before. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    // the name rule of Spark's leaf-file listing
+    def listed(n: String): Boolean =
+      n.startsWith("_common_metadata") || n.startsWith("_metadata") ||
+        !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_"))
+    def footer: Option[StructType] = {
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      def leaves(f: FileStatus): Seq[FileStatus] =
+        if (!f.isDirectory) Seq(f)
+        else fs.listStatus(f.getPath).toSeq
+          .filter(c => listed(c.getPath.getName)).flatMap(leaves(_))
+      val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+        .map { f =>
+          ParquetFileFormat.readSchemaFromFooter(
+            new Footer(f.getPath, ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, hadoopConf),
+              ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        }
+    }
+    (if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+     else Try(footer).toOption.flatten)
+      .getOrElse(spark.read.parquet(path).schema)
   }
 
   private def raw(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -37,7 +37,7 @@ object Joins {
     * instead of re-writing ~600k rows each call. Built once per lineitem
     * version and session ([[graft.Artifacts.memo]]), so a rewritten lineitem
     * is re-staged rather than joined from its old copy. */
-  private def ensureDppStaged(s: SparkSession, dir: String): (String, String) =
+  private[graft] def ensureDppStaged(s: SparkSession, dir: String): (String, String) =
     graft.Artifacts.memo("dppStaged", dir, s, s"$dir/lineitem.parquet") {
       import s.implicits._
       val out = graft.TempDirs.create("graft_dpp")
@@ -253,8 +253,8 @@ object Joins {
     // NOT IN — null-aware anti join (Catalyst NAAJ, Doris null-aware flag).
     "join_not_in" -> QueryDef(
       (s, dir) => {
-        s.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("v_orders")
-        s.read.parquet(s"$dir/customer.parquet").createOrReplaceTempView("v_customer")
+        Tables.orders(s, dir).createOrReplaceTempView("v_orders")
+        Tables.customer(s, dir).createOrReplaceTempView("v_customer")
         s.sql(
           """SELECT o_orderkey, o_custkey FROM v_orders
             |WHERE o_custkey NOT IN

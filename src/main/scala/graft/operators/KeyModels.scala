@@ -138,7 +138,7 @@ object KeyModels {
         Tables.lineitem(s, dir)
           .select($"l_orderkey", $"l_quantity", $"l_returnflag")
           .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-        s.read.parquet(out)
+        Tables.parquetOnce(s, out)
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"), round(sum($"l_quantity"), 2).as("sum_qty"))
           .orderBy($"l_returnflag")
@@ -166,7 +166,7 @@ object KeyModels {
           .write.mode("append").parquet(out)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"event_id").orderBy($"_ver".desc)
-        s.read.parquet(out)
+        Tables.parquetOnce(s, out)
           .withColumn("rn", row_number().over(w))
           .filter($"rn" === 1 && $"_sign" === 0)
           .groupBy($"event_type")
@@ -214,7 +214,7 @@ object KeyModels {
           batch(ev.filter($"event_type" === "signup"), 9L, 6L, 1))
           .reduce(_.unionByName(_))
           .write.mode("overwrite").parquet(out)
-        sequenceMerge(s.read.parquet(out), "event_id")
+        sequenceMerge(Tables.parquetOnce(s, out), "event_id")
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .orderBy($"event_type")
@@ -267,13 +267,13 @@ object KeyModels {
         // the compaction pass: merge-on-read applied once, result persisted
         val base = graft.TempDirs.create("graft_compact_base")
         val w = Window.partitionBy($"event_id").orderBy($"_ver".desc)
-        s.read.parquet(hist)
+        Tables.parquetOnce(s, hist)
           .withColumn("rn", row_number().over(w))
           .filter($"rn" === 1 && $"_sign" === 0)
           .drop("rn", "_sign", "_ver")
           .write.mode("overwrite").parquet(base)
         // steady-state read: plain scan of the compacted base, no window
-        s.read.parquet(base)
+        Tables.parquetOnce(s, base)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
           .orderBy($"event_type")
@@ -305,7 +305,7 @@ object KeyModels {
             .withColumn("_ver", lit(3L)))
           .write.mode("overwrite").parquet(out)
         // DELETE FROM … WHERE event_type='click' @ v2
-        applyDeletePredicates(s.read.parquet(out),
+        applyDeletePredicates(Tables.parquetOnce(s, out),
           Seq(($"event_type" === "click", 2L)))
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
@@ -338,7 +338,7 @@ object KeyModels {
           .partitionBy($"event_id").orderBy($"_ver".asc)
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.unboundedFollowing)
-        s.read.parquet(out)
+        Tables.parquetOnce(s, out)
           .select($"event_id",
             last($"event_type", ignoreNulls = true).over(w).as("event_type"),
             last($"value", ignoreNulls = true).over(w).as("value"))
@@ -372,7 +372,7 @@ object KeyModels {
       (s, dir) => {
         import s.implicits._
         val st = ensureAutoPart(s, dir)
-        s.read.parquet(st.out)
+        Tables.parquet(s, st.out)
           .groupBy($"p_day")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("sum_value"))
           .withColumn("parts_before_load2", lit(st.before))
@@ -404,7 +404,7 @@ object KeyModels {
         java.nio.file.Files.walk(doomed.toPath)
           .sorted(java.util.Comparator.reverseOrder())
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        s.read.parquet(out)
+        Tables.parquetOnce(s, out)
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"), round(sum($"l_quantity"), 2).as("sum_qty"))
           .orderBy($"l_returnflag")

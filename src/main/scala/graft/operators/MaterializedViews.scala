@@ -61,7 +61,7 @@ object MaterializedViews {
   private[graft] def sliceOf(
       s: SparkSession, basePath: String, years: Seq[Int]): DataFrame = {
     import s.implicits._
-    s.read.parquet(basePath)
+    Tables.parquetOnce(s, basePath)
       .filter($"o_year".isin(years: _*))
       .groupBy($"o_year", $"o_orderpriority")
       .agg(count(lit(1)).as("n"), sum($"o_totalprice").as("sum_price"),
@@ -108,7 +108,7 @@ object MaterializedViews {
       // v1 load: every partition at version 1, newest year incomplete
       orders.filter(!late)
         .write.mode("overwrite").partitionBy("o_year").parquet(base)
-      val years = s.read.parquet(base).select($"o_year").distinct()
+      val years = Tables.parquetOnce(s, base).select($"o_year").distinct()
         .as[Int].collect().sorted
       writeVersions(base, years.map(y => y.toString -> 1L).toMap)
       val r1 = refresh(s, base, mv) // cold MV: every partition stale
@@ -197,7 +197,7 @@ object MaterializedViews {
       (s, dir) => {
         import s.implicits._
         val st = ensure(s, dir)
-        s.read.parquet(st.mvPath)
+        Tables.parquet(s, st.mvPath)
           .groupBy($"o_orderpriority")
           .agg(sum($"n").as("n_orders"),
             sum($"cents80").as("cents80"))

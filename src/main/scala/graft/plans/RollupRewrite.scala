@@ -156,7 +156,7 @@ object RollupRewrite {
   private[plans] def servedScan(
       spark: SparkSession, path: String): Option[LogicalPlan] =
     Option(graft.Artifacts.memo("servedScan", path, spark, path) {
-      try spark.read.parquet(path).queryExecution.analyzed
+      try graft.Tables.parquetOnce(spark, path).queryExecution.analyzed
       catch { case scala.util.control.NonFatal(_) => null }
     }).map {
       case lr: LogicalRelation => lr.newInstance()

@@ -2205,7 +2205,7 @@ final class DorisDdl(s: SparkSession) {
           s"GROUP BY ${m.keys.mkString(", ")}")
         .filter(lit(false)), m.name)
       catch { case _: Exception => s.catalog.dropTempView(m.name) }
-    else registerTemp(s.read.parquet(m.dir).drop("_p"), m.name)
+    else registerTemp(graft.Tables.parquetOnce(s, m.dir).drop("_p"), m.name)
     // drop-aware (same race class as the r19 user-view orphan): a DROP
     // MATERIALIZED VIEW landing between this refresh's snapshot and the
     // registerTemp above must not leave a live, scope-less temp view —
@@ -2956,7 +2956,7 @@ final class DorisDdl(s: SparkSession) {
         val n = td.getFileName.toString
         require(tables.synchronized(!tables.contains(n)),
           s"RESTORE: table $n already exists (drop it first)")
-        val meta = s.read.parquet(td.resolve("_meta").toString).head()
+        val meta = graft.Tables.parquetOnce(s, td.resolve("_meta").toString).head()
         createTable(meta.getString(0)) // full-definition replay
         val t = state(n)
         copyParquetTree(td.resolve("data"), java.nio.file.Paths.get(t.dir))
@@ -4139,11 +4139,16 @@ final class DorisDdl(s: SparkSession) {
       case "PARQUET" => df.write.mode("overwrite").parquet(path)
       case other => sys.error(s"INTO OUTFILE: unsupported format $other")
     }
-    val n = s.read.format(fmt.toLowerCase)
-      .option("header", "true").load(path).count()
+    val n = rowsWritten(path, fmt)
     import s.implicits._
     Seq((n, path)).toDF("rows_written", "path")
   }
+
+  /** The rows an OUTFILE or EXPORT write left at `path`, read back from
+    * the files: a header CSV, or parquet under its footer schema. */
+  private def rowsWritten(path: String, fmt: String): Long =
+    if (fmt.equalsIgnoreCase("PARQUET")) graft.Tables.parquetOnce(s, path).count()
+    else s.read.option("header", "true").csv(path).count()
 
   private val ExportRe =
     """(?is)^EXPORT\s+TABLE\s+`?(\w+)`?\s*(?:PARTITION\s*\(\s*`?(\w+)`?\s*\)\s*)?TO\s+'([^']+)'\s*(?:FORMAT\s+AS\s+(\w+))?$""".r
@@ -4168,8 +4173,7 @@ final class DorisDdl(s: SparkSession) {
         case "PARQUET" => df.write.mode("overwrite").parquet(path)
         case other => sys.error(s"EXPORT: unsupported format $other")
       }
-      val n = s.read.format(Option(fmt).getOrElse("CSV").toLowerCase)
-        .option("header", "true").load(path).count()
+      val n = rowsWritten(path, Option(fmt).getOrElse("CSV"))
       import s.implicits._
       Seq((name, n, path)).toDF("table_name", "rows_exported", "path")
     case _ => sys.error(s"unparseable EXPORT: ${text.take(80)}")

@@ -240,13 +240,13 @@ object Streaming {
     * read-back. Sink writes are executor-parallel parquet and the driver
     * never materializes the result table. In append mode every row (every
     * finalized group) emits exactly once, so the read-back needs no merge. */
-  private def parquetSink(df: DataFrame, mode: String = "append",
+  private[graft] def parquetSink(df: DataFrame, mode: String = "append",
       flush: Boolean = true): DataFrame = {
     val out = graft.TempDirs.create("graft_sink")
     runToCompletion(df, mode, flush) { (batch, id) =>
       batch.withColumn("_batch", lit(id)).write.mode("append").parquet(out)
     }
-    df.sparkSession.read.parquet(out)
+    Tables.parquetOnce(df.sparkSession, out)
   }
 
   /** Update-mode sink + merge-on-read: each micro-batch's changed rows land
@@ -367,7 +367,7 @@ object Streaming {
     graft.Artifacts.memo("eventsSplit", dir, s, eventsSrc(dir)) {
       Confs.ensureNanosAsLong(s) // events.ts is ns-precision (see Tables.events)
       val out = graft.TempDirs.create("graft_stream_split")
-      s.read.parquet(eventsSrc(dir))
+      Tables.parquet(s, eventsSrc(dir))
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .repartition(3)
         .write.mode("overwrite").parquet(out)
@@ -394,7 +394,7 @@ object Streaming {
         .parquet(splitEvents(s, dir))) { (batch, id) =>
       val partial = partialOf(batch)
       val unioned = current
-        .map(v => s.read.parquet(v).unionByName(partial))
+        .map(v => Tables.parquetOnce(s, v).unionByName(partial))
         .getOrElse(partial)
       val next = table.resolve(s"v$id").toString
       mergeOf(unioned).write.mode("overwrite").parquet(next)
@@ -542,7 +542,7 @@ object Streaming {
         s"$dir/documents.parquet") {
       import graft.text.TextOps
       val split = graft.TempDirs.create("graft_docs_split")
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.parquet(s, s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
         .repartition(3)
         .write.mode("overwrite").parquet(split)
@@ -564,7 +564,8 @@ object Streaming {
           .filter(col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
         val cands = if (!indexNonEmpty) intra else {
-          s.read.parquet(table).select(col("band"), col("key"), col("doc_id")).as("c")
+          Tables.parquetOnce(s, table)
+            .select(col("band"), col("key"), col("doc_id")).as("c")
             .join(broadcast(bands.as("d")), Seq("band", "key"))
             .select(least(col("c.doc_id"), col("d.doc_id")).as("i"),
               greatest(col("c.doc_id"), col("d.doc_id")).as("j"))
@@ -1033,7 +1034,7 @@ object Streaming {
         import s.implicits._
         val BF = graft.functions.BitmapFunctions
         val table = sketchIngest(s, dir)
-        s.read.parquet(table)
+        Tables.parquet(s, table)
           .select($"event_type", BF.bitmap_count($"user_bm").as("n_users"),
             $"n".as("n_events"))
           .orderBy($"event_type")
@@ -1089,8 +1090,8 @@ object Streaming {
         import s.implicits._
         streamJoinMvIngest(s, dir)
         graft.plans.RollupRewrite.install(s)
-        s.read.parquet(s"$dir/events.parquet").select($"user_id", $"value")
-          .join(s.read.parquet(s"$dir/customer.parquet")
+        Tables.parquet(s, s"$dir/events.parquet").select($"user_id", $"value")
+          .join(Tables.parquet(s, s"$dir/customer.parquet")
               .select($"c_custkey", $"c_mktsegment"),
             $"user_id" === $"c_custkey")
           .groupBy($"c_mktsegment")
@@ -1126,11 +1127,11 @@ object Streaming {
         // the jaccard pair-table economics) instead of re-running the
         // banding UDF pass twice more here
         val streamedCands =
-          s.read.parquet(candsDir).select($"i", $"j").distinct()
+          Tables.parquet(s, candsDir).select($"i", $"j").distinct()
         val batchCands = graft.operators.LlmDedup.minhashCandidates(s, dir)
         val candsEqual = multisetEqual(streamedCands, batchCands, Seq("i", "j"))
         val streamedIndex =
-          s.read.parquet(indexPath).select($"doc_id", $"band", $"key")
+          Tables.parquet(s, indexPath).select($"doc_id", $"band", $"key")
         val batchIndex = graft.operators.LlmDedup.bandSigsCached(s, dir)
         val indexEqual =
           multisetEqual(streamedIndex, batchIndex, Seq("doc_id", "band", "key"))

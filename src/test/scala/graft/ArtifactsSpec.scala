@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 /** The one freshness contract of [[Artifacts.memo]] as the staged layouts
   * see it: a rewritten source re-stages what was derived from it, a new
   * session rebuilds and replaces its registered rollups, and no code in
-  * src/main grows its own once-per-JVM cache map back.
+  * src/main grows its own once-per-JVM cache map back or learns a parquet
+  * schema from a Spark job where the footer would do.
   */
 class ArtifactsSpec extends SparkSpec {
   import TestSpark.spark.implicits._
@@ -72,28 +73,58 @@ class ArtifactsSpec extends SparkSpec {
       names.distinct.size == names.size, s"registered rollup names: $names")
   }
 
-  test("no code in src/main keeps its own computeIfAbsent cache outside " +
-    "Artifacts and DorisDdl") {
+  /** Each code line of src/main, as (file, line number, line), with
+    * comment text blanked: scaladoc lines and trailing // comments. */
+  private lazy val mainCode: Seq[(java.nio.file.Path, Int, String)] = {
     val files = {
       val w = Files.walk(Paths.get("src/main/scala"))
       try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally w.close()
     }
     assert(files.nonEmpty)
-    // comment text is not code: scaladoc lines and trailing // comments
     def code(line: String): String = {
       val t = line.trim
       if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
       else line.split("//", 2)(0)
     }
-    val offenders = for {
+    for {
       f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    } yield (f, i + 1, code(line))
+  }
+
+  test("no code in src/main keeps its own computeIfAbsent cache outside " +
+    "Artifacts and DorisDdl") {
+    val offenders = for {
+      (f, n, line) <- mainCode
       if !f.endsWith("Artifacts.scala") &&
         !f.endsWith(Paths.get("sql", "DorisDdl.scala"))
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if code(line).contains("computeIfAbsent(")
-    } yield s"$f:${i + 1}: ${line.trim}"
+      if line.contains("computeIfAbsent(")
+    } yield s"$f:$n: ${line.trim}"
     assert(offenders.isEmpty,
       "memoize through Artifacts.memo:\n" + offenders.mkString("\n"))
+  }
+
+  test("no code in src/main infers a parquet schema with a Spark job " +
+    "outside Tables and the user-input loads") {
+    // user input keeps Spark's inference: LOAD and the FILE() TVF in
+    // DorisDdl, GenScale's scale-up and Bench's warm-up; KeyModels'
+    // schema-change key asks Spark to merge the footers
+    def exempt(f: java.nio.file.Path, line: String): Boolean =
+      f.endsWith("GenScale.scala") || f.endsWith("Bench.scala") ||
+        (f.endsWith(Paths.get("sql", "DorisDdl.scala")) &&
+          line.contains("case \"parquet\" =>")) ||
+        (f.endsWith("KeyModels.scala") &&
+          line.contains("option(\"mergeSchema\", \"true\")"))
+    // a read with no explicit schema, on one line
+    val inferring = """\.read\b(?!.*\.schema\().*\.parquet\(""".r
+    val offenders = for {
+      (f, n, line) <- mainCode
+      if !f.endsWith("Tables.scala") && !exempt(f, line)
+      if inferring.findFirstIn(line).isDefined
+    } yield s"$f:$n: ${line.trim}"
+    assert(offenders.isEmpty,
+      "read through Tables.parquet or Tables.parquetOnce:\n" +
+        offenders.mkString("\n"))
   }
 }

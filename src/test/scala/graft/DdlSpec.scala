@@ -3087,39 +3087,6 @@ class DdlSpec extends SparkSpec {
       "one case per statement-table row")
   }
 
-  /** `body`'s result and the Spark jobs it ran on this thread, counted by
-    * a listener on a job group of its own. Listener events arrive in
-    * order, so once a marker job's start is seen every job `body` ran has
-    * been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs_of_${java.util.UUID.randomUUID()}"
-    val marker = s"$group.marker"
-    val counts = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicInteger]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => counts.computeIfAbsent(g,
-            _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet())
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup[R](g: String)(f: => R): R = {
-        sc.setJobGroup(g, g, interruptOnCancel = false)
-        try f finally sc.clearJobGroup()
-      }
-      val out = inGroup(group)(body)
-      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 10000000000L
-      while (!counts.containsKey(marker) && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(counts.containsKey(marker), "the listener never saw the marker job")
-      (out, Option(counts.get(group)).fold(0)(_.get))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("freshness: a write re-registers only the table it wrote; a " +
     "statement that can write any table re-registers every table") {
     val ddl = fresh()
